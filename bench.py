@@ -1,4 +1,6 @@
-"""Benchmark harness (driver contract).
+"""Legacy benchmark harness. Its numbers are not comparable with the
+repo's benchmark, ``kgbench/run.py`` (see kgbench/README.md), and do
+not count as a performance claim.
 
 Runs the headline workload at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
@@ -10,7 +12,8 @@ Headline queries:
 - ``kg_pipeline``  — the full KG-construction pipeline on a fixture
   corpus scaled to the sf (n_tables ∝ sf); the primary throughput
   number (triples/sec) comes from this.
-- relational / dedup / similarity / text operators over the sf parquet.
+- relational / dedup / similarity / curation operators over the sf
+  parquet.
 
 ``--scaling`` mode runs the same jobs at two parallelism levels
 (local[2] vs local[8] = N vs 4N cores) and writes BENCH/BASELINE.md
@@ -349,204 +352,6 @@ def run_cpa_skew(spark, n_rows: int = 1_000_000, n_ent: int = 200_000):
     return out
 
 
-def run_asof_skew(spark, n_rows: int = 2_000_000, n_users: int = 10_000,
-                  hot_threshold: int = 100_000):
-    """Hot-key skew evidence for asof_join (operators/temporal.py).
-    A window cannot split one key across tasks, so a hot key's rows
-    sort inside a single task — the bound the r4 bench measured at
-    2.2-2.7× with 50% of ALL rows on ONE user. Round 5 adds the
-    operator's skew-safe mode (hot_threshold: per-key time-range
-    bucket salt + cumulated carry patch), so this now measures FOUR
-    interleaved variants over the same 2M-event inputs:
-
-    - uniform / device-on (the no-hot-keys overhead case: the stats
-      pass finds nothing, bucketing degenerates to bucket 0)
-    - skew / device-on   (the headline: hot key split into
-      ~n_hot/threshold bounded buckets)
-    - uniform + skew / legacy (device off — the one-fat-task bound,
-      kept as the before-evidence pair)
-
-    At this 2M scale the device's two extra passes cost more than the
-    1M-row fat sort they remove (absolute skew-dev > skew-legacy);
-    the crossover where the device wins outright is ~8M rows on this
-    box (scripts/measure_asof_crossover.py, BENCH/BASELINE.md) and
-    widens linearly with hot-key size — the 100 TB regime is
-    unambiguous. What this bench pins is the RATIO: bounded-task
-    skew/uniform ≤ 1.5 where the legacy pair shows 2.2-2.7.
-
-    Timestamps are scattered (id*7919 mod 1e9, coprime -> distinct),
-    halves split left/right by parity; the user derives from the PAIR
-    id (id div 2) so each pair yields one left and one right row on
-    the SAME user and the carry/match path is actually exercised. The
-    run action aggregates the matched payload, which forces the
-    window (a bare count() would let Catalyst prune the asof
-    columns). Returns {"uniform", "skew", "skew_legacy"} best-of-2,
-    interleaved so a host-weather episode cannot land on one side
-    only.
-    """
-    from pyspark.sql import functions as F
-
-    from tabular_data_semantics_py_spark.operators.temporal import asof_join
-
-    def build(skew: bool):
-        ids = spark.range(n_rows)
-        pair = F.expr("id div 2")
-        user = pair % n_users
-        if skew:
-            user = F.when(pair % 2 == 0, F.lit(0)).otherwise(user)
-        return ids.select(
-            F.col("id").alias("event_id"),
-            user.alias("user_id"),
-            (F.col("id") * 7919 % 1_000_000_000).alias("ts_us"),
-            (F.col("id") % 1000 / F.lit(10.0)).alias("value"),
-            (F.col("id") % 2 == 1).alias("is_left"),
-        ).localCheckpoint()
-
-    def run(df, th):
-        l = df.where("is_left").select("event_id", "user_id", "ts_us",
-                                       "value")
-        r = df.where("NOT is_left").select("user_id", "ts_us", "event_id",
-                                           "value")
-        j = asof_join(l, r, on="user_id", ts_col="ts_us",
-                      payload_cols=["event_id", "value"],
-                      tiebreak_col="event_id", hot_threshold=th)
-        j.agg(F.count("asof_event_id"), F.sum("asof_value")).collect()
-
-    variants = [("uniform", False, hot_threshold),
-                ("skew", True, hot_threshold),
-                ("uniform_legacy", False, None),
-                ("skew_legacy", True, None)]
-    for _name, skew, th in variants:
-        run(build(skew).limit(1000), th)
-    out = {name: float("inf") for name, _, _ in variants}
-    for _rep in range(2):
-        for name, skew, th in variants:
-            df = build(skew)
-            _gc(spark)
-            t0 = time.time()
-            run(df, th)
-            out[name] = min(out[name], time.time() - t0)
-    return out
-
-
-def run_range_skew(spark, n_rows: int = 2_000_000, n_users: int = 10_000,
-                   hot_threshold: int = 100_000):
-    """Hot-key skew evidence for range_agg: the rangeBetween window
-    shares asof_join's one-partition-per-key bound. The frame is the
-    trailing [ts-1000, ts-1] over scattered-mod-1e9 timestamps —
-    deliberately NARROW, because Spark evaluates sliding range frames
-    by rescanning the buffered frame per output row (O(occupancy) per
-    row, no retraction): a hot key packs 1000× more rows into any
-    fixed time window, so a wide frame measures that inherent
-    occupancy blow-up (quadratic on the hot key — a 5e6-width frame
-    here runs MINUTES), not the partition-skew bound this pair
-    isolates. That occupancy cost is real at 100 TB but belongs to
-    frame width × key density, and no partitioning device removes it;
-    the device-portable part is the sort/partition bound, measured
-    here. The r5 session measured the legacy ratio at 2.0-3.1 — over
-    the 2× budget — so the device was ported (VERDICT r04 #7):
-    ord-range bucket salt with the width floored at the frame width,
-    right rows replicated into the ≤ 2 adjacent buckets their
-    frame-reach covers, no carry pass. Same 4-variant interleaved
-    grid as run_asof_skew. Returns {"uniform", "skew",
-    "uniform_legacy", "skew_legacy"}."""
-    from pyspark.sql import functions as F
-
-    from tabular_data_semantics_py_spark.operators.temporal import range_agg
-
-    def build(skew: bool):
-        ids = spark.range(n_rows)
-        pair = F.expr("id div 2")
-        user = pair % n_users
-        if skew:
-            user = F.when(pair % 2 == 0, F.lit(0)).otherwise(user)
-        return ids.select(
-            F.col("id").alias("event_id"),
-            user.alias("user_id"),
-            (F.col("id") * 7919 % 1_000_000_000).alias("ts_us"),
-            (F.col("id") % 1000 / F.lit(10.0)).alias("value"),
-            (F.col("id") % 2 == 1).alias("is_left"),
-        ).localCheckpoint()
-
-    def run(df, th):
-        l = df.where("is_left").select("event_id", "user_id", "ts_us")
-        r = df.where("NOT is_left").select("user_id", "ts_us", "value")
-        j = range_agg(l, r, on="user_id", ord_col="ts_us",
-                      lower=-1000, upper=-1, hot_threshold=th)
-        j.agg(F.count("n_in_range"), F.sum("sum_in_range")).collect()
-
-    variants = [("uniform", False, hot_threshold),
-                ("skew", True, hot_threshold),
-                ("uniform_legacy", False, None),
-                ("skew_legacy", True, None)]
-    for _name, skew, th in variants:
-        run(build(skew).limit(1000), th)
-    out = {name: float("inf") for name, _, _ in variants}
-    for _rep in range(2):
-        for name, skew, th in variants:
-            df = build(skew)
-            _gc(spark)
-            t0 = time.time()
-            run(df, th)
-            out[name] = min(out[name], time.time() - t0)
-    return out
-
-
-def run_sessions_skew(spark, n_rows: int = 2_000_000,
-                      n_users: int = 10_000,
-                      hot_threshold: int = 62_500):
-    """Hot-key skew evidence for sessionize — the third operator on
-    the one-partition-per-key window bound, and the third application
-    of the bucket-split device (local per-bucket sessions, boundary
-    fragments chained in a tiny pass-2). Same event shape and
-    4-variant interleaved grid as the asof/range pairs; gap = 1000
-    over scattered-mod-1e9 ordinals (~0.1% merge probability — real
-    fragment chaining without degenerate one-session keys). The
-    default threshold follows the rows/shuffle-width rule (2M/32):
-    hot buckets sized like everyone else's partitions — the natural
-    sizing at any scale (measured dev ratio 0.88-1.48 across
-    thresholds vs legacy 1.9-2.8). Returns {"uniform", "skew",
-    "uniform_legacy", "skew_legacy"}."""
-    from pyspark.sql import functions as F
-
-    from tabular_data_semantics_py_spark.operators.temporal import (
-        sessionize,
-    )
-
-    def build(skew: bool):
-        ids = spark.range(n_rows)
-        user = F.col("id") % n_users
-        if skew:
-            user = F.when(F.col("id") % 2 == 0, F.lit(0)).otherwise(user)
-        return ids.select(
-            user.alias("user_id"),
-            (F.col("id") * 7919 % 1_000_000_000).alias("ts_us"),
-            (F.col("id") % 1000 / F.lit(10.0)).alias("value"),
-        ).localCheckpoint()
-
-    def run(df, th):
-        s = sessionize(df, on="user_id", ord_col="ts_us", gap=1000,
-                       hot_threshold=th)
-        s.agg(F.count(F.lit(1)), F.sum("n_events"),
-              F.sum("total_dec")).collect()
-
-    variants = [("uniform", False, hot_threshold),
-                ("skew", True, hot_threshold),
-                ("uniform_legacy", False, None),
-                ("skew_legacy", True, None)]
-    for _name, skew, th in variants:
-        run(build(skew).limit(1000), th)
-    out = {name: float("inf") for name, _, _ in variants}
-    for _rep in range(2):
-        for name, skew, th in variants:
-            df = build(skew)
-            _gc(spark)
-            t0 = time.time()
-            run(df, th)
-            out[name] = min(out[name], time.time() - t0)
-    return out
-
-
 def run_components_scale(spark, n: int = 1_000_000, path: bool = False):
     """Scale/skew evidence for connected_components (the
     canonicalization primitive behind kg_canonical_ids and
@@ -612,33 +417,18 @@ def run_components_scale(spark, n: int = 1_000_000, path: bool = False):
 BENCH_QUERIES = [
     # NOTE kg_degree_dist is deliberately NOT benched: it is
     # fixture-backed, so a timed first call would measure corpus
-    # generation + the full materialize='all' pipeline warmup, not
+    # generation + the full pipeline warmup, not
     # the milliseconds-scale census itself (its gate is the oracle)
     "pricing_summary",
     "order_revenue_topk",
     "top_orders_per_customer",
     "priority_vote_per_customer",
     "region_acctbal_rollup",
-    "events_hourly",
-    "events_sessions",
-    "events_sessions_native",
-    "events_asof",
-    "events_asof_hot",
-    "events_range_count",
-    "events_range_hot",
-    "events_sessions_hot",
-    "events_rollup_daily",
-    "events_rollup_monthly",
     "doc_dedup_exact",
-    "doc_token_stats",
-    "doc_quality",
-    "doc_lang_id",
-    "doc_fingerprint",
     "doc_minhash_signatures",
     "doc_simhash",
     "doc_simhash_pairs",
     "doc_minhash_lsh_shingle",
-    "doc_curation",
     "doc_boilerplate",
     "doc_contamination",
     "doc_sample_stratified",
@@ -692,24 +482,6 @@ def run_bench(sf_dir: str, master: str, shuffle: int | None = None) -> dict:
     timings["cpa_uniform"] = round(p_u, 3)
     timings["cpa_skew"] = round(p_s, 3)
 
-    asf = run_asof_skew(spark)
-    timings["asof_uniform"] = round(asf["uniform"], 3)
-    timings["asof_skew"] = round(asf["skew"], 3)
-    timings["asof_uniform_legacy"] = round(asf["uniform_legacy"], 3)
-    timings["asof_skew_legacy"] = round(asf["skew_legacy"], 3)
-
-    rng = run_range_skew(spark)
-    timings["range_uniform"] = round(rng["uniform"], 3)
-    timings["range_skew"] = round(rng["skew"], 3)
-    timings["range_uniform_legacy"] = round(rng["uniform_legacy"], 3)
-    timings["range_skew_legacy"] = round(rng["skew_legacy"], 3)
-
-    ses = run_sessions_skew(spark)
-    timings["sessions_uniform"] = round(ses["uniform"], 3)
-    timings["sessions_skew"] = round(ses["skew"], 3)
-    timings["sessions_uniform_legacy"] = round(ses["uniform_legacy"], 3)
-    timings["sessions_skew_legacy"] = round(ses["skew_legacy"], 3)
-
     comp = run_components_scale(spark)
     timings["components_star_1m"] = comp["star_sec"]
 
@@ -726,18 +498,6 @@ def run_bench(sf_dir: str, master: str, shuffle: int | None = None) -> dict:
         "skew_ratio": round(sec_s / sec_u, 3),
         "vote_skew_ratio": round(v_s / v_u, 3),
         "cpa_skew_ratio": round(p_s / p_u, 3),
-        "asof_skew_ratio": round(asf["skew"] / asf["uniform"], 3),
-        "asof_skew_legacy_ratio": round(
-            asf["skew_legacy"] / asf["uniform_legacy"], 3
-        ),
-        "range_skew_ratio": round(rng["skew"] / rng["uniform"], 3),
-        "range_skew_legacy_ratio": round(
-            rng["skew_legacy"] / rng["uniform_legacy"], 3
-        ),
-        "sessions_skew_ratio": round(ses["skew"] / ses["uniform"], 3),
-        "sessions_skew_legacy_ratio": round(
-            ses["skew_legacy"] / ses["uniform_legacy"], 3
-        ),
         "components_star_rounds": comp["star_rounds"],
     }
     spark.stop()

@@ -5,17 +5,18 @@ from scratch on the Spark DataFrame API.
 
 The reference is a single-threaded Python library that annotates CSV
 tables against remote KGs (DBpedia/Wikidata) — CEA / CTA / CPA tasks
-plus RDF triple emission (see /root/repo/SURVEY.md). This package
+plus RDF triple emission (see SURVEY.md). This package
 re-expresses those semantics as distributed, Catalyst-optimizable
 DataFrame dataflow over an Iceberg/parquet table of source-code
 repositories ``(repo, path, commit, lang, content)``:
 
 - ``sources``    — artifact discovery + vectorized CSV cell parsing
-- ``functions``  — normalization / text-analysis column functions
+- ``functions``  — mention normalization / lexical scoring
 - ``operators``  — entity linking, type cascade, CEA/CTA/CPA, triple
-                   emission, dedup, similarity search
+                   emission, KG-fragment and ontology projection;
+                   dedup, similarity search, corpus curation
 - ``plans``      — the end-to-end checkpointed pipeline
-- ``streaming``  — Structured Streaming variants of the event ops
+- ``streaming``  — incremental ingestion of arriving source files
 - ``fixtures``   — deterministic synthetic corpus + a plain-Python
                    oracle re-executing the reference's decision logic
 """

@@ -8,10 +8,10 @@ Two query families:
    the fixture as VALUES CTEs and either re-implements the operator in
    ANSI SQL (closure, emission, voting, most-specific…) or pins the
    plain-Python oracle's goldens (CEA/CTA/CPA decisions).
-2. testdata queries — relational / dedup / similarity / text-analysis
-   operators over the driver's parquet tables (region nation customer
-   supplier part orders lineitem events documents embeddings), with
-   straight SQL oracles.
+2. testdata queries — relational / dedup / similarity / curation /
+   multimodal operators over the driver's parquet tables (region
+   nation customer supplier part orders lineitem documents
+   embeddings), with straight SQL oracles.
 
 Numeric discipline (driver hashes values exactly):
 - count-like outputs cast to bigint (DuckDB count/len are BIGINT)
@@ -68,9 +68,7 @@ def _pipeline(spark: SparkSession):
         corpus, _, _ = _fixture()
         dfs = corpus_to_dataframes(spark, corpus)
         _STATE[("dfs", app)] = dfs
-        # 'all': every stage is queried repeatedly by the contract
-        # registry — materialize each once
-        _STATE[key] = run_pipeline(spark, dfs, materialize="all")
+        _STATE[key] = run_pipeline(spark, dfs)
     return _STATE[key]
 
 
@@ -130,9 +128,9 @@ def q(name: str, oracle: Callable[[], str] | None = None):
 
 _LAST_SF_DIR: list[str] = []
 
-# parquet-footer probe memo: (path, mtime) → effective scan-split
-# count. Metadata only — never rows or results.
-_RG_MEMO: dict[tuple[str, float], int] = {}
+# parquet-footer probe memo: (path, mtime) → (row groups, rows).
+# Metadata only — never rows or results.
+_RG_MEMO: dict[tuple[str, float], tuple[int, int]] = {}
 
 
 def _effective_splits(path: str) -> tuple[int, int]:
@@ -156,19 +154,13 @@ def _effective_splits(path: str) -> tuple[int, int]:
 
 
 def _load(spark: SparkSession, sf_dir: str, table: str,
-          rebalance: bool = False,
-          columns: list[str] | None = None) -> DataFrame:
+          rebalance: bool = False) -> DataFrame:
     # Record the sf the driver actually drove so scalar-recomputation
     # oracles (minhash signatures, simhash) rebuild over the SAME
     # table — the contract gives oracle_sql() no sf argument.
     _LAST_SF_DIR[:] = [sf_dir]
     path = os.path.join(sf_dir, f"{table}.parquet")
     df = spark.read.parquet(path)
-    if columns is not None:
-        # explicit projection BEFORE a rebalance so the remedial
-        # exchange moves only the columns the query touches (guide
-        # §2.3 "project before the exchange")
-        df = df.select(*columns)
     if rebalance:
         # Unsplittable-input remediation (guide §2.5: "one huge
         # unsplittable file — repartition immediately after the
@@ -1427,422 +1419,9 @@ def order_revenue_topk(spark, sf_dir):
     )
 
 
-@q(
-    "events_hourly",
-    lambda: """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type, COUNT(*) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2
-""",
-)
-def events_hourly(spark, sf_dir):
-    """Tumbling-window aggregation (batch form of the Structured
-    Streaming hourly rollup in streaming/events.py)."""
-    e = _load(spark, sf_dir, "events")
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-    )
-
-
-def _ntz_epoch_us(col: str):
-    """Tz-free epoch-microseconds of a TIMESTAMP_NTZ column: NTZ diff
-    from a fixed naive epoch — never the session time zone (a
-    unix_micros(cast) would shift by the zone offset and break oracle
-    parity; see the events_sessions note and the streaming DST
-    lesson, streaming/events.py). The single shared copy of the
-    device for every temporal query below."""
-    return F.expr(
-        "timestampdiff(MICROSECOND, "
-        f"cast('1970-01-01 00:00:00' as timestamp_ntz), {col})"
-    ).cast("long")
-
-
-@q(
-    "events_rollup_daily",
-    lambda: """
-SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2
-""",
-)
-def events_rollup_daily(spark, sf_dir):
-    """Hypertable-style cascaded rollup (operators/temporal.
-    cascade_rollup): the daily level is aggregated FROM the hourly
-    level (sum-of-counts, decimal sum-of-sums) — the oracle computes
-    daily straight from raw events, so an exact match proves the
-    continuous-aggregate re-aggregation cascade is lossless."""
-    from .operators.temporal import cascade_rollup
-
-    _, daily = cascade_rollup(_load(spark, sf_dir, "events"))
-    return daily.select(
-        "day", "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        "total_value",
-    )
-
-
-@q(
-    "events_rollup_monthly",
-    lambda: """
-SELECT strftime(date_trunc('month', ts), '%Y-%m') AS month, event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events GROUP BY 1, 2
-""",
-)
-def events_rollup_monthly(spark, sf_dir):
-    """The rollup cascade extended one level: monthly aggregated FROM
-    THE DAILY level's retained decimal sums (raw → hourly → daily →
-    monthly, each level re-aggregating the previous one's partials) —
-    the oracle computes monthly straight from raw events, so an exact
-    match proves the TWO-step re-aggregation chain lossless, not just
-    one hop."""
-    from .operators.temporal import cascade_rollup
-
-    _, _, monthly = cascade_rollup(_load(spark, sf_dir, "events"),
-                                   with_monthly=True)
-    return monthly.select(
-        "month", "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        "total_value",
-    )
-
-
-@q(
-    "events_asof",
-    lambda: """
-WITH v AS (
-  SELECT user_id, ts, event_id, value
-  FROM events WHERE event_type = 'view' AND ts IS NOT NULL
-  QUALIFY row_number() OVER (PARTITION BY user_id, ts
-                             ORDER BY event_id DESC) = 1
-),
-p AS (SELECT event_id, user_id, ts, value
-      FROM events WHERE event_type = 'purchase')
-SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-       v.event_id AS view_event_id, epoch_us(v.ts) AS view_ts_us,
-       v.value AS view_value
-FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-""",
-)
-def events_asof(spark, sf_dir):
-    """As-of join (operators/temporal.asof_join): each purchase with
-    the most recent prior view per user — tagged union + one window
-    pass (single shuffle on user_id, no per-key cross product),
-    checked against DuckDB's NATIVE ASOF LEFT JOIN as the oracle."""
-    from .operators.temporal import asof_join
-
-    e = _load(spark, sf_dir, "events")
-    l = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    r = e.where(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    j = asof_join(l, r, on="user_id", ts_col="ts",
-                  payload_cols=["event_id", "value"],
-                  tiebreak_col="event_id")
-    return j.select(
-        "event_id", "user_id",
-        _ntz_epoch_us("ts").alias("ts_us"),
-        "value",
-        F.col("asof_event_id").alias("view_event_id"),
-        _ntz_epoch_us("asof_ts").alias("view_ts_us"),
-        F.col("asof_value").alias("view_value"),
-    )
-
-
-@q(
-    "events_asof_hot",
-    lambda: """
-WITH v AS (
-  SELECT user_id, ts, event_id, value
-  FROM events WHERE event_type = 'view' AND ts IS NOT NULL
-  QUALIFY row_number() OVER (PARTITION BY user_id, ts
-                             ORDER BY event_id DESC) = 1
-),
-p AS (SELECT event_id, user_id, ts, value
-      FROM events WHERE event_type = 'purchase')
-SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us, p.value,
-       v.event_id AS view_event_id, epoch_us(v.ts) AS view_ts_us,
-       v.value AS view_value
-FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-""",
-)
-def events_asof_hot(spark, sf_dir):
-    """The SKEW-SAFE as-of join path (operators/temporal.asof_join
-    with hot_threshold): hot keys are salted by a per-key time-range
-    bucket so no task sorts more than ~threshold rows of one key, and
-    cross-bucket matches are patched from a tiny cumulated carry
-    table. threshold=16 at sf0.01 (~60-80 events/user) makes EVERY
-    user hot with ~4-5 buckets, so the bucket windows, the carry
-    cumulation, and the patch join all do real work — against the
-    same DuckDB NATIVE ASOF LEFT JOIN oracle as events_asof (the
-    device must be semantics-invisible)."""
-    from .operators.temporal import asof_join
-
-    e = _load(spark, sf_dir, "events")
-    l = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    r = e.where(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    j = asof_join(l, r, on="user_id", ts_col="ts",
-                  payload_cols=["event_id", "value"],
-                  tiebreak_col="event_id", hot_threshold=16)
-    return j.select(
-        "event_id", "user_id",
-        _ntz_epoch_us("ts").alias("ts_us"),
-        "value",
-        F.col("asof_event_id").alias("view_event_id"),
-        _ntz_epoch_us("asof_ts").alias("view_ts_us"),
-        F.col("asof_value").alias("view_value"),
-    )
-
-
-@q(
-    "events_range_count",
-    lambda: """
-WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-           WHERE event_type = 'purchase' AND ts IS NOT NULL),
-v AS (SELECT user_id, epoch_us(ts) AS ts_us, value FROM events
-      WHERE event_type = 'view' AND ts IS NOT NULL)
-SELECT p.event_id, p.user_id, p.ts_us,
-       CAST(COUNT(v.ts_us) AS BIGINT) AS n_views,
-       CAST(SUM(CAST(v.value AS DECIMAL(18,2))) AS DOUBLE)
-         AS sum_view_value
-FROM p LEFT JOIN v
-  ON p.user_id = v.user_id
- AND v.ts_us BETWEEN p.ts_us - 1800000000 AND p.ts_us - 1
-GROUP BY 1, 2, 3
-""",
-)
-def events_range_count(spark, sf_dir):
-    """Range join (operators/temporal.range_agg): per purchase, the
-    count and value-sum of the same user's views in the strictly-
-    preceding 30 minutes — one range-frame window over a tagged
-    union (single shuffle, no replication), vs the oracle's naive
-    BETWEEN join + group-by."""
-    from .operators.temporal import range_agg
-
-    e = _load(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    ts_us = _ntz_epoch_us("ts").alias("ts_us")
-    l = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", ts_us
-    )
-    r = e.where(F.col("event_type") == "view").select(
-        "user_id", ts_us, "value"
-    )
-    j = range_agg(l, r, on="user_id", ord_col="ts_us",
-                  lower=-1_800_000_000, upper=-1)
-    return j.select(
-        "event_id", "user_id", "ts_us",
-        F.col("n_in_range").alias("n_views"),
-        F.col("sum_in_range").alias("sum_view_value"),
-    )
-
-
-@q(
-    "events_range_hot",
-    lambda: """
-WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-           WHERE event_type = 'purchase' AND ts IS NOT NULL),
-v AS (SELECT user_id, epoch_us(ts) AS ts_us, value FROM events
-      WHERE event_type = 'view' AND ts IS NOT NULL)
-SELECT p.event_id, p.user_id, p.ts_us,
-       CAST(COUNT(v.ts_us) AS BIGINT) AS n_views,
-       CAST(SUM(CAST(v.value AS DECIMAL(18,2))) AS DOUBLE)
-         AS sum_view_value
-FROM p LEFT JOIN v
-  ON p.user_id = v.user_id
- AND v.ts_us BETWEEN p.ts_us - 1800000000 AND p.ts_us - 1
-GROUP BY 1, 2, 3
-""",
-)
-def events_range_hot(spark, sf_dir):
-    """The SKEW-SAFE range join path (range_agg with hot_threshold):
-    hot keys salted by ord-range buckets with the width floored at
-    the frame width, right rows replicated into the ≤ 2 buckets their
-    frame-reach covers. threshold=16 at sf0.01 makes every user hot
-    with real cross-bucket replication — against the same naive
-    BETWEEN-join oracle as events_range_count (the device must be
-    semantics-invisible)."""
-    from .operators.temporal import range_agg
-
-    e = _load(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    ts_us = _ntz_epoch_us("ts").alias("ts_us")
-    l = e.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", ts_us
-    )
-    r = e.where(F.col("event_type") == "view").select(
-        "user_id", ts_us, "value"
-    )
-    j = range_agg(l, r, on="user_id", ord_col="ts_us",
-                  lower=-1_800_000_000, upper=-1, hot_threshold=16)
-    return j.select(
-        "event_id", "user_id", "ts_us",
-        F.col("n_in_range").alias("n_views"),
-        F.col("sum_in_range").alias("sum_view_value"),
-    )
-
-
-@q(
-    "events_sessions_native",
-    lambda: """
-WITH g AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-)
-SELECT user_id,
-       epoch_us(MIN(ts)) AS start_us,
-       epoch_us(MAX(ts)) + 1800000000 AS end_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM s GROUP BY user_id, sid
-""",
-)
-def events_sessions_native(spark, sf_dir):
-    """Spark's NATIVE session_window aggregation (the built-in
-    sessionization operator, batch form) against a gaps-and-islands
-    SQL oracle. Pins Spark's exact merge rule, established
-    empirically (test_session_window_boundary_semantics): the merge
-    is INCLUSIVE — an event at exactly prev + gap still merges, a
-    new session starts only when the gap is strictly exceeded
-    (oracle: `> gap`), same convention as the custom
-    events_sessions; window end = last event + gap. Epochs via the
-    tz-free NTZ-diff device."""
-    e = _load(spark, sf_dir, "events")
-    g = (
-        e.groupBy(
-            F.session_window(F.col("ts"), "30 minutes").alias("w"),
-            "user_id",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-            .alias("total_value"),
-        )
-    )
-    return g.select(
-        "user_id",
-        _ntz_epoch_us("w.start").alias("start_us"),
-        _ntz_epoch_us("w.end").alias("end_us"),
-        F.col("n_events").cast("long").alias("n_events"),
-        "total_value",
-    )
-
-
-@q(
-    "events_sessions_hot",
-    lambda: """
-WITH g AS (
-  SELECT user_id, ts, event_id, value,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS UNBOUNDED PRECEDING) AS sid
-  FROM g
-)
-SELECT user_id,
-       epoch_us(MIN(ts)) AS start_us,
-       epoch_us(MAX(ts)) + 1800000000 AS end_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM s GROUP BY user_id, sid
-""",
-)
-def events_sessions_hot(spark, sf_dir):
-    """The SKEW-SAFE sessionization path (operators/temporal.
-    sessionize with hot_threshold) — the third application of the
-    bucket-split device: local per-bucket sessionization, interior
-    sessions final, boundary fragments chained by a tiny per-key
-    second pass. threshold=16 at sf0.01 makes every user hot with
-    4-5 buckets, so session fragments genuinely chain across bucket
-    boundaries. Same gaps-and-islands oracle as
-    events_sessions_native (the device must be semantics-invisible;
-    window end = last event + gap, inclusive `> gap` merge rule)."""
-    from .operators.temporal import sessionize
-
-    e = _load(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    s = sessionize(
-        e.select("user_id", _ntz_epoch_us("ts").alias("ts_us"), "value"),
-        on="user_id", ord_col="ts_us", gap=1_800_000_000,
-        hot_threshold=16,
-    )
-    return s.select(
-        "user_id",
-        F.col("session_start").alias("start_us"),
-        (F.col("session_end") + F.lit(1_800_000_000)).alias("end_us"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("total_dec").cast("double").alias("total_value"),
-    )
-
-
-@q(
-    "events_sessions",
-    lambda: """
-WITH gaps AS (
-  SELECT user_id, event_id,
-         CASE WHEN epoch_ms(ts) - lag(epoch_ms(ts)) OVER w > 1800000
-              OR lag(epoch_ms(ts)) OVER w IS NULL
-              THEN 1 ELSE 0 END AS is_start
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id, CAST(SUM(is_start) AS BIGINT) AS n_sessions,
-       COUNT(*) AS n_events
-FROM gaps GROUP BY user_id
-""",
-)
-def events_sessions(spark, sf_dir):
-    """Gap-based sessionization (30-min inactivity) via window lag —
-    the batch analogue of stateful streaming session windows."""
-    e = _load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # parquet ts is TIMESTAMP_NTZ; extract epoch-ms without going
-    # through the session time zone (the driver's session may not be
-    # UTC): NTZ diffs via a fixed naive epoch are tz-free
-    ms = F.floor(_ntz_epoch_us("ts") / F.lit(1000)).cast("long")
-    prev = F.lag(ms).over(w)
-    is_start = F.when(
-        prev.isNull() | ((ms - prev) > 1_800_000), 1
-    ).otherwise(0)
-    return (
-        e.withColumn("is_start", is_start)
-        .groupBy("user_id")
-        .agg(
-            F.sum("is_start").cast("long").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
 # ===========================================================================
-# dedup / similarity / text-analysis (training-data pipeline operators)
+# dedup / similarity / curation / multimodal (training-data pipeline
+# operators)
 # ===========================================================================
 
 @q(
@@ -1954,116 +1533,6 @@ def doc_neardup_canonical(spark, sf_dir):
     return near_dup_canonicalize(docs, 0.9, n_hashes=16, rows_per_band=1)
 
 
-@q(
-    "doc_token_stats",
-    lambda: """
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
-       CAST(length(text) AS BIGINT) AS n_chars
-FROM documents
-""",
-)
-def doc_token_stats(spark, sf_dir):
-    from .functions.text import token_stats
-
-    t = token_stats(_load(spark, sf_dir, "documents"))
-    return t.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        F.col("n_chars").cast("long").alias("n_chars"),
-    )
-
-
-@q(
-    "doc_quality",
-    lambda: """
-WITH f AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_filter(string_split(text, ' '),
-             x -> x IN ('the','a','of','to','in','and','is'))) AS n_stopwords,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct
-  FROM documents
-)
-SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-       CAST(n_stopwords AS BIGINT) AS n_stopwords,
-       CAST(n_distinct AS BIGINT) AS n_distinct,
-       CAST(n_stopwords AS DOUBLE) / n_tokens AS stopword_ratio,
-       CAST(n_distinct AS DOUBLE) / n_tokens AS distinct_ratio
-FROM f
-""",
-)
-def doc_quality(spark, sf_dir):
-    from .functions.text import quality_features
-
-    qf = quality_features(_load(spark, sf_dir, "documents"))
-    return qf.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_stopwords").cast("long").alias("n_stopwords"),
-        F.col("n_distinct").cast("long").alias("n_distinct"),
-        "stopword_ratio", "distinct_ratio",
-    )
-
-
-def _o_lang_id():
-    from .functions.text import LANG_MARKERS
-
-    marker_rows = [
-        (lang, m) for lang, ms in sorted(LANG_MARKERS.items()) for m in ms
-    ]
-    langs = sorted(LANG_MARKERS)
-    return f"""
-WITH markers(lang, tok) AS (SELECT * FROM {_values(marker_rows, "lang, tok")}),
-langs(lang) AS (SELECT DISTINCT lang FROM markers),
-toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-hits AS (
-  SELECT t.doc_id, m.lang, COUNT(*) AS h
-  FROM toks t JOIN markers m ON t.tok = m.tok GROUP BY 1, 2
-),
-scored AS (
-  SELECT d.doc_id, l.lang, COALESCE(h.h, 0) AS h
-  FROM (SELECT DISTINCT doc_id FROM documents) d
-  CROSS JOIN langs l
-  LEFT JOIN hits h ON h.doc_id = d.doc_id AND h.lang = l.lang
-),
-ranked AS (
-  SELECT doc_id, lang, h,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY h DESC, lang) AS rn
-  FROM scored
-)
-SELECT doc_id, lang AS predicted_lang, CAST(h AS BIGINT) AS marker_hits
-FROM ranked WHERE rn = 1
-"""
-
-
-@q("doc_lang_id", _o_lang_id)
-def doc_lang_id(spark, sf_dir):
-    from .functions.text import lang_id
-
-    li = lang_id(_load(spark, sf_dir, "documents"))
-    return li.select(
-        "doc_id", "predicted_lang",
-        F.col("marker_hits").cast("long").alias("marker_hits"),
-    )
-
-
-@q(
-    "doc_fingerprint",
-    lambda: """
-SELECT doc_id,
-       sha256(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS fp
-FROM documents
-""",
-)
-def doc_fingerprint(spark, sf_dir):
-    from .functions.text import fingerprint
-
-    return fingerprint(_load(spark, sf_dir, "documents"))
-
-
 _COS = (
     "list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
     "(sqrt(list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) * "
@@ -2125,92 +1594,6 @@ def emb_cosine_pairs_fast(spark, sf_dir):
 
     return cosine_pairs_blocked(
         _load(spark, sf_dir, "embeddings", rebalance=True), 0.4
-    )
-
-
-def _o_curation():
-    from .functions.text import LANG_MARKERS, STOPWORDS
-
-    marker_rows = [
-        (lang, m) for lang, ms in sorted(LANG_MARKERS.items()) for m in ms
-    ]
-    stop_list = ", ".join(f"'{s}'" for s in STOPWORDS)
-    return f"""
-WITH markers(lang, tok) AS (SELECT * FROM {_values(marker_rows, "lang, tok")}),
-langs(lang) AS (SELECT DISTINCT lang FROM markers),
-canon AS (
-  SELECT sha256(text) AS sha, MIN(doc_id) AS doc_id
-  FROM documents GROUP BY 1
-),
-surv AS (
-  SELECT d.doc_id, d.text FROM documents d
-  JOIN canon c ON c.doc_id = d.doc_id
-),
-toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM surv),
-hits AS (
-  SELECT t.doc_id, m.lang, COUNT(*) AS h
-  FROM toks t JOIN markers m ON t.tok = m.tok GROUP BY 1, 2
-),
-scored AS (
-  SELECT s.doc_id, l.lang, COALESCE(h.h, 0) AS h
-  FROM (SELECT doc_id FROM surv) s
-  CROSS JOIN langs l
-  LEFT JOIN hits h ON h.doc_id = s.doc_id AND h.lang = l.lang
-),
-ranked AS (
-  SELECT doc_id, lang,
-         ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY h DESC, lang) AS rn
-  FROM scored
-),
-quality AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_filter(string_split(text, ' '),
-                         x -> x IN ({stop_list}))) AS n_stop,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct
-  FROM surv
-)
-SELECT r.lang AS predicted_lang,
-       COUNT(*) AS n_docs,
-       CAST(SUM(q.n_tokens) AS BIGINT) AS total_tokens,
-       CAST(SUM(q.n_distinct) AS BIGINT) AS total_distinct,
-       CAST(SUM(q.n_stop) AS BIGINT) AS total_stopwords
-FROM ranked r JOIN quality q USING (doc_id)
-WHERE r.rn = 1 AND q.n_tokens >= 30 AND q.n_stop >= 1
-GROUP BY 1
-"""
-
-
-@q("doc_curation", _o_curation)
-def doc_curation(spark, sf_dir):
-    """The composed corpus-curation funnel a training-data pipeline
-    actually runs — exact dedup (sha-groupBy survivor pick) →
-    language-ID → quality gate (n_tokens ≥ 30, ≥ 1 stopword) →
-    per-language integral corpus stats. Every stage is one of the
-    registry's oracle-checked operators; this query checks their
-    COMPOSITION end-to-end. All aggregates integral, so the oracle
-    hash-matches with no FP fold-order caveats. Scale shape: one
-    sha shuffle (map-side partial min), codegen lang/quality
-    expressions, and a 4-language final agg — no new shuffle beyond
-    the dedup key."""
-    from .functions.text import lang_id, quality_features
-
-    docs = _load(spark, sf_dir, "documents", rebalance=True)
-    d = docs.withColumn("text_sha", F.sha2(F.col("text"), 256))
-    canon = d.groupBy("text_sha").agg(F.min("doc_id").alias("doc_id"))
-    surv = d.join(canon, ["text_sha", "doc_id"], "left_semi")
-    li = lang_id(surv)
-    qf = quality_features(surv)
-    return (
-        li.join(qf, "doc_id")
-        .where((F.col("n_tokens") >= 30) & (F.col("n_stopwords") >= 1))
-        .groupBy("predicted_lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.sum("n_distinct").alias("total_distinct"),
-            F.sum("n_stopwords").alias("total_stopwords"),
-        )
     )
 
 
@@ -2418,7 +1801,6 @@ def doc_minhash_lsh_shingle(spark, sf_dir):
 
 
 # --- rows-only operators (no SQL-expressible oracle) -----------------------
-
 
 
 def _o_minhash_signatures():
@@ -2672,54 +2054,6 @@ def media_frames(spark, sf_dir):
     return sample_frames(
         synth_media(_load(spark, sf_dir, "documents")),
         interval_ms=1000, max_frames=8,
-    )
-
-
-_TOKEN_BPE_SQL = """
-WITH a AS (
-  SELECT doc_id,
-         text || ' doc-' || CAST(doc_id AS VARCHAR) || '.v1!' AS t
-  FROM documents
-), tk AS (
-  SELECT doc_id,
-         regexp_extract_all(t, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]') AS toks
-  FROM a
-)
-SELECT doc_id,
-       CAST(len(toks) AS BIGINT) AS n_bpe,
-       CAST(len(list_filter(toks, x -> regexp_matches(x, '^[A-Za-z]')))
-            AS BIGINT) AS n_alpha,
-       CAST(len(list_filter(toks, x -> regexp_matches(x, '^[0-9]')))
-            AS BIGINT) AS n_num,
-       CAST(len(list_filter(toks, x -> regexp_matches(x, '^[^A-Za-z0-9]')))
-            AS BIGINT) AS n_mark
-FROM tk
-"""
-
-
-@q("doc_token_bpe", lambda: _TOKEN_BPE_SQL)
-def doc_token_bpe(spark, sf_dir):
-    """BPE-ish regex token counting (functions/text.token_stats_bpe).
-    The fixture corpus is pure lowercase words, so the text is
-    deterministically augmented with a per-doc ' doc-<id>.v1!' suffix
-    — digit runs and punctuation marks the tokenizer must segment —
-    to make the counts discriminating; the oracle applies the same
-    augmentation."""
-    from .functions.text import token_stats_bpe
-
-    docs = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit(" doc-"), F.col("doc_id"), F.lit(".v1!")
-        ).alias("text"),
-    )
-    t = token_stats_bpe(docs)
-    return t.select(
-        "doc_id",
-        F.col("n_bpe").cast("long").alias("n_bpe"),
-        F.col("n_alpha").cast("long").alias("n_alpha"),
-        F.col("n_num").cast("long").alias("n_num"),
-        F.col("n_mark").cast("long").alias("n_mark"),
     )
 
 

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from collections.abc import Iterator
 
 import pandas as pd
 
@@ -138,17 +137,6 @@ def make_normalize_udf():
     return normalize_udf
 
 
-def make_strip_accents_udf():
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def strip_accents_udf(col: pd.Series) -> pd.Series:
-        return col.map(lambda s: strip_accents(s) if s is not None else None)
-
-    return strip_accents_udf
-
-
 def _levenshtein_batch(A: list, B: list):
     """Vectorized exact Levenshtein over a batch of string pairs:
     the same DP recurrence as ``_levenshtein``, with the i×j loops in
@@ -233,8 +221,3 @@ def make_lexical_score_udf():
         return pd.Series(out, dtype="float64")
 
     return lexical_score_udf
-
-
-def iter_batches(it: Iterator, fn):  # pragma: no cover - helper
-    for batch in it:
-        yield fn(batch)

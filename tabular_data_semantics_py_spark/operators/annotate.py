@@ -36,17 +36,11 @@ def _cea_scored(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
-    fused: bool = False,
 ) -> DataFrame:
     """Phase-2 scored candidate table: one row per (cell, candidate)
     with ``final_score`` = score + TYPE_BONUS * max column vote-share
     over the candidate's types. Shared by ``cea`` (argmax) and
     ``cea_multi`` (epsilon-tie set). Pinned spec in fixtures/oracle.py.
-
-    ``fused=True`` skips the internal eager materializations so the
-    whole two-phase plan runs as ONE action — identical subtrees
-    (linked, prelim) collapse via ReuseExchange instead of being
-    sequential job barriers.
 
     ``linked`` is fact-scale (cells x candidates), so its barrier is a
     parquet round trip, not an executor-storage checkpoint — see
@@ -57,8 +51,7 @@ def _cea_scored(
         .select(*_CELL_KEY, "mention_norm")
         .join(candidates, "mention_norm")
     )
-    if not fused:
-        linked = parquet_barrier(linked, "cea_linked")
+    linked = parquet_barrier(linked, "cea_linked")
     # consumed by phase 1 and phase 2
 
     # phase-1 argmax as a hash aggregate (min_by over a struct whose
@@ -74,18 +67,17 @@ def _cea_scored(
             ),
         ).alias("uri")
     )  # consumed by votes and col_n
-    if not fused:
-        # Materialized, NOT left to ReuseExchange: both consumers end
-        # up as broadcast dims of the final join, and each broadcast
-        # exchange runs as its own subjob on a separate scheduler
-        # thread. Whether those subjobs REUSE the prelim shuffle or
-        # RE-EXECUTE the whole linked-scan+agg subtree is a race
-        # against the main plan's materialization order — event-log
-        # profiling caught the losing side re-running it at 18× the
-        # CPU (267 vs 15 task-CPU-s for the same job, local[8] sf2.5)
-        # on roughly half the runs. A slim fact-scale parquet barrier
-        # makes the plan deterministic: the agg runs exactly once.
-        prelim = parquet_barrier(prelim, "cea_prelim")
+    # Materialized, NOT left to ReuseExchange: both consumers end up
+    # as broadcast dims of the final join, and each broadcast exchange
+    # runs as its own subjob on a separate scheduler thread. Whether
+    # those subjobs REUSE the prelim shuffle or RE-EXECUTE the whole
+    # linked-scan+agg subtree is a race against the main plan's
+    # materialization order — event-log profiling caught the losing
+    # side re-running it at 18× the CPU (267 vs 15 task-CPU-s for the
+    # same job, local[8] sf2.5) on roughly half the runs. A slim
+    # fact-scale parquet barrier makes the plan deterministic: the agg
+    # runs exactly once.
+    prelim = parquet_barrier(prelim, "cea_prelim")
 
     # type votes and the per-candidate best vote depend only on
     # (table_id, col, uri) — dedup-then-join-back (A10) before the
@@ -191,11 +183,10 @@ def cea(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
-    fused: bool = False,
 ) -> DataFrame:
     """→ (table_id, col, row, uri): the final cell-entity annotation
     (phase-2 argmax with pinned (popularity, uri) tie-break)."""
-    scored = _cea_scored(cells_with_mention, candidates, entity_types, fused)
+    scored = _cea_scored(cells_with_mention, candidates, entity_types)
     return scored.groupBy(*_CELL_KEY).agg(
         F.min_by(
             "uri",
@@ -212,7 +203,6 @@ def cea_multi(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
-    fused: bool = False,
 ) -> DataFrame:
     """→ (table_id, col, row, uris): multi-entity CEA — every candidate
     whose phase-2 final score ties the cell's best within CEA_TIE_EPS,
@@ -222,7 +212,7 @@ def cea_multi(
     reproduced exactly."""
     from ..constants import CEA_TIE_EPS
 
-    scored = _cea_scored(cells_with_mention, candidates, entity_types, fused)
+    scored = _cea_scored(cells_with_mention, candidates, entity_types)
     wmax = Window.partitionBy(*_CELL_KEY)
     return (
         scored.withColumn("best", F.max("final_score").over(wmax))

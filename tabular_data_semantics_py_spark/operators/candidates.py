@@ -40,6 +40,22 @@ from ..functions.normalize import (
 )
 
 
+def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
+    """The hot-key guard shared by every blocked/bucketed pairing path
+    (candidate blocking here, the dedup token index and LSH band
+    buckets): drop ALL rows of keys appearing more than ``cap`` times,
+    bounding pair fan-out to O(cap · rows) under Zipf heads. The
+    hot-key set is tiny (the distribution's head) → broadcast
+    anti-join, no shuffle of ``df``."""
+    hot = (
+        df.groupBy(*key_cols)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .where(F.col("n") > cap)
+        .select(*key_cols)
+    )
+    return df.join(F.broadcast(hot), key_cols, "left_anti")
+
+
 def build_index_keys(
     entity_index: DataFrame, fused: bool = False
 ) -> DataFrame:
@@ -169,8 +185,6 @@ def generate_candidates(
         "uri", "key_norm", F.explode(F.split(F.col("key_norm"), " ")).alias("tok")
     )
     if max_token_df is not None:
-        from .dedup import drop_hot_keys
-
         i_tok = drop_hot_keys(i_tok, ["tok"], max_token_df)
     # Pin the dedup shuffle's width on a prefix of the dedup keys:
     # AQE's byte-based partition coalescing is blind to the per-row

@@ -40,7 +40,7 @@ DEFAULT_RATE = 0.10
 
 def ngram_array(text_col, n: int):
     """Array of word n-grams (space-joined) over the whitespace
-    tokenizer shared with functions.text (``split(text, ' ')`` —
+    tokenizer (``split(text, ' ')`` —
     single-space literal, so multiple/trailing spaces yield empty
     tokens identically in Spark and the DuckDB ``string_split``
     oracle). Degenerate inputs: NULL text or fewer than ``n`` tokens

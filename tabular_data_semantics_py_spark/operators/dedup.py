@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from .candidates import drop_hot_keys
+
 
 def exact_dedup_groups(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -167,22 +169,6 @@ def minhash_signatures(
         for i in range(n_hashes)
     ]
     return tok.groupBy("id").agg(*aggs)
-
-
-def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
-    """The standard hot-key guard shared by every blocked/bucketed
-    pairing path (token inverted index, LSH band buckets, candidate
-    blocking): drop ALL rows of keys appearing more than ``cap``
-    times, bounding pair fan-out to O(cap · rows) under Zipf heads /
-    boilerplate clusters. The hot-key set is tiny (the distribution's
-    head) → broadcast anti-join, no shuffle of ``df``."""
-    hot = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > cap)
-        .select(*key_cols)
-    )
-    return df.join(F.broadcast(hot), key_cols, "left_anti")
 
 
 def near_dup_canonicalize(

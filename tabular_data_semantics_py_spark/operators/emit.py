@@ -44,7 +44,7 @@ def _prop_uri(col_expr) -> F.Column:
     )
 
 
-def build_rows_present(cells: DataFrame, fused: bool = False) -> DataFrame:
+def build_rows_present(cells: DataFrame) -> DataFrame:
     """(table_id, row, max_len, main_cell) for every non-empty data
     row — the row-URI spine of emission. Depends ONLY on the cells
     parse, so the pipeline materializes it on a pool driver thread
@@ -59,27 +59,21 @@ def build_rows_present(cells: DataFrame, fused: bool = False) -> DataFrame:
         )
         .where(F.col("max_len") > 0)
     )
-    if not fused:
-        # 7 consumers; fact-scale (one row per table row) → parquet
-        # barrier, not executor storage (barriers.py)
-        rows_present = parquet_barrier(rows_present, "emit_rows_present")
-    return rows_present
+    # 7 consumers; fact-scale (one row per table row) → parquet
+    # barrier, not executor storage (barriers.py)
+    return parquet_barrier(rows_present, "emit_rows_present")
 
 
 def emit_triples(
     cells: DataFrame,
     cea_df: DataFrame,
     cta_df: DataFrame,
-    fused: bool = False,
     rows_present: DataFrame | None = None,
 ) -> DataFrame:
     """cells = full parse output (header rows included, row == -1).
 
-    ``fused=True``: rely on ReuseExchange for the rows_present subtree
-    (7 identical consumers in one union action) instead of an eager
-    materialization barrier. ``rows_present``: a pre-materialized
-    ``build_rows_present`` output (the pipeline's concurrent path);
-    None = build it here."""
+    ``rows_present``: a pre-materialized ``build_rows_present`` output
+    (the pipeline's concurrent path); None = build it here."""
     base = F.lit(TABLE_BASE)
 
     headers = cells.where(F.col("row") == -1)
@@ -97,7 +91,7 @@ def emit_triples(
 
     data = data_cells(cells)
     if rows_present is None:
-        rows_present = build_rows_present(cells, fused)
+        rows_present = build_rows_present(cells)
     row_uri = F.concat(
         base, F.col("table_id"), F.lit("-col-0-row-"),
         F.col("row").cast("string"),

@@ -402,7 +402,7 @@ def srp_lsh_pairs(
         .localCheckpoint()
     )
     if max_bucket_size is not None:
-        from .dedup import drop_hot_keys
+        from .candidates import drop_hot_keys
 
         band_rows = drop_hot_keys(band_rows, ["band", "bucket"],
                                   max_bucket_size)

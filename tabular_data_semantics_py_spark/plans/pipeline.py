@@ -59,26 +59,24 @@ class PipelineResult:
 
 # stages whose output is consumed by 2+ downstream branches AND carries
 # pandas-UDF columns (Catalyst re-evaluates Python UDFs per reference):
-# these stay eagerly materialized even in fused mode. Everything else
+# in no-checkpoint mode these are eagerly materialized. Everything else
 # flows lazily into one AQE-planned DAG — the answer to the round-1
 # stage-barrier tax (8 sequential full materializations → 3).
 # cells: the mapInPandas CSV parse, consumed by candidates + emission.
-# ALL fused barriers are parquet-backed (barriers.py): a parquet scan
+# ALL these barriers are parquet-backed (barriers.py): a parquet scan
 # carries real size statistics, so Catalyst broadcasts a barrier that
 # is small and shuffle-joins one that is not — the scale-appropriate
 # plan falls out of the stats instead of per-join hints. (A
 # localCheckpoint scan has NO stats and is treated as enormous, which
 # inverted broadcast choices — see operators/annotate.py history.)
-_FUSED_BARRIERS = {"cells", "cells_m", "entity_types", "cea"}
+_BARRIER_STAGES = {"cells", "cells_m", "entity_types", "cea"}
 
 
 class _Checkpointer:
-    def __init__(self, spark: SparkSession, root: str | None, resume: bool,
-                 materialize: str = "auto"):
+    def __init__(self, spark: SparkSession, root: str | None, resume: bool):
         self.spark = spark
         self.root = root
         self.resume = resume
-        self.materialize = materialize
         self.metrics: list[dict] = []
 
     def stage(self, name: str, compute, extra_metric=None) -> DataFrame:
@@ -92,11 +90,7 @@ class _Checkpointer:
 
     def _stage(self, name: str, compute, extra_metric=None) -> DataFrame:
         if self.root is None:
-            if self.materialize == "all":
-                # registry mode (small sf, stages queried repeatedly):
-                # executor-storage checkpoints are fine at that scale
-                return compute().localCheckpoint()
-            if name in _FUSED_BARRIERS:
+            if name in _BARRIER_STAGES:
                 # plan truncation at the stage boundary — without it
                 # Catalyst re-analyzes the upstream tree per action and
                 # re-runs the stage's pandas UDFs once per consumer.
@@ -161,29 +155,24 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     resume: bool = True,
     stop_after: str | None = None,
-    materialize: str = "auto",
 ) -> PipelineResult:
     """dfs: the corpus tables (see sources.corpus_to_dataframes).
 
     ``stop_after='cea'`` simulates a mid-run kill at a stage boundary;
     a later call with the same checkpoint_dir resumes from there.
 
-    ``materialize`` (no-checkpoint mode only): 'auto' fuses the DAG —
-    only the multi-consumed UDF-bearing stages are eagerly
-    materialized and a single action on ``triples`` runs one
-    AQE-planned plan; 'all' eagerly materializes every stage (use when
-    the result's intermediate stages will be queried repeatedly, e.g.
-    the driver-contract registry).
+    Without a checkpoint_dir only the multi-consumed UDF-bearing
+    stages (``_BARRIER_STAGES``, plus candidates) are eagerly
+    materialized; the rest stays lazy until an action on their output.
     """
-    ck = _Checkpointer(spark, checkpoint_dir, resume, materialize)
+    ck = _Checkpointer(spark, checkpoint_dir, resume)
     # measured at sf0.1: the candidates operator's internal barriers
     # (index_keys/exact) can be fused away in one-action mode (~8%
-    # faster), but cea/emit internal barriers must STAY — without
+    # faster), but the cea/emit internal barriers must stay — without
     # them the un-materialized fuzzy-scoring subtree is re-executed
     # per consumer (2-3× slower) and ReuseExchange does not collapse
     # the near-identical exchanges.
-    cand_fused = checkpoint_dir is None and materialize != "all"
-    fused = False  # cea/emit internal barriers kept (see above)
+    cand_fused = checkpoint_dir is None
     res = PipelineResult()
     # share the checkpointer's live metrics list so every stop_after
     # early return carries the lineage/sha-integrity metrics collected
@@ -202,8 +191,8 @@ def run_pipeline(
         return res
 
     # entity_types depends only on closure + the corpus dims — not on
-    # the cells/candidates chain. In fused (no-checkpoint) mode its
-    # eager barrier is submitted on a pool driver thread HERE, before
+    # the cells/candidates chain. In no-checkpoint mode its eager
+    # barrier is submitted on a pool driver thread HERE, before
     # the cells parse, so its jobs interleave with the whole
     # cells→bridge→candidates→cells_m front half: the scheduler
     # backfills cores that single-stage tails leave idle. This cuts
@@ -213,12 +202,7 @@ def run_pipeline(
     # Checkpointed runs stay sequential: stage order in the manifest
     # is part of the resume contract.
     et_future = cand_future = rp_future = _pool = None
-    if (
-        checkpoint_dir is None
-        and materialize != "all"
-        and not upto("entity_types")
-        and os.environ.get("TDS_NO_CONCURRENT_STAGES") != "1"
-    ):
+    if checkpoint_dir is None and not upto("entity_types"):
         from concurrent.futures import ThreadPoolExecutor
 
         closure_df = res.stages["closure"]
@@ -281,7 +265,7 @@ def run_pipeline(
             # overlaps the whole candidates/CEA chain instead of
             # running serially inside the triples stage
             rp_future = _pool.submit(
-                lambda: build_rows_present(cells, fused=False)
+                lambda: build_rows_present(cells)
             )
 
         if upto("candidates"):
@@ -299,12 +283,11 @@ def run_pipeline(
 
         if _pool is not None:
             cm_lazy, cand_lazy = _gen_candidates()  # writes mention_bridge
-            # candidates materialized eagerly HERE (it is lazy in the
-            # sequential fused path): the fuzzy-scoring subtree is
-            # Python-worker-bound while cells_m's prenorm+bridge join is
-            # JVM-shuffle-bound — run on separate driver threads they
-            # overlap on complementary resources instead of executing
-            # back-to-back inside cea_linked's write.
+            # candidates materialized eagerly HERE: the fuzzy-scoring
+            # subtree is Python-worker-bound while cells_m's
+            # prenorm+bridge join is JVM-shuffle-bound — run on separate
+            # driver threads they overlap on complementary resources
+            # instead of executing back-to-back inside cea_linked's write.
             cand_future = _pool.submit(
                 ck.stage, "candidates",
                 lambda: parquet_barrier(cand_lazy, "candidates"),
@@ -363,7 +346,6 @@ def run_pipeline(
             "cea",
             lambda: cea_op(
                 cells_m, res.stages["candidates"], res.stages["entity_types"],
-                fused=fused,
             ),
         )
         if upto("cta"):
@@ -389,7 +371,7 @@ def run_pipeline(
         res.stages["triples"] = ck.stage(
             "triples",
             lambda: emit_triples(
-                cells, res.stages["cea"], res.stages["cta"], fused=fused,
+                cells, res.stages["cea"], res.stages["cta"],
                 rows_present=rp_future.result() if rp_future is not None
                 else None,
             ),

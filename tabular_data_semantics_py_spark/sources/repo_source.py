@@ -13,14 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..fixtures.generator import FixtureCorpus
 
@@ -33,28 +26,6 @@ REPO_SCHEMA = StructType(
         StructField("content", StringType(), False),
     ]
 )
-
-ENTITY_INDEX_SCHEMA = StructType(
-    [
-        StructField("uri", StringType(), False),
-        StructField("label", StringType(), False),
-        StructField("aliases", ArrayType(StringType()), False),
-        StructField("types", ArrayType(StringType()), False),
-        StructField("redirect_to", StringType(), True),
-        StructField("is_disambiguation", BooleanType(), False),
-        StructField("popularity", IntegerType(), False),
-    ]
-)
-
-TRIPLE_SCHEMA = StructType(
-    [
-        StructField("subj", StringType(), False),
-        StructField("pred", StringType(), False),
-        StructField("obj", StringType(), False),
-        StructField("obj_is_literal", BooleanType(), False),
-    ]
-)
-
 
 def discover_csv_artifacts(repos: DataFrame) -> DataFrame:
     """Filter the source table down to CSV artifacts and mint a
@@ -69,118 +40,40 @@ def discover_csv_artifacts(repos: DataFrame) -> DataFrame:
 
 
 def corpus_to_dataframes(
-    spark: SparkSession, corpus: FixtureCorpus, via_parquet: bool = True
+    spark: SparkSession, corpus: FixtureCorpus
 ) -> dict[str, DataFrame]:
     """Materialize the fixture corpus as DataFrames (the test/bench
     stand-in for reading the Iceberg catalog).
 
-    ``via_parquet`` (default): each table is written ONCE driver-side
-    with pyarrow (no Spark job) into a corpus-keyed temp dir and read
-    back as a native parquet scan — pure JVM source, no Python-RDD
-    backing, no localCheckpoint barrier per dim. (createDataFrame —
-    even on the Arrow path — is backed by a Python RDD, so every
-    consumer job pays a Python-worker round trip unless each dim is
-    eagerly checkpointed: ~17 serial driver-side jobs per corpus.)
-    The dir is content-keyed, so repeated runs over the same corpus
-    reuse it."""
-    import pandas as pd
+    Each table is written ONCE driver-side with pyarrow (no Spark job)
+    into a corpus-keyed temp dir and read back as a native parquet
+    scan — pure JVM source, no Python-RDD backing, no localCheckpoint
+    barrier per dim. The dir is content-keyed, so repeated runs over
+    the same corpus reuse it."""
+    import hashlib
+    import os
+    import tempfile
 
-    if via_parquet:
-        return _corpus_via_parquet(spark, corpus)
-
-    def _pdf(rows, columns):
-        return pd.DataFrame(rows, columns=columns)
-
-    repos = spark.createDataFrame(
-        _pdf(corpus.repos, ["repo", "path", "commit", "lang", "content"]),
-        REPO_SCHEMA,
-    )
-    index = spark.createDataFrame(
-        _pdf(
-            [
-                (e.uri, e.label, e.aliases, e.types, e.redirect_to,
-                 e.is_disambiguation, e.popularity)
-                for e in corpus.entities
-            ],
-            ["uri", "label", "aliases", "types", "redirect_to",
-             "is_disambiguation", "popularity"],
-        ),
-        ENTITY_INDEX_SCHEMA,
-    ).coalesce(1)
-    triples = spark.createDataFrame(
-        _pdf(corpus.triples, ["subj", "pred", "obj", "obj_is_literal"]),
-        TRIPLE_SCHEMA,
-    ).coalesce(4)
-    prop_meta = spark.createDataFrame(
-        _pdf(corpus.property_meta, ["pred", "domain_uri", "range_uri"]),
-        "pred string, domain_uri string, range_uri string",
-    ).coalesce(1)
-    edges = spark.createDataFrame(
-        _pdf(corpus.edges, ["class_uri", "parent_uri"]),
-        "class_uri string, parent_uri string",
-    ).coalesce(1)
-    equiv = spark.createDataFrame(
-        _pdf(corpus.equivalent, ["a", "b"]), "a string, b string"
-    ).coalesce(1)
-    classes = spark.createDataFrame(
-        _pdf(corpus.classes, ["class_uri", "label"]),
-        "class_uri string, label string",
-    ).coalesce(1)
-    def _dim(rows, schema: str):
-        cols = [c.split()[0] for c in schema.split(",")]
-        return spark.createDataFrame(_pdf(rows, cols), schema).coalesce(1)
-
-    out = {
-        "source_repos": repos,
-        "entity_index": index,
-        "kg_triples": triples,
-        "property_meta": prop_meta,
-        "ontology_edges": edges,
-        "ontology_equivalent": equiv,
-        "ontology_classes": classes,
-        # OWL projection constructs (P3/P5-P11 operands; tiny dims)
-        "extra_domains": _dim(
-            corpus.extra_domains, "pred string, domain_uri string"
-        ),
-        "complex_domains": _dim(
-            corpus.complex_domains, "pred string, domain_uri string"
-        ),
-        "complex_ranges": _dim(
-            corpus.complex_ranges, "pred string, range_uri string"
-        ),
-        "restrictions": _dim(
-            corpus.restrictions,
-            "cls string, kind string, pred string, filler string",
-        ),
-        "inverse_props": _dim(corpus.inverse_props, "p string, q string"),
-        "equivalent_props": _dim(
-            corpus.equivalent_props, "p string, q string"
-        ),
-        "data_property_meta": _dim(
-            corpus.data_property_meta, "pred string, domain_uri string"
-        ),
-        "data_restrictions": _dim(
-            corpus.data_restrictions, "cls string, pred string"
-        ),
-        "conjunct_atoms": _dim(
-            corpus.conjunct_atoms, "cls string, sup string"
-        ),
-        "complex_restrictions": _dim(
-            corpus.complex_restrictions,
-            "cls string, pred string, filler string",
-        ),
-        "cross_sameas": _dim(
-            corpus.cross_sameas, "uri string, wd_uri string"
-        ),
-        "wd_equiv": _dim(corpus.wd_equiv, "wd_cls string, dbo_cls string"),
-        "class_labels": _dim(
-            corpus.class_labels, "class_uri string, label string, lang string"
-        ),
+    # CONTENT-keyed, not count-keyed: hashing only (seed, element
+    # counts) would silently serve a stale cache for a corpus with the
+    # same shape but different content (e.g. a test mutating one
+    # entity label). The digest covers exactly the rows+schemas that
+    # would be written; fixture corpora are small, so the extra
+    # _corpus_tables pass is cheap.
+    h = hashlib.sha256(_generator_version().encode())
+    for name, (rows, schema) in sorted(_corpus_tables(corpus).items()):
+        h.update(name.encode())
+        h.update(repr(schema).encode())
+        for r in rows:
+            h.update(repr(r).encode())
+    key = h.hexdigest()[:16]
+    root = os.path.join(tempfile.gettempdir(), f"tds_corpus_{key}")
+    if not os.path.exists(os.path.join(root, "_DONE")):
+        _write_corpus_parquet(corpus, root)
+    return {
+        name: spark.read.parquet(os.path.join(root, f"{name}.parquet"))
+        for name in _CORPUS_TABLE_NAMES
     }
-    # materialize once: python-list createDataFrame is backed by a
-    # pickled RDD, so *every* job consuming it would re-run a Python
-    # deserialization stage; localCheckpoint converts to JVM blocks
-    return {k: v.localCheckpoint() for k, v in out.items()}
 
 
 def _corpus_tables(corpus: FixtureCorpus):
@@ -361,32 +254,3 @@ def _write_corpus_parquet(corpus: FixtureCorpus, root: str) -> None:
         os.replace(tmp, path)
     with open(os.path.join(root, "_DONE"), "w") as f:
         f.write("ok")
-
-
-def _corpus_via_parquet(
-    spark: SparkSession, corpus: FixtureCorpus
-) -> dict[str, DataFrame]:
-    import hashlib
-    import os
-    import tempfile
-
-    # CONTENT-keyed, not count-keyed: hashing only (seed, element
-    # counts) would silently serve a stale cache for a corpus with the
-    # same shape but different content (e.g. a test mutating one
-    # entity label). The digest covers exactly the rows+schemas that
-    # would be written; fixture corpora are small, so the extra
-    # _corpus_tables pass is cheap.
-    h = hashlib.sha256(_generator_version().encode())
-    for name, (rows, schema) in sorted(_corpus_tables(corpus).items()):
-        h.update(name.encode())
-        h.update(repr(schema).encode())
-        for r in rows:
-            h.update(repr(r).encode())
-    key = h.hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"tds_corpus_{key}")
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        _write_corpus_parquet(corpus, root)
-    return {
-        name: spark.read.parquet(os.path.join(root, f"{name}.parquet"))
-        for name in _CORPUS_TABLE_NAMES
-    }

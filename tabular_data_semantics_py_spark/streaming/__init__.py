@@ -1,5 +1,1 @@
-from .events import (  # noqa: F401
-    hourly_rollup_stream,
-    stream_events_from_parquet,
-    streaming_dedup,
-)
+from .kg_ingest import accumulated_triples, stream_kg_triples  # noqa: F401

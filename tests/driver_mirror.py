@@ -15,7 +15,7 @@ sys.path.insert(0, str(REPO))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "documents", "embeddings",
 ]
 
 

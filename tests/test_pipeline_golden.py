@@ -15,15 +15,18 @@ def test_cells_parse_exact(pipeline, gold):
 
 
 def test_sha_integrity(pipeline, dfs):
-    """Per-row content sha256 equality (BASELINE.json input_hint)."""
+    """Per-row content sha256 equality (BASELINE.json input_hint),
+    joined on the source table's natural key (repo, path): path alone
+    collides across repos."""
     import pyspark.sql.functions as F
 
     src = dfs["source_repos"].select(
-        "path", F.sha2(F.col("content"), 256).alias("src_sha")
+        "repo", "path", F.sha2(F.col("content"), 256).alias("src_sha")
     )
     bad = (
-        pipeline.stages["cells"].select("path", "content_sha").distinct()
-        .join(src, "path", "left")
+        pipeline.stages["cells"].select("repo", "path", "content_sha")
+        .distinct()
+        .join(src, ["repo", "path"], "left")
         .where(
             F.col("src_sha").isNull()
             | (F.col("src_sha") != F.col("content_sha"))

@@ -1,9 +1,6 @@
 """Property-based tests (SURVEY.md §5.1 item 4) — pure-Python cores,
 no Spark session needed."""
 
-import csv
-import io
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -136,106 +133,3 @@ def test_vote_argmax_permutation_invariant(votes, rnd):
     shuffled = list(votes)
     rnd.shuffle(shuffled)
     assert winner(votes) == winner(shuffled)
-
-
-# ---------------------------------------------------------------------------
-# Hot-key bucket-split arithmetic (operators/temporal.py): the
-# count-quantile edge scheme (r6). The operators rely on three
-# invariants for ANY ascending edge array, however the percentile
-# grid produced it: the edge-search bucket map is monotone and lands
-# in [0, nb-1] (equal ords share a bucket — the carry patch and the
-# sessionize fragment chaining both assume a match's bucket never
-# exceeds the left row's); and for range_agg, with edges spaced at
-# least one frame width apart, the [b_min, b_min+0/1] replica span
-# derived by the single-fold-plus-next-edge shortcut covers every
-# bucket holding a frame-matching left row. These mirror the
-# operator's expressions 1:1 in Python floats (= IEEE doubles) and
-# let hypothesis hunt for a combination that breaks them.
-# NOTE input-range precondition (ADVICE r05): ord columns are cast to
-# double for the bucket salt, so ordinals beyond 2**52 can lose
-# integer exactness; the operators require |ord| <= 2**52 (micros
-# since 1970 are ~2**51 in year 2100) and the strategies pin that
-# domain.
-# ---------------------------------------------------------------------------
-
-
-def _mirror_edges(ords, th, gap):
-    """Python mirror of _hot_bucket_stats' edge construction over an
-    EXACT quantile grid (percentile_approx error only moves edges,
-    never breaks the invariants below, which hold for any ascending
-    array surviving the spacing fold)."""
-    import math
-
-    n = len(ords)
-    s = sorted(float(x) for x in ords)
-    grid_q = 256
-    nb = min(math.ceil(n / th), grid_q)
-    raw = []
-    for i in range(1, nb):
-        k = math.floor(i * grid_q / nb)  # 1-based grid index
-        # exact-quantile stand-in for the percentile grid point
-        idx = min(len(s) - 1, max(0, round(k / grid_q * (n - 1))))
-        raw.append(s[idx])
-    edges = []
-    for e in raw:
-        if not edges or e >= edges[-1] + max(gap, 1e-9):
-            edges.append(e)
-    return edges
-
-
-def _bkt(edges, x):
-    """Mirror of temporal._bkt_of: number of edges <= x."""
-    return sum(1 for e in edges if float(x) >= e)
-
-
-ORDS = st.lists(
-    st.integers(min_value=-(2**52), max_value=2**52),
-    min_size=2, max_size=40,
-)
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    ords=ORDS,
-    th=st.integers(min_value=1, max_value=8),
-    lower=st.integers(min_value=-(2**40), max_value=2**40),
-    span=st.integers(min_value=0, max_value=2**40),
-)
-def test_range_bucket_replica_span_covers_every_match(ords, th, lower, span):
-    upper = lower + span
-    edges = _mirror_edges(ords, th, float(upper - lower))
-    nb = len(edges) + 1
-    for x in ords:
-        assert 0 <= _bkt(edges, x) <= nb - 1
-    for l in ords:
-        for r in ords:
-            if not (l + lower <= r <= l + upper):
-                continue  # r outside l's frame: irrelevant
-            b_l = _bkt(edges, l)
-            b_min = _bkt(edges, float(r) - float(upper))
-            # the operator's b_max shortcut: at most one edge can sit
-            # in (r-upper, r-lower] given the spacing floor
-            nxt = edges[b_min] if b_min < len(edges) else None
-            b_max = b_min + (
-                1 if nxt is not None and float(r) - float(lower) >= nxt
-                else 0
-            )
-            assert b_min <= b_l <= b_max, (l, r, b_min, b_l, b_max)
-
-
-@settings(max_examples=300, deadline=None)
-@given(ords=ORDS, th=st.integers(min_value=1, max_value=8))
-def test_asof_bucket_map_monotone_and_bounded(ords, th):
-    """asof/sessionize bucket salt: equal ords share a bucket, the
-    map is non-decreasing (so a match can only precede or share the
-    left row's bucket — exactly what the carry patch assumes), and
-    every bucket id lands in [0, nb-1]."""
-    edges = _mirror_edges(ords, th, 0.0)
-    nb = len(edges) + 1
-    s = sorted(ords)
-    for a, c in zip(s, s[1:]):
-        assert _bkt(edges, a) <= _bkt(edges, c), (a, c)
-        if a == c:
-            assert _bkt(edges, a) == _bkt(edges, c)
-    for x in ords:
-        assert 0 <= _bkt(edges, x) <= nb - 1, (x, _bkt(edges, x), nb)
