@@ -7,15 +7,19 @@ forced broadcast would OOM executors at the 10^8-entity target;
 while the table is small, stats/AQE must — and do — choose broadcast
 on their own).
 
-Drives generate_candidates directly in fused mode (the pipeline's
-stage barriers would otherwise hide the join subtree behind a
-localCheckpoint scan) and captures the EXECUTED, AQE-final plan.
+Drives generate_candidates directly in fused mode, on the data cells
+as the pipeline does (the pipeline's stage barriers would otherwise
+hide the join subtree behind a barrier scan), and captures the
+EXECUTED, AQE-final plan. The summary also names the Python UDFs left
+in the plan: only the index-key accent strip (normalize_udf), since
+candidate scoring is a built-in expression.
 
 Usage: python scripts/capture_explain_redirect.py
 """
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -26,6 +30,9 @@ from tabular_data_semantics_py_spark.operators.candidates import (  # noqa: E402
     generate_candidates,
 )
 from tabular_data_semantics_py_spark.session import get_spark  # noqa: E402
+from tabular_data_semantics_py_spark.sources.csv_cells import (  # noqa: E402
+    data_cells,
+)
 
 
 def main() -> None:
@@ -34,7 +41,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     dfs = entry_queries._dfs(spark)
     cells = entry_queries._pipeline(spark).stages["cells"]
-    _, cands = generate_candidates(cells, dfs["entity_index"], fused=True)
+    _, cands = generate_candidates(
+        data_cells(cells), dfs["entity_index"], fused=True
+    )
     cands.count()  # drive AQE to its final plan
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -42,10 +51,12 @@ def main() -> None:
     out = buf.getvalue()
     n_bhj = out.count("BroadcastHashJoin")
     n_smj = out.count("SortMergeJoin")
+    udfs = re.findall(r"^Arguments: \[(\w+)\(.*pythonUDF", out, re.M)
     sys.stdout.write(out)
     sys.stdout.write(
         f"\n-- summary: BroadcastHashJoin={n_bhj} SortMergeJoin={n_smj} "
-        "(redirect joins broadcast with no hint in the source)\n"
+        "(redirect joins broadcast with no hint in the source); "
+        f"ArrowEvalPython={len(udfs)} (udfs: {', '.join(sorted(set(udfs)))})\n"
     )
     spark.stop()
 

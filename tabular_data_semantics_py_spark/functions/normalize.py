@@ -1,8 +1,10 @@
 """Mention / URI normalization (SURVEY.md §2.2 F1-F10).
 
-Pure-Python scalar cores (used by the plain-Python oracle executor and
-wrapped as **vectorized pandas UDFs** for Spark — never row-at-a-time
-Python UDFs). Each function cites the reference behavior it pins.
+Pure-Python scalar cores, used by the plain-Python oracle executor and
+pinned as the reference for the Spark side. Spark runs the JVM
+built-in mirrors ``prenorm_expr`` and ``lexical_score_expr``; only the
+accent strip (Spark has no NFD normalization) is an Arrow-batched
+pandas UDF. Each function cites the reference behavior it pins.
 
 Normalization rule (pinned; both oracle and Spark use exactly this):
 1. strip stray quotes          (test/challenge_utils.py:664-666)
@@ -90,13 +92,13 @@ def token_jaccard(a: str, b: str) -> float:
 
 def lexical_score(mention_norm: str, key_norm: str) -> float:
     """Fuzzy lexical score: mean of normalized edit similarity and
-    token Jaccard — the Arrow-batched scorer's scalar core (stands in
+    token Jaccard — the reference for ``lexical_score_expr`` (stands in
     for the remote lookup's ranking, kg/lookup.py:95-106)."""
     return 0.5 * norm_edit_similarity(mention_norm, key_norm) + \
         0.5 * token_jaccard(mention_norm, key_norm)
 
 
-# --- Spark vectorized wrappers ---------------------------------------------
+# --- Spark expressions and the accent-strip UDF ------------------------------
 
 def prenorm_expr(col):
     """JVM expression for the UDF-free prefix of ``normalize_mention``:
@@ -113,6 +115,27 @@ def prenorm_expr(col):
     c = F.regexp_replace(c, r"\(([^)]*)\)", " ")
     c = F.lower(c)
     return F.trim(F.regexp_replace(c, r"\s+", " "))
+
+
+def lexical_score_expr(a, b):
+    """JVM expression for ``lexical_score`` over two normalized string
+    columns, bit-identical to the scalar core (asserted in
+    tests/test_normalize.py). Normalized strings are ASCII with single
+    inner spaces, so ``length`` counts what ``len`` counts and
+    ``split(·, ' ')`` yields what ``str.split()`` yields — except on
+    the empty string, where it yields ``['']``. Against a non-empty
+    side that still gives Jaccard 0; two empty sides are equal strings,
+    which score 1.0 up front — that also keeps 0/0 out, which raises
+    under ANSI mode. Integer ``/`` is double division, so each step
+    rounds as Python's does."""
+    from pyspark.sql import functions as F
+
+    ta, tb = F.split(a, " "), F.split(b, " ")
+    lev = F.levenshtein(a, b) / F.greatest(F.length(a), F.length(b))
+    jaccard = F.size(F.array_intersect(ta, tb)) / F.size(F.array_union(ta, tb))
+    return F.when(a == b, F.lit(1.0)).otherwise(
+        F.lit(0.5) * (F.lit(1.0) - lev) + F.lit(0.5) * jaccard
+    )
 
 
 def prenorm_py(s: str) -> str:
@@ -135,89 +158,3 @@ def make_normalize_udf():
         return col.map(lambda s: normalize_mention(s) if s is not None else "")
 
     return normalize_udf
-
-
-def _levenshtein_batch(A: list, B: list):
-    """Vectorized exact Levenshtein over a batch of string pairs:
-    the same DP recurrence as ``_levenshtein``, with the i×j loops in
-    Python but every cell update a NumPy op across the WHOLE batch —
-    maxlen² batch-wide vector ops instead of Σ len_a·len_b
-    interpreted scalar ops (guide §4.2: hand batches to native code).
-    Integer DP ⇒ bit-identical distances. Returns int64 array."""
-    import numpy as np
-
-    n = len(A)
-    la = np.fromiter((len(a) for a in A), dtype=np.int64, count=n)
-    lb = np.fromiter((len(b) for b in B), dtype=np.int64, count=n)
-    res = np.zeros(n, dtype=np.int64)
-    res[la == 0] = lb[la == 0]
-    ma, mb = int(la.max(initial=0)), int(lb.max(initial=0))
-    if ma == 0 or mb == 0:
-        res[lb == 0] = la[lb == 0]
-        return res
-    # U-dtype arrays pad with \x00 (never a real char here); UCS4
-    # view gives an (n, maxlen) int32 code matrix
-    CA = np.array(A, dtype=f"U{ma}").view(np.int32).reshape(n, ma)
-    CB = np.array(B, dtype=f"U{mb}").view(np.int32).reshape(n, mb)
-    prev = np.broadcast_to(
-        np.arange(mb + 1, dtype=np.int64), (n, mb + 1)
-    ).copy()
-    cur = np.empty_like(prev)
-    for i in range(1, ma + 1):
-        cur[:, 0] = i
-        ca = CA[:, i - 1]
-        for j in range(1, mb + 1):
-            np.minimum(prev[:, j] + 1, cur[:, j - 1] + 1, out=cur[:, j])
-            np.minimum(
-                cur[:, j],
-                prev[:, j - 1] + (ca != CB[:, j - 1]),
-                out=cur[:, j],
-            )
-        done = la == i
-        if done.any():
-            # row's DP is complete at i == len(a); cells past lb are
-            # padding garbage but (la, lb) never depends on them
-            res[done] = cur[done, lb[done]]
-        prev, cur = cur, prev
-    zb = lb == 0
-    res[zb] = la[zb]
-    return res
-
-
-def make_lexical_score_udf():
-    """pandas UDF (Arrow-batched) scoring (mention_norm, key_norm)
-    pairs — the hot fuzzy path. The Levenshtein half runs through the
-    batch-vectorized integer DP (``_levenshtein_batch``); the final
-    per-pair arithmetic keeps the exact scalar operation order
-    (1 − lev/max_len, then the 0.5/0.5 mean) in float64, so scores
-    are bit-identical to ``lexical_score`` (asserted in
-    tests/test_normalize.py). Rows whose longer string exceeds 256
-    chars fall back to the scalar path — a single pathological cell
-    would otherwise inflate the whole batch's maxlen² loop."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def lexical_score_udf(m: pd.Series, k: pd.Series) -> pd.Series:
-        A = [a or "" for a in m]
-        B = [b or "" for b in k]
-        n = len(A)
-        out = [0.0] * n
-        vec_idx = [
-            i for i in range(n) if len(A[i]) <= 256 and len(B[i]) <= 256
-        ]
-        if vec_idx:
-            lev = _levenshtein_batch(
-                [A[i] for i in vec_idx], [B[i] for i in vec_idx]
-            )
-            for pos, i in enumerate(vec_idx):
-                a, b = A[i], B[i]
-                mx = max(len(a), len(b))
-                edit = 1.0 if mx == 0 else 1.0 - int(lev[pos]) / mx
-                out[i] = 0.5 * edit + 0.5 * token_jaccard(a, b)
-        for i in range(n):
-            if len(A[i]) > 256 or len(B[i]) > 256:
-                out[i] = lexical_score(A[i], B[i])
-        return pd.Series(out, dtype="float64")
-
-    return lexical_score_udf

@@ -15,9 +15,9 @@ Dataflow (each stage cites the scale rationale):
    are. Hot mentions ("USA" in every table) skew the *cells→mention*
    groupBy, not this join, because dedup already collapsed them.
 3. fuzzy fallback — only mentions with no exact hit. Token blocking
-   (shared ≥1 token) bounds the candidate pairs, then an Arrow-batched
-   pandas UDF scores (edit similarity + token Jaccard)
-   — kg/lookup.py:95-106's ranking, vectorized.
+   (shared ≥1 token) bounds the candidate pairs, then a JVM built-in
+   expression scores them (edit similarity + token Jaccard)
+   — kg/lookup.py:95-106's ranking, no Python.
 4. redirect resolution — ≤ REDIRECT_MAX_HOPS chained left joins on the
    redirect edge table (challenge_utils.py:441-453 bounded closure),
    dedup by final URI keeping max score.
@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 from ..barriers import parquet_barrier
 from ..constants import FUZZY_MIN_SCORE, TOP_K_CANDIDATES
 from ..functions.normalize import (
-    make_lexical_score_udf,
+    lexical_score_expr,
     make_normalize_udf,
     prenorm_expr,
 )
@@ -126,7 +126,6 @@ def generate_candidates(
     blocked-join fan-out under Zipfian mentions; scoring stays exact
     on the surviving pairs. None = no cap (fixture-exact).
     """
-    score_udf = make_lexical_score_udf()
     normalize = make_normalize_udf()
 
     # JVM prenorm over the full cell table — pure whole-stage codegen,
@@ -187,13 +186,13 @@ def generate_candidates(
     if max_token_df is not None:
         i_tok = drop_hot_keys(i_tok, ["tok"], max_token_df)
     # Pin the dedup shuffle's width on a prefix of the dedup keys:
-    # AQE's byte-based partition coalescing is blind to the per-row
-    # *Python* cost of the scorer below — at fixture scale it packs
-    # the whole pair table into 1-2 partitions and serializes the
-    # pandas UDF regardless of core count. An explicit repartition is
-    # never coalesced; (mention_norm, uri) ⊆ the dedup key, so the
-    # dedup AND the groupBy below both run exchange-free on it (no
-    # extra shuffle vs the unhinted plan).
+    # the scorer below costs O(len_a·len_b) per pair (the Levenshtein
+    # DP), which AQE's byte-based partition coalescing cannot see — at
+    # fixture scale it packs the whole pair table into 1-2 partitions
+    # and serializes the scoring regardless of core count. An explicit
+    # repartition is never coalesced; (mention_norm, uri) ⊆ the dedup
+    # key, so the dedup AND the groupBy below both run exchange-free on
+    # it (no extra shuffle vs the unhinted plan).
     sc = data_cells.sparkSession.sparkContext
     n_score_parts = max(
         sc.defaultParallelism * 2,
@@ -207,7 +206,8 @@ def generate_candidates(
     )
     fuzzy = (
         blocked.withColumn(
-            "pair_score", score_udf(F.col("mention_norm"), F.col("key_norm"))
+            "pair_score",
+            lexical_score_expr(F.col("mention_norm"), F.col("key_norm")),
         )
         .groupBy("mention_norm", "uri")
         .agg(F.max("pair_score").alias("score"))

@@ -135,8 +135,9 @@ def build_closure_distributed(
 
 
 def closure_to_map(closure: DataFrame) -> dict[str, dict[str, int]]:
-    """Collect the (tiny) closure to a driver dict for broadcasting
-    into the compatibility pandas UDFs (kg_matching.py:596-624 role)."""
+    """Collect the (tiny) closure to a driver dict, class → {ancestor →
+    depth}: the source of the map literal that the type-compatibility
+    and most-specific expressions read (kg_matching.py:596-624 role)."""
     out: dict[str, dict[str, int]] = {}
     for row in closure.collect():
         out.setdefault(row["class_uri"], {})[row["ancestor_uri"]] = row["depth"]

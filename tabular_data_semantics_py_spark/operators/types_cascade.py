@@ -11,17 +11,16 @@ Join strategy at scale: ``kg_triples`` is the big fact table; all
 aggregations on it are partial-agg friendly groupBys keyed by entity
 URI. ``property_meta`` and the ontology closure are tiny dimensions
 (broadcast). Compatibility checks — set-vs-set reachability in the
-class DAG — use an Arrow-batched pandas UDF over the broadcast closure
-map: the one place a join would need a quadratic explode.
+class DAG — and the most-specific reduction are ``exists``/``filter``
+higher-order functions over one map literal of the closure (class →
+ancestor → depth): the one place a join would need a quadratic
+explode, and no Python.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BooleanType, StringType
 from pyspark.sql.window import Window
 
 from ..constants import (
@@ -36,21 +35,36 @@ def _avoid_tops_lit():
     return F.array(*[F.lit(x) for x in sorted(AVOID_TOP_CONCEPTS)])
 
 
-def _aslist(v) -> list:
-    """Arrow hands array columns to pandas UDFs as numpy arrays whose
-    truthiness is ambiguous — normalize to a plain list."""
-    if v is None:
-        return []
-    return list(v)
+def closure_literal(closure_map: dict[str, dict[str, int]]) -> Column:
+    """The closure as one map literal, class → {ancestor → depth}.
+    It is tiny (fixture: 28 classes, 75 entries) and constant-folds
+    into the plan."""
+    return F.create_map(*[
+        x
+        for c, ancs in sorted(closure_map.items())
+        for x in (F.lit(c), F.create_map(*[
+            y for a, d in sorted(ancs.items()) for y in (F.lit(a), F.lit(d))
+        ]))
+    ]).cast("map<string,map<string,int>>")
 
 
-def _compatible(t: str, ref: list[str], cl: dict[str, dict[str, int]]) -> bool:
+def _ancestors(cl: Column, c: Column) -> Column:
+    """cl[c], or an empty map for a class absent from the closure
+    (``element_at`` on a missing key is NULL)."""
+    return F.coalesce(
+        F.element_at(cl, c), F.create_map().cast("map<string,int>")
+    )
+
+
+def compatible_expr(cl: Column, t: Column, ref: Column) -> Column:
     """t ∈ {s} ∪ ancestors(s) ∪ descendants(s) for some s ∈ ref
     (kg_matching.py:596-624)."""
-    for s in ref:
-        if t == s or t in cl.get(s, {}) or s in cl.get(t, {}):
-            return True
-    return False
+    return F.exists(
+        ref,
+        lambda s: (t == s)
+        | F.map_contains_key(_ancestors(cl, s), t)
+        | F.map_contains_key(_ancestors(cl, t), s),
+    )
 
 
 def build_entity_types(
@@ -63,26 +77,7 @@ def build_entity_types(
     """→ (uri, types:array<string> sorted) — the D-cascade result,
     ancestor-expanded, AVOID_TOP_CONCEPTS removed."""
 
-    cl = closure_map  # tiny; captured into the Arrow UDFs below
-
-    @pandas_udf(BooleanType())
-    def compat_one(t: pd.Series, ref: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                _compatible(a, _aslist(b), cl) if a is not None else False
-                for a, b in zip(t, ref)
-            ]
-        )
-
-    @pandas_udf(ArrayType(StringType()))
-    def compat_filter(ts: pd.Series, ref: pd.Series) -> pd.Series:
-        out = []
-        for arr, r in zip(ts, ref):
-            al = _aslist(arr)
-            rl = _aslist(r)
-            kept = [t for t in al if _compatible(t, rl, cl)]
-            out.append(kept if kept else al)  # kg_matching.py:345-350 fallback
-        return pd.Series(out)
+    cl = closure_literal(closure_map)
 
     # D1/D2: lookup-strategy types — index types, ns-filtered, cleared
     # for disambiguation pages (kg_matching.py:417-420)
@@ -151,7 +146,9 @@ def build_entity_types(
             F.when(
                 (F.size("range_types") > 0)
                 & F.col("domain_type").isNotNull()
-                & compat_one(F.col("domain_type"), F.col("range_types")),
+                & compatible_expr(
+                    cl, F.col("domain_type"), F.col("range_types")
+                ),
                 F.array_union("range_types", F.array(F.col("domain_type"))),
             ).otherwise(F.col("range_types")),
         )
@@ -159,6 +156,9 @@ def build_entity_types(
     )
 
     empty = F.array().cast("array<string>")
+    compat = F.filter(
+        "endpoint_types", lambda t: compatible_expr(cl, t, F.col("pred_types"))
+    )
     base = (
         lookup.join(endpoint, "uri", "left")
         .join(pred_types, "uri", "left")
@@ -168,19 +168,20 @@ def build_entity_types(
             "base_types",
             # D2 cascade (kg_matching.py:301-355): lookup hit wins; else
             # endpoint types compat-filtered against predicate types
-            # (raw endpoint fallback); else predicate types alone.
+            # (raw endpoint fallback when none is compatible,
+            # kg_matching.py:345-350); else predicate types alone.
             F.when(F.size("lookup_types") > 0, F.col("lookup_types"))
-            .when(
-                (F.size("endpoint_types") > 0) & (F.size("pred_types") > 0),
-                compat_filter(F.col("endpoint_types"), F.col("pred_types")),
-            )
+            .when(F.size(compat) > 0, compat)  # [] unless both non-empty
             .when(F.size("endpoint_types") > 0, F.col("endpoint_types"))
             .otherwise(F.col("pred_types")),
         )
         .select("uri", "base_types")
         # pinned-width repartition before the checkpoint: AQE coalesces
         # the tiny join output to 1 partition, which would serialize
-        # the explode→closure-join→collect_set chain fused on top of it
+        # the explode→closure-join→collect_set chain fused on top of it.
+        # When the planned joins below already hash-partition on uri at
+        # this width, Spark drops the repartition as redundant, and the
+        # width rests on AQE's coalescing floor (minPartitionSize)
         .repartition(
             entity_index.sparkSession.sparkContext.defaultParallelism,
             "uri",
@@ -219,23 +220,18 @@ def make_most_specific_udf(closure_map: dict[str, dict[str, int]],
                            agent_class: str):
     """Most-specific-class reduction (challenge_utils.py:196-245):
     drop Agent, then any class that is a strict (depth ≥ 1) ancestor
-    of another class in the set. Arrow-batched; the closure map is a
-    tiny broadcast dimension."""
-    cl = closure_map
+    of another class in the set; sorted. Returns a ``Column -> Column``
+    function that composes Spark built-ins (``filter``/``exists`` over
+    the closure map literal), not a UDF — the name is kept because
+    kgbench and bench.py import it."""
+    cl = closure_literal(closure_map)
 
-    @pandas_udf(ArrayType(StringType()))
-    def most_specific(types: pd.Series) -> pd.Series:
-        out = []
-        for arr in types:
-            ts = [t for t in _aslist(arr) if t != agent_class]
-            kept = [
-                t
-                for t in ts
-                if not any(
-                    u != t and cl.get(u, {}).get(t, 0) >= 1 for u in ts
-                )
-            ]
-            out.append(sorted(kept))
-        return pd.Series(out)
+    def most_specific(types: Column) -> Column:
+        ts = F.filter(types, lambda t: t != F.lit(agent_class))
+        return F.array_sort(F.filter(ts, lambda t: ~F.exists(
+            ts,
+            lambda u: (u != t)
+            & (F.coalesce(F.element_at(_ancestors(cl, u), t), F.lit(0)) >= 1),
+        )))
 
     return most_specific

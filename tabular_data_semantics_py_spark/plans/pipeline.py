@@ -57,12 +57,16 @@ class PipelineResult:
             raise AttributeError(name) from e
 
 
-# stages whose output is consumed by 2+ downstream branches AND carries
-# pandas-UDF columns (Catalyst re-evaluates Python UDFs per reference):
-# in no-checkpoint mode these are eagerly materialized. Everything else
-# flows lazily into one AQE-planned DAG — the answer to the round-1
-# stage-barrier tax (8 sequential full materializations → 3).
-# cells: the mapInPandas CSV parse, consumed by candidates + emission.
+# stages whose output is consumed by 2+ downstream branches: in
+# no-checkpoint mode these are eagerly materialized, so no consumer
+# re-runs the stage's subtree. cells (the mapInPandas CSV parse,
+# consumed by candidates + emission) carries a pandas-UDF column,
+# which Catalyst re-evaluates per reference; cells_m (the prenorm +
+# mention-bridge join over the full cell table), entity_types and cea
+# are plain JVM plans, and keep their barriers until a measurement
+# shows re-execution is cheaper. Everything else flows lazily into one
+# AQE-planned DAG — the answer to the round-1 stage-barrier tax (8
+# sequential full materializations → 3).
 # ALL these barriers are parquet-backed (barriers.py): a parquet scan
 # carries real size statistics, so Catalyst broadcasts a barrier that
 # is small and shuffle-joins one that is not — the scale-appropriate
@@ -93,7 +97,8 @@ class _Checkpointer:
             if name in _BARRIER_STAGES:
                 # plan truncation at the stage boundary — without it
                 # Catalyst re-analyzes the upstream tree per action and
-                # re-runs the stage's pandas UDFs once per consumer.
+                # re-runs the stage's subtree (pandas UDFs included)
+                # once per consumer.
                 # Fact-scale outputs go through a parquet barrier, NOT
                 # localCheckpoint (see barriers.py: a full-corpus
                 # executor-storage checkpoint starves every later
@@ -284,10 +289,11 @@ def run_pipeline(
         if _pool is not None:
             cm_lazy, cand_lazy = _gen_candidates()  # writes mention_bridge
             # candidates materialized eagerly HERE: the fuzzy-scoring
-            # subtree is Python-worker-bound while cells_m's
-            # prenorm+bridge join is JVM-shuffle-bound — run on separate
-            # driver threads they overlap on complementary resources
-            # instead of executing back-to-back inside cea_linked's write.
+            # subtree (index-key accent strip, per-pair Levenshtein) is
+            # compute-bound while cells_m's prenorm+bridge join is
+            # shuffle-bound — run on separate driver threads they
+            # overlap on complementary resources instead of executing
+            # back-to-back inside cea_linked's write.
             cand_future = _pool.submit(
                 ck.stage, "candidates",
                 lambda: parquet_barrier(cand_lazy, "candidates"),

@@ -61,15 +61,18 @@ def test_lexical_score_monotone():
     assert lexical_score("paris", "paris") == 1.0
 
 
-def test_levenshtein_batch_matches_scalar():
-    """The batch-vectorized integer DP behind make_lexical_score_udf
-    must be bit-identical to the scalar _levenshtein on every pair —
-    including empties, equal strings, \\x00-containing strings (the
-    numpy U-dtype pad char), unicode, and asymmetric lengths."""
+def test_lexical_score_expr_matches_scalar(spark):
+    """The JVM built-in scorer must be bit-identical to the scalar
+    ``lexical_score`` on every pair of its input domain (normalized
+    strings): empties, equal strings, \\x00 / unicode inputs as
+    normalization leaves them, asymmetric lengths, and a pair over 256
+    characters."""
     import random
 
+    from pyspark.sql import functions as F
+
     from tabular_data_semantics_py_spark.functions.normalize import (
-        _levenshtein, _levenshtein_batch, lexical_score, token_jaccard,
+        lexical_score_expr,
     )
 
     rnd = random.Random(7)
@@ -80,13 +83,11 @@ def test_levenshtein_batch_matches_scalar():
         a = "".join(rnd.choice(alphabet) for _ in range(rnd.randrange(0, 12)))
         b = "".join(rnd.choice(alphabet) for _ in range(rnd.randrange(0, 12)))
         cases.append((a, b))
-    A = [a for a, _ in cases]
-    B = [b for _, b in cases]
-    got = _levenshtein_batch(A, B)
-    for (a, b), g in zip(cases, got):
-        assert int(g) == _levenshtein(a, b), (a, b, int(g))
-        # and the full score arithmetic mirrors the scalar bitwise
-        mx = max(len(a), len(b))
-        edit = 1.0 if mx == 0 else 1.0 - int(g) / mx
-        assert 0.5 * edit + 0.5 * token_jaccard(a, b) == \
-            lexical_score(a, b), (a, b)
+    cases = [(normalize_mention(a), normalize_mention(b)) for a, b in cases]
+    cases += [("", ""), ("x" * 300 + " y", "x" * 299 + "z y")]
+    got = spark.createDataFrame(cases, "a string, b string").select(
+        "a", "b", lexical_score_expr(F.col("a"), F.col("b")).alias("s")
+    ).collect()
+    assert len(got) == len(cases)
+    for r in got:
+        assert r.s == lexical_score(r.a, r.b), (r.a, r.b, r.s)
