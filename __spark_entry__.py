@@ -5,7 +5,7 @@
   obj_is_literal) triples.
 - ``queries()``      — one entry per implemented operator from
   SURVEY.md §2 plus the training-data-pipeline operators (dedup,
-  similarity search, corpus curation, multimodal plumbing).
+  corpus curation, multimodal plumbing).
 - ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query. KG fixture
   queries embed the (seeded, deterministic) fixture as VALUES CTEs;
   testdata queries run on the pre-registered parquet views.

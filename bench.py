@@ -12,15 +12,13 @@ Headline queries:
 - ``kg_pipeline``  — the full KG-construction pipeline on a fixture
   corpus scaled to the sf (n_tables ∝ sf); the primary throughput
   number (triples/sec) comes from this.
-- relational / dedup / similarity / curation operators over the sf
-  parquet.
+- relational / dedup / curation operators over the sf parquet.
 
 ``--scaling`` mode runs the same jobs at two parallelism levels
 (local[2] vs local[8] = N vs 4N cores) and writes BENCH/BASELINE.md
 with throughputs + scaling efficiency — the sandbox stand-in for the
-N→4N executor rule (BASELINE.md protocol). Jobs are selectable via
-SPARK_GRAFT_SCALING_JOBS (comma list: knn_similarity, kg_pipeline) so
-each fits a single invocation; results merge via
+N→4N executor rule (BASELINE.md protocol). The one job is
+``kg_pipeline`` (SPARK_GRAFT_SCALING_JOBS); results merge via
 BENCH/scaling_state.json.
 """
 
@@ -434,13 +432,7 @@ BENCH_QUERIES = [
     "doc_sample_stratified",
     "doc_repetition",
     "doc_pii_scrub",
-    "doc_kmv_distinct",
     "media_meta",
-    "emb_knn",
-    "emb_ivf_knn",
-    "emb_cosine_pairs_fast",
-    "emb_srp_neardup",
-    "emb_quantize",
 ]
 
 
@@ -629,44 +621,17 @@ def _scaling_session(p: int, high: int):
     return spark
 
 
-def _augmented_embeddings(spark, sf_dir: str, factor: int):
-    """Deterministically augment the embedding table ×factor (scaled
-    copies with offset ids) so the similarity job carries real
-    compute — derived purely from the driver's testdata."""
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    out = emb.select("vec_id", "embedding")
-    for i in range(1, factor):
-        out = out.union(
-            emb.select(
-                (F.col("vec_id") + i * 1_000_000).alias("vec_id"),
-                F.transform(
-                    "embedding", lambda x, s=i: x * F.lit(1.0 + s * 0.001)
-                ).alias("embedding"),
-            )
-        )
-    return out
-
-
 def run_scaling(sf_dir: str, low: int = 2, high: int = 8, reps: int = 2) -> None:
-    """The N→4N executor rule, sandbox protocol: the SAME two jobs at
-    two parallelism levels on the same input, interleaved best-of-reps
-    (the host is shared; interleaving samples comparable load):
+    """The N→4N executor rule, sandbox protocol: the SAME job at two
+    parallelism levels on the same input, interleaved best-of-reps
+    (the host is shared; interleaving samples comparable load).
 
-    - ``kg_pipeline``: the flagship end-to-end job. At fixture scale it
-      is dominated by per-stage scheduling latency (~100 sub-stages of
-      sub-second tasks), so its efficiency is a *lower bound* — at
-      100 TB each task carries GBs and the stage latency amortizes.
-    - ``knn_similarity``: compute-bound representative operator
-      (brute-force cosine top-k, pure whole-stage-codegen arithmetic)
-      — the clean measure of how the engine's plans scale with cores.
+    ``kg_pipeline`` is the flagship end-to-end job. At fixture scale it
+    is dominated by per-stage scheduling latency (~100 sub-stages of
+    sub-second tasks), so its efficiency is a *lower bound* — at
+    100 TB each task carries GBs and the stage latency amortizes.
     """
-    from tabular_data_semantics_py_spark.operators.similarity import (
-        knn_bruteforce,
-    )
-
-    jobs = os.environ.get("SPARK_GRAFT_SCALING_JOBS", "knn_similarity,kg_pipeline").split(",")
+    jobs = os.environ.get("SPARK_GRAFT_SCALING_JOBS", "kg_pipeline").split(",")
     sf = _sf_of(sf_dir)
     # per (job, p): list of (wall_sec, weather_probe_sec)
     samples: dict[str, dict[int, list]] = {j: {low: [], high: []} for j in jobs}
@@ -720,24 +685,6 @@ def run_scaling(sf_dir: str, low: int = 2, high: int = 8, reps: int = 2) -> None
                 )
                 counts["kg_pipeline"] = n
                 samples["kg_pipeline"][p].append((sec,) + w)
-
-            if "knn_similarity" in jobs:
-                emb = (
-                    _augmented_embeddings(spark, sf_dir, factor=3)
-                    .repartition(4 * p)
-                    .localCheckpoint()
-                )
-                knn_bruteforce(emb, list(range(10)), k=3).count()  # warm
-                pre = ambient_probe()
-                with weather_monitor() as wm:
-                    t0 = time.time()
-                    nk = knn_bruteforce(emb, list(range(2000)), k=10).count()
-                    sec = time.time() - t0
-                post = ambient_probe()
-                counts["knn_similarity"] = nk
-                samples["knn_similarity"][p].append(
-                    (sec, max(pre, post), wm.worst)
-                )
             spark.stop()
 
     for _rep in range(reps):
@@ -839,21 +786,14 @@ def run_scaling(sf_dir: str, low: int = 2, high: int = 8, reps: int = 2) -> None
     json.dump(state, open(state_path, "w"), indent=1)
     eff = {j: v["efficiency"] for j, v in state.items()}
     kg_top = write_baseline_md(state, probe_abs)
-    # headline value = THIS run's knn row under the label it was
-    # actually stored as (pair-suffixed for non-default (low, high)) —
-    # eff["knn_similarity"] would silently read a stale 2v8 row (or
-    # 0.0) when running e.g. SPARK_GRAFT_SCALING_LOW=1
-    knn_label = "knn_similarity" if (low, high) == (2, 8) \
-        else f"knn_similarity_{low}v{high}"
     print(json.dumps({
         "metric": "scaling_efficiency",
-        "value": round(eff.get(knn_label, eff.get("knn_similarity", 0.0)), 3),
+        "value": round(eff[kg_top], 3) if kg_top else 0.0,
         "unit": "ratio",
         "queries": {
             f"{job}_local{p}_sec": round(t, 2)
             for job, times in best.items() for p, t in times.items()
         },
-        "kg_pipeline_efficiency": round(eff[kg_top], 3) if kg_top else 0.0,
         "sf": sf,
     }))
 
@@ -950,8 +890,8 @@ def write_baseline_md(state: dict, probe_abs: float = 0.15):
                 "cited.\n"
             )
         f.write(
-            "\n- `knn_similarity` (compute-bound, whole-stage-codegen "
-            "cosine folds) is the representative scaling measure.\n"
+            "\n- `knn_similarity` rows are historical: that job was "
+            "removed with the embedding-similarity operators.\n"
             "- `kg_pipeline_sf{N}` rows are the SAME end-to-end job at "
             "rising corpus scales: efficiency rises with sf because "
             "the serial floor F is paid once per run, not per byte "

@@ -1,20 +1,18 @@
-"""Plan-truncating stage barriers sized for the storage they use.
+"""Plan-truncating stage barrier for fact-scale stage outputs.
 
-Two kinds of barrier, chosen by expected size:
-
-- ``ckpt`` (small dims / bridges): eager ``localCheckpoint`` — executor
-  storage blocks, sub-second, fine for anything broadcast-scale.
-- ``parquet_barrier`` (fact-scale stage outputs): a snappy-parquet
-  round trip through the session scratch dir. A ``localCheckpoint`` of
-  a fact table occupies the unified-memory *storage* pool, and every
-  later shuffle/aggregation then fights it for *execution* memory —
-  measured on the sf2.5 bench corpus this turns the second
-  materialization of a run from 11 s into 92 s (eviction thrash). At
-  the 100 TB target a full-corpus executor-storage checkpoint is
-  impossible by construction; stage outputs live on (distributed)
-  storage, which is exactly what this barrier models. Parquet is also
-  5-10x smaller than the in-memory rows for the string-heavy KG
-  tables.
+``parquet_barrier`` is a snappy-parquet round trip through the
+session scratch dir. Small dims and bridges are instead checkpointed
+in place by their operators with an eager ``localCheckpoint``
+(executor storage blocks, sub-second, fine for anything
+broadcast-scale). A ``localCheckpoint`` of a fact table occupies the
+unified-memory *storage* pool, and every later shuffle/aggregation
+then fights it for *execution* memory — measured on the sf2.5 bench
+corpus this turns the second materialization of a run from 11 s into
+92 s (eviction thrash). At the 100 TB target a full-corpus
+executor-storage checkpoint is impossible by construction; stage
+outputs live on (distributed) storage, which is exactly what this
+barrier models. Parquet is also 5-10x smaller than the in-memory rows
+for the string-heavy KG tables.
 
 Each barrier write lands in a fresh generation directory (DataFrames
 returned by earlier pipeline runs in the same session must stay

@@ -8,10 +8,10 @@ Two query families:
    the fixture as VALUES CTEs and either re-implements the operator in
    ANSI SQL (closure, emission, voting, most-specific…) or pins the
    plain-Python oracle's goldens (CEA/CTA/CPA decisions).
-2. testdata queries — relational / dedup / similarity / curation /
-   multimodal operators over the driver's parquet tables (region
-   nation customer supplier part orders lineitem documents
-   embeddings), with straight SQL oracles.
+2. testdata queries — relational / dedup / curation / multimodal
+   operators over the testdata parquet tables (region nation
+   customer supplier part orders lineitem documents), with straight
+   SQL oracles.
 
 Numeric discipline (driver hashes values exactly):
 - count-like outputs cast to bigint (DuckDB count/len are BIGINT)
@@ -165,7 +165,7 @@ def _load(spark: SparkSession, sf_dir: str, table: str,
         # Unsplittable-input remediation (guide §2.5: "one huge
         # unsplittable file — repartition immediately after the
         # read"), requested only by queries whose pre-shuffle map work
-        # dominates (gram explodes, GEMM/UDF passes, per-pair folds).
+        # dominates (gram explodes, UDF passes, per-pair folds).
         # The footer probe makes it a NO-OP on healthy layouts: a
         # 100 TB table has thousands of row groups and never pays the
         # extra exchange; only a row-group-starved file (the testdata
@@ -173,11 +173,11 @@ def _load(spark: SparkSession, sf_dir: str, table: str,
         # session's shuffle width (scale-adaptive, not a core-count
         # constant). Row order is irrelevant to every registered
         # query (set-compared against the oracle).
-        # The rows floor keeps tiny tables (sf0.01 gate corpora, the
-        # sf0.1 embeddings) off the remedial shuffle: below it the
-        # serial map work is cheaper than re-executing the exchange
-        # once per consuming action (measured: emb_ivf_knn's six
-        # actions each re-shuffled a 2k-row table, +1.3 s at sf0.1).
+        # The rows floor keeps tiny tables (sf0.01 gate corpora) off
+        # the remedial shuffle: below it the serial map work is cheaper
+        # than re-executing the exchange once per consuming action
+        # (measured: a 2k-row table re-shuffled once per consuming
+        # action cost +1.3 s at sf0.1).
         width = spark.sparkContext.defaultParallelism
         n_splits, n_rows = _effective_splits(path)
         if n_splits < max(width // 4, 2) and n_rows >= 4000:
@@ -1420,8 +1420,7 @@ def order_revenue_topk(spark, sf_dir):
 
 
 # ===========================================================================
-# dedup / similarity / curation / multimodal (training-data pipeline
-# operators)
+# dedup / curation / multimodal (training-data pipeline operators)
 # ===========================================================================
 
 @q(
@@ -1531,231 +1530,6 @@ def doc_neardup_canonical(spark, sf_dir):
 
     docs = _load(spark, sf_dir, "documents", rebalance=True)
     return near_dup_canonicalize(docs, 0.9, n_hashes=16, rows_per_band=1)
-
-
-_COS = (
-    "list_inner_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) / "
-    "(sqrt(list_inner_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) * "
-    "sqrt(list_inner_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
-
-
-@q(
-    "emb_cosine_pairs",
-    lambda: f"""
-SELECT a.vec_id AS i, b.vec_id AS j
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_COS} >= 0.4
-""",
-)
-def emb_cosine_pairs(spark, sf_dir):
-    """Embedding near-dup pairs: brute-force cosine ≥ 0.4."""
-    from .operators.similarity import cosine_pairs
-
-    return cosine_pairs(_load(spark, sf_dir, "embeddings"), 0.4)
-
-
-@q(
-    "emb_knn",
-    lambda: f"""
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_COS} DESC, b.vec_id) AS rank
-  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-  WHERE a.vec_id < 20
-) WHERE rank <= 3
-""",
-)
-def emb_knn(spark, sf_dir):
-    """Exact top-3 cosine neighbors for query ids 0..19 (ANN
-    correctness baseline)."""
-    from .operators.similarity import knn_bruteforce
-
-    return knn_bruteforce(
-        _load(spark, sf_dir, "embeddings", rebalance=True), list(range(20)), k=3
-    )
-
-
-@q(
-    "emb_cosine_pairs_fast",
-    lambda: f"""
-SELECT a.vec_id AS i, b.vec_id AS j
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE {_COS} >= 0.4
-""",
-)
-def emb_cosine_pairs_fast(spark, sf_dir):
-    """Scale path for cosine near-dup pairs: broadcast normalized
-    matrix + per-partition numpy GEMM (mapInPandas) — same output as
-    the fold-based baseline, O(n²) flops in BLAS instead of
-    interpreted expression evaluation."""
-    from .operators.similarity import cosine_pairs_blocked
-
-    return cosine_pairs_blocked(
-        _load(spark, sf_dir, "embeddings", rebalance=True), 0.4
-    )
-
-
-def _srp_pairs_scalar():
-    """Independent recomputation of the SRP-LSH near-dup semantics
-    (candidates-sharing-a-band-bucket ∩ exact cosine ≥ τ) over the
-    oracle sf's embeddings: naive per-component projection loops and a
-    dict-of-buckets pairing instead of the operator's GEMM +
-    bucket-equi-join, with the verify cosine folded in the operator's
-    exact sequential operand order. Hyperplanes re-derived from
-    (n_bits, dim, seed) via the pure-Python XXH64 mirror — shared
-    *parameters*, independent *computation* (the doc_simhash oracle
-    precedent). Returns (sorted i<j pair list, sorted vec_id list over
-    ALL rows) — shared by the pair oracle and the canonicalization
-    oracle, memoized per oracle sf-dir (the O(n·n_bits·dim) projection
-    loop is the most expensive scalar oracle build; the _fixture
-    pattern)."""
-    import duckdb
-
-    from .operators.similarity import srp_hyperplanes
-
-    n_bits, n_bands, tau = 128, 16, 0.4
-    sf_dir = _oracle_sf_dir()
-    memo_key = ("srp_pairs_scalar", sf_dir)
-    if memo_key in _STATE:
-        return _STATE[memo_key]
-    rows = duckdb.connect().execute(
-        "SELECT vec_id, embedding FROM "
-        f"read_parquet('{sf_dir}/embeddings.parquet')"
-    ).fetchall()
-    # degenerate-vector policy, mirroring the operator exactly:
-    # NULL vectors / NULL elements are dropped by valid_vectors before
-    # the numpy stages (they appear in the id list but never pair);
-    # zero-norm vectors ARE signed and bucketed but their cosine is
-    # NULL under cosine_expr's nullif guard, so they fail the verify.
-    ids = sorted(vid for vid, _ in rows)
-    valid = [
-        (vid, vec)
-        for vid, vec in rows
-        if vec is not None and all(v is not None for v in vec)
-    ]
-    dim = len(valid[0][1])
-    H = srp_hyperplanes(n_bits, dim)
-    r_bits = n_bits // n_bands
-    buckets: dict[tuple[int, int], list[int]] = {}
-    vecs: dict[int, list[float]] = {}
-    for vid, vec in valid:
-        vecs[vid] = vec
-        if any(v != v for v in vec):
-            # a NaN component makes every operator projection NaN and
-            # NaN > 0 is False — all bits 0 (the verify cosine is NaN
-            # too, so such a vector can never emit a pair)
-            bits = [0] * n_bits
-        else:
-            # same integer quantization as the operator (similarity.py
-            # signatures): ±1 hyperplanes × integer components make the
-            # projection sum EXACT under any summation order, so this
-            # sequential loop provably equals the operator's GEMM.
-            # round() is half-to-even, matching np.rint.
-            q = [round(v * 65536.0) for v in vec]
-            bits = []
-            for b in range(n_bits):
-                acc = 0
-                hb = H[b]
-                for d in range(dim):
-                    acc += q[d] if hb[d] > 0 else -q[d]
-                bits.append(1 if acc > 0 else 0)
-        for band in range(n_bands):
-            key = 0
-            for k in range(r_bits):
-                key |= bits[band * r_bits + k] << k
-            buckets.setdefault((band, key), []).append(vid)
-
-    def cos(a, b):
-        dot = naa = nbb = 0.0
-        for x, y in zip(a, b):
-            dot += x * y
-            naa += x * x
-            nbb += y * y
-        denom = naa**0.5 * nbb**0.5
-        # zero-norm → NULL cosine in the operator (nullif guard);
-        # None here fails the >= tau comparison the same way
-        return dot / denom if denom else None
-
-    cand = set()
-    for members in buckets.values():
-        members.sort()
-        for ii in range(len(members)):
-            for jj in range(ii + 1, len(members)):
-                cand.add((members[ii], members[jj]))
-    out = sorted(
-        (i, j)
-        for i, j in cand
-        if (c := cos(vecs[i], vecs[j])) is not None and c >= tau
-    )
-    _STATE[memo_key] = (out, ids)
-    return _STATE[memo_key]
-
-
-def _o_srp_neardup():
-    pairs, _ = _srp_pairs_scalar()
-    return f"SELECT * FROM {_values(pairs, 'i, j')}"
-
-
-def _o_emb_canonical():
-    """Union-find over the scalar-recomputed SRP pair graph — the
-    exact component semantics (same ground truth the doc-side
-    recursive-CTE oracle encodes), with canonical = min id per
-    component and singletons self-canonical."""
-    pairs, ids = _srp_pairs_scalar()
-    parent = {v: v for v in ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for i, j in pairs:
-        ri, rj = find(i), find(j)
-        if ri != rj:
-            parent[ri] = rj
-    cmin: dict[int, int] = {}
-    for v in ids:
-        r = find(v)
-        cmin[r] = min(cmin.get(r, v), v)
-    rows = [(v, cmin[find(v)], cmin[find(v)] == v) for v in ids]
-    return (
-        f"SELECT * FROM {_values(rows, 'vec_id, canonical_id, is_canonical')}"
-    )
-
-
-@q("emb_srp_neardup", _o_srp_neardup)
-def emb_srp_neardup(spark, sf_dir):
-    """LSH-bucketed embedding near-dup (signed random projection) —
-    the scale path beside IVF: 128-bit Rademacher-SRP signatures, 16
-    band buckets, exact sequential-fold cosine verify at 0.4. The
-    testdata embeddings are isotropic (max pairwise cos ≈ 0.5), so the
-    oracle checks the operator's defined candidate∩verify contract
-    exactly; the ≥0.996-recall near-dup regime (c ≥ 0.9) is asserted
-    on a clustered synthetic in tests/test_similarity.py."""
-    from .operators.similarity import srp_lsh_pairs
-
-    return srp_lsh_pairs(_load(spark, sf_dir, "embeddings"), spark, 0.4)
-
-
-@q("emb_neardup_canonical", _o_emb_canonical)
-def emb_neardup_canonical(spark, sf_dir):
-    """Embedding-corpus canonicalization — the survivor-selection tail
-    over the SRP-LSH near-dup graph, mirroring the document family's
-    ``doc_neardup_canonical``: SRP pairs (same config as
-    ``emb_srp_neardup``) → connected components → every vector mapped
-    to its cluster's canonical id (min vec_id), singletons
-    self-canonical. Transitive cosine chains (a~b, b~c, a̸~c) collapse
-    to one survivor — the pair list alone can't dedup the corpus.
-    Oracle: union-find over the independently-recomputed scalar pair
-    graph."""
-    from .operators.similarity import srp_neardup_canonicalize
-
-    return srp_neardup_canonicalize(
-        _load(spark, sf_dir, "embeddings"), spark, 0.4
-    )
 
 
 # word-3-gram-shingle Jaccard oracle: shingles built in SQL exactly
@@ -2181,54 +1955,6 @@ WHERE ((hv % {SAMPLE_MOD}) + {SAMPLE_MOD}) % {SAMPLE_MOD}
 """
 
 
-def _o_kmv_distinct():
-    # hashes recomputed with the pure-Python XXH64 mirror as a VALUES
-    # CTE; the (k-1)/u_k arithmetic mirrors the operator's IEEE ops
-    # (2^63 / 2^64 as exact double literals)
-    import duckdb
-
-    from .functions.xxh64 import spark_xxhash64
-
-    k = 64
-    sf_dir = _oracle_sf_dir()
-    con = duckdb.connect()
-    ids = con.execute(
-        f"SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet')"
-        " WHERE doc_id IS NOT NULL"
-    ).fetchall()
-    rows = [(i, spark_xxhash64(i)) for (i,) in ids]
-    return f"""
-WITH h AS (SELECT * FROM {_values(rows, "doc_id, hv")}),
-d AS (SELECT DISTINCT dd.lang, h.hv
-      FROM documents dd JOIN h USING (doc_id)),
-r AS (SELECT lang, hv,
-             row_number() OVER (PARTITION BY lang ORDER BY hv) AS rn
-      FROM d),
-g AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_mins,
-             MAX(hv) AS kth_min
-      FROM r WHERE rn <= {k} GROUP BY lang)
-SELECT lang, n_mins, kth_min,
-  CASE WHEN n_mins < {k} THEN CAST(n_mins AS DOUBLE)
-       ELSE CAST({k - 1} AS DOUBLE)
-            / ((CAST(kth_min AS DOUBLE) + 9.223372036854775808e18)
-               / 1.8446744073709551616e19) END AS est_distinct
-FROM g
-"""
-
-
-@q("doc_kmv_distinct", _o_kmv_distinct)
-def doc_kmv_distinct(spark, sf_dir):
-    """KMV distinct-count sketch per language
-    (operators/sketches.kmv_distinct): deterministic, mergeable,
-    skew-safe (bounded_min_k two-level salted min-k) — and therefore
-    exactly oracle-checkable, unlike HLL-based approx_count_distinct."""
-    from .operators.sketches import kmv_distinct
-
-    return kmv_distinct(
-        _load(spark, sf_dir, "documents"), ["lang"], "doc_id", k=64
-    )
-
-
 @q("doc_sample_stratified", _o_sample_stratified)
 def doc_sample_stratified(spark, sf_dir):
     """Deterministic per-language hash-threshold sample for mixture
@@ -2344,77 +2070,6 @@ def doc_pii_scrub(spark, sf_dir):
         ).alias("text"),
     )
     return pii_scrub(aug)
-
-
-@q(
-    "emb_quantize",
-    lambda: """
-WITH m AS (
-  SELECT vec_id, embedding AS v,
-         list_max(list_transform(embedding,
-                                 x -> abs(CAST(x AS DOUBLE)))) AS ma
-  FROM embeddings
-)
-SELECT vec_id,
-  CASE WHEN ma IS NULL OR NOT (ma > 0 AND ma < CAST('inf' AS DOUBLE))
-       THEN NULL ELSE 127.0 / ma END AS scale,
-  CASE WHEN ma IS NULL OR NOT (ma > 0 AND ma < CAST('inf' AS DOUBLE))
-       THEN NULL
-       ELSE list_transform(
-              v, x -> CAST(floor(CAST(x AS DOUBLE) * (127.0 / ma) + 0.5)
-                           AS INTEGER))
-       END AS qvec
-FROM m
-""",
-)
-def emb_quantize(spark, sf_dir):
-    """Symmetric int8 scalar quantization of the embedding column
-    (operators/similarity.quantize_int8) — the float32→int8 storage
-    cut before ANN indexing; floor(x·scale + 0.5) half-up rounding so
-    Spark and the RE-evaluated DuckDB oracle agree bit-for-bit."""
-    from .operators.similarity import quantize_int8
-
-    return quantize_int8(_load(spark, sf_dir, "embeddings"))
-
-
-@q("emb_ivf_knn")
-def emb_ivf_knn(spark, sf_dir):
-    """IVF-bucketed approximate kNN (numpy GEMM in mapInPandas) —
-    approximate by construction → rows-only."""
-    from .operators.similarity import ivf_knn
-
-    return ivf_knn(
-        _load(spark, sf_dir, "embeddings", rebalance=True),
-        spark, list(range(20)), k=3
-    )
-
-
-@q(
-    "emb_ivf_full_probe",
-    lambda: f"""
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_COS} DESC, b.vec_id) AS rank
-  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-  WHERE a.vec_id < 20
-) WHERE rank <= 3
-""",
-)
-def emb_ivf_full_probe(spark, sf_dir):
-    """IVF with n_probe = n_centroids: every query probes every cell,
-    so the candidate set is the full corpus and IVF ≡ exact kNN — an
-    exact oracle that still drives the whole ANN code path (seeded
-    sample → distributed Lloyd → vector-carrying assignment →
-    broadcast probe join → two-phase top-k). The exact-kNN DuckDB
-    oracle applies verbatim (same cosine expression, same
-    (cos desc, id) tie-break)."""
-    from .operators.similarity import ivf_knn
-
-    return ivf_knn(
-        _load(spark, sf_dir, "embeddings"), spark, list(range(20)),
-        k=3, n_centroids=8, n_probe=8,
-    )
 
 
 def flagship(spark: SparkSession) -> DataFrame:

@@ -258,10 +258,10 @@ def band_candidate_pairs(
     carry: tuple[str, ...] = (),
     dedup: bool = True,
 ) -> DataFrame:
-    """The LSH banding tail shared by every bucketed similarity family
-    (MinHash word sets, SimHash Hamming blocks, SRP embedding
-    signatures): optionally drop hot buckets, self-join on
-    (band, bucket), keep i < j, dedup candidates across bands.
+    """The LSH banding tail shared by the bucketed similarity families
+    (MinHash word sets, SimHash Hamming blocks): optionally drop hot
+    buckets, self-join on (band, bucket), keep i < j, dedup candidates
+    across bands.
 
     ``band_rows``: (id, band, bucket [, carry…]). ``carry`` columns
     ride along as <c>_i / <c>_j for the caller's verify stage (e.g.

@@ -27,21 +27,14 @@ from pyspark.sql import functions as F
 
 def bounded_min_k(
     df: DataFrame, keys: list[str], order_cols: list[str], k: int,
-    salt: int = 64, distinct: bool = False, as_array: bool = False,
+    salt: int = 64,
 ) -> DataFrame:
     """Per ``keys`` group, the ``k`` lexicographically-smallest rows by
     ``order_cols`` → one output row per kept element with columns
     ``keys + order_cols``. Skew-safe (no per-key sort task).
-
-    ``distinct=True`` computes the k smallest DISTINCT elements
-    without a separate dedup shuffle: duplicates of an element always
-    hash to the same salt, so an ``array_distinct`` inside each salted
-    buffer (after the sort, which keeps the array sorted) is a global
-    dedup — the KMV sketch's shape (operators/sketches.py).
     """
     def _mink(arr):
-        s = F.sort_array(arr)
-        return F.slice(F.array_distinct(s) if distinct else s, 1, k)
+        return F.slice(F.sort_array(arr), 1, k)
 
     elem = F.struct(*[F.col(c) for c in order_cols])
     lvl1 = (
@@ -54,12 +47,6 @@ def bounded_min_k(
     lvl2 = lvl1.groupBy(*keys).agg(
         _mink(F.flatten(F.collect_list("_cand"))).alias("_top")
     )
-    if as_array:
-        # keys + `_mins`: the sorted min-k element structs as one
-        # array column — lets a consumer that needs per-group
-        # aggregate FORM (e.g. the KMV sketch) skip the explode and a
-        # third re-grouping Exchange
-        return lvl2.select(*keys, F.col("_top").alias("_mins"))
     return lvl2.select(*keys, F.explode("_top").alias("_row")).select(
         *keys, "_row.*"
     )

@@ -166,9 +166,10 @@ def run_pipeline(
     ``stop_after='cea'`` simulates a mid-run kill at a stage boundary;
     a later call with the same checkpoint_dir resumes from there.
 
-    Without a checkpoint_dir only the multi-consumed UDF-bearing
-    stages (``_BARRIER_STAGES``, plus candidates) are eagerly
-    materialized; the rest stays lazy until an action on their output.
+    Without a checkpoint_dir only the multi-consumed stages
+    (``_BARRIER_STAGES``, plus candidates) are eagerly materialized;
+    of these only ``cells`` carries a Python UDF. The rest stays lazy
+    until an action on their output.
     """
     ck = _Checkpointer(spark, checkpoint_dir, resume)
     # measured at sf0.1: the candidates operator's internal barriers
