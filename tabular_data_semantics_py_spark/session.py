@@ -1,14 +1,23 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: the one place the program's Spark and JVM
+settings are pinned.
 
-Local testing runs on ``local[N]`` but every knob is chosen for the
-1000-executor / 100 TB target:
+On ``local[N]`` the driver JVM is the whole cluster, so every caller
+(``kgbench``, the tests, the scripts, the legacy ``bench.py``) runs on
+these settings. What it pins, and why (the reasons sit next to each
+setting in ``get_spark``):
 
-- AQE on (runtime re-plan, skew-join splitting, partition coalescing)
-- Arrow on (all Python UDF surfaces are pandas/Arrow-batched)
-- shuffle partitions ∝ parallelism (overridable via env)
-- broadcast threshold raised so KG dimension tables (ontology closure,
-  redirect edges) always broadcast; the *entity index* is joined via
-  normal equi-join so it can scale past broadcast size unchanged.
+- AQE on (coalescing and skew-join splitting), with a 16k coalescing
+  floor, and ``defaultParallelism`` and the file-scan
+  ``minPartitionNum`` pinned to the shuffle width, so partitioning
+  follows the data rather than the core count;
+- Arrow on: the KG path's Python boundaries (the CSV parse and the
+  accent strip) are Arrow-batched;
+- a 64 MiB broadcast threshold, so the KG dimension tables (ontology
+  closure, redirect edges) broadcast; the entity index is joined by a
+  normal equi-join, never broadcast;
+- a fixed-size, pre-touched driver heap and a C1-only JIT;
+- shuffle and spill files on tmpfs when it has room (``scratch_root``);
+- the UTC session time zone, and no UI.
 """
 
 from __future__ import annotations
@@ -161,17 +170,24 @@ def get_spark(
         # serves first-touch page faults ~1000x slow (host-side memory
         # pressure, ROUND_NOTES r3); without pre-touch, heap growth
         # lands mid-job and the same pipeline swings 4-10x between
-        # reps. On a real cluster this is the standard
-        # latency-stabilization flag; the startup cost is paid once
-        # per executor. Disable with SPARK_GRAFT_NO_PRETOUCH=1.
+        # reps. The startup cost is paid once per JVM.
+        #
+        # TieredStopAtLevel=1: JIT-compile with C1 only, never C2. With
+        # C2, a session's first pipeline run spent about half its CPU
+        # in the JIT compiler threads (scripts/cpu_by_thread.py).
+        # kgbench at local[2] on a 4-core VM, 10 pairs, cold
+        # kg_large_index run: ref_cpu_s 83.6 -> 44.8, wall 24.0 ->
+        # 21.2 s, peak RSS -5%; at 2000x200 tables x entities the cold
+        # run took 97 -> 53 CPU-s and 31.1 -> 28.8 s. The trade-off is
+        # C2's faster hot code: a warm run later in the same session
+        # took 12.0 -> 13.9 s of wall and its traced layers 5.5 -> 8.3
+        # executor CPU-s (3 pairs). One job per JVM (spark-submit,
+        # kgbench) wins; a long-lived session running many jobs pays
+        # ~15% wall on each warm one.
         .config(
             "spark.driver.extraJavaOptions",
-            ""
-            if os.environ.get("SPARK_GRAFT_NO_PRETOUCH") == "1"
-            else (
-                f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')} "
-                "-XX:+AlwaysPreTouch"
-            ),
+            f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')} "
+            "-XX:+AlwaysPreTouch -XX:TieredStopAtLevel=1",
         )
         # shuffle/spill dir: tmpfs when available (see scratch_root).
         # Spark deletes its blockmgr/spill dirs under this root on
