@@ -31,19 +31,15 @@ import argparse
 import os
 import shutil
 import sys
-from collections import Counter
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kgbench import harness  # noqa: E402
-from kgbench.rss_sampler import descendants  # noqa: E402
 
 CLASSES = ("compiler", "gc", "executor_task", "other_jvm",
            "python_workers", "driver")
 _TICK = os.sysconf("SC_CLK_TCK")
-_OWN = slice(11, 13)  # utime, stime
-_OWN_AND_REAPED = slice(11, 15)  # plus cutime, cstime of reaped children
 
 
 def thread_class(comm: str) -> str:
@@ -56,53 +52,47 @@ def thread_class(comm: str) -> str:
     return "other_jvm"
 
 
-def _stat_ticks(path: str, fields: slice) -> int:
-    """Sum of the given ``stat`` fields (after the command name)."""
-    with open(path) as f:
-        return sum(int(x) for x in f.read().rsplit(")", 1)[1].split()[fields])
+def _own_s(stat_path: str) -> float:
+    """User plus system CPU seconds of one process or thread."""
+    with open(stat_path) as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return (int(fields[11]) + int(fields[12])) / _TICK
 
 
-def snapshot(jvm_pid: int) -> tuple[dict, Counter]:
-    """Per-thread JVM ticks by tid, and the ticks of the whole JVM, of
-    the processes below it and of this process."""
-    threads: dict[int, tuple[str, int]] = {}
+def snapshot(jvm_pid: int) -> tuple[dict, dict]:
+    """CPU seconds so far of each JVM thread (by tid), and of the JVM,
+    this process and the whole session (``harness.session_cpu_s``)."""
+    threads: dict[int, tuple[str, float]] = {}
     for tid in os.listdir(f"/proc/{jvm_pid}/task"):
         base = f"/proc/{jvm_pid}/task/{tid}"
         try:
             with open(f"{base}/comm") as f:
                 comm = f.read().strip()
-            threads[int(tid)] = (comm, _stat_ticks(f"{base}/stat", _OWN))
+            threads[int(tid)] = (comm, _own_s(f"{base}/stat"))
         except OSError:  # the thread exited while being read
             continue
-    totals = Counter()
-    totals["jvm"] = _stat_ticks(f"/proc/{jvm_pid}/stat", _OWN)
-    # workers the JVM reaped itself sit in its cutime/cstime
-    totals["python_workers"] = (
-        _stat_ticks(f"/proc/{jvm_pid}/stat", _OWN_AND_REAPED) - totals["jvm"])
-    for pid in descendants(jvm_pid)[1:]:
-        try:
-            totals["python_workers"] += _stat_ticks(f"/proc/{pid}/stat",
-                                                    _OWN_AND_REAPED)
-        except OSError:  # exited and reaped in between
-            continue
     own = os.times()
-    totals["driver"] = round((own.user + own.system) * _TICK)
+    totals = {"jvm": _own_s(f"/proc/{jvm_pid}/stat"),
+              "driver": own.user + own.system,
+              "session": harness.session_cpu_s(jvm_pid)}
     return threads, totals
 
 
-def attribute(before: tuple[dict, Counter],
-              after: tuple[dict, Counter]) -> dict[str, float]:
+def attribute(before: tuple[dict, dict],
+              after: tuple[dict, dict]) -> dict[str, float]:
     """CPU seconds per class between two snapshots. Threads alive at the
     second are charged by class; the rest of the JVM's total (threads
-    that exited in between) goes to ``other_jvm``."""
+    that exited in between) goes to ``other_jvm``, and the rest of the
+    session's total to ``python_workers``."""
     (t0, c0), (t1, c1) = before, after
-    ticks = Counter()
-    for tid, (comm, n) in t1.items():
-        ticks[thread_class(comm)] += n - t0.get(tid, (comm, 0))[1]
-    ticks["other_jvm"] += c1["jvm"] - c0["jvm"] - sum(ticks.values())
-    for key in ("python_workers", "driver"):
-        ticks[key] = c1[key] - c0[key]
-    return {k: ticks[k] / _TICK for k in CLASSES}
+    delta = {k: c1[k] - c0[k] for k in c1}
+    cpu = dict.fromkeys(CLASSES, 0.0)
+    for tid, (comm, s) in t1.items():
+        cpu[thread_class(comm)] += s - t0.get(tid, (comm, 0.0))[1]
+    cpu["other_jvm"] += delta["jvm"] - sum(cpu.values())
+    cpu["driver"] = delta["driver"]
+    cpu["python_workers"] = delta["session"] - delta["jvm"] - delta["driver"]
+    return cpu
 
 
 def main(argv: list[str] | None = None) -> int:

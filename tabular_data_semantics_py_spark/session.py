@@ -1,10 +1,13 @@
 """SparkSession factory: the one place the program's Spark and JVM
 settings are pinned.
 
-On ``local[N]`` the driver JVM is the whole cluster, so every caller
-(``kgbench``, the tests, the scripts, the legacy ``bench.py``) runs on
-these settings. What it pins, and why (the reasons sit next to each
-setting in ``get_spark``):
+On ``local[N]`` the driver JVM is the whole cluster, so every local
+session ``get_spark`` starts (``kgbench``, the tests, the legacy
+``bench.py`` and the scripts that call it, such as
+``scripts/cpu_by_thread.py``) runs on these settings.
+``scripts/run_pipeline.py``, the ``spark-submit`` entry point, builds
+its own session and does not get them. What it pins, and why (the
+reasons sit next to each setting in ``get_spark``):
 
 - AQE on (coalescing and skew-join splitting), with a 16k coalescing
   floor, and ``defaultParallelism`` and the file-scan
@@ -15,7 +18,8 @@ setting in ``get_spark``):
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
-- a fixed-size, pre-touched driver heap and a C1-only JIT;
+- a fixed-size, pre-touched driver heap, and JIT thresholds for C2
+  code ten times the JDK default;
 - shuffle and spill files on tmpfs when it has room (``scratch_root``);
 - the UTC session time zone, and no UI.
 """
@@ -172,22 +176,29 @@ def get_spark(
         # lands mid-job and the same pipeline swings 4-10x between
         # reps. The startup cost is paid once per JVM.
         #
-        # TieredStopAtLevel=1: JIT-compile with C1 only, never C2. With
-        # C2, a session's first pipeline run spent about half its CPU
-        # in the JIT compiler threads (scripts/cpu_by_thread.py).
-        # kgbench at local[2] on a 4-core VM, 10 pairs, cold
-        # kg_large_index run: ref_cpu_s 83.6 -> 44.8, wall 24.0 ->
-        # 21.2 s, peak RSS -5%; at 2000x200 tables x entities the cold
-        # run took 97 -> 53 CPU-s and 31.1 -> 28.8 s. The trade-off is
-        # C2's faster hot code: a warm run later in the same session
-        # took 12.0 -> 13.9 s of wall and its traced layers 5.5 -> 8.3
-        # executor CPU-s (3 pairs). One job per JVM (spark-submit,
-        # kgbench) wins; a long-lived session running many jobs pays
-        # ~15% wall on each warm one.
+        # Tier4*Threshold x10 (JDK 17 defaults 5000/600/15000/40000):
+        # a method moves from C1 to C2 code after ten times the usual
+        # calls and loop iterations, so C2 compiles only the hottest
+        # code. With the defaults, the JIT's compiler threads were the
+        # largest CPU item of a session's first pipeline run
+        # (scripts/cpu_by_thread.py). Measured at local[2] on a 4-core
+        # VM: kgbench's cold kg_large_index ref_cpu_s 87.3 -> 72.2
+        # (10 pairs); a warm run later in the same session used 35.0 ->
+        # 25.5 CPU-s at 10.0 -> 9.7 s wall (8 pairs). The trade-off:
+        # code runs longer in C1's profiled tier, so executor tasks
+        # use ~20% more CPU (warm 5.5 -> 6.6 s), the cold run's wall
+        # rose 4-9% (with the defaults, C2 compiled on cores the run
+        # left idle), and the tier-1 tests, one long-lived session of
+        # many short jobs, took ~10% longer. C1 only
+        # (TieredStopAtLevel=1) halved the cold CPU but made warm
+        # runs ~15% slower and the tier-1 tests ~22%.
         .config(
             "spark.driver.extraJavaOptions",
             f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')} "
-            "-XX:+AlwaysPreTouch -XX:TieredStopAtLevel=1",
+            "-XX:+AlwaysPreTouch -XX:Tier4InvocationThreshold=50000 "
+            "-XX:Tier4MinInvocationThreshold=6000 "
+            "-XX:Tier4CompileThreshold=150000 "
+            "-XX:Tier4BackEdgeThreshold=400000",
         )
         # shuffle/spill dir: tmpfs when available (see scratch_root).
         # Spark deletes its blockmgr/spill dirs under this root on

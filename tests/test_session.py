@@ -3,10 +3,18 @@ the config string: a launcher that dropped ``spark.driver.extraJavaOptions``
 would leave the config intact and the flags unset."""
 
 
-def test_driver_jvm_runs_c1_only_with_pretouched_heap(spark):
+def test_driver_jvm_runs_raised_c2_thresholds_with_pretouched_heap(spark):
     jvm = spark.sparkContext._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
-    assert bean.getVMOption("TieredStopAtLevel").getValue() == "1"
-    assert bean.getVMOption("AlwaysPreTouch").getValue() == "true"
+    flags = {name: bean.getVMOption(name).getValue() for name in (
+        "Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
+        "Tier4CompileThreshold", "Tier4BackEdgeThreshold", "AlwaysPreTouch")}
+    assert flags == {
+        "Tier4InvocationThreshold": "50000",
+        "Tier4MinInvocationThreshold": "6000",
+        "Tier4CompileThreshold": "150000",
+        "Tier4BackEdgeThreshold": "400000",
+        "AlwaysPreTouch": "true",
+    }
