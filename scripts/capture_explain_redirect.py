@@ -7,12 +7,12 @@ forced broadcast would OOM executors at the 10^8-entity target;
 while the table is small, stats/AQE must — and do — choose broadcast
 on their own).
 
-Drives generate_candidates directly in fused mode, on the data cells
-as the pipeline does (the pipeline's stage barriers would otherwise
-hide the join subtree behind a barrier scan), and captures the
-EXECUTED, AQE-final plan. The summary also names the Python UDFs left
-in the plan: only the index-key accent strip (normalize_udf), since
-candidate scoring is a built-in expression.
+Drives generate_candidates directly on the data cells as the pipeline
+does (the pipeline's stage barriers would otherwise hide the join
+subtree behind a barrier scan), and captures the EXECUTED, AQE-final
+plan. The summary also counts the Python UDF nodes in the plan: none,
+since mention and index-key normalization and candidate scoring are
+built-in expressions.
 
 Usage: python scripts/capture_explain_redirect.py
 """
@@ -41,9 +41,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     dfs = entry_queries._dfs(spark)
     cells = entry_queries._pipeline(spark).stages["cells"]
-    _, cands = generate_candidates(
-        data_cells(cells), dfs["entity_index"], fused=True
-    )
+    _, cands = generate_candidates(data_cells(cells), dfs["entity_index"])
     cands.count()  # drive AQE to its final plan
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -51,12 +49,15 @@ def main() -> None:
     out = buf.getvalue()
     n_bhj = out.count("BroadcastHashJoin")
     n_smj = out.count("SortMergeJoin")
-    udfs = re.findall(r"^Arguments: \[(\w+)\(.*pythonUDF", out, re.M)
+    udfs = sorted(
+        set(re.findall(r"^Arguments: \[(\w+)\(.*pythonUDF", out, re.M))
+    )
     sys.stdout.write(out)
     sys.stdout.write(
         f"\n-- summary: BroadcastHashJoin={n_bhj} SortMergeJoin={n_smj} "
         "(redirect joins broadcast with no hint in the source); "
-        f"ArrowEvalPython={len(udfs)} (udfs: {', '.join(sorted(set(udfs)))})\n"
+        f"ArrowEvalPython={out.count('ArrowEvalPython (')}"
+        + (f" (udfs: {', '.join(udfs)})" if udfs else "") + "\n"
     )
     spark.stop()
 

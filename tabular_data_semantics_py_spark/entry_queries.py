@@ -1182,22 +1182,14 @@ def kg_mention_to_col(spark, sf_dir):
     """J14: mention → column id — first column whose (normalized)
     cell equals the mention (challenge_utils.py:647-677, the GT
     repair join of test/error_detection.py:165-212)."""
-    pipe = _pipeline(spark)
-    from .functions.normalize import make_normalize_udf, prenorm_expr
+    from .functions.normalize import normalize_expr
 
-    cells = pipe.stages["cells"].where(F.col("row") >= 0)
-    norm = make_normalize_udf()
-    # JVM prenorm + groupBy first; the Python accent-strip then runs
-    # only on the (table, distinct-prenorm) groups, then re-group in
-    # case two prenorms collapse to one norm
+    cells = _pipeline(spark).stages["cells"].where(F.col("row") >= 0)
+    mention = normalize_expr(F.col("cell")).alias("mention_norm")
     return (
-        cells.withColumn("p", prenorm_expr(F.col("cell")))
-        .where(F.col("p") != "")
-        .groupBy("table_id", "p")
+        cells.groupBy("table_id", mention)
         .agg(F.min("col").alias("col"))
-        .withColumn("mention_norm", norm(F.col("p")))
-        .groupBy("table_id", "mention_norm")
-        .agg(F.min("col").alias("col"))
+        .where(F.col("mention_norm") != "")
     )
 
 

@@ -2,9 +2,11 @@
 
 Pure-Python scalar cores, used by the plain-Python oracle executor and
 pinned as the reference for the Spark side. Spark runs the JVM
-built-in mirrors ``prenorm_expr`` and ``lexical_score_expr``; only the
-accent strip (Spark has no NFD normalization) is an Arrow-batched
-pandas UDF. Each function cites the reference behavior it pins.
+built-in mirrors ``normalize_expr`` and ``lexical_score_expr``, so no
+normalization step crosses into Python. Spark has no NFD
+normalization; ``normalize_expr`` strips accents with a code-point
+``translate`` table built from ``strip_accents`` itself. Each function
+cites the reference behavior it pins.
 
 Normalization rule (pinned; both oracle and Spark use exactly this):
 1. strip stray quotes          (test/challenge_utils.py:664-666)
@@ -18,8 +20,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-
-import pandas as pd
 
 _BRACKET_RE = re.compile(r"\(([^)]*)\)")
 _WS_RE = re.compile(r"\s+")
@@ -98,23 +98,48 @@ def lexical_score(mention_norm: str, key_norm: str) -> float:
         0.5 * token_jaccard(mention_norm, key_norm)
 
 
-# --- Spark expressions and the accent-strip UDF ------------------------------
+# --- Spark expressions ------------------------------------------------------
+
+# The accent strip as a per-character map. NFD decomposes each
+# character on its own and canonical reordering never moves an ASCII
+# starter, so strip_accents(s) is the concatenation of
+# strip_accents(c) over the characters c of s. Each non-ASCII character
+# keeps at most one ASCII character, and only BMP characters keep one
+# (tests/test_normalize.py checks both over all of Unicode), so a
+# ``translate`` over these pairs plus dropping the remaining non-ASCII
+# characters is the strip. Built from the oracle's own strip_accents,
+# so the two cannot drift.
+_ACCENTED = {
+    c: a for c in map(chr, range(0x80, 0x10000)) if (a := strip_accents(c))
+}
+_ACCENT_FROM, _ACCENT_TO = "".join(_ACCENTED), "".join(_ACCENTED.values())
+
 
 def prenorm_expr(col):
-    """JVM expression for the UDF-free prefix of ``normalize_mention``:
-    quote-strip, bracket removal, lowercase, whitespace collapse — all
-    whole-stage-codegen, so the full cell table never enters Python.
-    Only accent-stripping needs Python, and
-    ``normalize_mention(prenorm(s)) == normalize_mention(s)`` (property
-    test in tests/test_normalize.py), so it can run *after* dedup to
-    distinct prenormed mentions — orders of magnitude smaller at scale.
-    """
+    """JVM expression for the quote-strip, bracket removal, lowercase
+    and whitespace collapse of ``normalize_mention``; the prefix of
+    ``normalize_expr``, mirrored in Python by ``prenorm_py``."""
     from pyspark.sql import functions as F
 
     c = F.regexp_replace(col, '"', "")
     c = F.regexp_replace(c, r"\(([^)]*)\)", " ")
     c = F.lower(c)
     return F.trim(F.regexp_replace(c, r"\s+", " "))
+
+
+def normalize_expr(col):
+    """JVM expression equal to ``normalize_mention`` on every string
+    (asserted over every BMP code point in tests/test_normalize.py):
+    prenorm, accent strip by code-point table, drop what is still
+    non-ASCII, lowercase, collapse the ASCII whitespace Python's
+    ``\\s`` matches, trim. NULL gives ``""``. All built-ins, so the
+    cell table never enters Python."""
+    from pyspark.sql import functions as F
+
+    c = F.translate(prenorm_expr(col), _ACCENT_FROM, _ACCENT_TO)
+    c = F.lower(F.regexp_replace(c, r"[^\x00-\x7F]", ""))
+    c = F.trim(F.regexp_replace(c, r"[\t\n\x0b\f\r\x1c-\x1f ]+", " "))
+    return F.coalesce(c, F.lit(""))
 
 
 def lexical_score_expr(a, b):
@@ -147,14 +172,3 @@ def prenorm_py(s: str) -> str:
     s = _BRACKET_RE.sub(" ", s)
     s = s.lower()
     return re.sub(r"[ \t\n\x0b\f\r]+", " ", s).strip(" \t\n\x0b\f\r")
-
-def make_normalize_udf():
-    """pandas UDF: normalize a string column (Arrow-batched)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import StringType
-
-    @pandas_udf(StringType())
-    def normalize_udf(col: pd.Series) -> pd.Series:
-        return col.map(lambda s: normalize_mention(s) if s is not None else "")
-
-    return normalize_udf

@@ -4,11 +4,12 @@ kg/lookup.py:212-219 rebuilt as local joins — no per-row HTTP).
 
 Dataflow (each stage cites the scale rationale):
 
-1. mention dedup  — ``dropDuplicates`` on the normalized mention
-   before any expensive work, then join results back: the reference's
-   memo-cache pattern (challenge_utils.py:103-118) as dataflow. At
-   100 TB the distinct-mention table is orders of magnitude smaller
-   than the cell table.
+1. mention dedup  — ``normalize_expr`` gives each cell its
+   ``mention_norm`` as a plain JVM column, then ``dropDuplicates``
+   on it before any expensive work: the reference's memo-cache
+   pattern (challenge_utils.py:103-118) as dataflow. At 100 TB the
+   distinct-mention table is orders of magnitude smaller than the
+   cell table.
 2. exact match    — equi-join distinct mentions × index keys. This is
    a plain shuffle-hash/broadcast join Catalyst can pick freely; the
    index is NOT assumed broadcastable (10^8-entity scale), mentions
@@ -31,13 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..barriers import parquet_barrier
 from ..constants import FUZZY_MIN_SCORE, TOP_K_CANDIDATES
-from ..functions.normalize import (
-    lexical_score_expr,
-    make_normalize_udf,
-    prenorm_expr,
-)
+from ..functions.normalize import lexical_score_expr, normalize_expr
 
 
 def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
@@ -56,20 +52,10 @@ def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
     return df.join(F.broadcast(hot), key_cols, "left_anti")
 
 
-def build_index_keys(
-    entity_index: DataFrame, fused: bool = False
-) -> DataFrame:
+def build_index_keys(entity_index: DataFrame) -> DataFrame:
     """entity_index → (uri, popularity, key_norm) — one row per
-    normalized label/alias surface form (kg/lookup.py:162-209 role).
-
-    Normalization is JVM prenorm over the exploded keys + accent-strip
-    (the only Python step) on *distinct* prenormed surface forms only —
-    at a 10^8-entity index the Python surface is the distinct-label
-    table, not the exploded key table. The join back is unhinted so
-    AQE picks broadcast when the bridge is small.
-    """
-    normalize = make_normalize_udf()
-    sc = entity_index.sparkSession.sparkContext
+    normalized label/alias surface form (kg/lookup.py:162-209 role),
+    normalized per row by the same JVM expression as the mentions."""
     keys = entity_index.select(
         "uri",
         "popularity",
@@ -83,27 +69,13 @@ def build_index_keys(
                 F.coalesce(F.col("aliases"), F.array().cast("array<string>")),
             )
         ).alias("key_raw"),
-    ).withColumn("key_prenorm", prenorm_expr(F.col("key_raw")))
-    bridge = (
-        keys.where(F.col("key_prenorm") != "")
-        .select("key_prenorm")
-        # pinned-width dedup shuffle: keeps the accent-strip UDF below
-        # parallel (AQE byte-coalescing would pack the small distinct
-        # table into 1 partition; see generate_candidates)
-        .repartition(sc.defaultParallelism, "key_prenorm")
-        .dropDuplicates(["key_prenorm"])
-        .withColumn("key_norm", normalize(F.col("key_prenorm")))
     )
-    if not fused:
-        # UDF column consumed by the join below across separate
-        # actions; in fused mode the consumers share one action and
-        # the dedup exchange collapses via ReuseExchange
-        bridge = bridge.localCheckpoint(True)
     return (
-        keys.join(bridge, "key_prenorm")
+        keys.select(
+            "uri", "popularity", normalize_expr(F.col("key_raw")).alias("key_norm")
+        )
         .where(F.col("key_norm") != "")
         .dropDuplicates(["uri", "key_norm"])
-        .select("uri", "popularity", "key_norm")
     )
 
 
@@ -112,9 +84,9 @@ def generate_candidates(
     entity_index: DataFrame,
     top_k: int = TOP_K_CANDIDATES,
     max_token_df: int | None = None,
-    fused: bool = False,
+    fused: bool = False,  # unused; kgbench/tracing.py still passes it
 ) -> tuple[DataFrame, DataFrame]:
-    """Returns (cells_with_mention, candidates).
+    """Returns (cells_with_mention, candidates), both lazy.
 
     cells_with_mention: data cells + ``mention_norm`` column.
     candidates: (mention_norm, uri, score, popularity) — redirect-
@@ -126,51 +98,17 @@ def generate_candidates(
     blocked-join fan-out under Zipfian mentions; scoring stays exact
     on the surviving pairs. None = no cap (fixture-exact).
     """
-    normalize = make_normalize_udf()
-
-    # JVM prenorm over the full cell table — pure whole-stage codegen,
-    # no Python, no materialization (kills the round-1 full-corpus
-    # localCheckpoint). Accent-strip runs only on distinct prenorms.
-    cells_pre = data_cells.withColumn(
-        "mention_prenorm", prenorm_expr(F.col("cell"))
+    cells = data_cells.withColumn("mention_norm", normalize_expr(F.col("cell")))
+    mentions = (
+        cells.select("mention_norm")
+        .where(F.col("mention_norm") != "")
+        .dropDuplicates(["mention_norm"])  # A10 dedup
     )
-    bridge = (
-        cells_pre.where(F.col("mention_prenorm") != "")
-        .select("mention_prenorm")
-        # pinned-width dedup shuffle (see n_score_parts note below):
-        # keeps the accent-strip UDF parallel under AQE coalescing
-        .repartition(
-            data_cells.sparkSession.sparkContext.defaultParallelism,
-            "mention_prenorm",
-        )
-        .dropDuplicates(["mention_prenorm"])  # A10 dedup-then-join-back
-        .withColumn("mention_norm", normalize(F.col("mention_prenorm")))
-    )
-    # parquet barrier, not localCheckpoint: the UDF column is consumed
-    # by joins across separate actions, and the parquet scan's size
-    # statistics let Catalyst broadcast the bridge when (and only
-    # when) it is small
-    bridge = parquet_barrier(bridge, "mention_bridge")
-    cells = (
-        cells_pre.join(bridge, "mention_prenorm", "left")
-        .withColumn("mention_norm", F.coalesce("mention_norm", F.lit("")))
-        .drop("mention_prenorm")
-    )
-    mentions = bridge.select("mention_norm").dropDuplicates(["mention_norm"])
+    index_keys = build_index_keys(entity_index)
 
-    # in fused mode these flow into one action (ReuseExchange dedups
-    # the shared subtrees); eager barriers only when stages are
-    # consumed across separate driver actions
-    def _mat(df: DataFrame) -> DataFrame:
-        return df if fused else df.localCheckpoint(True)
-
-    index_keys = _mat(build_index_keys(entity_index, fused=fused))
-
-    exact = _mat(
-        mentions.join(
-            index_keys, mentions.mention_norm == index_keys.key_norm
-        ).select("mention_norm", "uri", F.lit(1.0).alias("score"))
-    )
+    exact = mentions.join(
+        index_keys, mentions.mention_norm == index_keys.key_norm
+    ).select("mention_norm", "uri", F.lit(1.0).alias("score"))
 
     # fuzzy fallback for mentions with no exact hit (token blocking)
     unmatched = mentions.join(

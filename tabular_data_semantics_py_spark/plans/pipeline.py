@@ -61,19 +61,20 @@ class PipelineResult:
 # no-checkpoint mode these are eagerly materialized, so no consumer
 # re-runs the stage's subtree. cells (the mapInPandas CSV parse,
 # consumed by candidates + emission) carries a pandas-UDF column,
-# which Catalyst re-evaluates per reference; cells_m (the prenorm +
-# mention-bridge join over the full cell table), entity_types and cea
-# are plain JVM plans, and keep their barriers until a measurement
-# shows re-execution is cheaper. Everything else flows lazily into one
-# AQE-planned DAG — the answer to the round-1 stage-barrier tax (8
-# sequential full materializations → 3).
+# which Catalyst re-evaluates per reference; candidates (the fuzzy
+# scoring), entity_types and cea are plain JVM plans, and keep their
+# barriers until a measurement shows re-execution is cheaper. cells_m
+# is a per-row projection of the cells barrier, so it stays lazy.
+# Everything else flows lazily into one AQE-planned DAG — the answer
+# to the round-1 stage-barrier tax (8 sequential full
+# materializations → 3).
 # ALL these barriers are parquet-backed (barriers.py): a parquet scan
 # carries real size statistics, so Catalyst broadcasts a barrier that
 # is small and shuffle-joins one that is not — the scale-appropriate
 # plan falls out of the stats instead of per-join hints. (A
 # localCheckpoint scan has NO stats and is treated as enormous, which
 # inverted broadcast choices — see operators/annotate.py history.)
-_BARRIER_STAGES = {"cells", "cells_m", "entity_types", "cea"}
+_BARRIER_STAGES = {"cells", "candidates", "entity_types", "cea"}
 
 
 class _Checkpointer:
@@ -167,18 +168,12 @@ def run_pipeline(
     a later call with the same checkpoint_dir resumes from there.
 
     Without a checkpoint_dir only the multi-consumed stages
-    (``_BARRIER_STAGES``, plus candidates) are eagerly materialized;
-    of these only ``cells`` carries a Python UDF. The rest stays lazy
-    until an action on their output.
+    (``_BARRIER_STAGES``) are eagerly materialized; of these only
+    ``cells`` carries a Python UDF (the CSV parse, the one Python
+    boundary of the run). The rest stays lazy until an action on their
+    output.
     """
     ck = _Checkpointer(spark, checkpoint_dir, resume)
-    # measured at sf0.1: the candidates operator's internal barriers
-    # (index_keys/exact) can be fused away in one-action mode (~8%
-    # faster), but the cea/emit internal barriers must stay — without
-    # them the un-materialized fuzzy-scoring subtree is re-executed
-    # per consumer (2-3× slower) and ReuseExchange does not collapse
-    # the near-identical exchanges.
-    cand_fused = checkpoint_dir is None
     res = PipelineResult()
     # share the checkpointer's live metrics list so every stop_after
     # early return carries the lineage/sha-integrity metrics collected
@@ -200,20 +195,21 @@ def run_pipeline(
     # the cells/candidates chain. In no-checkpoint mode its eager
     # barrier is submitted on a pool driver thread HERE, before
     # the cells parse, so its jobs interleave with the whole
-    # cells→bridge→candidates→cells_m front half: the scheduler
+    # cells→candidates front half: the scheduler
     # backfills cores that single-stage tails leave idle. This cuts
     # the sequential-action floor (the dominant term in the N→4N
     # scaling gap at bench scale) without changing any plan — on a
     # real cluster these are just concurrently-submitted job groups.
     # Checkpointed runs stay sequential: stage order in the manifest
     # is part of the resume contract.
-    et_future = cand_future = rp_future = _pool = None
+    et_future = rp_future = _pool = None
     if checkpoint_dir is None and not upto("entity_types"):
         from concurrent.futures import ThreadPoolExecutor
 
         closure_df = res.stages["closure"]
         closure_map = closure_to_map(closure_df)
-        _pool = ThreadPoolExecutor(max_workers=3)
+        # two jobs: entity_types, then the rows_present spine below
+        _pool = ThreadPoolExecutor(max_workers=2)
         et_future = _pool.submit(
             ck.stage,
             "entity_types",
@@ -252,7 +248,7 @@ def run_pipeline(
         # cancel whatever has not started and drop the queue.
         # cancel() on an already-running future is best-effort, but
         # shutdown(cancel_futures=True) guarantees nothing new starts.
-        for fut in (et_future, cand_future, rp_future):
+        for fut in (et_future, rp_future):
             if fut is not None:
                 fut.cancel()
         if _pool is not None:
@@ -265,65 +261,30 @@ def run_pipeline(
             extra_metric=_sha_integrity if checkpoint_dir is not None else None,
         )
         cells = res.stages["cells"]
-        if _pool is not None and stop_after is None:
-            # the emission row spine depends only on cells — its
-            # barrier (profiled 5-9 s at the sf2.5 scaling corpus)
-            # overlaps the whole candidates/CEA chain instead of
-            # running serially inside the triples stage
-            rp_future = _pool.submit(
-                lambda: build_rows_present(cells)
-            )
+        if _pool is not None:
+            if stop_after is None:
+                # the emission row spine depends only on cells — its
+                # barrier (profiled 5-9 s at the sf2.5 scaling corpus)
+                # overlaps the whole candidates/CEA chain instead of
+                # running serially inside the triples stage
+                rp_future = _pool.submit(lambda: build_rows_present(cells))
+            _pool.shutdown(wait=False)
 
         if upto("candidates"):
             ck.finish()
             return res
-        data = data_cells(cells)
-        cells_m_holder: dict[str, DataFrame] = {}
-
-        def _gen_candidates() -> tuple[DataFrame, DataFrame]:
-            cm, cand = generate_candidates(
-                data, dfs["entity_index"], fused=cand_fused
-            )
-            cells_m_holder["cells_m"] = cm
-            return cm, cand
-
-        if _pool is not None:
-            cm_lazy, cand_lazy = _gen_candidates()  # writes mention_bridge
-            # candidates materialized eagerly HERE: the fuzzy-scoring
-            # subtree (index-key accent strip, per-pair Levenshtein) is
-            # compute-bound while cells_m's prenorm+bridge join is
-            # shuffle-bound — run on separate driver threads they
-            # overlap on complementary resources instead of executing
-            # back-to-back inside cea_linked's write.
-            cand_future = _pool.submit(
-                ck.stage, "candidates",
-                lambda: parquet_barrier(cand_lazy, "candidates"),
-            )
-            _pool.shutdown(wait=False)
-            res.stages["cells_m"] = ck.stage("cells_m", lambda: cm_lazy)
-            res.stages["candidates"] = cand_future.result()
-        else:
-            res.stages["candidates"] = ck.stage(
-                "candidates", lambda: _gen_candidates()[1]
-            )
-            if upto("cells_m"):
-                ck.finish()
-                return res
-            # cells + mention_norm, consumed by CEA here and by the
-            # fragment query — a first-class resumable stage: a resumed
-            # run reads the checkpoint instead of re-running the bridge
-            # normalization subtree (VERDICT r02 #6). In no-checkpoint
-            # modes it is eagerly materialized for the same reason: the
-            # subtree re-scans the full cell table through the prenorm
-            # expressions and the bridge join, which would otherwise
-            # execute once per consumer (measured ~25-30 s CPU duplicated
-            # at the sf2.5 scaling corpus).
-            res.stages["cells_m"] = ck.stage(
-                "cells_m",
-                lambda: cells_m_holder.get("cells_m")
-                if "cells_m" in cells_m_holder
-                else _gen_candidates()[0],
-            )
+        # both lazy: cells_m is cells plus the per-row mention_norm
+        # column, and the candidates plan runs in one action when its
+        # stage materializes
+        cm, cand = generate_candidates(data_cells(cells), dfs["entity_index"])
+        res.stages["candidates"] = ck.stage("candidates", lambda: cand)
+        if upto("cells_m"):
+            ck.finish()
+            return res
+        # cells + mention_norm, consumed by CEA here and by the
+        # fragment query — a first-class resumable stage (VERDICT r02
+        # #6)
+        res.stages["cells_m"] = ck.stage("cells_m", lambda: cm)
         cells_m = res.stages["cells_m"]
 
         if et_future is None:

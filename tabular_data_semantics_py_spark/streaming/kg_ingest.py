@@ -6,7 +6,8 @@ incremental JSON checkpointing in ``test/challenge_utils.py:399-413``,
 re-expressed here as checkpoint/resume — SURVEY.md §2.10); at 10^12
 files, however, source tables ARRIVE continuously, and re-running the
 batch pipeline over the whole corpus per delivery is O(corpus) per
-arrival. This operator makes ingestion O(new files):
+arrival. This operator makes each micro-batch's table side O(new
+files):
 
 - the file-stream source (``readStream.parquet``) tracks processed
   files in its checkpoint, giving exactly-once, restart-safe pickup of
@@ -27,10 +28,11 @@ arrival. This operator makes ingestion O(new files):
   checkpoint restart between waves).
 
 At 100 TB the append target would be a partitioned/bucketed graph
-table; the per-batch work is bounded by arrival volume and the static
-sides (entity index, ontology closure) are loaded once per batch from
-their own tables — nothing in the loop grows with the accumulated
-corpus.
+table. Nothing in the loop grows with the accumulated corpus, but the
+per-batch cost is O(new files + KG side): every micro-batch re-runs
+``run_pipeline``, which rebuilds the ontology closure, the entity
+types and the normalized index keys from the static tables. Building
+the KG side once per stream is ROADMAP open item 5.
 """
 
 from __future__ import annotations

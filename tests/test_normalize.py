@@ -91,3 +91,77 @@ def test_lexical_score_expr_matches_scalar(spark):
     assert len(got) == len(cases)
     for r in got:
         assert r.s == lexical_score(r.a, r.b), (r.a, r.b, r.s)
+
+
+def test_accent_strip_is_a_bmp_code_point_map():
+    """The premise of ``normalize_expr``'s ``translate`` table, over
+    all of Unicode: the strip keeps at most one ASCII character of any
+    code point, and only BMP code points keep one. A future
+    ``unicodedata`` that breaks either fails here, not in a triple."""
+    kept = {}
+    for cp in range(0x80, 0x110000):
+        a = strip_accents(chr(cp))
+        assert len(a) <= 1, (hex(cp), a)
+        if a:
+            kept[cp] = a
+    assert kept and max(kept) < 0x10000, hex(max(kept))
+
+
+def _unicode_sample(n: int, seed: int) -> list[str]:
+    """Seeded random strings mixing the characters the strip treats
+    differently: ASCII words and separators, quotes and brackets,
+    accented Latin, combining marks, C0/C1 controls and Unicode spaces,
+    case-mapping oddities, Greek, CJK, Hangul and astral characters."""
+    import random
+
+    rnd = random.Random(seed)
+    pools = [
+        "AbcXyz019 ",
+        '"()\t\n\x0b\f\r\x1c\x1f',
+        "".join(map(chr, range(0xC0, 0x250))),
+        "".join(map(chr, range(0x300, 0x370))),
+        "".join(map(chr, [*range(0x00, 0x20), *range(0x7F, 0xA1)])),
+        "\x85\xa0\u1680\u2000\u2007\u200a\u2028\u2029\u202f\u205f\u3000",
+        "\u212a\u212b\u0130\u0131\u037e\u1fef\u1e9e\u00df\ufb01",
+        "".join(map(chr, range(0x370, 0x400))),
+        "".join(map(chr, range(0x1E00, 0x1F00))),
+    ]
+
+    def char() -> str:
+        k = rnd.randrange(len(pools) + 3)
+        if k < len(pools):
+            return rnd.choice(pools[k])
+        lo, hi = [(0x4E00, 0x9FFF), (0xAC00, 0xD7A3), (0x10000, 0x10FFFF)][
+            k - len(pools)
+        ]
+        return chr(rnd.randint(lo, hi))
+
+    return ["".join(char() for _ in range(rnd.randrange(25))) for _ in range(n)]
+
+
+def test_normalize_expr_matches_normalize_mention(spark):
+    """``normalize_expr`` equals ``normalize_mention`` on every BMP
+    code point, alone and inside ``"A · b(·)"``, on a seeded sample of
+    random full-Unicode strings, and on NULL and ``""``. Surrogates
+    cannot be encoded as UTF-8 and never reach Spark."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from tabular_data_semantics_py_spark.functions.normalize import (
+        normalize_expr,
+    )
+
+    bmp = [chr(cp) for cp in range(0x10000) if not 0xD800 <= cp < 0xE000]
+    strings = bmp + [f"A {c} b({c})" for c in bmp]
+    strings += _unicode_sample(6000, seed=20261017) + ["", None]
+    pdf = pd.DataFrame(
+        {"s": strings, "want": [normalize_mention(s) for s in strings]}
+    )
+    bad = (
+        spark.createDataFrame(pdf, "s string, want string")
+        .withColumn("got", normalize_expr(F.col("s")))
+        .where(F.col("got") != F.col("want"))
+        .limit(20)
+        .collect()
+    )
+    assert bad == [], [(r.s, r.want, r.got) for r in bad]

@@ -1,13 +1,13 @@
-"""Plan-shape guard: the KG path's Python boundaries stay where they
-are meant to be. Candidate scoring, type compatibility and the
-most-specific reduction are Spark built-ins; in the candidates plan
-the only Python left is the accent strip of the index keys (Spark has
-no NFD normalization)."""
+"""Plan-shape guard: the KG path's one Python boundary is the CSV
+parse (``parse_cells``' ``mapInPandas``), which the ``cells`` barrier
+cuts off. Mention and index-key normalization, candidate scoring,
+type compatibility and the most-specific reduction are Spark
+built-ins, so no plan built on ``cells`` has a Python node."""
 
 import re
 
 from tabular_data_semantics_py_spark.constants import AGENT_CLASS
-from tabular_data_semantics_py_spark.operators.annotate import cta
+from tabular_data_semantics_py_spark.operators.annotate import cea, cta
 from tabular_data_semantics_py_spark.operators.candidates import (
     generate_candidates,
 )
@@ -73,14 +73,25 @@ def test_entity_types_and_cta_have_no_python(spark, dfs, pipeline):
         assert _python_nodes(plan) == [], plan
 
 
-def test_candidates_python_is_only_the_index_key_strip(spark, dfs, pipeline):
-    _, cand = generate_candidates(
-        data_cells(pipeline.stages["cells"]), dfs["entity_index"], fused=True
-    )
-    (plan,) = _executed_plans(spark, "guard:candidates", lambda: _run(cand))
-    nodes = _python_nodes(plan)
-    assert nodes, plan
-    for args in nodes:
-        assert args.startswith("[normalize_udf("), args
-        assert re.search(r"key_(raw|prenorm)#", args), args
-        assert "mention" not in args, args
+# generate_candidates runs inside each guarded action, so any barrier
+# it writes while building the plan is part of the guarded plans
+def test_candidates_have_no_python(spark, dfs, pipeline):
+    plans = _executed_plans(spark, "guard:candidates", lambda: _run(
+        generate_candidates(
+            data_cells(pipeline.stages["cells"]), dfs["entity_index"]
+        )[1]
+    ))
+    for plan in plans:
+        assert _python_nodes(plan) == [], plan
+
+
+def test_cea_has_no_python(spark, dfs, pipeline):
+    def action():
+        cells_m, _ = generate_candidates(
+            data_cells(pipeline.stages["cells"]), dfs["entity_index"]
+        )
+        _run(cea(cells_m, pipeline.stages["candidates"],
+                 pipeline.stages["entity_types"]))
+
+    for plan in _executed_plans(spark, "guard:cea", action):
+        assert _python_nodes(plan) == [], plan

@@ -28,22 +28,25 @@ def test_kill_and_resume_identical(spark, dfs, tmp_path):
     assert not os.path.exists(os.path.join(ck1, "triples"))
 
     # …then resume: completed stages must be read, not recomputed.
-    # cells_m is a first-class checkpoint stage, so the resumed run
-    # must NOT re-run the bridge-normalization subtree — observable as
-    # no new mention_bridge barrier generation in session scratch.
+    # cea is resumed, so its operator must not run — observable as no
+    # new cea_linked / cea_prelim barrier generation in session scratch.
     from tabular_data_semantics_py_spark.barriers import _scratch_dir
 
-    def _bridge_gens():
+    def _cea_gens():
         d = _scratch_dir(spark)
         if not os.path.isdir(d):
             return 0
-        return sum(1 for n in os.listdir(d) if n.startswith("mention_bridge"))
+        return sum(
+            1 for n in os.listdir(d)
+            if n.startswith(("cea_linked", "cea_prelim"))
+        )
 
-    gens_before = _bridge_gens()
+    gens_before = _cea_gens()
+    assert gens_before > 0  # the killed run's cea wrote its barriers
     resumed = run_pipeline(spark, dfs, checkpoint_dir=ck1, resume=True)
     got = _triples(resumed.stages["triples"])
     assert got == want
-    assert _bridge_gens() == gens_before
+    assert _cea_gens() == gens_before
 
     manifest = json.load(open(os.path.join(ck1, "manifest.json")))
     by_stage = {m["stage"]: m for m in manifest["metrics"]}

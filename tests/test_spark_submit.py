@@ -30,19 +30,18 @@ _CWD_INDEPENDENCE_SCRIPT = """\
 import sys
 sys.path.insert(0, {repo!r})
 from tabular_data_semantics_py_spark.session import get_spark
-from tabular_data_semantics_py_spark.functions.normalize import (
-    make_normalize_udf,
-)
+from tabular_data_semantics_py_spark.sources.csv_cells import parse_cells
 spark = get_spark(app_name="cwd-independence", master="local[2]",
                   shuffle_partitions=2)
-cells = spark.createDataFrame(
-    [(i, "Caf\u00e9  Cell (%d)" % i) for i in range(9)],
-    "id int, cell string",
+artifacts = spark.createDataFrame(
+    [("t", "r", "t.csv", "c0", "a,b,c\\n1,2,3\\n4,5,6\\n")],
+    "table_id string, repo string, path string, commit string, content string",
 )
-norm = make_normalize_udf()
-rows = cells.select(norm("cell").alias("n")).collect()
+# parse_cells' mapInPandas function is pickled by reference, so the
+# worker must import the package to run it
+rows = parse_cells(artifacts).collect()
 assert len(rows) == 9, rows
-assert all(r.n.startswith("cafe cell") for r in rows), rows
+assert sorted(r.cell for r in rows) == list("123456abc"), rows
 print("CWD_INDEPENDENT_OK", len(rows))
 spark.stop()
 """
