@@ -4,8 +4,8 @@
   the deterministic fixture corpus → emitted (subj, pred, obj,
   obj_is_literal) triples.
 - ``queries()``      — one entry per implemented operator from
-  SURVEY.md §2 plus the training-data-pipeline operators (dedup,
-  corpus curation, multimodal plumbing).
+  SURVEY.md §2 plus the training-data-pipeline operators (corpus
+  curation, multimodal plumbing).
 - ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query. KG fixture
   queries embed the (seeded, deterministic) fixture as VALUES CTEs;
   testdata queries run on the pre-registered parquet views.

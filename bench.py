@@ -12,7 +12,7 @@ Headline queries:
 - ``kg_pipeline``  — the full KG-construction pipeline on a fixture
   corpus scaled to the sf (n_tables ∝ sf); the primary throughput
   number (triples/sec) comes from this.
-- relational / dedup / curation operators over the sf parquet.
+- curation / multimodal operators over the sf parquet.
 
 ``--scaling`` mode runs the same jobs at two parallelism levels
 (local[2] vs local[8] = N vs 4N cores) and writes BENCH/BASELINE.md
@@ -352,8 +352,8 @@ def run_cpa_skew(spark, n_rows: int = 1_000_000, n_ent: int = 200_000):
 
 def run_components_scale(spark, n: int = 1_000_000, path: bool = False):
     """Scale/skew evidence for connected_components (the
-    canonicalization primitive behind kg_canonical_ids and
-    doc_neardup_canonical) at 1M nodes — two adversarial topologies:
+    canonicalization primitive behind kg_canonical_ids) at 1M
+    nodes — two adversarial topologies:
 
     - star hub-0 with n spokes: maximum key skew — one node carries
       every edge, so the per-round groupBy/join concentrate on a
@@ -365,7 +365,7 @@ def run_components_scale(spark, n: int = 1_000_000, path: bool = False):
       al. bound O(log² n)). NOT in the headline bench — ~log2(n)
       rounds × per-round latency (measured 21 rounds / 44 s at 1M on
       local[32], docs/components_rounds.md) is a worst-case stressor,
-      not a realistic identity/near-dup diameter; reproduce with
+      not a realistic identity-graph diameter; reproduce with
       scripts/measure_components_rounds.py.
 
     Returns {"star_sec", "star_rounds"} (+ "path_sec"/"path_rounds"
@@ -417,16 +417,6 @@ BENCH_QUERIES = [
     # fixture-backed, so a timed first call would measure corpus
     # generation + the full pipeline warmup, not
     # the milliseconds-scale census itself (its gate is the oracle)
-    "pricing_summary",
-    "order_revenue_topk",
-    "top_orders_per_customer",
-    "priority_vote_per_customer",
-    "region_acctbal_rollup",
-    "doc_dedup_exact",
-    "doc_minhash_signatures",
-    "doc_simhash",
-    "doc_simhash_pairs",
-    "doc_minhash_lsh_shingle",
     "doc_boilerplate",
     "doc_contamination",
     "doc_sample_stratified",

@@ -14,8 +14,8 @@ needs — guide §1):
 
 Usage:
   SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py \
-      --queries doc_minhash_lsh,doc_simhash_pairs --reps 3
-  python bench_extra.py --explain doc_simhash_pairs --tag before
+      --queries doc_contamination,doc_repetition --reps 3
+  python bench_extra.py --explain doc_contamination --tag before
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ repositories ``(repo, path, commit, lang, content)``:
 - ``functions``  — mention normalization / lexical scoring
 - ``operators``  — entity linking, type cascade, CEA/CTA/CPA, triple
                    emission, KG-fragment and ontology projection;
-                   dedup, corpus curation
+                   corpus curation and multimodal plumbing
 - ``plans``      — the end-to-end checkpointed pipeline
 - ``streaming``  — incremental ingestion of arriving source files
 - ``fixtures``   — deterministic synthetic corpus + a plain-Python

@@ -8,10 +8,8 @@ Two query families:
    the fixture as VALUES CTEs and either re-implements the operator in
    ANSI SQL (closure, emission, voting, most-specific…) or pins the
    plain-Python oracle's goldens (CEA/CTA/CPA decisions).
-2. testdata queries — relational / dedup / curation / multimodal
-   operators over the testdata parquet tables (region nation
-   customer supplier part orders lineitem documents), with straight
-   SQL oracles.
+2. testdata queries — curation / multimodal operators over the
+   testdata ``documents`` parquet table, with straight SQL oracles.
 
 Numeric discipline (driver hashes values exactly):
 - count-like outputs cast to bigint (DuckDB count/len are BIGINT)
@@ -103,12 +101,6 @@ def _values(rows, cols: str) -> str:
     return f"(VALUES\n{body}\n) AS t({cols})"
 
 
-def _tbl(sf_dir_placeholder: str = "") -> str:
-    # driver pre-registers parquet tables as views; fixture queries
-    # never touch them
-    return sf_dir_placeholder
-
-
 # ---------------------------------------------------------------------------
 # registry
 # ---------------------------------------------------------------------------
@@ -155,9 +147,9 @@ def _effective_splits(path: str) -> tuple[int, int]:
 
 def _load(spark: SparkSession, sf_dir: str, table: str,
           rebalance: bool = False) -> DataFrame:
-    # Record the sf the driver actually drove so scalar-recomputation
-    # oracles (minhash signatures, simhash) rebuild over the SAME
-    # table — the contract gives oracle_sql() no sf argument.
+    # Record the sf the driver actually drove so the scalar-
+    # recomputation oracle (doc_sample_stratified) rebuilds over the
+    # SAME table — the contract gives oracle_sql() no sf argument.
     _LAST_SF_DIR[:] = [sf_dir]
     path = os.path.join(sf_dir, f"{table}.parquet")
     df = spark.read.parquet(path)
@@ -1248,459 +1240,9 @@ def kg_entity_sample(spark, sf_dir):
 
 
 # ===========================================================================
-# relational operators over the driver's testdata (TPC-H-ish)
+# curation / multimodal (training-data pipeline operators) over the
+# testdata documents table
 # ===========================================================================
-
-@q(
-    "pricing_summary",
-    lambda: """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-       COUNT(*) AS count_order
-FROM lineitem GROUP BY l_returnflag, l_linestatus
-""",
-)
-def pricing_summary(spark, sf_dir):
-    """TPC-H Q1-style pricing summary — exercises map-side partial
-    aggregation; decimal accumulation for cross-engine exactness."""
-    li = _load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double").alias("sum_base_price"),
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-        ).cast("double").alias("sum_disc_price"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-
-
-@q(
-    "top_orders_per_customer",
-    lambda: """
-SELECT o_custkey, o_orderkey, rnk FROM (
-  SELECT o_custkey, o_orderkey,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey
-                            ORDER BY o_totalprice DESC, o_orderkey) AS rnk
-  FROM orders
-) WHERE rnk <= 3
-""",
-)
-def top_orders_per_customer(spark, sf_dir):
-    """T1-style top-k per group (window)."""
-    o = _load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= 3)
-        .select("o_custkey", "o_orderkey", "rnk")
-    )
-
-
-@q(
-    "priority_vote_per_customer",
-    lambda: """
-SELECT o_custkey, o_orderpriority, votes FROM (
-  SELECT o_custkey, o_orderpriority, COUNT(*) AS votes,
-         ROW_NUMBER() OVER (PARTITION BY o_custkey
-                            ORDER BY COUNT(*) DESC, o_orderpriority) AS rn
-  FROM orders GROUP BY o_custkey, o_orderpriority
-) WHERE rn = 1
-""",
-)
-def priority_vote_per_customer(spark, sf_dir):
-    """A3/A4 voting+argmax semantics on testdata: most frequent order
-    priority per customer, pinned lexicographic tie-break.
-
-    r6: the per-customer ``row_number`` window (full sort of the vote
-    table) is replaced by a hash-aggregate argmax —
-    ``min(struct(-votes, priority, votes))`` picks exactly the
-    (votes DESC, priority ASC) winner with map-side partial
-    aggregation and no sort; both aggregations share one exchange on
-    o_custkey (the second groupBy is a subset of the first's keys).
-    Same rows: the struct order is total per customer (priority is a
-    group key), and negating a BIGINT count is exact."""
-    o = _load(spark, sf_dir, "orders")
-    votes = o.groupBy("o_custkey", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("votes")
-    )
-    win = F.min(
-        F.struct(
-            (-F.col("votes")).alias("nv"),
-            F.col("o_orderpriority").alias("pr"),
-            F.col("votes").alias("v"),
-        )
-    ).alias("w")
-    return votes.groupBy("o_custkey").agg(win).select(
-        "o_custkey",
-        F.col("w.pr").alias("o_orderpriority"),
-        F.col("w.v").alias("votes"),
-    )
-
-
-@q(
-    "region_acctbal_rollup",
-    lambda: """
-SELECT r.r_name, COUNT(*) AS n_customers,
-       CAST(SUM(CAST(c.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal
-FROM customer c
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name
-""",
-)
-def region_acctbal_rollup(spark, sf_dir):
-    """Dimension joins (broadcast) + rollup."""
-    c = _load(spark, sf_dir, "customer")
-    n = _load(spark, sf_dir, "nation")
-    r = _load(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double").alias("total_acctbal"),
-        )
-    )
-
-
-@q(
-    "order_revenue_topk",
-    lambda: """
-SELECT o_orderkey, revenue, rnk FROM (
-  SELECT l_orderkey AS o_orderkey,
-         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-         ROW_NUMBER() OVER (
-           ORDER BY SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) DESC,
-                    l_orderkey) AS rnk
-  FROM lineitem GROUP BY l_orderkey
-) WHERE rnk <= 10
-""",
-)
-def order_revenue_topk(spark, sf_dir):
-    """Aggregate + global top-k with deterministic tie-break.
-
-    r6: the global ``row_number() OVER (ORDER BY …)`` window funneled
-    every aggregated order row through ONE task's sort (the
-    single-task-window shape operators/topk.py exists to avoid; 1.5M
-    rows at sf1, unbounded at 100 TB). ``orderBy(...).limit(10)``
-    instead plans as TakeOrderedAndProject — per-partition top-10
-    bounded heaps merged at the driver, no global sort, no full
-    shuffle — and the rank is re-attached by a 10-row window (a
-    single trivial task). Same rows, same ranks: the order is total
-    (orderkey is unique within the aggregate)."""
-    li = _load(spark, sf_dir, "lineitem")
-    rev = li.groupBy(F.col("l_orderkey").alias("o_orderkey")).agg(
-        F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
-        ).alias("rev_dec")
-    )
-    order = [F.desc("rev_dec"), F.asc("o_orderkey")]
-    top10 = rev.orderBy(*order).limit(10)
-    w = Window.orderBy(*order)
-    return (
-        top10.withColumn("rnk", F.row_number().over(w))
-        .select(
-            "o_orderkey", F.col("rev_dec").cast("double").alias("revenue"), "rnk"
-        )
-    )
-
-
-# ===========================================================================
-# dedup / curation / multimodal (training-data pipeline operators)
-# ===========================================================================
-
-@q(
-    "doc_dedup_exact",
-    lambda: """
-SELECT sha256(text) AS text_sha, COUNT(*) AS n_docs,
-       MIN(doc_id) AS canonical_id
-FROM documents GROUP BY sha256(text)
-""",
-)
-def doc_dedup_exact(spark, sf_dir):
-    """Exact dedup: hash-groupBy with deterministic survivor pick."""
-    from .operators.dedup import exact_dedup_groups
-
-    return exact_dedup_groups(_load(spark, sf_dir, "documents"))
-
-
-_JACCARD_ORACLE = """
-WITH ws AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS words
-  FROM documents
-),
-pairs AS (
-  SELECT a.doc_id AS i, b.doc_id AS j,
-         len(list_intersect(a.words, b.words)) AS inter,
-         len(a.words) + len(b.words) - len(list_intersect(a.words, b.words)) AS uni
-  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
-)
-SELECT i, j, CAST(inter AS BIGINT) AS inter, CAST(uni AS BIGINT) AS uni
-FROM pairs WHERE inter >= {t} * uni
-"""
-
-
-@q("doc_jaccard_pairs", lambda: _JACCARD_ORACLE.format(t="0.95"))
-def doc_jaccard_pairs(spark, sf_dir):
-    """Exact word-set Jaccard near-dup pairs (threshold 0.95) via
-    token inverted-index self-join; integer inter/union outputs."""
-    from .operators.dedup import jaccard_pairs
-
-    d = jaccard_pairs(_load(spark, sf_dir, "documents"), 0.95)
-    return d.select(
-        "i", "j", F.col("inter").cast("long").alias("inter"),
-        F.col("uni").cast("long").alias("uni"),
-    )
-
-
-@q("doc_minhash_lsh", lambda: _JACCARD_ORACLE.format(t="0.9"))
-def doc_minhash_lsh(spark, sf_dir):
-    """MinHash-LSH near-dup detection (16 hashes, 1-row bands →
-    P(miss at j≥0.9) ≤ 1e-16) + exact-Jaccard verification; output
-    must equal the exact pairwise oracle."""
-    from .operators.dedup import minhash_lsh_pairs
-
-    d = minhash_lsh_pairs(
-        _load(spark, sf_dir, "documents", rebalance=True),
-        0.9, n_hashes=16, rows_per_band=1
-    )
-    return d.select(
-        "i", "j", F.col("inter").cast("long").alias("inter"),
-        F.col("uni").cast("long").alias("uni"),
-    )
-
-
-_NEARDUP_CANONICAL_ORACLE = """
-WITH RECURSIVE ws AS (
-  SELECT doc_id, list_distinct(string_split(text, ' ')) AS words
-  FROM documents
-),
-p AS (
-  SELECT a.doc_id AS i, b.doc_id AS j,
-         len(list_intersect(a.words, b.words)) AS inter,
-         len(a.words) + len(b.words) - len(list_intersect(a.words, b.words)) AS uni
-  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
-),
-pr AS (SELECT i, j FROM p WHERE inter >= 0.9 * uni),
-e(a, b) AS (SELECT i, j FROM pr UNION SELECT j, i FROM pr),
-n(u) AS (SELECT a FROM e),
-reach(u, v) AS (
-    SELECT u, u FROM n
-    UNION
-    SELECT r.u, e.b FROM reach r JOIN e ON e.a = r.v
-),
-comp AS (SELECT u AS node, MIN(v) AS component FROM reach GROUP BY u)
-SELECT d.doc_id AS doc_id,
-       COALESCE(c.component, d.doc_id) AS canonical_id,
-       COALESCE(c.component, d.doc_id) = d.doc_id AS is_canonical
-FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
-"""
-
-
-@q("doc_neardup_canonical", lambda: _NEARDUP_CANONICAL_ORACLE)
-def doc_neardup_canonical(spark, sf_dir):
-    """Near-dup cluster canonicalization — the survivor-selection tail
-    of a web-scale dedup pipeline: MinHash-LSH pairs (same config as
-    ``doc_minhash_lsh``, exact at these parameters) → connected
-    components over the pair graph (alternating large/small-star,
-    operators/components.py) → every document mapped to its cluster's
-    canonical id (min doc_id), singletons canonical to themselves.
-    A pair list alone doesn't dedup a corpus: transitive near-dup
-    chains (A~B, B~C, A̸~C) must collapse to ONE survivor, which is
-    exactly the component structure. Oracle: exact Jaccard pairs +
-    recursive-CTE reachability closure. The collapse-before-pair scale
-    shape (identical word sets → representative star edges, LSH over
-    representatives only — components provably unchanged, 33x fewer
-    verified pairs at sf0.1) lives in the operator's docstring."""
-    from .operators.dedup import near_dup_canonicalize
-
-    docs = _load(spark, sf_dir, "documents", rebalance=True)
-    return near_dup_canonicalize(docs, 0.9, n_hashes=16, rows_per_band=1)
-
-
-# word-3-gram-shingle Jaccard oracle: shingles built in SQL exactly
-# like operators/dedup.word_sets(ngram=3) incl. the partial trailing
-# shingle for docs shorter than 3 tokens (chr(31) = the \x1f joiner)
-_SHINGLE_JACCARD_ORACLE = """
-WITH ws AS (
-  SELECT doc_id, list_distinct(
-           list_transform(
-             generate_series(1, greatest(len(t) - 2, 1)),
-             i -> array_to_string(t[i:i+2], chr(31))))
-         AS words
-  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
-),
-pairs AS (
-  SELECT a.doc_id AS i, b.doc_id AS j,
-         len(list_intersect(a.words, b.words)) AS inter,
-         len(a.words) + len(b.words) - len(list_intersect(a.words, b.words)) AS uni
-  FROM ws a JOIN ws b ON a.doc_id < b.doc_id
-)
-SELECT i, j, CAST(inter AS BIGINT) AS inter, CAST(uni AS BIGINT) AS uni
-FROM pairs WHERE inter >= {t} * uni
-"""
-
-
-@q("doc_minhash_lsh_shingle", lambda: _SHINGLE_JACCARD_ORACLE.format(t="0.8"))
-def doc_minhash_lsh_shingle(spark, sf_dir):
-    """MinHash-LSH over word 3-gram shingles — the realistic
-    web-corpus configuration where similarity is sparse and banding
-    prunes aggressively. 16 single-row bands (P(miss at j≥0.8) ≤
-    0.2^16 ≈ 7e-12) + exact shingle-Jaccard verification ⇒ output
-    equals the exact pairwise shingle-Jaccard oracle."""
-    from .operators.dedup import minhash_lsh_pairs
-
-    d = minhash_lsh_pairs(
-        _load(spark, sf_dir, "documents", rebalance=True), 0.8,
-        n_hashes=16, rows_per_band=1, ngram=3,
-    )
-    return d.select(
-        "i", "j", F.col("inter").cast("long").alias("inter"),
-        F.col("uni").cast("long").alias("uni"),
-    )
-
-
-# --- rows-only operators (no SQL-expressible oracle) -----------------------
-
-
-def _o_minhash_signatures():
-    # independent recomputation of the signatures with the pure-Python
-    # XXH64. sf-parametric: the harness exports TDS_ORACLE_SF_DIR for
-    # the sf it compares at (driver_mirror does); default is the
-    # driver's correctness-gate sf (0.01). Raises if the table is
-    # elsewhere → degrades to rows-only.
-    import duckdb
-
-    from .functions.xxh64 import spark_xxhash64
-
-    sf_dir = _oracle_sf_dir()
-    con = duckdb.connect()
-    docs = con.execute(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    rows = []
-    for doc_id, text in docs:
-        toks = set((text or "").split(" "))
-        sig = [
-            min(spark_xxhash64(w, (i, "int")) for w in toks)
-            for i in range(8)
-        ]
-        rows.append((doc_id, *sig))
-    cols = "id, " + ", ".join(f"mh_{i}" for i in range(8))
-    return f"SELECT * FROM {_values(rows, cols)}"
-
-
-@q("doc_minhash_signatures", _o_minhash_signatures)
-def doc_minhash_signatures(spark, sf_dir):
-    """MinHash signatures, fully JVM-side (xxhash64 min-agg) — the
-    signature half of the LSH dedup path. Oracle: signatures
-    recomputed with the independent pure-Python XXH64
-    (functions/xxh64.py) over the sf0.01 table."""
-    from .operators.dedup import minhash_signatures
-
-    return minhash_signatures(
-        _load(spark, sf_dir, "documents", rebalance=True), n_hashes=8
-    )
-
-
-def _simhash_scalar_table():
-    """Independent scalar SimHash recomputation over the oracle sf's
-    documents (naive per-token bit loop — deliberately nothing like
-    the vectorized segment-sum fold in operators/dedup.py). Token
-    hashes come from the pure-Python XXH64 mirror of Spark's
-    ``xxhash64`` (functions/xxh64.py, bit-exactness unit-tested), the
-    same function the JVM side applies. Token bit rows are memoized
-    (Zipf) to keep the oracle build fast."""
-    import duckdb
-
-    from .functions.xxh64 import spark_xxhash64
-
-    sf_dir = _oracle_sf_dir()
-    docs = duckdb.connect().execute(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    bit_memo: dict[str, list[int]] = {}
-
-    def bits_of(tok: str) -> list[int]:
-        if tok not in bit_memo:
-            h = spark_xxhash64(tok) & ((1 << 64) - 1)
-            bit_memo[tok] = [1 if (h >> i) & 1 else -1 for i in range(64)]
-        return bit_memo[tok]
-
-    import re
-
-    rows = []
-    for doc_id, text in docs:
-        # EXACT mirror of the operator's tokenizer: Spark splits on
-        # Java-regex \s+ ([ \t\n\x0B\f\r] without UNICODE_CHARACTER_
-        # CLASS) and filters empties. Python str.split() is NOT that
-        # class (it also splits U+00A0, U+0085, U+2000-200A, ...), so
-        # spell the Java class out.
-        toks = [
-            t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t
-        ]
-        if not toks:
-            rows.append((doc_id, 0))
-            continue
-        counts = [0] * 64
-        for tok in toks:
-            tb = bits_of(tok)
-            for i in range(64):
-                counts[i] += tb[i]
-        v = 0
-        for i in range(64):
-            if counts[i] >= 0:
-                v |= 1 << i
-        rows.append((doc_id, v - (1 << 64) if v >= (1 << 63) else v))
-    return rows
-
-
-def _o_simhash():
-    return (
-        "SELECT id, CAST(simhash AS BIGINT) AS simhash FROM "
-        + _values(_simhash_scalar_table(), "id, simhash")
-    )
-
-
-def _o_simhash_pairs():
-    return f"""
-WITH s AS (SELECT id, CAST(simhash AS BIGINT) AS simhash
-           FROM {_values(_simhash_scalar_table(), "id, simhash")})
-SELECT a.id AS i, b.id AS j,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM s a JOIN s b ON a.id < b.id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
-@q("doc_simhash", _o_simhash)
-def doc_simhash(spark, sf_dir):
-    """64-bit SimHash fingerprints (numpy pandas UDF). Oracle:
-    independent scalar recomputation (VALUES table) — closes the r02
-    no_oracle row."""
-    from .operators.dedup import simhash64
-
-    return simhash64(_load(spark, sf_dir, "documents", rebalance=True))
-
-
-@q("doc_simhash_pairs", _o_simhash_pairs)
-def doc_simhash_pairs(spark, sf_dir):
-    """Banded Hamming LSH over SimHash (4 × 16-bit blocks, exact for
-    distance ≤ 3 by pigeonhole) — SimHash as a dedup *operator*, not
-    just a column. Oracle: full pairwise xor+bit_count filter over
-    independently recomputed fingerprints."""
-    from .operators.dedup import simhash_pairs
-
-    return simhash_pairs(
-        _load(spark, sf_dir, "documents", rebalance=True), max_hamming=3
-    )
 
 
 _MEDIA_META_SQL = """
@@ -1917,8 +1459,8 @@ def doc_contamination(spark, sf_dir):
 def _o_sample_stratified():
     # independent recomputation of the keep-hashes with the
     # pure-Python XXH64 mirror; the per-language threshold CASE runs
-    # in SQL over the real documents table (same fallback-chain
-    # caveat as _o_minhash_signatures)
+    # in SQL over the real documents table (built from
+    # _oracle_sf_dir(), whose docstring states the ordering caveat)
     import duckdb
 
     from .functions.xxh64 import spark_xxhash64

@@ -37,9 +37,9 @@ from ..functions.normalize import lexical_score_expr, normalize_expr
 
 
 def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
-    """The hot-key guard shared by every blocked/bucketed pairing path
-    (candidate blocking here, the dedup token index and LSH band
-    buckets): drop ALL rows of keys appearing more than ``cap`` times,
+    """The hot-key guard of the fuzzy candidate blocking index
+    (``generate_candidates(max_token_df=)``): drop ALL rows of keys
+    appearing more than ``cap`` times,
     bounding pair fan-out to O(cap · rows) under Zipf heads. The
     hot-key set is tiny (the distribution's head) → broadcast
     anti-join, no shuffle of ``df``."""
@@ -92,8 +92,8 @@ def generate_candidates(
     candidates: (mention_norm, uri, score, popularity) — redirect-
     resolved, deduped, top-k ranked per mention.
 
-    ``max_token_df``: hot-token cap for the fuzzy blocking index (same
-    trade-off as dedup.jaccard_pairs) — tokens appearing in more than
+    ``max_token_df``: hot-token cap for the fuzzy blocking index
+    (recall traded for bounded fan-out) — tokens appearing in more than
     this many index keys are dropped from *pairing*, bounding the
     blocked-join fan-out under Zipfian mentions; scoring stays exact
     on the surviving pairs. None = no cap (fixture-exact).

@@ -49,7 +49,7 @@ def ngram_array(text_col, n: int):
     ``concat_ws`` — O(T·n) per doc. (The previous
     ``transform(sequence(1, k), i -> array_join(slice(toks, i, n)))``
     form is O(T²): ``slice`` with a non-literal start re-copies per
-    element — the same trap ``dedup.word_sets`` documents; measured
+    element; measured
     ~16× slower on the sf1 gram explode. Gram values are identical:
     element i of the zip is (toks[i..i+n-1]) with every slice exactly
     k long — no NULL padding — and ``concat_ws(' ', …)`` over

@@ -13,10 +13,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "documents",
-]
+TABLES = ["documents"]
 
 
 def _norm_cell(v):
@@ -69,8 +66,16 @@ def run_all(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None
     sys.path.insert(0, str(REPO))
     import __spark_entry__ as entry
 
-    # sf-parametric oracles (doc_minhash_signatures recomputes
-    # signatures from the table itself) follow the compared sf dir
+    qs = entry.queries()
+    # a selection that names no registered query would compare nothing
+    # and pass; reject it before paying for a Spark session
+    if only is not None:
+        unknown = [n for n in only if n not in qs]
+        if unknown or not only:
+            raise ValueError(f"unknown queries selected: {unknown}")
+
+    # sf-parametric oracles (doc_sample_stratified recomputes its
+    # keep-hashes from the table itself) follow the compared sf dir
     os.environ["TDS_ORACLE_SF_DIR"] = sf_dir
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -80,7 +85,6 @@ def run_all(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     results = {}
     for name, fn in qs.items():

@@ -114,73 +114,3 @@ def test_path_round_count_logarithmic(spark):
     # anything resembling O(n) or O(log² n) behavior at this size
     assert stats["rounds"] <= 16, stats
 
-
-def test_neardup_canonical_equals_bruteforce_on_adversarial_corpus(
-    spark, tmp_path
-):
-    # Guards the collapse-before-pair equivalence proof on an
-    # adversarial random corpus: many docs are word-order permutations
-    # or token-repetitions of others (identical word SETS, distinct
-    # texts), the rest share a small vocabulary so 0.9-Jaccard
-    # near-cliques and chains both occur. The query's components must
-    # equal a pure-Python union-find over ALL exact-Jaccard pairs.
-    import itertools
-    import random
-
-    rng = random.Random(41)
-    vocab = [f"w{i}" for i in range(30)]
-    docs = []
-    base_sets = []
-    for b in range(12):
-        k = rng.randint(8, 16)
-        base_sets.append(rng.sample(vocab, k))
-    for i in range(120):
-        s = list(base_sets[rng.randrange(len(base_sets))])
-        mode = rng.random()
-        if mode < 0.4:        # permutation: same set, shuffled order
-            rng.shuffle(s)
-        elif mode < 0.6:      # repetition: same set, duplicated tokens
-            s = s + rng.sample(s, min(3, len(s)))
-        elif mode < 0.9:      # mutation: drop one token (J slightly <1)
-            s = s[:-1] if len(s) > 2 else s
-        else:                 # noise doc
-            s = rng.sample(vocab, rng.randint(5, 20))
-        docs.append((i, " ".join(s)))
-
-    import pandas as pd
-
-    sf_dir = str(tmp_path)
-    spark.createDataFrame(
-        pd.DataFrame(docs, columns=["doc_id", "text"])
-    ).write.parquet(f"{sf_dir}/documents.parquet")
-
-    # brute-force oracle: exact unigram-set Jaccard >= 0.9, union-find
-    sets = {i: frozenset(t.split()) for i, t in docs}
-    parent = {i: i for i, _ in docs}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in itertools.combinations(sets, 2):
-        inter = len(sets[a] & sets[b])
-        uni = len(sets[a] | sets[b])
-        if inter >= 0.9 * uni:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    want = {i: find(i) for i, _ in docs}
-
-    from tabular_data_semantics_py_spark.entry_queries import (
-        doc_neardup_canonical,
-    )
-
-    got = {
-        r.doc_id: (r.canonical_id, r.is_canonical)
-        for r in doc_neardup_canonical(spark, sf_dir).collect()
-    }
-    assert set(got) == set(want)
-    for i, w in want.items():
-        assert got[i] == (w, w == i), (i, got[i], w)

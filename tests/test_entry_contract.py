@@ -16,12 +16,12 @@ import os
 import duckdb
 import pytest
 
-from driver_mirror import TABLES, compare_query
+from driver_mirror import TABLES, compare_query, run_all
 
 SF_DIR = "/root/testdata/sf0.01"
-# sf-parametric oracles (e.g. minhash signature recomputation) must
-# rebuild over the SAME sf the sweep drives — set before the contract
-# fixture calls oracle_sql()
+# sf-parametric oracles (doc_sample_stratified's keep-hash
+# recomputation) must rebuild over the SAME sf the sweep drives — set
+# before the contract fixture calls oracle_sql()
 os.environ.setdefault("TDS_ORACLE_SF_DIR", SF_DIR)
 
 import __spark_entry__ as entry  # noqa: E402
@@ -60,3 +60,17 @@ def test_entry_smoke(spark, contract):
     df = entry.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"subj", "pred", "obj", "obj_is_literal"}
+
+
+@pytest.mark.parametrize("arg", ["", "kg_nope"], ids=["empty", "misspelt"])
+def test_mirror_rejects_selection_of_unknown_queries(monkeypatch, arg):
+    # the script's selection parse: an empty or misspelt list matches
+    # no registered query, so it must fail before any Spark session
+    import tabular_data_semantics_py_spark.session as session
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark session started for an unknown selection")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    with pytest.raises(ValueError, match=repr(arg)):
+        run_all(only=arg.split(","))
