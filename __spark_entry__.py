@@ -3,12 +3,12 @@
 - ``entry(spark)``   — flagship: the full KG-construction pipeline on
   the deterministic fixture corpus → emitted (subj, pred, obj,
   obj_is_literal) triples.
-- ``queries()``      — one entry per implemented operator from
-  SURVEY.md §2 plus the training-data-pipeline operators (corpus
-  curation, multimodal plumbing).
-- ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query. KG fixture
-  queries embed the (seeded, deterministic) fixture as VALUES CTEs;
-  testdata queries run on the pre-registered parquet views.
+- ``queries()``      — the 30 ``kg_*`` queries, one per implemented
+  operator from SURVEY.md §2, all over the fixture corpus (the
+  ``sf_dir`` argument is ignored).
+- ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query, embedding
+  the (seeded, deterministic) fixture as VALUES CTEs, so DuckDB needs
+  no tables.
 """
 
 from __future__ import annotations

@@ -12,7 +12,6 @@ Headline queries:
 - ``kg_pipeline``  — the full KG-construction pipeline on a fixture
   corpus scaled to the sf (n_tables ∝ sf); the primary throughput
   number (triples/sec) comes from this.
-- curation / multimodal operators over the sf parquet.
 
 ``--scaling`` mode runs the same jobs at two parallelism levels
 (local[2] vs local[8] = N vs 4N cores) and writes BENCH/BASELINE.md
@@ -412,22 +411,7 @@ def run_components_scale(spark, n: int = 1_000_000, path: bool = False):
     return out
 
 
-BENCH_QUERIES = [
-    # NOTE kg_degree_dist is deliberately NOT benched: it is
-    # fixture-backed, so a timed first call would measure corpus
-    # generation + the full pipeline warmup, not
-    # the milliseconds-scale census itself (its gate is the oracle)
-    "doc_boilerplate",
-    "doc_contamination",
-    "doc_sample_stratified",
-    "doc_repetition",
-    "doc_pii_scrub",
-    "media_meta",
-]
-
-
 def run_bench(sf_dir: str, master: str, shuffle: int | None = None) -> dict:
-    from tabular_data_semantics_py_spark import entry_queries
     from tabular_data_semantics_py_spark.session import get_spark
 
     spark = get_spark(app_name="tds-bench", master=master,
@@ -443,14 +427,6 @@ def run_bench(sf_dir: str, master: str, shuffle: int | None = None) -> dict:
     # best-of-3 (shared host; see BENCH/BASELINE.md noise notes)
     kg_sec, n_triples = run_kg_pipeline(spark, sf, reps=3)
     timings["kg_pipeline"] = round(kg_sec, 3)
-
-    qs = entry_queries.QUERIES
-    for name in BENCH_QUERIES:
-        fn = qs[name]
-        _gc(spark)  # drop residue from prior queries before timing
-        t = time.time()
-        fn(spark, sf_dir).count()
-        timings[name] = round(time.time() - t, 3)
 
     sec_u, sec_s = run_candidate_skew(spark)
     timings["candidates_uniform"] = round(sec_u, 3)

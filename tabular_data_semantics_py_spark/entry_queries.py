@@ -1,26 +1,19 @@
 """Query registry backing ``__spark_entry__.py``.
 
-Two query families:
+Every query is a ``kg_*`` KG-construction operator (SURVEY.md §2)
+running on the deterministic fixture corpus (BASELINE.json: no
+external data; the corpus is synthesized in-process, seed=42). Oracle
+SQL embeds the fixture as VALUES CTEs and either re-implements the
+operator in ANSI SQL (closure, emission, voting, most-specific…) or
+pins the plain-Python oracle's goldens (CEA/CTA/CPA decisions). The
+``sf_dir`` argument of the driver contract is accepted and ignored.
 
-1. ``kg_*`` — the KG-construction operators (SURVEY.md §2) running on
-   the deterministic fixture corpus (BASELINE.json: no external data;
-   the corpus is synthesized in-process, seed=42). Oracle SQL embeds
-   the fixture as VALUES CTEs and either re-implements the operator in
-   ANSI SQL (closure, emission, voting, most-specific…) or pins the
-   plain-Python oracle's goldens (CEA/CTA/CPA decisions).
-2. testdata queries — curation / multimodal operators over the
-   testdata ``documents`` parquet table, with straight SQL oracles.
-
-Numeric discipline (driver hashes values exactly):
-- count-like outputs cast to bigint (DuckDB count/len are BIGINT)
-- decimal-accumulated sums cast to double at the end (exact decimal
-  arithmetic both engines, one deterministic final conversion)
-- ratios/cosines as single IEEE-double operations in both engines
+Numeric discipline (driver hashes values exactly): count-like outputs
+cast to bigint (DuckDB count/len are BIGINT).
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,93 +101,13 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, Callable[[], str]] = {}
 
 
-def q(name: str, oracle: Callable[[], str] | None = None):
+def q(name: str, oracle: Callable[[], str]):
     def deco(fn):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
-
-
-_LAST_SF_DIR: list[str] = []
-
-# parquet-footer probe memo: (path, mtime) → (row groups, rows).
-# Metadata only — never rows or results.
-_RG_MEMO: dict[tuple[str, float], tuple[int, int]] = {}
-
-
-def _effective_splits(path: str) -> tuple[int, int]:
-    """(non-empty scan splits, rows) of this parquet file. Spark
-    splits files by byte ranges, but a parquet row group is assigned
-    to the one split holding its midpoint — a file with a single
-    giant row group therefore collapses to ONE non-empty split no
-    matter what maxPartitionBytes says, and every operator fused
-    above the scan runs single-task (guide §2.5 input skew).
-    Driver-side footer read, memoized on (path, mtime)."""
-    try:
-        key = (path, os.path.getmtime(path))
-        if key not in _RG_MEMO:
-            import pyarrow.parquet as pq
-
-            md = pq.ParquetFile(path).metadata
-            _RG_MEMO[key] = (md.num_row_groups, md.num_rows)
-        return _RG_MEMO[key]
-    except Exception:
-        return (1 << 30, 0)  # unknown layout: assume healthy, no shuffle
-
-
-def _load(spark: SparkSession, sf_dir: str, table: str,
-          rebalance: bool = False) -> DataFrame:
-    # Record the sf the driver actually drove so the scalar-
-    # recomputation oracle (doc_sample_stratified) rebuilds over the
-    # SAME table — the contract gives oracle_sql() no sf argument.
-    _LAST_SF_DIR[:] = [sf_dir]
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    df = spark.read.parquet(path)
-    if rebalance:
-        # Unsplittable-input remediation (guide §2.5: "one huge
-        # unsplittable file — repartition immediately after the
-        # read"), requested only by queries whose pre-shuffle map work
-        # dominates (gram explodes, UDF passes, per-pair folds).
-        # The footer probe makes it a NO-OP on healthy layouts: a
-        # 100 TB table has thousands of row groups and never pays the
-        # extra exchange; only a row-group-starved file (the testdata
-        # writes one row group per table) is spread. Width = the
-        # session's shuffle width (scale-adaptive, not a core-count
-        # constant). Row order is irrelevant to every registered
-        # query (set-compared against the oracle).
-        # The rows floor keeps tiny tables (sf0.01 gate corpora) off
-        # the remedial shuffle: below it the serial map work is cheaper
-        # than re-executing the exchange once per consuming action
-        # (measured: a 2k-row table re-shuffled once per consuming
-        # action cost +1.3 s at sf0.1).
-        width = spark.sparkContext.defaultParallelism
-        n_splits, n_rows = _effective_splits(path)
-        if n_splits < max(width // 4, 2) and n_rows >= 4000:
-            df = df.repartition(width)
-    return df
-
-
-def _oracle_sf_dir() -> str:
-    """sf-dir for oracles that recompute scalar-side: explicit env
-    override > the sf_dir the driver last passed to a query > the
-    driver's correctness-gate default (sf0.01).
-
-    Ordering caveat: oracle strings are BUILT when oracle_sql() is
-    called, so a harness that builds all oracles before running any
-    query sees the fallback chain, not the per-query sf. Both real
-    harnesses are safe — the driver compares at sf0.01 (= the
-    default), and tests/driver_mirror.py exports TDS_ORACLE_SF_DIR for
-    the sf it drives. A new harness comparing at another sf must do
-    one of those two things."""
-    env = os.environ.get("TDS_ORACLE_SF_DIR")
-    if env:
-        return env
-    if _LAST_SF_DIR:
-        return _LAST_SF_DIR[0]
-    return "/root/testdata/sf0.01"
 
 
 # ===========================================================================
@@ -1239,373 +1152,6 @@ def kg_entity_sample(spark, sf_dir):
     )
 
 
-# ===========================================================================
-# curation / multimodal (training-data pipeline operators) over the
-# testdata documents table
-# ===========================================================================
-
-
-_MEDIA_META_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         CASE (((doc_id % 3) + 3) % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-              ELSE 'video' END AS media_type,
-         octet_length(encode(text))::INT AS n_bytes,
-         sha256(text) AS sha
-  FROM documents
-), b AS (
-  SELECT *,
-         ('0x' || substr(sha, 1, 2))::INT AS b0,
-         ('0x' || substr(sha, 3, 2))::INT AS b1,
-         ('0x' || substr(sha, 5, 2))::INT AS b2,
-         ('0x' || substr(sha, 7, 2))::INT AS b3
-  FROM p
-)
-SELECT doc_id, media_type, n_bytes, sha,
-       (64 + b0 % 192)::INT AS width,
-       (64 + b1 % 192)::INT AS height,
-       (CASE WHEN media_type = 'image' THEN 0
-             ELSE b2 * 256 + b3 END)::INT AS duration_ms
-FROM b
-"""
-
-
-@q("media_meta", lambda: _MEDIA_META_SQL)
-def media_meta(spark, sf_dir):
-    """Multimodal binary-column plumbing: synth payloads + mapInPandas
-    metadata extraction (decode stubbed, see operators/multimodal.py)."""
-    from .operators.multimodal import extract_media_meta, synth_media
-
-    # synth payloads are text bytes, not real images — force the
-    # deterministic stub so the query's output is environment-
-    # independent (decode='auto' would NULL the dims wherever PIL
-    # happens to be installed, since PIL can't open fake payloads)
-    return extract_media_meta(
-        synth_media(_load(spark, sf_dir, "documents", rebalance=True)),
-        decode="stub"
-    )
-
-
-_MEDIA_RESIZE_SQL = """
-WITH p AS (
-  SELECT doc_id,
-         CASE (((doc_id % 3) + 3) % 3) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-              ELSE 'video' END AS media_type,
-         text, sha256(text) AS sha
-  FROM documents
-), d AS (
-  SELECT doc_id, media_type, text,
-         (64 + ('0x' || substr(sha, 1, 2))::INT % 192)::INT AS width,
-         (64 + ('0x' || substr(sha, 3, 2))::INT % 192)::INT AS height
-  FROM p
-), r AS (
-  SELECT *,
-         CASE WHEN greatest(width, height) <= 64 THEN width
-              ELSE greatest((width * 64 // greatest(width, height))::INT, 1)
-         END AS new_width,
-         CASE WHEN greatest(width, height) <= 64 THEN height
-              ELSE greatest((height * 64 // greatest(width, height))::INT, 1)
-         END AS new_height
-  FROM d
-)
-SELECT doc_id, media_type, width, height,
-       new_width::INT AS new_width, new_height::INT AS new_height,
-       sha256(text || '#resize#' || CAST(new_width AS VARCHAR) || 'x'
-              || CAST(new_height AS VARCHAR)) AS resized_sha
-FROM r
-"""
-
-
-@q("media_resize", lambda: _MEDIA_RESIZE_SQL)
-def media_resize(spark, sf_dir):
-    """Multimodal resize plumbing: integer thumbnail-fit dims + stub
-    artifact sha via mapInPandas (operators/multimodal.resize_media).
-    decode='stub' for environment-independence (see media_meta)."""
-    from .operators.multimodal import resize_media, synth_media
-
-    return resize_media(
-        synth_media(_load(spark, sf_dir, "documents")),
-        target=64, decode="stub",
-    )
-
-
-_MEDIA_FRAMES_SQL = """
-WITH p AS (
-  SELECT doc_id, text, sha256(text) AS sha
-  FROM documents
-  WHERE ((doc_id % 3) + 3) % 3 = 2
-), v AS (
-  SELECT doc_id, text,
-         ('0x' || substr(sha, 5, 2))::INT * 256
-           + ('0x' || substr(sha, 7, 2))::INT AS duration_ms
-  FROM p
-)
-SELECT doc_id,
-       unnest(range(0, LEAST(8, duration_ms // 1000 + 1)))::INT
-         AS frame_idx,
-       (unnest(range(0, LEAST(8, duration_ms // 1000 + 1))) * 1000)::INT
-         AS ts_ms,
-       sha256(text || '#frame#'
-              || CAST(unnest(range(0, LEAST(8, duration_ms // 1000 + 1)))
-                      AS VARCHAR)) AS frame_sha
-FROM v
-"""
-
-
-@q("media_frames", lambda: _MEDIA_FRAMES_SQL)
-def media_frames(spark, sf_dir):
-    """Video frame sampling: JVM-side duration decode + frame-index
-    explode, Arrow-batched per-frame stub extraction
-    (operators/multimodal.sample_frames)."""
-    from .operators.multimodal import sample_frames, synth_media
-
-    return sample_frames(
-        synth_media(_load(spark, sf_dir, "documents")),
-        interval_ms=1000, max_frames=8,
-    )
-
-
-# shared n-gram CTE prefix for the curation oracles: string_split
-# mirrors Spark's split(text, ' ') (single-space literal, empty
-# tokens preserved); a[i:i+n-1] is DuckDB's inclusive slice = n
-# tokens; array_to_string mirrors array_join
-def _gram_cte(n: int, distinct: bool) -> str:
-    d = "DISTINCT " if distinct else ""
-    return f"""
-t AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
-pos AS (SELECT doc_id, generate_subscripts(a, 1) AS i, a FROM t),
-grams AS (
-  SELECT {d}doc_id, array_to_string(a[i:i+{n - 1}], ' ') AS gram
-  FROM pos WHERE i + {n - 1} <= len(a)
-)"""
-
-
-@q(
-    "doc_hot_ngrams",
-    lambda: f"""
-WITH {_gram_cte(3, distinct=True)}
-SELECT gram, CAST(COUNT(*) AS BIGINT) AS df
-FROM grams GROUP BY 1 HAVING COUNT(*) >= 5
-""",
-)
-def doc_hot_ngrams(spark, sf_dir):
-    """Corpus boilerplate dictionary: word 3-grams in ≥5 distinct
-    docs (operators/curation.hot_ngrams — array_distinct before the
-    explode keeps the groupBy a plain count with map-side partials)."""
-    from .operators.curation import hot_ngrams
-
-    return hot_ngrams(_load(spark, sf_dir, "documents"), n=3, min_df=5)
-
-
-@q(
-    "doc_boilerplate",
-    lambda: f"""
-WITH {_gram_cte(3, distinct=False)},
-hot AS (
-  SELECT gram FROM (
-    SELECT gram, COUNT(DISTINCT doc_id) AS c FROM grams GROUP BY 1
-  ) WHERE c >= 5
-),
-per AS (
-  SELECT g.doc_id, COUNT(*) AS n_hot
-  FROM grams g JOIN hot h USING (gram) GROUP BY 1
-),
-base AS (
-  SELECT doc_id,
-         CASE WHEN a IS NULL THEN 0 ELSE GREATEST(len(a) - 2, 0) END AS n_grams
-  FROM t
-)
-SELECT b.doc_id,
-       CAST(b.n_grams AS BIGINT) AS n_grams,
-       CAST(COALESCE(p.n_hot, 0) AS BIGINT) AS n_hot,
-       CAST(COALESCE(p.n_hot, 0) AS DOUBLE) / NULLIF(b.n_grams, 0)
-         AS boilerplate_ratio
-FROM base b LEFT JOIN per p USING (doc_id)
-""",
-)
-def doc_boilerplate(spark, sf_dir):
-    """Per-doc share of 3-gram occurrences hitting the boilerplate
-    dictionary (operators/curation.boilerplate_stats) — the CCNet-
-    style template-page signal. Zero-gram docs: n_hot 0, NULL ratio."""
-    from .operators.curation import boilerplate_stats
-
-    return boilerplate_stats(
-        _load(spark, sf_dir, "documents"), n=3, min_df=5
-    )
-
-
-@q(
-    "doc_contamination",
-    lambda: f"""
-WITH {_gram_cte(4, distinct=True)},
-bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 53 = 0)
-SELECT g.doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-FROM grams g JOIN bench b USING (gram)
-WHERE g.doc_id % 53 <> 0
-GROUP BY 1
-""",
-)
-def doc_contamination(spark, sf_dir):
-    """Eval-set decontamination: training docs sharing a distinct
-    4-gram with the deterministic benchmark split doc_id % 53 == 0
-    (operators/curation.contamination; benchmark grams broadcast)."""
-    from .operators.curation import contamination
-
-    return contamination(
-        _load(spark, sf_dir, "documents", rebalance=True), n=4, bench_mod=53
-    ).select("doc_id", F.col("n_overlap").cast("long").alias("n_overlap"))
-
-
-def _o_sample_stratified():
-    # independent recomputation of the keep-hashes with the
-    # pure-Python XXH64 mirror; the per-language threshold CASE runs
-    # in SQL over the real documents table (built from
-    # _oracle_sf_dir(), whose docstring states the ordering caveat)
-    import duckdb
-
-    from .functions.xxh64 import spark_xxhash64
-    from .operators.curation import (
-        DEFAULT_LANG_RATES, DEFAULT_RATE, SAMPLE_MOD,
-    )
-
-    sf_dir = _oracle_sf_dir()
-    con = duckdb.connect()
-    ids = con.execute(
-        f"SELECT doc_id FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    # doc_id is LongType (plain-int arg → 8-byte variant); the seed
-    # literal F.lit(7) is IntegerType (4-byte variant)
-    rows = [(i, spark_xxhash64(i, (7, "int"))) for (i,) in ids]
-    case = " ".join(
-        f"WHEN '{lang}' THEN {int(rate * SAMPLE_MOD)}"
-        for lang, rate in sorted(DEFAULT_LANG_RATES.items())
-    )
-    return f"""
-WITH h AS (SELECT * FROM {_values(rows, "doc_id, hv")})
-SELECT d.doc_id, d.lang
-FROM documents d JOIN h USING (doc_id)
-WHERE ((hv % {SAMPLE_MOD}) + {SAMPLE_MOD}) % {SAMPLE_MOD}
-      < CASE d.lang {case} ELSE {int(DEFAULT_RATE * SAMPLE_MOD)} END
-"""
-
-
-@q("doc_sample_stratified", _o_sample_stratified)
-def doc_sample_stratified(spark, sf_dir):
-    """Deterministic per-language hash-threshold sample for mixture
-    building (operators/curation.stratified_sample) — map-side only,
-    no shuffle/window, the sampling shape that stays flat at 100 TB."""
-    from .operators.curation import stratified_sample
-
-    return stratified_sample(_load(spark, sf_dir, "documents"))
-
-
-@q(
-    "doc_repetition",
-    lambda: f"""
-WITH {_gram_cte(2, distinct=False)},
-words AS (SELECT doc_id, unnest(a) AS w FROM t),
-wc AS (SELECT doc_id, w, COUNT(*) AS c FROM words GROUP BY 1, 2),
-ws AS (SELECT doc_id, SUM(c) AS n_words, MAX(c) AS max_w
-       FROM wc GROUP BY 1),
-gc AS (SELECT doc_id, gram, COUNT(*) AS c FROM grams GROUP BY 1, 2),
-gs AS (SELECT doc_id, SUM(c) AS n_grams, COUNT(*) AS n_dist,
-              MAX(c) AS max_g
-       FROM gc GROUP BY 1)
-SELECT t.doc_id,
-       CAST(COALESCE(ws.n_words, 0) AS BIGINT) AS n_words,
-       CAST(ws.max_w AS DOUBLE) / NULLIF(ws.n_words, 0)
-         AS top_word_share,
-       CAST(COALESCE(gs.n_grams, 0) AS BIGINT) AS n_grams,
-       CAST(gs.n_grams - gs.n_dist AS DOUBLE) / NULLIF(gs.n_grams, 0)
-         AS dup_gram_ratio,
-       CAST(gs.max_g AS DOUBLE) / NULLIF(gs.n_grams, 0)
-         AS top_gram_share
-FROM t LEFT JOIN ws USING (doc_id) LEFT JOIN gs USING (doc_id)
-""",
-)
-def doc_repetition(spark, sf_dir):
-    """Gopher-family within-document repetition signals
-    (operators/curation.repetition_stats): top-word share, duplicate
-    2-gram ratio, top-2-gram share — computed inside the row with
-    array_sort + aggregate run-length folds, zero shuffle/explode
-    (the oracle recomputes them relationally via explode+groupBy)."""
-    from .operators.curation import repetition_stats
-
-    return repetition_stats(_load(spark, sf_dir, "documents"), n=2)
-
-
-def _o_pii_scrub():
-    # same pattern strings as the operator (imported, not retyped);
-    # || for concat so NULL text would propagate like Spark's concat
-    from .operators.curation import PII_PATTERNS
-
-    # COALESCE mirrors the operator's NULL-text policy (counts 0,
-    # scrubbed NULL): DuckDB's len(regexp_extract_all(NULL,...)) is
-    # NULL, Spark's coalesced size() is 0
-    counts = ",\n  ".join(
-        f"CAST(COALESCE(len(regexp_extract_all(text, '{pat}')), 0)"
-        f" AS BIGINT) AS n_{name}"
-        for name, pat, _ in PII_PATTERNS
-    )
-    scrubbed = "text"
-    for _, pat, rep in PII_PATTERNS:
-        scrubbed = f"regexp_replace({scrubbed}, '{pat}', '{rep}', 'g')"
-    return f"""
-WITH aug AS (
-  SELECT doc_id,
-    text
-    || CASE WHEN doc_id % 5 = 0
-            THEN ' mail user' || CAST(doc_id AS VARCHAR)
-                 || '@example.com now' ELSE '' END
-    || CASE WHEN doc_id % 7 = 0
-            THEN ' call 555-123-' || CAST(1000 + doc_id % 9000 AS VARCHAR)
-            ELSE '' END
-    || CASE WHEN doc_id % 11 = 0
-            THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.'
-                 || CAST((doc_id * 7) % 256 AS VARCHAR) || ' ok'
-            ELSE '' END AS text
-  FROM documents
-)
-SELECT doc_id, {counts}, {scrubbed} AS scrubbed FROM aug
-"""
-
-
-@q("doc_pii_scrub", _o_pii_scrub)
-def doc_pii_scrub(spark, sf_dir):
-    """PII redaction + counts (operators/curation.pii_scrub) over
-    deterministically-augmented text (the fixture corpus is pure
-    lowercase words, so a per-doc email / phone / IPv4 suffix is
-    appended on id-modulus subsets — same augmentation in the oracle)
-    — map-only codegen regexp counts + chained global replace."""
-    from .operators.curation import pii_scrub
-
-    d = _load(spark, sf_dir, "documents")
-    did = F.col("doc_id")
-    aug = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                did % 5 == 0,
-                F.concat(F.lit(" mail user"), did.cast("string"),
-                         F.lit("@example.com now")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 7 == 0,
-                F.concat(F.lit(" call 555-123-"),
-                         (F.lit(1000) + did % 9000).cast("string")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 11 == 0,
-                F.concat(F.lit(" from 10.0."), (did % 256).cast("string"),
-                         F.lit("."), ((did * 7) % 256).cast("string"),
-                         F.lit(" ok")),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return pii_scrub(aug)
-
-
 def flagship(spark: SparkSession) -> DataFrame:
     """The end-to-end KG pipeline on the fixture corpus → emitted
     canonical triples (driver smoke check)."""
@@ -1613,10 +1159,4 @@ def flagship(spark: SparkSession) -> DataFrame:
 
 
 def oracle_sql_strings() -> dict[str, str]:
-    out = {}
-    for name, build in ORACLES.items():
-        try:
-            out[name] = build()
-        except Exception:  # environment-dependent oracle (e.g. a
-            pass  # pinned parquet path) — degrade to rows-only
-    return out
+    return {name: build() for name, build in ORACLES.items()}

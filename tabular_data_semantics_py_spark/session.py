@@ -13,8 +13,8 @@ reasons sit next to each setting in ``get_spark``):
   floor, and ``defaultParallelism`` and the file-scan
   ``minPartitionNum`` pinned to the shuffle width, so partitioning
   follows the data rather than the core count;
-- Arrow on: the KG path's Python boundaries (the CSV parse and the
-  accent strip) are Arrow-batched;
+- Arrow on: the KG path's one Python boundary, the CSV parse, is
+  Arrow-batched;
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
@@ -97,10 +97,11 @@ def get_spark(
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
+            shuffle_partitions = (
+                int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
+            )
         except ValueError:
-            n = 32
-        shuffle_partitions = max(n, int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", n)))
+            shuffle_partitions = 32
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -133,17 +134,13 @@ def get_spark(
         # 4N, 16 at N), and a straggler costs 1/width, not 1/N.
         # Tiny dims still coalesce to the 16k floor above.
         .config("spark.default.parallelism", str(shuffle_partitions))
-        # AQE coalesce target: Spark's 64m default, env-overridable.
-        # (A 16m override shipped briefly in r3 on the theory that
-        # finer tasks fix ragged waves; the measurements behind it
-        # were taken under co-tenant memory contention — see
-        # ROUND_NOTES r3 weather — and clean-weather reruns show 64m
-        # equal or better across the pipeline. At real scale this is
-        # a per-cluster tuning knob.)
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PARTITION", "64m"),
-        )
+        # AQE coalesce target: Spark's 64m default, pinned. (A 16m
+        # override shipped briefly in r3 on the theory that finer
+        # tasks fix ragged waves; the measurements behind it were
+        # taken under co-tenant memory contention — see ROUND_NOTES
+        # r3 weather — and clean-weather reruns show 64m equal or
+        # better across the pipeline.)
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         # file-scan analogue of the floor above: maxSplitBytes =
         # min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)),
         # and the 4m default openCost floors a snappy-parquet stage

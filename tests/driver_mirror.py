@@ -1,19 +1,20 @@
 """Local mirror of the driver's correctness gate: run each
-``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB over
-the same sf dir, compare row count + column names + order-insensitive
-values. Usable as a script (fast iteration) and from pytest."""
+``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB,
+compare row count + column names + order-insensitive values. Every
+oracle embeds the fixture corpus, so DuckDB needs no tables. Usable as
+a script (fast iteration) and from pytest."""
 
 from __future__ import annotations
 
 import math
-import os
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-TABLES = ["documents"]
+# the contract's sf_dir argument; every query ignores it
+SF_DIR = "sf0.01"
 
 
 def _norm_cell(v):
@@ -35,8 +36,8 @@ def _norm_rows(cols, rows):
     return [c for c in sorted(cols)], out
 
 
-def compare_query(spark, con, name, fn, sql, sf_dir):
-    sdf = fn(spark, sf_dir)
+def compare_query(spark, con, name, fn, sql):
+    sdf = fn(spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     rel = con.sql(sql)
@@ -58,7 +59,7 @@ def compare_query(spark, con, name, fn, sql, sf_dir):
     return problems, len(sr)
 
 
-def run_all(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
+def run_all(only: list[str] | None = None):
     import duckdb
 
     from tabular_data_semantics_py_spark.session import get_spark
@@ -74,33 +75,16 @@ def run_all(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None
         if unknown or not only:
             raise ValueError(f"unknown queries selected: {unknown}")
 
-    # sf-parametric oracles (doc_sample_stratified recomputes its
-    # keep-hashes from the table itself) follow the compared sf dir
-    os.environ["TDS_ORACLE_SF_DIR"] = sf_dir
-
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
     oracles = entry.oracle_sql()
     results = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        if name not in oracles:
-            try:
-                n = fn(spark, sf_dir).count()
-                # every registered query has an exact oracle; one that
-                # fails to build is a failure, not a weaker check
-                results[name] = ("ROWS_ONLY", n, ["no oracle built"])
-            except Exception as e:  # noqa: BLE001
-                results[name] = ("ERROR", 0, [repr(e)[:300]])
-            continue
         try:
-            problems, n = compare_query(spark, con, name, fn, oracles[name], sf_dir)
+            problems, n = compare_query(spark, con, name, fn, oracles[name])
             results[name] = ("OK" if not problems else "MISMATCH", n, problems)
         except Exception as e:  # noqa: BLE001
             results[name] = ("ERROR", 0, [repr(e)[:300]])
@@ -109,8 +93,7 @@ def run_all(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None
 
 if __name__ == "__main__":
     only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-    sf_dir = os.environ.get("TDS_MIRROR_SF_DIR", "/root/testdata/sf0.01")
-    res = run_all(sf_dir=sf_dir, only=only)
+    res = run_all(only=only)
     bad = 0
     for name, (status, n, problems) in res.items():
         print(f"{status:9s} {name:28s} rows={n}")

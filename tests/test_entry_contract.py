@@ -1,40 +1,28 @@
 """Driver-contract guard: EVERY queries() entry must match its
 oracle_sql() under the driver's comparison semantics (row count +
-column names + order-insensitive values), at the driver's gate sf.
+column names + order-insensitive values).
 
 This is the full mirror sweep, in pytest (VERDICT r04 #2): the
 driver's own correctness gate samples only 50 registered queries per
 round, so a regression in a never-sampled query could land green
 without this. Parametrized per query so a failure names the query
-directly. Every registered query has an exact oracle, so a query
-whose oracle fails to build fails here; the rows-only fallback
-that ``oracle_sql_strings`` keeps for external callers is not
-accepted."""
-
-import os
+directly. Every registered query has an exact oracle, and an
+oracle that fails to build raises out of ``oracle_sql()``."""
 
 import duckdb
 import pytest
 
-from driver_mirror import TABLES, compare_query, run_all
+from driver_mirror import compare_query, run_all
 
-SF_DIR = "/root/testdata/sf0.01"
-# sf-parametric oracles (doc_sample_stratified's keep-hash
-# recomputation) must rebuild over the SAME sf the sweep drives — set
-# before the contract fixture calls oracle_sql()
-os.environ.setdefault("TDS_ORACLE_SF_DIR", SF_DIR)
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
+from tabular_data_semantics_py_spark import entry_queries
 
 ALL_QUERIES = sorted(entry.queries())
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
-    return con
+    return duckdb.connect()
 
 
 @pytest.fixture(scope="module")
@@ -47,11 +35,22 @@ def test_all_oracle_keys_have_queries(contract):
     assert set(oracles) == set(qs)
 
 
+def test_oracle_build_failure_raises(monkeypatch):
+    # a broken oracle must fail the contract, not degrade the query to
+    # a rows-only check
+    def broken():
+        raise RuntimeError("oracle build failed")
+
+    monkeypatch.setitem(entry_queries.ORACLES, "kg_cea", broken)
+    with pytest.raises(RuntimeError, match="oracle build failed"):
+        entry_queries.oracle_sql_strings()
+
+
 @pytest.mark.parametrize("name", ALL_QUERIES)
 def test_query_matches_oracle(spark, duck, contract, name):
     qs, oracles = contract
     assert name in oracles, f"{name}: no oracle built"
-    problems, n = compare_query(spark, duck, name, qs[name], oracles[name], SF_DIR)
+    problems, n = compare_query(spark, duck, name, qs[name], oracles[name])
     assert not problems, problems
     assert n > 0
 
