@@ -1,4 +1,5 @@
-"""Where a pipeline run's CPU goes, by process and JVM thread class.
+"""Where a pipeline run's CPU and memory go, by process and JVM thread
+class.
 
 Starts one session through ``get_spark`` in kgbench's environment
 (``local[nproc/2]``, its driver heap, its scratch directories) at the
@@ -20,6 +21,12 @@ The classes add up to the run's total; ``kgbench`` reports only that
 total (``cpu_s``), and its trace sees executor task CPU only. Each
 run's triples are checked against the oracle after its timer stops.
 
+After each run it also prints, in MiB, the proportional set size (PSS,
+from ``/proc/<pid>/smaps_rollup``) of the JVM, of this driver process
+and of the Python workers below the JVM, and the JVM heap's committed
+and used size (``MemoryMXBean``). ``kgbench``'s ``peak_rss_mb`` is the
+peak of the three PSS figures' sum during the run.
+
     python3 scripts/cpu_by_thread.py [--seed 1]
 
 Run from the repository root, with nothing else heavy on the host.
@@ -36,9 +43,12 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from kgbench import harness  # noqa: E402
+from kgbench.rss_sampler import _pss_bytes, descendants  # noqa: E402
 
 CLASSES = ("compiler", "gc", "executor_task", "other_jvm",
            "python_workers", "driver")
+MEMORY = ("jvm_pss", "driver_pss", "worker_pss", "heap_committed",
+          "heap_used")
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -95,6 +105,26 @@ def attribute(before: tuple[dict, dict],
     return cpu
 
 
+def memory_mib(spark, jvm_pid: int) -> dict[str, float]:
+    """PSS of the JVM, of this process and of every process below the
+    JVM (the Python workers), and the JVM heap's committed and used
+    size, all in MiB."""
+    workers = 0
+    for pid in descendants(jvm_pid)[1:]:
+        try:
+            workers += _pss_bytes(pid)
+        except OSError:  # the worker exited while being read
+            continue
+    heap = (spark.sparkContext._jvm.java.lang.management.ManagementFactory
+            .getMemoryMXBean().getHeapMemoryUsage())
+    nbytes = {"jvm_pss": _pss_bytes(jvm_pid),
+              "driver_pss": _pss_bytes(os.getpid()),
+              "worker_pss": workers,
+              "heap_committed": heap.getCommitted(),
+              "heap_used": heap.getUsed()}
+    return {k: v / 2**20 for k, v in nbytes.items()}
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--seed", type=int, default=harness.DEFAULT_SEED)
@@ -129,10 +159,11 @@ def main(argv: list[str] | None = None) -> int:
             before = snapshot(jvm_pid)
             wall, res = harness.batch_op(spark, dfs, out)
             cpu = attribute(before, snapshot(jvm_pid))
+            mem = memory_mib(spark, jvm_pid)
             verdict, _ = harness.check_batch(res, out, gold)
             clear_scratch(spark)
             shutil.rmtree(out, ignore_errors=True)
-            rows[run] = (wall, cpu, verdict.ok)
+            rows[run] = (wall, cpu, mem, verdict.ok)
     finally:
         if spark is not None:
             harness.stop_spark(spark)
@@ -142,10 +173,13 @@ def main(argv: list[str] | None = None) -> int:
           f"local[{harness.task_slots()}], nproc {harness.nproc()}")
     print(f"{'run':<6}{'wall_s':>8}{'total':>8}"
           + "".join(f"{c:>16}" for c in CLASSES) + "  oracle")
-    for run, (wall, cpu, ok) in rows.items():
+    for run, (wall, cpu, _, ok) in rows.items():
         print(f"{run:<6}{wall:>8.1f}{sum(cpu.values()):>8.1f}"
               + "".join(f"{cpu[c]:>16.1f}" for c in CLASSES)
               + ("  exact" if ok else "  MISMATCH"))
+    print(f"{'MiB':<6}" + "".join(f"{m:>16}" for m in MEMORY))
+    for run, (_, _, mem, _) in rows.items():
+        print(f"{run:<6}" + "".join(f"{mem[m]:>16.0f}" for m in MEMORY))
     return 0 if all(ok for *_, ok in rows.values()) else 1
 
 

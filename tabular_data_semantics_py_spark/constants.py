@@ -30,7 +30,6 @@ RDFS_SUBCLASSOF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
 OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
 OWL_NAMED_INDIVIDUAL = "http://www.w3.org/2002/07/owl#NamedIndividual"
 OWL_DATATYPE_PROPERTY = "http://www.w3.org/2002/07/owl#DatatypeProperty"
-OWL_ANNOTATION_PROPERTY = "http://www.w3.org/2002/07/owl#AnnotationProperty"
 OWL_CLASS = "http://www.w3.org/2002/07/owl#Class"
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
@@ -71,9 +70,6 @@ AGENT_CLASS = ONTOLOGY_NS + "Agent"
 # cleared (matching/kg_matching.py:417-420; constant kg/entity.py:34).
 DISAMBIGUATION_CLASS = ONTOLOGY_NS + "DisambiguationPage"
 
-# Redirect edge predicate (kg/endpoints.py:400-409 dbo:wikiPageRedirects).
-REDIRECT_PRED = PROPERTY_NS + "wikiPageRedirects"
-
 # OWL meta-vocabulary classes excluded from projected rdf:type triples
 # (reference: ontology/ontology_projection.py getQueryForAllClassTypes,
 # 1046-1066 FILTER list).
@@ -105,4 +101,3 @@ TYPE_BONUS = 0.3  # column-coherence bonus weight in CEA re-scoring
 REDIRECT_MAX_HOPS = 2  # bounded closure (test/challenge_utils.py:441-453)
 PREDICATE_TOP_RANGE = 2  # top-2 range types (kg_matching.py:357-389)
 CEA_TIE_EPS = 1e-9  # multi-entity CEA tie width (challenge_utils.py:336-346)
-PROPERTY_KIND_SAMPLE = 100  # values sampled per predicate (dbpedia_fragment.py:480)

@@ -18,8 +18,9 @@ reasons sit next to each setting in ``get_spark``):
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
-- a fixed-size, pre-touched driver heap, and JIT thresholds for C2
-  code ten times the JDK default;
+- a driver heap that grows on demand up to ``spark.driver.memory``,
+  1 MiB Tungsten pages, and JIT thresholds for C2 code ten times the
+  JDK default;
 - shuffle and spill files on tmpfs when it has room (``scratch_root``);
 - the UTC session time zone, and no UI.
 """
@@ -166,12 +167,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # Xms=Xmx + AlwaysPreTouch: fault the whole heap in at session
-        # startup, BEFORE any timed work. This host intermittently
-        # serves first-touch page faults ~1000x slow (host-side memory
-        # pressure, ROUND_NOTES r3); without pre-touch, heap growth
-        # lands mid-job and the same pipeline swings 4-10x between
-        # reps. The startup cost is paid once per JVM.
+        # The heap starts small and grows on demand up to
+        # spark.driver.memory: no -Xms and no -XX:+AlwaysPreTouch, which
+        # fault the whole maximum heap in at start and hold it for the
+        # session's life. Measured with kgbench's 2 GiB heap at local[2]
+        # on a 4-core VM, cold kg_large_index seed 1, together with the
+        # 1 MiB pages below: peak_rss_mb median 2967 -> 1765 (10 pairs;
+        # the JVM's PSS at the peak ~2600 -> 1290-1430 MiB), ref_cpu_s
+        # 69.5 -> 70.5; on-demand heap alone gave 2212-2396 (3 runs).
+        # The heap commits ~600-700 MiB by the end of such a run.
         #
         # Tier4*Threshold x10 (JDK 17 defaults 5000/600/15000/40000):
         # a method moves from C1 to C2 code after ten times the usual
@@ -191,12 +195,26 @@ def get_spark(
         # runs ~15% slower and the tier-1 tests ~22%.
         .config(
             "spark.driver.extraJavaOptions",
-            f"-Xms{os.environ.get('SPARK_DRIVER_MEM', '8g')} "
-            "-XX:+AlwaysPreTouch -XX:Tier4InvocationThreshold=50000 "
+            "-XX:Tier4InvocationThreshold=50000 "
             "-XX:Tier4MinInvocationThreshold=6000 "
             "-XX:Tier4CompileThreshold=150000 "
             "-XX:Tier4BackEdgeThreshold=400000",
         )
+        # Tungsten page size, pinned to the floor of Spark's own formula
+        # nextPow2(pool / cores / 16). At kgbench's 2 GiB heap and
+        # local[2] (and at the default 8g, local[8]) that formula gives
+        # 33,554,416 B, and every hash-aggregate, sort and shuffle-sort
+        # task takes such a page, a G1 humongous object, to hold a few
+        # KB of rows: a GC log of one cold kg_large_index run showed up
+        # to 874 humongous 1 MiB regions, 314 with 1 MiB pages. Safe at
+        # this size because a task holds at most 8,192 pages
+        # (TaskMemoryManager's page table): 8 GiB a task at 1 MiB, more
+        # than the whole unified pool of any heap up to ~13 GiB (the
+        # default 8g heap's pool is 4,965,217,075 B). A larger record
+        # still gets a page of its own size; a task that runs out of
+        # page numbers raises IllegalStateException, never a wrong
+        # answer.
+        .config("spark.buffer.pageSize", "1m")
         # shuffle/spill dir: tmpfs when available (see scratch_root).
         # Spark deletes its blockmgr/spill dirs under this root on
         # clean JVM shutdown, so tmpfs residue is bounded to crashed

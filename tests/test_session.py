@@ -3,7 +3,7 @@ the config string: a launcher that dropped ``spark.driver.extraJavaOptions``
 would leave the config intact and the flags unset."""
 
 
-def test_driver_jvm_runs_raised_c2_thresholds_with_pretouched_heap(spark):
+def test_driver_jvm_runs_raised_c2_thresholds_on_demand_heap_1m_pages(spark):
     jvm = spark.sparkContext._jvm
     bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
@@ -16,5 +16,12 @@ def test_driver_jvm_runs_raised_c2_thresholds_with_pretouched_heap(spark):
         "Tier4MinInvocationThreshold": "6000",
         "Tier4CompileThreshold": "150000",
         "Tier4BackEdgeThreshold": "400000",
-        "AlwaysPreTouch": "true",
+        "AlwaysPreTouch": "false",
     }
+    memory = spark.sparkContext._jsc.sc().env().memoryManager()
+    page = memory.pageSizeBytes()
+    assert page == 1 << 20
+    # a task holds at most 8,192 pages (TaskMemoryManager's page table),
+    # so at this page size one task can still address the whole
+    # unified pool of the idle session
+    assert 8192 * page >= memory.maxOnHeapStorageMemory()

@@ -55,10 +55,11 @@ def test_worker_import_path_independent_of_cwd(tmp_path):
         for k, v in __import__("os").environ.items()
         if k != "PYTHONPATH"
     }
-    # the probe's JVM runs beside the suite's session JVM; get_spark
-    # pre-touches the whole driver heap (8 GiB by default), and two of
-    # those exceed a 16 GiB host, where the OOM killer then takes the
-    # suite's session and fails every later Spark test
+    # the probe's JVM runs beside the suite's session JVM; get_spark's
+    # driver heap grows on demand up to 8 GiB by default, and two such
+    # heaps growing side by side may still exceed a 16 GiB host, where
+    # the OOM killer then takes the suite's session and fails every
+    # later Spark test
     env["SPARK_DRIVER_MEM"] = "1g"
     res = subprocess.run(
         [sys.executable, str(script)],
