@@ -3,9 +3,9 @@
 - ``entry(spark)``   — flagship: the full KG-construction pipeline on
   the deterministic fixture corpus → emitted (subj, pred, obj,
   obj_is_literal) triples.
-- ``queries()``      — the 30 ``kg_*`` queries, one per implemented
-  operator from SURVEY.md §2, all over the fixture corpus (the
-  ``sf_dir`` argument is ignored).
+- ``queries()``      — the 18 ``kg_*`` queries, each running or reading
+  a stage of the KG-construction job (SURVEY.md §2), all over the
+  fixture corpus (the ``sf_dir`` argument is ignored).
 - ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query, embedding
   the (seeded, deterministic) fixture as VALUES CTEs, so DuckDB needs
   no tables.

@@ -13,7 +13,7 @@ repositories ``(repo, path, commit, lang, content)``:
 - ``sources``    — artifact discovery + vectorized CSV cell parsing
 - ``functions``  — mention normalization / lexical scoring
 - ``operators``  — entity linking, type cascade, CEA/CTA/CPA, triple
-                   emission, KG-fragment and ontology projection
+                   emission and KG-fragment extraction
 - ``plans``      — the end-to-end checkpointed pipeline
 - ``streaming``  — incremental ingestion of arriving source files
 - ``fixtures``   — deterministic synthetic corpus + a plain-Python

@@ -26,8 +26,6 @@ WD_DISAMBIGUATION_CLASS = WD_ONTOLOGY_NS + "Q4167410"
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
-RDFS_SUBCLASSOF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
-OWL_THING = "http://www.w3.org/2002/07/owl#Thing"
 OWL_NAMED_INDIVIDUAL = "http://www.w3.org/2002/07/owl#NamedIndividual"
 OWL_DATATYPE_PROPERTY = "http://www.w3.org/2002/07/owl#DatatypeProperty"
 OWL_CLASS = "http://www.w3.org/2002/07/owl#Class"
@@ -57,7 +55,7 @@ AVOID_PREDICATES = frozenset(
 # classes dropped from distance maps / type sets.
 AVOID_TOP_CONCEPTS = frozenset(
     {
-        OWL_THING,
+        "http://www.w3.org/2002/07/owl#Thing",
         ONTOLOGY_NS + "Entity",
     }
 )
@@ -69,30 +67,6 @@ AGENT_CLASS = ONTOLOGY_NS + "Agent"
 # Disambiguation-page marker: when present, the entity's type set is
 # cleared (matching/kg_matching.py:417-420; constant kg/entity.py:34).
 DISAMBIGUATION_CLASS = ONTOLOGY_NS + "DisambiguationPage"
-
-# OWL meta-vocabulary classes excluded from projected rdf:type triples
-# (reference: ontology/ontology_projection.py getQueryForAllClassTypes,
-# 1046-1066 FILTER list).
-_OWL = "http://www.w3.org/2002/07/owl#"
-META_CLASSES = frozenset(
-    {
-        _OWL + "Ontology",
-        _OWL + "AnnotationProperty",
-        _OWL + "ObjectProperty",
-        _OWL + "Class",
-        _OWL + "DatatypeProperty",
-        _OWL + "Restriction",
-        _OWL + "NamedIndividual",
-        _OWL + "Thing",
-        _OWL + "TransitiveProperty",
-        _OWL + "FunctionalProperty",
-        _OWL + "InverseFunctionalProperty",
-        _OWL + "SymmetricProperty",
-        _OWL + "AsymmetricProperty",
-        _OWL + "ReflexiveProperty",
-        _OWL + "IrreflexiveProperty",
-    }
-)
 
 # --- linking knobs (pinned; see SURVEY.md §7 "Determinism") ---------------
 TOP_K_CANDIDATES = 5  # lookup maxResults default (kg/lookup.py:95-106)

@@ -1,7 +1,9 @@
 """Query registry backing ``__spark_entry__.py``.
 
-Every query is a ``kg_*`` KG-construction operator (SURVEY.md §2)
-running on the deterministic fixture corpus (BASELINE.json: no
+The 18 queries are ``kg_*`` KG-construction operators (SURVEY.md §2);
+each one runs or reads a stage of the table→KG job (parse, closure,
+candidates, types, CEA/CTA/CPA, emission, fragment) on the
+deterministic fixture corpus (BASELINE.json: no
 external data; the corpus is synthesized in-process, seed=42). Oracle
 SQL embeds the fixture as VALUES CTEs and either re-implements the
 operator in ANSI SQL (closure, emission, voting, most-specific…) or
@@ -591,108 +593,6 @@ def kg_triples(spark, sf_dir):
     return _pipeline(spark).stages["triples"]
 
 
-def _o_property_kind():
-    corpus, _, _ = _fixture()
-    return f"""
-WITH tr(subj, pred, obj, lit) AS (SELECT * FROM {_values(corpus.triples, "subj, pred, obj, lit")})
-SELECT pred,
-       CAST(SUM(CASE WHEN obj LIKE 'http%' THEN 1 ELSE 0 END) AS BIGINT) AS n_uri,
-       COUNT(*) AS n_total,
-       (2 * SUM(CASE WHEN obj LIKE 'http%' THEN 1 ELSE 0 END) > COUNT(*)) AS is_object
-FROM tr GROUP BY pred
-"""
-
-
-@q("kg_property_kind", _o_property_kind)
-def kg_property_kind(spark, sf_dir):
-    """A6: object-vs-datatype property inference — majority of values
-    starting with 'http' (dbpedia_fragment.py:469-499), integer-count
-    formulation so the threshold is exact."""
-    tr = _dfs(spark)["kg_triples"]
-    is_uri = F.when(F.col("obj").startswith("http"), 1).otherwise(0)
-    return (
-        tr.groupBy("pred")
-        .agg(
-            F.sum(is_uri).cast("long").alias("n_uri"),
-            F.count(F.lit(1)).alias("n_total"),
-        )
-        .withColumn("is_object", 2 * F.col("n_uri") > F.col("n_total"))
-    )
-
-
-def _o_pred_freq():
-    corpus, _, _ = _fixture()
-    return f"""
-SELECT pred, COUNT(*) AS n
-FROM {_values(corpus.triples, "subj, pred, obj, lit")}
-GROUP BY pred
-"""
-
-
-@q("kg_pred_freq", _o_pred_freq)
-def kg_pred_freq(spark, sf_dir):
-    """A7: predicate frequency stats (validate_sampling.py:244-297)."""
-    return (
-        _dfs(spark)["kg_triples"].groupBy("pred").agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _o_degree_dist():
-    corpus, _, _ = _fixture()
-    return f"""
-WITH tr(subj, pred, obj, lit) AS (
-  SELECT * FROM {_values(corpus.triples, "subj, pred, obj, lit")}),
-deg AS (SELECT subj, COUNT(*) AS d FROM tr GROUP BY subj)
-SELECT CAST(d AS BIGINT) AS degree,
-       CAST(COUNT(*) AS BIGINT) AS n_subjects
-FROM deg GROUP BY d
-"""
-
-
-@q("kg_degree_dist", _o_degree_dist)
-def kg_degree_dist(spark, sf_dir):
-    """Out-degree distribution of the triple store (degree →
-    subject count) — the standard KG shape/health analytic (and the
-    skew census: the heavy tail here is exactly what sizes the
-    hot-entity salting at emission). Two cascaded aggregations, both
-    with map-side partials; the second's input is one row per
-    subject, so the hottest entity is one row by then — the
-    distribution query itself cannot skew."""
-    tr = _dfs(spark)["kg_triples"]
-    deg = tr.groupBy("subj").agg(F.count(F.lit(1)).alias("d"))
-    return deg.groupBy(F.col("d").cast("long").alias("degree")).agg(
-        F.count(F.lit(1)).alias("n_subjects")
-    )
-
-
-def _o_neighborhood():
-    corpus, _, _ = _fixture()
-    avoid = ", ".join(_s(p) for p in sorted(C.AVOID_PREDICATES))
-    return f"""
-WITH tr(subj, pred, obj, lit) AS (SELECT * FROM {_values(corpus.triples, "subj, pred, obj, lit")}),
-ranked AS (
-  SELECT subj, pred, obj,
-         ROW_NUMBER() OVER (PARTITION BY subj ORDER BY pred, obj) AS rn
-  FROM tr WHERE pred NOT IN ({avoid})
-)
-SELECT subj, pred, obj FROM ranked WHERE rn <= 5
-"""
-
-
-@q("kg_neighborhood", _o_neighborhood)
-def kg_neighborhood(spark, sf_dir):
-    """J11: per-entity neighborhood triples, predicate-blocklist
-    filtered, capped per entity (kg/endpoints.py:317-338 LIMIT)."""
-    tr = _dfs(spark)["kg_triples"]
-    w = Window.partitionBy("subj").orderBy("pred", "obj")
-    return (
-        tr.where(~F.col("pred").isin(*sorted(C.AVOID_PREDICATES)))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("subj", "pred", "obj")
-    )
-
-
 def _o_fragment():
     corpus, _, gold = _fixture()
     cea_rows = sorted({(u,) for (_t, _c, _r, u) in gold.cea})
@@ -781,157 +681,6 @@ def kg_fragment(spark, sf_dir):
     )
 
 
-def _o_class_members():
-    corpus, _, _ = _fixture()
-    return f"""
-WITH tr(subj, pred, obj, lit) AS (SELECT * FROM {_values(corpus.triples, "subj, pred, obj, lit")}),
-ranked AS (
-  SELECT obj AS class_uri, subj AS member_uri,
-         ROW_NUMBER() OVER (PARTITION BY obj ORDER BY subj) AS rn
-  FROM tr WHERE pred = {_s(C.RDF_TYPE)}
-)
-SELECT class_uri, member_uri, rn FROM ranked WHERE rn <= 5
-"""
-
-
-@q("kg_class_members", _o_class_members)
-def kg_class_members(spark, sf_dir):
-    """J12: class → member entities with a deterministic sample
-    (replaces the reference's ORDER BY RAND() pagination,
-    kg/endpoints.py:413-425, with a pinned ordering)."""
-    tr = _dfs(spark)["kg_triples"]
-    w = Window.partitionBy("class_uri").orderBy("member_uri")
-    return (
-        tr.where(F.col("pred") == C.RDF_TYPE)
-        .select(F.col("obj").alias("class_uri"), F.col("subj").alias("member_uri"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-    )
-
-
-def _o_projection():
-    corpus, _, _ = _fixture()
-    return f"""
-WITH edges(c, p) AS (SELECT * FROM {_values(corpus.edges, "c, p")}),
-eq(a, b) AS (SELECT * FROM {_values(corpus.equivalent, "a, b")}),
-pm(pred, dom, rng) AS (SELECT * FROM {_values(corpus.property_meta, "pred, dom, rng")})
-SELECT c AS subj, {_s(C.RDFS_SUBCLASSOF)} AS pred, p AS obj FROM edges
-UNION ALL SELECT a, {_s(C.RDFS_SUBCLASSOF)}, b FROM eq
-UNION ALL SELECT b, {_s(C.RDFS_SUBCLASSOF)}, a FROM eq
-UNION ALL SELECT dom, pred, rng FROM pm
-"""
-
-
-@q("kg_onto_projection", _o_projection)
-def kg_onto_projection(spark, sf_dir):
-    """P1/P2/P5: ontology projection — atomic subsumptions,
-    equivalence as two subsumptions, and domain×range property edges
-    (ontology/ontology_projection.py:325-347,447-462; the OWL2Vec*
-    projection shape)."""
-    dfs = _dfs(spark)
-    edges = dfs["ontology_edges"].select(
-        F.col("class_uri").alias("subj"),
-        F.lit(C.RDFS_SUBCLASSOF).alias("pred"),
-        F.col("parent_uri").alias("obj"),
-    )
-    eq = dfs["ontology_equivalent"]
-    eq_sub = eq.select(
-        F.col("a").alias("subj"), F.lit(C.RDFS_SUBCLASSOF).alias("pred"),
-        F.col("b").alias("obj"),
-    ).union(
-        eq.select(
-            F.col("b").alias("subj"), F.lit(C.RDFS_SUBCLASSOF).alias("pred"),
-            F.col("a").alias("obj"),
-        )
-    )
-    dr = dfs["property_meta"].select(
-        F.col("domain_uri").alias("subj"), F.col("pred").alias("pred"),
-        F.col("range_uri").alias("obj"),
-    )
-    return edges.union(eq_sub).union(dr)
-
-
-def _o_projection_full():
-    corpus, _, _ = _fixture()
-    avoid = ", ".join(_s(p) for p in sorted(C.AVOID_PREDICATES))
-    meta = ", ".join(_s(m) for m in sorted(C.META_CLASSES))
-    SUB = _s(C.RDFS_SUBCLASSOF)
-    TYP = _s(C.RDF_TYPE)
-    return f"""
-WITH tr(subj, pred, obj, lit) AS (SELECT * FROM {_values(corpus.triples, "subj, pred, obj, lit")}),
-edges(c, p) AS (SELECT * FROM {_values(corpus.edges, "c, p")}),
-eq(a, b) AS (SELECT * FROM {_values(corpus.equivalent, "a, b")}),
-pm(pred, dom, rng) AS (SELECT * FROM {_values(corpus.property_meta, "pred, dom, rng")}),
-xd(pred, dom) AS (SELECT * FROM {_values(corpus.extra_domains, "pred, dom")}),
-cdom(pred, dom) AS (SELECT * FROM {_values(corpus.complex_domains, "pred, dom")}),
-crng(pred, rng) AS (SELECT * FROM {_values(corpus.complex_ranges, "pred, rng")}),
-restr(cls, kind, pred, filler) AS (SELECT * FROM {_values(corpus.restrictions, "cls, kind, pred, filler")}),
-ip(p, q) AS (SELECT * FROM {_values(corpus.inverse_props, "p, q")}),
-ep(p, q) AS (SELECT * FROM {_values(corpus.equivalent_props, "p, q")}),
-dpm(pred, dom) AS (SELECT * FROM {_values(corpus.data_property_meta, "pred, dom")}),
-drestr(cls, pred) AS (SELECT * FROM {_values(corpus.data_restrictions, "cls, pred")}),
-conj(cls, sup) AS (SELECT * FROM {_values(corpus.conjunct_atoms, "cls, sup")}),
-crestr(cls, pred, filler) AS (SELECT * FROM {_values(corpus.complex_restrictions, "cls, pred, filler")}),
-doms AS (SELECT pred, dom FROM pm UNION SELECT pred, dom FROM xd),
-rngs AS (SELECT DISTINCT pred, rng FROM pm),
-p5 AS (SELECT d.dom AS subj, d.pred AS pred, r.rng AS obj
-       FROM doms d JOIN rngs r ON d.pred = r.pred),
-p6 AS (SELECT cd.dom, cd.pred, cr.rng FROM cdom cd JOIN crng cr ON cd.pred = cr.pred),
-p7 AS (SELECT cls, pred, filler FROM restr),
-roles AS (SELECT subj, pred, obj FROM tr
-          WHERE NOT lit AND pred <> {TYP} AND pred NOT IN ({avoid})),
-td AS (SELECT * FROM p5 UNION ALL SELECT * FROM p6
-       UNION ALL SELECT * FROM p7 UNION ALL SELECT * FROM roles),
-ips AS (SELECT p, q FROM ip UNION SELECT q, p FROM ip),
-eps AS (SELECT p, q FROM ep UNION SELECT q, p FROM ep),
-p8 AS (SELECT td.obj, i.q, td.subj FROM td JOIN ips i ON td.pred = i.p),
-p9 AS (SELECT td.subj, e.q, td.obj FROM td JOIN eps e ON td.pred = e.p),
-tbx AS (SELECT * FROM p5 UNION ALL SELECT * FROM p7),
-tbox_dom AS (SELECT t.subj, {SUB}, d.dom FROM tbx t
-             JOIN doms d ON t.pred = d.pred WHERE t.subj <> d.dom),
-tbox_rng AS (SELECT t.obj, {SUB}, r.rng FROM tbx t
-             JOIN rngs r ON t.pred = r.pred WHERE t.obj <> r.rng),
-abox_dom AS (SELECT ro.subj, {TYP}, d.dom FROM roles ro
-             JOIN doms d ON ro.pred = d.pred),
-abox_rng AS (SELECT ro.obj, {TYP}, r.rng FROM roles ro
-             JOIN rngs r ON ro.pred = r.pred),
-data_tbox AS (SELECT dr.cls, {SUB}, dm.dom FROM drestr dr
-              JOIN dpm dm ON dr.pred = dm.pred WHERE dr.cls <> dm.dom),
-data_abox AS (SELECT t.subj, {TYP}, dm.dom FROM tr t
-              JOIN dpm dm ON t.pred = dm.pred WHERE t.lit),
-p3 AS (SELECT subj, pred, obj FROM tr
-       WHERE pred = {TYP} AND obj NOT IN ({meta})),
-p1 AS (SELECT c AS subj, {SUB} AS pred, p AS obj FROM edges),
-p2 AS (SELECT a, {SUB}, b FROM eq UNION ALL SELECT b, {SUB}, a FROM eq),
-p11a AS (SELECT cls, {SUB}, sup FROM conj),
-p11r AS (SELECT cls, pred, filler FROM crestr),
-allt AS (
-  SELECT * FROM p1 UNION ALL SELECT * FROM p2 UNION ALL SELECT * FROM td
-  UNION ALL SELECT * FROM p8 UNION ALL SELECT * FROM p9
-  UNION ALL SELECT * FROM tbox_dom UNION ALL SELECT * FROM tbox_rng
-  UNION ALL SELECT * FROM abox_dom UNION ALL SELECT * FROM abox_rng
-  UNION ALL SELECT * FROM data_tbox UNION ALL SELECT * FROM data_abox
-  UNION ALL SELECT * FROM p3
-  UNION ALL SELECT * FROM p11a UNION ALL SELECT * FROM p11r
-)
-SELECT DISTINCT subj, pred, obj FROM allt
-"""
-
-
-@q("kg_onto_projection_full", _o_projection_full)
-def kg_onto_projection_full(spark, sf_dir):
-    """P1-P11: the FULL OWL2Vec*-style ontology projection —
-    subsumptions, equivalences, rdf:type w/ meta blocklist, direct +
-    complex domain/range, restrictions (RHS/LHS, all kinds), named
-    inverses, equivalent properties, role assertions, structural
-    domain/range propagation (TBox subsumption / ABox typing), and
-    complex-axiom conjuncts (operators/projection.py; reference
-    ontology/ontology_projection.py:325-933)."""
-    from .operators.projection import ontology_projection_full
-
-    return ontology_projection_full(_dfs(spark))
-
-
 def _o_label_index():
     _, ex, _ = _fixture()
     rows = sorted(
@@ -948,121 +697,6 @@ def kg_label_index(spark, sf_dir):
     from .operators.candidates import build_index_keys
 
     return build_index_keys(_dfs(spark)["entity_index"]).select("uri", "key_norm")
-
-
-def _o_labels_en():
-    corpus, _, _ = _fixture()
-    return f"""
-SELECT class_uri, label FROM {_values(corpus.class_labels, "class_uri, label, lang")}
-WHERE lang IS NULL OR lang = 'en'
-"""
-
-
-@q("kg_class_labels_en", _o_labels_en)
-def kg_class_labels_en(spark, sf_dir):
-    """F14: English-or-untagged label filter over language-tagged
-    ontology labels (SPARQL langMatches(lang(?l),'en') in
-    kg/endpoints.py:373-374; projection keeps language in ('en', None),
-    ontology_projection.py:648-655,1460-1462)."""
-    cl = _dfs(spark)["class_labels"]
-    return cl.where(
-        F.col("lang").isNull() | (F.col("lang") == "en")
-    ).select("class_uri", "label")
-
-
-def _o_sameas():
-    corpus, _, _ = _fixture()
-    rows = [
-        (e.uri, e.redirect_to) for e in corpus.entities if e.redirect_to
-    ]
-    return f"""
-WITH r(a, b) AS (SELECT * FROM {_values(rows, "a, b")})
-SELECT a, b FROM r UNION SELECT b, a FROM r
-"""
-
-
-@q("kg_redirect_sameas", _o_sameas)
-def kg_redirect_sameas(spark, sf_dir):
-    """J4/P4: symmetric sameAs closure (1 step) over the redirect
-    edges (kg/endpoints.py:530-538 UNION query; projection P4
-    ontology_projection.py:392-400)."""
-    idx = _dfs(spark)["entity_index"]
-    r = idx.where(F.col("redirect_to").isNotNull()).select(
-        F.col("uri").alias("a"), F.col("redirect_to").alias("b")
-    )
-    return r.union(r.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-
-
-def _o_canonical_ids():
-    corpus, _, _ = _fixture()
-    # degenerate-edge policy (mirrored EXACTLY by the Spark query):
-    # NULL/empty-string endpoints — on EITHER side, src included — are
-    # malformed -> no edge; a self-edge (self-redirect / reflexive
-    # sameAs) is a no-op identity assertion -> no edge, so a node
-    # mentioned ONLY by a self-edge gets no row
-    rows = [
-        (e.uri, e.redirect_to)
-        for e in corpus.entities
-        if e.uri and e.redirect_to and e.redirect_to != e.uri
-    ] + [(a, b) for a, b in corpus.cross_sameas if a and b and a != b]
-    # exact reachability closure via recursive CTE, then min per node —
-    # the ground-truth connected-components semantics
-    return f"""
-WITH RECURSIVE raw(a, b) AS (SELECT * FROM {_values(rows, "a, b")}),
-e(a, b) AS (SELECT a, b FROM raw UNION SELECT b, a FROM raw),
-n(u) AS (SELECT a FROM e UNION SELECT b FROM e),
-reach(u, v) AS (
-    SELECT u, u FROM n
-    UNION
-    SELECT r.u, e.b FROM reach r JOIN e ON e.a = r.v
-)
-SELECT u AS node, MIN(v) AS component FROM reach GROUP BY u
-"""
-
-
-@q("kg_canonical_ids", _o_canonical_ids)
-def kg_canonical_ids(spark, sf_dir):
-    """Unbounded identity canonicalization: connected components over
-    redirects ∪ sameAs via alternating large-star/small-star
-    (operators/components.py). Exact-closure generalization of the
-    reference's bounded resolution (≤2 redirect hops,
-    challenge_utils.py:441-453; one sameAs step,
-    kg/endpoints.py:530-538) — the form that survives unbounded
-    identity chains at 10^12-file scale."""
-    from .operators.components import connected_components
-
-    dfs = _dfs(spark)
-    idx = dfs["entity_index"]
-    # degenerate-edge policy (same as the oracle): NULL/empty
-    # endpoints — on either side, src included — and self-edges are
-    # not identity edges; a node mentioned only by a self-redirect
-    # gets no canonical-id row. The src-side guard also keeps a NULL
-    # uri from silently dropping the edge via the three-valued
-    # `redirect_to != uri` (the oracle would have kept it) and an
-    # empty-string uri from becoming the component minimum.
-    edges = (
-        idx.where(
-            F.col("uri").isNotNull() & (F.col("uri") != "")
-            & F.col("redirect_to").isNotNull()
-            & (F.col("redirect_to") != "")
-            & (F.col("redirect_to") != F.col("uri"))
-        )
-        .select(
-            F.col("uri").alias("src"), F.col("redirect_to").alias("dst")
-        )
-        .unionByName(
-            dfs["cross_sameas"]
-            .where(
-                F.col("uri").isNotNull() & (F.col("uri") != "")
-                & F.col("wd_uri").isNotNull() & (F.col("wd_uri") != "")
-                & (F.col("wd_uri") != F.col("uri"))
-            )
-            .select(
-                F.col("uri").alias("src"), F.col("wd_uri").alias("dst")
-            )
-        )
-    )
-    return connected_components(edges)
 
 
 def _o_mention_col():
@@ -1095,60 +729,6 @@ def kg_mention_to_col(spark, sf_dir):
         cells.groupBy("table_id", mention)
         .agg(F.min("col").alias("col"))
         .where(F.col("mention_norm") != "")
-    )
-
-
-def _o_closure_stats():
-    return f"""
-WITH w AS ({_o_closure()})
-SELECT class_uri,
-       COUNT(*) AS n_ancestors,
-       CAST(MAX(depth) AS INTEGER) AS max_depth,
-       CAST(MIN(depth) AS INTEGER) AS min_depth
-FROM w WHERE ancestor_uri LIKE {_s(C.ONTOLOGY_NS + "%")}
-GROUP BY class_uri
-"""
-
-
-@q("kg_closure_stats", _o_closure_stats)
-def kg_closure_stats(spark, sf_dir):
-    """A8: distance-map statistics per class — ancestor counts and
-    depth extrema (sem_tab/CTA_Wikidata_Statistic.py:3-27 role)."""
-    clo = _pipeline(spark).stages["closure"]
-    return (
-        clo.where(F.col("ancestor_uri").startswith(C.ONTOLOGY_NS))
-        .groupBy("class_uri")
-        .agg(
-            F.count(F.lit(1)).alias("n_ancestors"),
-            F.max("depth").alias("max_depth"),
-            F.min("depth").alias("min_depth"),
-        )
-    )
-
-
-def _o_entity_sample():
-    corpus, _, _ = _fixture()
-    from .functions.xxh64 import spark_xxhash64
-
-    rows = [(e.uri, spark_xxhash64(e.uri, (42, "int"))) for e in corpus.entities]
-    return f"""
-SELECT uri FROM {_values(rows, "uri, h")}
-ORDER BY h, uri LIMIT 25
-"""
-
-
-@q("kg_entity_sample", _o_entity_sample)
-def kg_entity_sample(spark, sf_dir):
-    """T3: deterministic entity sampling — ORDER BY xxhash64(uri, seed)
-    replaces the reference's ORDER BY RAND() (kg/endpoints.py:416,423).
-    Oracle: an independent pure-Python XXH64 (functions/xxh64.py,
-    JVM-equality unit-tested) embedded as a VALUES CTE."""
-    idx = _dfs(spark)["entity_index"]
-    return (
-        idx.select("uri", F.xxhash64(F.col("uri"), F.lit(42)).alias("h"))
-        .orderBy("h", "uri")
-        .limit(25)
-        .select("uri")
     )
 
 

@@ -36,22 +36,6 @@ from ..constants import FUZZY_MIN_SCORE, TOP_K_CANDIDATES
 from ..functions.normalize import lexical_score_expr, normalize_expr
 
 
-def drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
-    """The hot-key guard of the fuzzy candidate blocking index
-    (``generate_candidates(max_token_df=)``): drop ALL rows of keys
-    appearing more than ``cap`` times,
-    bounding pair fan-out to O(cap · rows) under Zipf heads. The
-    hot-key set is tiny (the distribution's head) → broadcast
-    anti-join, no shuffle of ``df``."""
-    hot = (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > cap)
-        .select(*key_cols)
-    )
-    return df.join(F.broadcast(hot), key_cols, "left_anti")
-
-
 def build_index_keys(entity_index: DataFrame) -> DataFrame:
     """entity_index → (uri, popularity, key_norm) — one row per
     normalized label/alias surface form (kg/lookup.py:162-209 role),
@@ -83,7 +67,6 @@ def generate_candidates(
     data_cells: DataFrame,
     entity_index: DataFrame,
     top_k: int = TOP_K_CANDIDATES,
-    max_token_df: int | None = None,
     fused: bool = False,  # unused; kgbench/tracing.py still passes it
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (cells_with_mention, candidates), both lazy.
@@ -91,12 +74,6 @@ def generate_candidates(
     cells_with_mention: data cells + ``mention_norm`` column.
     candidates: (mention_norm, uri, score, popularity) — redirect-
     resolved, deduped, top-k ranked per mention.
-
-    ``max_token_df``: hot-token cap for the fuzzy blocking index
-    (recall traded for bounded fan-out) — tokens appearing in more than
-    this many index keys are dropped from *pairing*, bounding the
-    blocked-join fan-out under Zipfian mentions; scoring stays exact
-    on the surviving pairs. None = no cap (fixture-exact).
     """
     cells = data_cells.withColumn("mention_norm", normalize_expr(F.col("cell")))
     mentions = (
@@ -121,8 +98,6 @@ def generate_candidates(
     i_tok = index_keys.select(
         "uri", "key_norm", F.explode(F.split(F.col("key_norm"), " ")).alias("tok")
     )
-    if max_token_df is not None:
-        i_tok = drop_hot_keys(i_tok, ["tok"], max_token_df)
     # Pin the dedup shuffle's width on a prefix of the dedup keys:
     # the scorer below costs O(len_a·len_b) per pair (the Levenshtein
     # DP), which AQE's byte-based partition coalescing cannot see — at

@@ -3,12 +3,11 @@
 The reference computes ancestor distances per class with a SPARQL
 path-count query against a remote endpoint
 (kg/endpoints.py:481-487,517-525) and merges equivalent classes
-(kg/endpoints.py:469-477). Here the closure is built once, as a
-DataFrame, by iterative self-join **doubling** — O(log diameter)
-shuffles instead of O(diameter) — and then broadcast everywhere it is
-consumed (the hierarchy is tiny: dbpedia.owl is 2.3k classes, fixture
-is ~30; even a 10^6-class ontology closure is a few GB and still a
-broadcast-or-bucketed dimension, never a fact-table shuffle).
+(kg/endpoints.py:469-477). Here the closure is built once, on the
+driver, and then broadcast everywhere it is consumed (the hierarchy is
+tiny: dbpedia.owl is 2.3k classes, fixture is ~30; even a 10^6-class
+ontology closure is a few GB and still a broadcast-or-bucketed
+dimension, never a fact-table shuffle).
 
 Equivalence edges traverse at depth 0 in both directions, so an
 equivalent class surfaces as a depth-0 "ancestor"; strict subsumption
@@ -20,7 +19,6 @@ from __future__ import annotations
 import heapq
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def build_closure(
@@ -34,9 +32,7 @@ def build_closure(
     §1.1: dbpedia.owl is 2.3k classes; even 10^6 classes collect in
     MBs), so the closure is computed once on the driver with Dijkstra
     over the collected edge list — one collect + one Arrow
-    createDataFrame instead of O(log diameter) shuffle jobs. For a
-    hierarchy too big to collect, fall back to
-    ``build_closure_distributed``.
+    createDataFrame instead of O(log diameter) shuffle jobs.
     """
     edge_rows = [(r[0], r[1], 1) for r in edges.collect()]
     if equivalent is not None:
@@ -75,63 +71,6 @@ def build_closure(
     return spark.createDataFrame(
         pdf, "class_uri string, ancestor_uri string, depth int"
     ).coalesce(1)
-
-
-def build_closure_distributed(
-    edges: DataFrame,
-    equivalent: DataFrame | None = None,
-    max_doublings: int = 4,
-) -> DataFrame:
-    """Distributed variant (iterative self-join doubling) for
-    hierarchies too large to collect.
-
-    ``max_doublings`` bounds path length at 2^max_doublings edges —
-    16 by default, deeper than any real class hierarchy (dbpedia.owl
-    tops out at depth ~8).
-    """
-    step = edges.select(
-        F.col("class_uri").alias("src"),
-        F.col("parent_uri").alias("dst"),
-        F.lit(1).alias("depth"),
-    )
-    if equivalent is not None:
-        eq = equivalent.select(
-            F.col("a").alias("src"), F.col("b").alias("dst"),
-            F.lit(0).alias("depth"),
-        ).union(
-            equivalent.select(
-                F.col("b").alias("src"), F.col("a").alias("dst"),
-                F.lit(0).alias("depth"),
-            )
-        )
-        step = step.union(eq)
-
-    clo = step.groupBy("src", "dst").agg(F.min("depth").alias("depth"))
-    for _ in range(max_doublings):
-        # truncate lineage each round: the self-join doubles the plan
-        # tree per iteration, so without this Catalyst analysis cost is
-        # O(2^iterations) even though the data is tiny
-        clo = clo.localCheckpoint()
-        hop = (
-            clo.alias("l")
-            .join(clo.alias("r"), F.col("l.dst") == F.col("r.src"))
-            .select(
-                F.col("l.src").alias("src"),
-                F.col("r.dst").alias("dst"),
-                (F.col("l.depth") + F.col("r.depth")).alias("depth"),
-            )
-            .where(F.col("src") != F.col("dst"))
-        )
-        clo = (
-            clo.union(hop)
-            .groupBy("src", "dst")
-            .agg(F.min("depth").alias("depth"))
-        )
-    return clo.select(
-        F.col("src").alias("class_uri"),
-        F.col("dst").alias("ancestor_uri"),
-        "depth",
-    )
 
 
 def closure_to_map(closure: DataFrame) -> dict[str, dict[str, int]]:

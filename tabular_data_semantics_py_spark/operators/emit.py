@@ -35,9 +35,6 @@ from ..constants import (
     TABLE_BASE,
 )
 
-_T = "subj string, pred string, obj string, obj_is_literal boolean"
-
-
 def _prop_uri(col_expr) -> F.Column:
     return F.concat(
         F.col("table_id"), F.lit("-col-"), col_expr.cast("string")

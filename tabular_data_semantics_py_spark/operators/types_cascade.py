@@ -223,7 +223,7 @@ def make_most_specific_udf(closure_map: dict[str, dict[str, int]],
     of another class in the set; sorted. Returns a ``Column -> Column``
     function that composes Spark built-ins (``filter``/``exists`` over
     the closure map literal), not a UDF — the name is kept because
-    kgbench and bench.py import it."""
+    kgbench imports it."""
     cl = closure_literal(closure_map)
 
     def most_specific(types: Column) -> Column:

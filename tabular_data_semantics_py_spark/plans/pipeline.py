@@ -84,14 +84,20 @@ class _Checkpointer:
         self.resume = resume
         self.metrics: list[dict] = []
 
-    def stage(self, name: str, compute, extra_metric=None) -> DataFrame:
-        # label every job this stage triggers (AQE/broadcast subjobs
-        # inherit the description through their captured thread-locals)
+    def described(self, name: str, fn):
+        """Run ``fn()`` with every job it starts on this thread labelled
+        ``tds:<name>`` (AQE/broadcast subjobs inherit the description
+        through their captured thread-locals)."""
         self.spark.sparkContext.setJobDescription(f"tds:{name}")
         try:
-            return self._stage(name, compute, extra_metric)
+            return fn()
         finally:
             self.spark.sparkContext.setJobDescription(None)
+
+    def stage(self, name: str, compute, extra_metric=None) -> DataFrame:
+        return self.described(
+            name, lambda: self._stage(name, compute, extra_metric)
+        )
 
     def _stage(self, name: str, compute, extra_metric=None) -> DataFrame:
         if self.root is None:
@@ -207,7 +213,7 @@ def run_pipeline(
         from concurrent.futures import ThreadPoolExecutor
 
         closure_df = res.stages["closure"]
-        closure_map = closure_to_map(closure_df)
+        closure_map = ck.described("closure", lambda: closure_to_map(closure_df))
         # two jobs: entity_types, then the rows_present spine below
         _pool = ThreadPoolExecutor(max_workers=2)
         et_future = _pool.submit(
@@ -267,7 +273,10 @@ def run_pipeline(
                 # barrier (profiled 5-9 s at the sf2.5 scaling corpus)
                 # overlaps the whole candidates/CEA chain instead of
                 # running serially inside the triples stage
-                rp_future = _pool.submit(lambda: build_rows_present(cells))
+                rp_future = _pool.submit(
+                    ck.described, "rows_present",
+                    lambda: build_rows_present(cells),
+                )
             _pool.shutdown(wait=False)
 
         if upto("candidates"):
@@ -288,7 +297,9 @@ def run_pipeline(
         cells_m = res.stages["cells_m"]
 
         if et_future is None:
-            closure_map = closure_to_map(res.stages["closure"])
+            closure_map = ck.described(
+                "closure", lambda: closure_to_map(res.stages["closure"])
+            )
 
         if upto("entity_types"):
             ck.finish()

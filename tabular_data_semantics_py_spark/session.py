@@ -2,19 +2,21 @@
 settings are pinned.
 
 On ``local[N]`` the driver JVM is the whole cluster, so every local
-session ``get_spark`` starts (``kgbench``, the tests, the legacy
-``bench.py`` and the scripts that call it, such as
-``scripts/cpu_by_thread.py``) runs on these settings.
+session ``get_spark`` starts (``kgbench``, the tests and the scripts
+that call it, such as ``scripts/cpu_by_thread.py``) runs on these
+settings.
 ``scripts/run_pipeline.py``, the ``spark-submit`` entry point, builds
 its own session and does not get them. What it pins, and why (the
 reasons sit next to each setting in ``get_spark``):
 
-- AQE on (coalescing and skew-join splitting), with a 16k coalescing
-  floor, and ``defaultParallelism`` and the file-scan
-  ``minPartitionNum`` pinned to the shuffle width, so partitioning
-  follows the data rather than the core count;
+- a 16k floor for AQE's partition coalescing, and
+  ``defaultParallelism`` and the file-scan ``minPartitionNum`` pinned
+  to the shuffle width, so partitioning follows the data rather than
+  the core count (AQE itself, its coalescing and skew-join splitting
+  and its 64m advisory partition size are Spark's defaults, not
+  restated here);
 - Arrow on: the KG path's one Python boundary, the CSV parse, is
-  Arrow-batched;
+  Arrow-batched (Spark's default 10,000 records a batch);
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
@@ -43,8 +45,7 @@ def scratch_root() -> str:
     compute-bound actions reached ~2.6×. A real N→4N executor cluster
     brings 4× the local disks (I/O bandwidth scales with the cluster),
     so tmpfs — whose bandwidth scales with memory channels, not one
-    virtio queue — is the faithful single-box emulation, exactly like
-    heap ∝ cores in bench._scaling_session. Override with
+    virtio queue — is the faithful single-box emulation. Override with
     SPARK_GRAFT_LOCAL_DIR.
     """
     d = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
@@ -107,8 +108,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # floor for AQE partition coalescing: with the default (1m), a
         # small-in-bytes stage output coalesces to ONE partition, and a
         # localCheckpoint taken there pins every consumer stage fused
@@ -135,13 +134,6 @@ def get_spark(
         # 4N, 16 at N), and a straggler costs 1/width, not 1/N.
         # Tiny dims still coalesce to the 16k floor above.
         .config("spark.default.parallelism", str(shuffle_partitions))
-        # AQE coalesce target: Spark's 64m default, pinned. (A 16m
-        # override shipped briefly in r3 on the theory that finer
-        # tasks fix ragged waves; the measurements behind it were
-        # taken under co-tenant memory contention — see ROUND_NOTES
-        # r3 weather — and clean-weather reruns show 64m equal or
-        # better across the pipeline.)
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         # file-scan analogue of the floor above: maxSplitBytes =
         # min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)),
         # and the 4m default openCost floors a snappy-parquet stage
@@ -162,9 +154,7 @@ def get_spark(
         # gives scan stages the same wave granularity as shuffle
         # stages at both cluster sizes.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # The heap starts small and grows on demand up to

@@ -122,8 +122,8 @@ def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def parse_cells(artifacts: DataFrame) -> DataFrame:
     """artifacts (from discover_csv_artifacts) → cells DataFrame.
 
-    Returns header rows as row == -1; use ``headers_of`` / filter
-    ``row >= 0`` for data cells.
+    Returns header rows as row == -1; ``data_cells`` keeps the
+    ``row >= 0`` data cells.
 
     The parse is the pipeline's heaviest Python stage, and everything
     downstream of it is narrow (broadcast joins) until the first wide
@@ -151,13 +151,6 @@ def parse_cells(artifacts: DataFrame) -> DataFrame:
     with_sha = artifacts.withColumn("content_sha", F.sha2(F.col("content"), 256))
     cols = ["table_id", "repo", "path", "commit", "content_sha", "content"]
     return with_sha.select(*cols).mapInPandas(_parse_partition, CELLS_SCHEMA)
-
-
-def headers_of(cells: DataFrame) -> DataFrame:
-    return (
-        cells.where(F.col("row") == -1)
-        .select("table_id", "col", F.col("cell").alias("header"), "n_cols")
-    )
 
 
 def data_cells(cells: DataFrame) -> DataFrame:

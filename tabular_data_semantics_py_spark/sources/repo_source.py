@@ -77,7 +77,8 @@ def corpus_to_dataframes(
 
 
 def _corpus_tables(corpus: FixtureCorpus):
-    """name → (rows, pyarrow schema) for every corpus table."""
+    """name → (rows, pyarrow schema) for every corpus table the job
+    reads (``_CORPUS_TABLE_NAMES``)."""
     import pyarrow as pa
 
     s = pa.string()
@@ -114,52 +115,11 @@ def _corpus_tables(corpus: FixtureCorpus):
         "ontology_equivalent": (
             corpus.equivalent, pa.schema([("a", s), ("b", s)]),
         ),
-        "ontology_classes": (
-            corpus.classes, pa.schema([("class_uri", s), ("label", s)]),
-        ),
-        "extra_domains": (
-            corpus.extra_domains, pa.schema([("pred", s), ("domain_uri", s)]),
-        ),
-        "complex_domains": (
-            corpus.complex_domains,
-            pa.schema([("pred", s), ("domain_uri", s)]),
-        ),
-        "complex_ranges": (
-            corpus.complex_ranges, pa.schema([("pred", s), ("range_uri", s)]),
-        ),
-        "restrictions": (
-            corpus.restrictions,
-            pa.schema([("cls", s), ("kind", s), ("pred", s), ("filler", s)]),
-        ),
-        "inverse_props": (
-            corpus.inverse_props, pa.schema([("p", s), ("q", s)]),
-        ),
-        "equivalent_props": (
-            corpus.equivalent_props, pa.schema([("p", s), ("q", s)]),
-        ),
-        "data_property_meta": (
-            corpus.data_property_meta,
-            pa.schema([("pred", s), ("domain_uri", s)]),
-        ),
-        "data_restrictions": (
-            corpus.data_restrictions, pa.schema([("cls", s), ("pred", s)]),
-        ),
-        "conjunct_atoms": (
-            corpus.conjunct_atoms, pa.schema([("cls", s), ("sup", s)]),
-        ),
-        "complex_restrictions": (
-            corpus.complex_restrictions,
-            pa.schema([("cls", s), ("pred", s), ("filler", s)]),
-        ),
         "cross_sameas": (
             corpus.cross_sameas, pa.schema([("uri", s), ("wd_uri", s)]),
         ),
         "wd_equiv": (
             corpus.wd_equiv, pa.schema([("wd_cls", s), ("dbo_cls", s)]),
-        ),
-        "class_labels": (
-            corpus.class_labels,
-            pa.schema([("class_uri", s), ("label", s), ("lang", s)]),
         ),
     }
 
@@ -180,13 +140,19 @@ def _generator_version() -> str:
 
 def corpus_parquet_dir(n_tables: int, entities_per_class: int,
                        seed: int = 42) -> str:
+    """The corpus cache dir, keyed on the generator source AND the
+    table list: a checkout that writes a different set of tables must
+    not find another checkout's ``_DONE`` in a shared temp dir and then
+    miss a table file."""
+    import hashlib
     import os
     import tempfile
 
+    tables = hashlib.sha256(",".join(_CORPUS_TABLE_NAMES).encode())
     return os.path.join(
         tempfile.gettempdir(),
         f"tds_corpus_{seed}_{n_tables}_{entities_per_class}"
-        f"_{_generator_version()}",
+        f"_{_generator_version()}_{tables.hexdigest()[:8]}",
     )
 
 
@@ -221,11 +187,7 @@ def load_or_build_corpus_dfs(
 
 _CORPUS_TABLE_NAMES = [
     "source_repos", "entity_index", "kg_triples", "property_meta",
-    "ontology_edges", "ontology_equivalent", "ontology_classes",
-    "extra_domains", "complex_domains", "complex_ranges", "restrictions",
-    "inverse_props", "equivalent_props", "data_property_meta",
-    "data_restrictions", "conjunct_atoms", "complex_restrictions",
-    "cross_sameas", "wd_equiv", "class_labels",
+    "ontology_edges", "ontology_equivalent", "cross_sameas", "wd_equiv",
 ]
 
 

@@ -1,11 +1,7 @@
 """Transitive-closure operator vs the plain-Python fixture closure
 (distance semantics kg/endpoints.py:481-487)."""
 
-from tabular_data_semantics_py_spark.operators.closure import (
-    build_closure,
-    build_closure_distributed,
-    closure_to_map,
-)
+from tabular_data_semantics_py_spark.operators.closure import closure_to_map
 
 
 def test_closure_matches_python(pipeline, corpus):
@@ -13,21 +9,6 @@ def test_closure_matches_python(pipeline, corpus):
     py_map = corpus.closure()
     py_map = {k: v for k, v in py_map.items() if v}  # drop roots w/o ancestors
     assert spark_map == py_map
-
-
-def test_closure_driver_matches_distributed(spark, dfs):
-    """The driver-side Dijkstra fast path and the distributed doubling
-    variant must agree exactly (incl. extra doubling rounds, which must
-    not add pairs or lower depths)."""
-    c1 = build_closure(dfs["ontology_edges"], dfs["ontology_equivalent"])
-    rows = {(r.class_uri, r.ancestor_uri, r.depth) for r in c1.collect()}
-    for doublings in (4, 7):
-        c2 = build_closure_distributed(
-            dfs["ontology_edges"], dfs["ontology_equivalent"],
-            max_doublings=doublings,
-        )
-        rows2 = {(r.class_uri, r.ancestor_uri, r.depth) for r in c2.collect()}
-        assert rows == rows2
 
 
 def test_equivalence_depth_zero(pipeline):

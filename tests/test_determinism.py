@@ -1,10 +1,12 @@
 """Determinism invariants (SURVEY.md §5.1 item 4): output must not
-depend on partitioning; fixture regeneration is byte-identical."""
+depend on partitioning; fixture regeneration is byte-identical, and a
+cached corpus is found only by a checkout that writes the same tables."""
 
 from tabular_data_semantics_py_spark.fixtures.generator import make_corpus
 from tabular_data_semantics_py_spark.operators.candidates import (
     generate_candidates,
 )
+from tabular_data_semantics_py_spark.sources import repo_source
 
 
 def test_corpus_regeneration_identical(corpus):
@@ -14,6 +16,19 @@ def test_corpus_regeneration_identical(corpus):
         (e.uri, e.label, e.popularity) for e in corpus.entities
     ]
     assert c2.triples == corpus.triples
+
+
+def test_corpus_cache_dir_keys_on_table_list(monkeypatch):
+    """Two checkouts sharing a temp dir and a generator but writing
+    different table sets must not share a corpus cache dir: the one
+    that reads more tables would find the other's ``_DONE`` and then
+    miss a table file."""
+    before = repo_source.corpus_parquet_dir(100, 2000, seed=1)
+    monkeypatch.setattr(
+        repo_source, "_CORPUS_TABLE_NAMES",
+        repo_source._CORPUS_TABLE_NAMES + ["class_labels"],
+    )
+    assert repo_source.corpus_parquet_dir(100, 2000, seed=1) != before
 
 
 def test_candidates_partition_invariant(spark, dfs, pipeline):
