@@ -1,5 +1,7 @@
 """Summarize a Spark event log: per-job wall, task time, CPU, GC,
-and the driver-side gaps between jobs.
+the driver-side gaps between jobs, and the number of jobs per job
+description (``tds:<stage>`` for the pipeline's stages, ``<none>`` for
+a job without one).
 
 Usage: python scripts/analyze_eventlog.py <eventlog-file-or-dir>
 
@@ -17,7 +19,7 @@ from __future__ import annotations
 import json
 import os
 import sys
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 
 def analyze(path: str) -> dict:
@@ -42,8 +44,8 @@ def analyze(path: str) -> dict:
                 "start": ev["Submission Time"],
                 "end": None,
                 "desc": (ev.get("Properties") or {}).get(
-                    "spark.job.description", ""
-                )[:48],
+                    "spark.job.description"
+                ) or "<none>",
             }
             for sid in ev.get("Stage IDs", []):
                 stage_to_job[sid] = jid
@@ -76,7 +78,7 @@ def analyze(path: str) -> dict:
         rows.append(
             {
                 "job": jid,
-                "desc": j["desc"],
+                "desc": j["desc"][:48],
                 "wall_s": round((j["end"] - j["start"]) / 1000, 2),
                 "gap_before_s": round(gap / 1000, 2),
                 "task_s": round(agg["task_ms"] / 1000, 1),
@@ -95,6 +97,8 @@ def analyze(path: str) -> dict:
         "task_s": round(sum(r["task_s"] for r in rows), 1),
         "cpu_s": round(sum(r["cpu_s"] for r in rows), 1),
         "gc_s": round(sum(r["gc_s"] for r in rows), 1),
+        "jobs_by_desc": dict(sorted(
+            Counter(j["desc"] for j in jobs.values()).items())),
         "jobs": rows,
     }
 

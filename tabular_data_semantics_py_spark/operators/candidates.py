@@ -87,9 +87,11 @@ def generate_candidates(
         index_keys, mentions.mention_norm == index_keys.key_norm
     ).select("mention_norm", "uri", F.lit(1.0).alias("score"))
 
-    # fuzzy fallback for mentions with no exact hit (token blocking)
+    # fuzzy fallback for mentions with no exact hit (token blocking),
+    # anti-joined to the index keys, not to ``exact`` (the same set),
+    # whose AQE plan varied with which reused stage finished first
     unmatched = mentions.join(
-        exact.select("mention_norm").distinct(), "mention_norm", "left_anti"
+        index_keys, mentions.mention_norm == index_keys.key_norm, "left_anti"
     )
     m_tok = unmatched.select(
         "mention_norm",

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import heapq
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -31,8 +32,8 @@ def build_closure(
     The ontology is a broadcast-scale dimension by design (SURVEY.md
     §1.1: dbpedia.owl is 2.3k classes; even 10^6 classes collect in
     MBs), so the closure is computed once on the driver with Dijkstra
-    over the collected edge list — one collect + one Arrow
-    createDataFrame instead of O(log diameter) shuffle jobs.
+    over the collected edge list — one collect + one createDataFrame
+    instead of O(log diameter) shuffle jobs.
     """
     edge_rows = [(r[0], r[1], 1) for r in edges.collect()]
     if equivalent is not None:
@@ -64,13 +65,13 @@ def build_closure(
             if dst != src:
                 out_rows.append((src, dst, dd))
 
-    import pandas as pd
-
-    spark = edges.sparkSession
-    pdf = pd.DataFrame(out_rows, columns=["class_uri", "ancestor_uri", "depth"])
-    return spark.createDataFrame(
-        pdf, "class_uri string, ancestor_uri string, depth int"
-    ).coalesce(1)
+    # an Arrow table, which the JVM reads as a local relation (a row
+    # list would be unpickled by a Python worker)
+    schema = pa.schema([("class_uri", pa.string()),
+                        ("ancestor_uri", pa.string()), ("depth", pa.int32())])
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in out_rows], schema)
+    return edges.sparkSession.createDataFrame(table).coalesce(1)
 
 
 def closure_to_map(closure: DataFrame) -> dict[str, dict[str, int]]:

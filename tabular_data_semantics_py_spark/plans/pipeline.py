@@ -59,12 +59,12 @@ class PipelineResult:
 
 # stages whose output is consumed by 2+ downstream branches: in
 # no-checkpoint mode these are eagerly materialized, so no consumer
-# re-runs the stage's subtree. cells (the mapInPandas CSV parse,
-# consumed by candidates + emission) carries a pandas-UDF column,
-# which Catalyst re-evaluates per reference; candidates (the fuzzy
-# scoring), entity_types and cea are plain JVM plans, and keep their
-# barriers until a measurement shows re-execution is cheaper. cells_m
-# is a per-row projection of the cells barrier, so it stays lazy.
+# re-runs the stage's subtree. cells (the CSV parse) has three
+# consumers, candidates, rows_present and emission, and without its
+# barrier each would parse every artifact again; candidates (the fuzzy
+# scoring), entity_types and cea keep their barriers until a
+# measurement shows re-execution is cheaper. cells_m is a per-row
+# projection of the cells barrier, so it stays lazy.
 # Everything else flows lazily into one AQE-planned DAG — the answer
 # to the round-1 stage-barrier tax (8 sequential full
 # materializations → 3).
@@ -104,8 +104,7 @@ class _Checkpointer:
             if name in _BARRIER_STAGES:
                 # plan truncation at the stage boundary — without it
                 # Catalyst re-analyzes the upstream tree per action and
-                # re-runs the stage's subtree (pandas UDFs included)
-                # once per consumer.
+                # re-runs the stage's subtree once per consumer.
                 # Fact-scale outputs go through a parquet barrier, NOT
                 # localCheckpoint (see barriers.py: a full-corpus
                 # executor-storage checkpoint starves every later
@@ -174,10 +173,11 @@ def run_pipeline(
     a later call with the same checkpoint_dir resumes from there.
 
     Without a checkpoint_dir only the multi-consumed stages
-    (``_BARRIER_STAGES``) are eagerly materialized; of these only
-    ``cells`` carries a Python UDF (the CSV parse, the one Python
-    boundary of the run). The rest stays lazy until an action on their
-    output.
+    (``_BARRIER_STAGES``) are eagerly materialized: ``cells`` (the CSV
+    parse, read by candidates, ``rows_present`` and emission),
+    ``candidates``, ``entity_types`` and ``cea``. The rest stays lazy
+    until an action on their output. Every stage is Spark built-ins;
+    no Python runs on an executor.
     """
     ck = _Checkpointer(spark, checkpoint_dir, resume)
     res = PipelineResult()

@@ -15,8 +15,6 @@ reasons sit next to each setting in ``get_spark``):
   the core count (AQE itself, its coalescing and skew-join splitting
   and its 64m advisory partition size are Spark's defaults, not
   restated here);
-- Arrow on: the KG path's one Python boundary, the CSV parse, is
-  Arrow-batched (Spark's default 10,000 records a batch);
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
@@ -25,6 +23,9 @@ reasons sit next to each setting in ``get_spark``):
   JDK default;
 - shuffle and spill files on tmpfs when it has room (``scratch_root``);
 - the UTC session time zone, and no UI.
+
+No stage of the job runs Python on an executor, so nothing here
+configures Python workers or Arrow.
 """
 
 from __future__ import annotations
@@ -63,38 +64,11 @@ def scratch_root() -> str:
     return tempfile.gettempdir()
 
 
-def _ensure_worker_import_path() -> None:
-    """Make this package importable by locally-spawned Python workers.
-
-    Workers inherit ``PYTHONPATH`` from the driver process environment
-    (PythonWorkerFactory builds the worker env from the JVM's, which
-    the driver Python process launched) — they do NOT inherit the
-    driver's ``sys.path`` mutations or its cwd-relative imports. A
-    driver started outside the repo root (pytest from ``tests/``, a
-    notebook, a script a directory up) can import this package while
-    its workers cannot: every closure cloudpickle serializes by
-    REFERENCE (any UDF touching a module-level helper) then dies on
-    the worker with ``ModuleNotFoundError`` at ``read_udfs``. On a
-    real cluster ``spark-submit --py-files`` fills this seam
-    (tests/test_spark_submit.py); for local sessions, prepend the
-    package's parent — a directory, or the ``--py-files`` zip itself
-    when running zipimported (both are legal ``sys.path`` entries) —
-    to ``PYTHONPATH`` before the JVM gateway launches.
-    """
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if root not in [p for p in existing.split(os.pathsep) if p]:
-        os.environ["PYTHONPATH"] = (
-            root + os.pathsep + existing if existing else root
-        )
-
-
 def get_spark(
     app_name: str = "tabular-data-semantics-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    _ensure_worker_import_path()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
@@ -154,7 +128,6 @@ def get_spark(
         # gives scan stages the same wave granularity as shuffle
         # stages at both cluster sizes.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         # The heap starts small and grows on demand up to

@@ -1,156 +1,174 @@
 """CSV artifact → exploded cells DataFrame (SURVEY.md §2.1 S1).
 
 The reference reads CSV files row-by-row on one thread
-(oaei/tabular2rdf.py:177-239). Here each *partition* of the source
-table parses its artifacts inside ``mapInPandas`` (Arrow-batched; the
-``csv`` module runs once per artifact, never per cell), emitting one
-output row per cell. Parse semantics are pinned to the reference:
+(oaei/tabular2rdf.py:177-239). Here the parse is projections of the
+scan made of Spark built-ins: Java regexes split each artifact into
+records and fields, and ``posexplode`` emits one row per cell. One
+artifact never spans partitions, so the parse adds no shuffle. Parse
+semantics are pinned to the reference, ``csv.reader`` in its default
+(non-strict) mode, which ``fixtures.oracle.parse_csv_content`` runs
+and ``tests/test_csv_parse.py`` compares against:
 
 - delimiter=',', quotechar='"', escapechar='\\'
   (test/challenge_utils.py:534)
 - first row is the header (oaei/tabular2rdf.py:202-210)
 - short rows are skipped (oaei/tabular2rdf.py:213-215); long rows are
-  truncated to the header width
+  truncated to the header width; a blank line is a (short) row
 - ``row`` is the 0-based physical data-row index (header excluded,
   skipped rows still counted) so lineage survives the skip
+- an artifact that ``csv.reader`` rejects (a new-line character in an
+  unquoted field, a parsed field over ``csv.field_size_limit()``)
+  fails the job with ``raise_error``
 
-Scale note: the input is hash-partitioned by (repo, path) upstream;
-one artifact never spans partitions, so the parse is embarrassingly
-parallel and the only shuffle in the whole parse stage is the source
-scan itself. ``content_sha`` is computed JVM-side with ``sha2`` before
-Python ever touches the row, giving the per-row integrity invariant
-(BASELINE.json input_hint) for free.
+Every regex loop is unrolled and possessive, so the engine recurses
+once per escape, not once per character, and a field of a few hundred
+thousand characters does not overflow the task thread's stack.
+``content_sha`` (``sha2`` of the content) gives the per-row integrity
+invariant (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
 
 import csv
-import io
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
+
+_META = ["table_id", "repo", "path", "commit", "content_sha"]
+# an escape; a lone backslash at the very end of the content escapes
+# the end of the line, which csv.reader reads as a newline
+_E = r"\\[\s\S]|\\\z"
+# body of a quoted field: anything but a quote or backslash, plus
+# escapes and doubled quotes
+_NQ = r'[^"\\]*+(?:(?:' + _E + r'|"")[^"\\]*+)*+'
+# rest of an unquoted field: anything but a delimiter, backslash or
+# line end, plus escapes
+_RUN = r"[^,\\\r\n]*+(?:(?:" + _E + r")[^,\\\r\n]*+)*+"
+# one field: quoted (the closing quote may be missing at the end of
+# the content, and the character after it is literal, then the field
+# goes on unquoted), or unquoted, or empty
+_F = (
+    r'"' + _NQ + r'"?(?:[^",\r\n]' + _RUN + r")?"
+    r'|(?:(?:[^",\\\r\n]|' + _E + r")" + _RUN + r")?"
 )
-
-CELLS_SCHEMA = StructType(
-    [
-        StructField("table_id", StringType(), False),
-        StructField("repo", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("commit", StringType(), False),
-        StructField("content_sha", StringType(), False),
-        StructField("row", IntegerType(), False),  # -1 = header row
-        StructField("col", IntegerType(), False),
-        StructField("cell", StringType(), False),
-        StructField("n_cols", IntegerType(), False),
-    ]
+# one record: fields up to a line end or the end of the content, never
+# an empty match (a blank line is one empty field and its line end).
+# \G starts each record where the one before ended: after a record
+# that does not match, every later start fails at once instead of
+# scanning the rest of the content again (quadratic on a long field)
+_REC = (
+    r"\G(?=[\s\S])(?:(?:" + _F + r"),)*+(?:" + _F + r")"
+    r"(?:\r*\n|\r+\z|\z)"
 )
+# the fields of a record, each matched after the delimiter before it
+# (a ',' is prepended to the record, so no match is ever empty)
+_FIELD = r",(" + _F + r")"
+# a quoted field's body and what follows its closing quote
+_QUOTED = r'\A"(' + _NQ + r')"?([\s\S]*)'
 
 
-def _parse_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # Columnar output construction: the cell/row/col columns are built
-    # with bulk list.extend per CSV row, and the five per-artifact
-    # constant columns (table_id … content_sha) are np.repeat'ed by
-    # each artifact's cell count instead of appended per cell. A
-    # per-cell emit() closure here was ~10× the cost of the csv parse
-    # itself and dominated the whole front half of the pipeline.
-    import numpy as np
+def _escaped_eol(s: Column) -> Column:
+    """``s`` with a newline after an odd run of trailing backslashes,
+    the escaped end of the content."""
+    run = F.length(s) - F.length(F.rtrim(s, F.lit("\\")))
+    return F.when(run % 2 == 1, F.concat(s, F.lit("\n"))).otherwise(s)
 
-    for pdf in batches:
-        cells: list[str] = []
-        rows_ix: list[int] = []
-        cols_ix: list[int] = []
-        meta: list[tuple] = []  # (table_id, repo, path, commit, sha)
-        ncols_a: list[int] = []
-        counts: list[int] = []
-        for table_id, repo, path, commit, sha, content in zip(
-            pdf["table_id"], pdf["repo"], pdf["path"], pdf["commit"],
-            pdf["content_sha"], pdf["content"],
-        ):
-            reader = csv.reader(
-                io.StringIO(content), delimiter=",", quotechar='"',
-                escapechar="\\",
-            )
-            rows = list(reader)
-            if not rows:
-                continue
-            header = rows[0]
-            n_cols = len(header)
-            col_range = list(range(n_cols))
 
-            n0 = len(cells)
-            cells.extend(header)
-            rows_ix.extend([-1] * n_cols)
-            cols_ix.extend(col_range)
-            for i, row in enumerate(rows[1:]):
-                if len(row) < n_cols:  # skip-don't-fail (tabular2rdf.py:213-215)
-                    continue
-                cells.extend(row[:n_cols])
-                rows_ix.extend([i] * n_cols)
-                cols_ix.extend(col_range)
-            meta.append((table_id, repo, path, commit, sha))
-            ncols_a.append(n_cols)
-            counts.append(len(cells) - n0)
-        k = np.asarray(counts, dtype=np.int64)
-        yield pd.DataFrame(
-            {
-                "table_id": np.repeat(
-                    np.asarray([m[0] for m in meta], dtype=object), k),
-                "repo": np.repeat(
-                    np.asarray([m[1] for m in meta], dtype=object), k),
-                "path": np.repeat(
-                    np.asarray([m[2] for m in meta], dtype=object), k),
-                "commit": np.repeat(
-                    np.asarray([m[3] for m in meta], dtype=object), k),
-                "content_sha": np.repeat(
-                    np.asarray([m[4] for m in meta], dtype=object), k),
-                "row": np.asarray(rows_ix, dtype=np.int32),
-                "col": np.asarray(cols_ix, dtype=np.int32),
-                "cell": np.asarray(cells, dtype=object),
-                "n_cols": np.repeat(
-                    np.asarray(ncols_a, dtype=np.int32), k),
-            }
-        )
+def _unescape(s: Column) -> Column:
+    return F.regexp_replace(_escaped_eol(s), r"\\([\s\S])", "$1")
+
+
+def _field_value(f: Column) -> Column:
+    """One raw field as matched by ``_F`` → its parsed value."""
+    body = F.regexp_extract(f, _QUOTED, 1)
+    tail = F.regexp_extract(f, _QUOTED, 2)
+    quoted = F.concat(
+        F.regexp_replace(_escaped_eol(body), r'\\([\s\S])|"(")', "$1$2"),
+        F.substring(tail, 1, 1),  # the character after the quote
+        _unescape(F.substr(tail, F.lit(2))),
+    )
+    return F.when(F.startswith(f, F.lit('"')), quoted).otherwise(_unescape(f))
+
+
+def _record_fields(rec: Column) -> Column:
+    """One record as matched by ``_REC`` → its parsed fields; ``[]``
+    for a blank line."""
+    values = F.transform(
+        F.regexp_extract_all(
+            F.concat(F.lit(","), rec), F.lit(_FIELD), F.lit(1)),
+        _field_value,
+    )
+    blank = F.substring(rec, 1, 1).isin("\r", "\n")
+    return F.when(blank, F.array().cast("array<string>")).otherwise(values)
+
+
+def _parsed_records(artifacts: DataFrame) -> DataFrame:
+    """artifacts → (table_id, repo, path, commit, content_sha, rows,
+    error): ``rows`` is every record's parsed fields, header first,
+    and ``error`` is NULL unless ``csv.reader`` raises on the content.
+    """
+    limit = csv.field_size_limit()
+    split = artifacts.select(
+        *_META[:4],
+        F.sha2(F.col("content"), 256).alias("content_sha"),
+        "content",
+        F.regexp_extract_all("content", F.lit(_REC), F.lit(0)).alias("recs"),
+    )
+    parsed = split.select(
+        *_META,
+        F.transform("recs", _record_fields).alias("rows"),
+        # the records tile the content exactly unless csv.reader
+        # raises ("new-line character seen in unquoted field")
+        F.when(F.array_join("recs", "") != F.col("content"),
+               F.lit("malformed CSV")).alias("error"),
+    )
+    # csv.reader counts a field's characters after unescaping
+    too_long = F.exists(F.flatten("rows"), lambda v: F.length(v) > limit)
+    return parsed.select(
+        *_META,
+        "rows",
+        F.coalesce(
+            F.col("error"),
+            F.when(too_long,
+                   F.lit(f"CSV field larger than field limit ({limit})")),
+        ).alias("error"),
+    )
 
 
 def parse_cells(artifacts: DataFrame) -> DataFrame:
-    """artifacts (from discover_csv_artifacts) → cells DataFrame.
+    """artifacts (from discover_csv_artifacts) → cells DataFrame
+    (table_id, repo, path, commit, content_sha, row, col, cell,
+    n_cols).
 
     Returns header rows as row == -1; ``data_cells`` keeps the
-    ``row >= 0`` data cells.
-
-    The parse is the pipeline's heaviest Python stage, and everything
-    downstream of it is narrow (broadcast joins) until the first wide
-    shuffle — so its parallelism caps the whole front half of the
-    pipeline. A pathological input layout (one small file / one fat
-    row group) would serialize it; when the scan yields fewer
-    partitions than the session's parallelism, hash-repartition the
-    (tiny, pre-explosion) artifact rows by (repo, path) first. On a
-    real 100 TB table the scan already has thousands of splits and no
-    shuffle happens.
+    ``row >= 0`` data cells. The records of ``_parsed_records`` are
+    exploded header first; rows at least as wide as the header keep
+    their first ``n_cols`` fields.
     """
-    sc = artifacts.sparkSession.sparkContext
-    # Rebalance SMALL inputs (sandbox / test corpora): byte-range
-    # splits of a single small parquet file assign whole row groups by
-    # midpoint, so at parallelism P the largest of P splits can carry
-    # ~2× the mean (measured: 1.9× task skew → the parse stage's wall
-    # stuck at the fattest task). Hash-repartitioning the pre-explosion
-    # artifact rows by (repo, path) into 2P partitions evens the load
-    # and gives two scheduling waves. A real 100 TB table has
-    # thousands of scan splits and never enters this branch.
-    if artifacts.rdd.getNumPartitions() < 2 * sc.defaultParallelism:
-        artifacts = artifacts.repartition(
-            2 * sc.defaultParallelism, "repo", "path"
+    checked = F.when(
+        F.col("error").isNotNull(),
+        F.raise_error(F.concat_ws(": ", "error", "repo", "path")),
+    ).otherwise(F.col("rows"))
+    return (
+        _parsed_records(artifacts).select(
+            *_META,
+            F.size(F.get("rows", 0)).alias("n_cols"),
+            # posexplode an expression, not a column: Catalyst infers a
+            # ``size(rows) > 0`` filter from a generator over a column
+            # and pushes it below the projections with the whole parse
+            # inlined, where it runs again, raise_error included, on
+            # rows that filters of the caller drop
+            F.posexplode(checked).alias("pos", "fields"),
         )
-    with_sha = artifacts.withColumn("content_sha", F.sha2(F.col("content"), 256))
-    cols = ["table_id", "repo", "path", "commit", "content_sha", "content"]
-    return with_sha.select(*cols).mapInPandas(_parse_partition, CELLS_SCHEMA)
+        .where(F.size("fields") >= F.col("n_cols"))
+        .select(
+            *_META,
+            (F.col("pos") - 1).alias("row"),
+            F.posexplode(F.slice("fields", 1, F.col("n_cols")))
+            .alias("col", "cell"),
+            "n_cols",
+        )
+    )
 
 
 def data_cells(cells: DataFrame) -> DataFrame:

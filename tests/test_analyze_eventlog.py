@@ -1,0 +1,59 @@
+"""scripts/analyze_eventlog.py on a synthetic event log (no Spark)."""
+
+import importlib.util
+import json
+from pathlib import Path
+
+_SCRIPT = Path(__file__).resolve().parent.parent / "scripts" / "analyze_eventlog.py"
+
+
+def _load():
+    spec = importlib.util.spec_from_file_location("analyze_eventlog", _SCRIPT)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+T0 = 1_760_000_000_000  # epoch milliseconds
+
+
+def _job(jid: int, start: int, end: int, desc: str | None) -> list[dict]:
+    start, end = T0 + start, T0 + end
+    props = {} if desc is None else {"spark.job.description": desc}
+    return [
+        {"Event": "SparkListenerJobStart", "Job ID": jid,
+         "Submission Time": start, "Stage IDs": [jid], "Properties": props},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": jid,
+         "Task Info": {"Launch Time": start, "Finish Time": end},
+         "Task Metrics": {"Executor CPU Time": 500_000_000,
+                          "JVM GC Time": 10}},
+        {"Event": "SparkListenerJobEnd", "Job ID": jid,
+         "Completion Time": end},
+    ]
+
+
+def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
+    events = (
+        [{"Event": "SparkListenerApplicationStart", "Timestamp": T0}]
+        + _job(0, 100, 600, "tds:cells")
+        + _job(1, 700, 900, "tds:cells")
+        + _job(2, 1000, 1500, None)
+        + _job(3, 1600, 2000, "tds:candidates")
+        + [{"Event": "SparkListenerApplicationEnd",
+            "Timestamp": T0 + 2100}]
+    )
+    log = tmp_path / "app-1"
+    log.write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    mod = _load()
+    summary = mod.analyze(str(log))
+    assert summary["jobs_by_desc"] == {
+        "<none>": 1, "tds:candidates": 1, "tds:cells": 2,
+    }
+    assert summary["cpu_s"] == 2.0
+    assert summary["driver_gap_s"] == 0.4
+
+    monkeypatch.setattr(mod.sys, "argv", ["analyze_eventlog.py", str(tmp_path)])
+    mod.main()
+    printed = json.loads(capsys.readouterr().out.splitlines()[0])
+    assert printed["jobs_by_desc"] == summary["jobs_by_desc"]

@@ -1,10 +1,13 @@
-"""Plan-shape guard: the KG path's one Python boundary is the CSV
-parse (``parse_cells``' ``mapInPandas``), which the ``cells`` barrier
-cuts off. Mention and index-key normalization, candidate scoring,
-type compatibility and the most-specific reduction are Spark
-built-ins, so no plan built on ``cells`` has a Python node."""
+"""Plan-shape guard: no stage of the KG job runs Python on an
+executor. The CSV parse, mention and index-key normalization,
+candidate scoring, type compatibility and the most-specific reduction
+are all Spark built-ins, so no executed plan has a Python node."""
 
 import re
+
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from tabular_data_semantics_py_spark.constants import AGENT_CLASS
 from tabular_data_semantics_py_spark.operators.annotate import cea, cta
@@ -16,38 +19,83 @@ from tabular_data_semantics_py_spark.operators.types_cascade import (
     build_entity_types,
     make_most_specific_udf,
 )
+from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
 from tabular_data_semantics_py_spark.sources.csv_cells import data_cells
 
-_PY_NODE = re.compile(
-    r"^\(\d+\) (ArrowEvalPython|BatchEvalPython|MapInPandas)\b.*?\n"
-    r"(?:.*\n)*?Arguments: (.*)$",
-    re.M,
-)
+# every Python exec node of Spark 4.1 (the node name is the
+# ``org.apache.spark.sql.execution.python`` class name without
+# ``Exec``): ArrowEvalPython, BatchEvalPython, their UDTF forms,
+# ArrowAggregatePython, ArrowWindowPython, MapInPandas, MapInArrow,
+# FlatMap(Co)GroupsIn{Pandas,Arrow}, FlatMapGroupsInPandasWithState and
+# PythonWorkerLogs
+_PY_NODE = re.compile(r"^\(\d+\) (\w*(?:Python|Pandas|Arrow)\w*)", re.M)
+# a scan of an RDD that a Python worker fills (``createDataFrame`` of a
+# Python row list: its RDD is made by ``applySchemaToPythonRDD``)
+_PY_RDD = re.compile(r"^Arguments: .*\b(\w*PythonRDD)\b", re.M)
 
 
 def _python_nodes(plan: str) -> list[str]:
-    """The argument lines of every Python node in a formatted plan."""
-    return [m.group(2) for m in _PY_NODE.finditer(plan)]
+    """The names of every Python node and Python-filled RDD scan in a
+    formatted plan."""
+    return _PY_NODE.findall(plan) + _PY_RDD.findall(plan)
 
 
-def _executed_plans(spark, tag: str, action) -> list[str]:
-    """Formatted executed plans of every SQL execution ``action`` runs
-    (eager checkpoints inside it included), read from the SQL status
-    store by job description."""
-    sc = spark.sparkContext
-    sc.setJobDescription(tag)
-    try:
-        action()
-    finally:
-        sc.setJobDescription(None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+def _formatted(df) -> str:
+    jvm = df.sparkSession.sparkContext._jvm
+    return jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+
+
+def test_guard_sees_python_nodes(spark):
+    """The pattern finds the Python node of each kind of Python
+    operator (the plans are built, never run)."""
+    df = spark.range(3)
+    scalar = F.pandas_udf(lambda s: s, "long")
+
+    @F.pandas_udf("double")
+    def mean(v: pd.Series) -> float:
+        return v.mean()
+
+    grouped = df.groupBy("id")
+    plans = {
+        "BatchEvalPython": df.select(F.udf(lambda x: x, "long")("id")),
+        "ArrowEvalPython": df.select(scalar("id")),
+        "ArrowAggregatePython": grouped.agg(mean("id")),
+        "ArrowWindowPython": df.select(
+            mean("id").over(Window.partitionBy("id"))),
+        "MapInPandas": df.mapInPandas(lambda it: it, df.schema),
+        "MapInArrow": df.mapInArrow(lambda it: it, df.schema),
+        "FlatMapGroupsInPandas": grouped.applyInPandas(lambda p: p, df.schema),
+        "FlatMapGroupsInArrow": grouped.applyInArrow(lambda t: t, df.schema),
+        "FlatMapCoGroupsInPandas": grouped.cogroup(grouped).applyInPandas(
+            lambda a, b: a, df.schema),
+        "applySchemaToPythonRDD": spark.createDataFrame([(1,)], "id long"),
+    }
+    for name, plan in plans.items():
+        assert name in _python_nodes(_formatted(plan)), name
+    assert _python_nodes(_formatted(df.select(F.col("id") + 1))) == []
+
+
+def _executed_plans(spark, action) -> list[str]:
+    """Formatted executed plans of every SQL execution that starts
+    while ``action`` runs (eager barriers and jobs on the pipeline's
+    pool thread included), read from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids() -> set[int]:
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    before = ids()
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
     plans = [
         e.physicalPlanDescription()
         for e in (execs.apply(i) for i in range(execs.size()))
-        if e.description() == tag
+        if e.executionId() not in before
     ]
-    assert plans, tag
+    assert plans
     return plans
 
 
@@ -58,14 +106,14 @@ def _run(df) -> None:
 def test_entity_types_and_cta_have_no_python(spark, dfs, pipeline):
     closure = pipeline.stages["closure"]
     closure_map = closure_to_map(closure)
-    et_plans = _executed_plans(spark, "guard:entity_types", lambda: _run(
+    et_plans = _executed_plans(spark, lambda: _run(
         build_entity_types(
             dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
             closure, closure_map,
         )
     ))
     ms = make_most_specific_udf(closure_map, AGENT_CLASS)
-    cta_plans = _executed_plans(spark, "guard:cta", lambda: _run(
+    cta_plans = _executed_plans(spark, lambda: _run(
         cta(pipeline.stages["cea"], pipeline.stages["entity_types"], ms,
             closure)
     ))
@@ -76,7 +124,7 @@ def test_entity_types_and_cta_have_no_python(spark, dfs, pipeline):
 # generate_candidates runs inside each guarded action, so any barrier
 # it writes while building the plan is part of the guarded plans
 def test_candidates_have_no_python(spark, dfs, pipeline):
-    plans = _executed_plans(spark, "guard:candidates", lambda: _run(
+    plans = _executed_plans(spark, lambda: _run(
         generate_candidates(
             data_cells(pipeline.stages["cells"]), dfs["entity_index"]
         )[1]
@@ -93,5 +141,19 @@ def test_cea_has_no_python(spark, dfs, pipeline):
         _run(cea(cells_m, pipeline.stages["candidates"],
                  pipeline.stages["entity_types"]))
 
-    for plan in _executed_plans(spark, "guard:cea", action):
+    for plan in _executed_plans(spark, action):
+        assert _python_nodes(plan) == [], plan
+
+
+def test_pipeline_and_triples_write_have_no_python(spark, dfs):
+    """A whole batch run, ``cells`` included, plus the caller's writes
+    that execute the lazy stages (``cta``, ``cpa``, ``triples``)."""
+    def action():
+        res = run_pipeline(spark, dfs)
+        _run(res.stages["triples"])
+        _run(res.stages["cpa"])
+
+    plans = _executed_plans(spark, action)
+    assert any("regexp_extract_all" in p for p in plans)  # the CSV parse
+    for plan in plans:
         assert _python_nodes(plan) == [], plan
