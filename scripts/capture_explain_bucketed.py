@@ -22,6 +22,7 @@ from tabular_data_semantics_py_spark.session import get_spark  # noqa: E402
 from tabular_data_semantics_py_spark.sources.bucketed import (  # noqa: E402
     count_exchanges,
     demo_entity_index,
+    demo_mentions,
     exact_match_bucketed,
     formatted_explain,
     write_bucketed_index,
@@ -38,10 +39,7 @@ def main() -> None:
             build_index_keys(index), table="tds_index_keys_demo",
             n_buckets=8, path=os.path.join(td, "idx"),
         )
-        mentions = spark.createDataFrame(
-            [(f"alpha beta {i}",) for i in range(100)],
-            "mention_norm string",
-        )
+        mentions = demo_mentions(spark, 100)
         # a 10^8-row index can never broadcast — show the shuffle shape
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         plan = exact_match_bucketed(spark, mentions, "tds_index_keys_demo")

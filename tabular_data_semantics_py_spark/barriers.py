@@ -1,10 +1,8 @@
 """Plan-truncating stage barrier for fact-scale stage outputs.
 
 ``parquet_barrier`` is a snappy-parquet round trip through the
-session scratch dir. Small dims and bridges are instead checkpointed
-in place by their operators with an eager ``localCheckpoint``
-(executor storage blocks, sub-second, fine for anything
-broadcast-scale). A ``localCheckpoint`` of a fact table occupies the
+session scratch dir; it is the package's only stage checkpoint. An
+executor-storage ``localCheckpoint`` of a fact table would occupy the
 unified-memory *storage* pool, and every later shuffle/aggregation
 then fights it for *execution* memory — measured on the sf2.5 bench
 corpus this turns the second materialization of a run from 11 s into
@@ -12,7 +10,8 @@ corpus this turns the second materialization of a run from 11 s into
 executor-storage checkpoint is impossible by construction; stage
 outputs live on (distributed) storage, which is exactly what this
 barrier models. Parquet is also 5-10x smaller than the in-memory rows
-for the string-heavy KG tables.
+for the string-heavy KG tables, and its scan carries size statistics
+(a ``localCheckpoint`` scan has none and is planned as enormous).
 
 Each barrier write lands in a fresh generation directory (DataFrames
 returned by earlier pipeline runs in the same session must stay

@@ -66,18 +66,14 @@ def _cea_scored(
                 F.col("uri"),
             ),
         ).alias("uri")
-    )  # consumed by votes and col_n
-    # Materialized, NOT left to ReuseExchange: both consumers end up
-    # as broadcast dims of the final join, and each broadcast exchange
-    # runs as its own subjob on a separate scheduler thread. Whether
-    # those subjobs REUSE the prelim shuffle or RE-EXECUTE the whole
-    # linked-scan+agg subtree is a race against the main plan's
-    # materialization order — event-log profiling caught the losing
-    # side re-running it at 18× the CPU (267 vs 15 task-CPU-s for the
-    # same job, local[8] sf2.5) on roughly half the runs. A slim
-    # fact-scale parquet barrier makes the plan deterministic: the agg
-    # runs exactly once.
-    prelim = parquet_barrier(prelim, "cea_prelim")
+    )
+    # consumed by votes and col_n. Both reach the final join as
+    # shuffle_hash build sides (votes inside cu_votes), so no
+    # broadcast subjob re-runs this aggregate and it needs no barrier:
+    # when they were broadcast dims, each broadcast exchange ran as a
+    # subjob on its own scheduler thread, raced the main plan, and on
+    # about half the runs re-executed the linked-scan+agg subtree
+    # instead of reusing its shuffle.
 
     # type votes and the per-candidate best vote depend only on
     # (table_id, col, uri) — dedup-then-join-back (A10) before the
@@ -232,12 +228,16 @@ def cta(
 ) -> DataFrame:
     """→ (table_id, col, cls, ancestors) — most-voted most-specific
     class per column plus its space-joined sorted strict ancestors."""
-    ms = entity_types.select(
-        "uri", most_specific_udf(F.col("types")).alias("ms_types")
-    )
+    # explode the expression, not a column of it: Catalyst infers a
+    # size() > 0 filter for the explode of a column and pushes it below
+    # the projection with the whole reduction inlined, which then runs
+    # twice per entity row
     votes = (
-        cea_df.join(ms, "uri")
-        .select("table_id", "col", F.explode("ms_types").alias("t"))
+        cea_df.join(entity_types, "uri")
+        .select(
+            "table_id", "col",
+            F.explode(most_specific_udf(F.col("types"))).alias("t"),
+        )
         .groupBy("table_id", "col", "t")
         .agg(F.count(F.lit(1)).alias("votes"))
     )

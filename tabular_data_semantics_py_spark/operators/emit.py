@@ -9,11 +9,11 @@ URI-minting scheme mirrors oaei/tabular2rdf.py:120-163:
 - provenance       : tdkg-style table/column/row annotations (E4)
 - sameAs link to the CEA entity; rdf:type from the main column's CTA.
 
-Everything is select/union/dropDuplicates — pure Catalyst. Subject-
-hash bucketing for the writer lives in the sink (sources/sinks.py
-``write_graph``), not here — emitting pre-bucketed would cost every
-non-writing consumer (counts, joins, CPA) a redundant full shuffle of
-the output.
+Everything is select/explode/union/dropDuplicates — pure Catalyst.
+Subject-hash bucketing for the writer lives in the sink
+(sources/sinks.py ``write_graph``), not here — emitting pre-bucketed
+would cost every non-writing consumer (counts, joins, CPA) a redundant
+full shuffle of the output.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..barriers import parquet_barrier
 from ..sources.csv_cells import data_cells
 from ..constants import (
     ANN_COLUMN,
@@ -41,24 +40,27 @@ def _prop_uri(col_expr) -> F.Column:
     )
 
 
+def _triple(pred: str, obj: F.Column, obj_is_literal: bool) -> F.Column:
+    """One (pred, obj, obj_is_literal) element of a per-row triple
+    array; every element has the same struct type."""
+    return F.struct(
+        F.lit(pred).alias("pred"), obj.alias("obj"),
+        F.lit(obj_is_literal).alias("obj_is_literal"),
+    )
+
+
 def build_rows_present(cells: DataFrame) -> DataFrame:
     """(table_id, row, max_len, main_cell) for every non-empty data
-    row — the row-URI spine of emission. Depends ONLY on the cells
-    parse, so the pipeline materializes it on a pool driver thread
-    concurrently with the whole candidates/CEA chain (plans/
-    pipeline.py) instead of serially inside the triples stage."""
-    data = data_cells(cells)
-    rows_present = (
-        data.groupBy("table_id", "row")
+    row — the row-URI spine of emission, lazy: its one consumer is the
+    row-triple explode in ``emit_triples``."""
+    return (
+        data_cells(cells).groupBy("table_id", "row")
         .agg(
             F.max(F.length("cell")).alias("max_len"),
             F.max(F.when(F.col("col") == 0, F.col("cell"))).alias("main_cell"),
         )
         .where(F.col("max_len") > 0)
     )
-    # 7 consumers; fact-scale (one row per table row) → parquet
-    # barrier, not executor storage (barriers.py)
-    return parquet_barrier(rows_present, "emit_rows_present")
 
 
 def emit_triples(
@@ -69,22 +71,18 @@ def emit_triples(
 ) -> DataFrame:
     """cells = full parse output (header rows included, row == -1).
 
-    ``rows_present``: a pre-materialized ``build_rows_present`` output
-    (the pipeline's concurrent path); None = build it here."""
+    ``rows_present``: a ``build_rows_present`` output; None = build it
+    here."""
     base = F.lit(TABLE_BASE)
 
-    headers = cells.where(F.col("row") == -1)
     prop = F.concat(base, _prop_uri(F.col("col")))
-    prop_triples = headers.select(
-        prop.alias("subj"), F.lit(RDF_TYPE).alias("pred"),
-        F.lit(OWL_DATATYPE_PROPERTY).alias("obj"),
-        F.lit(False).alias("obj_is_literal"),
-    ).union(
-        headers.select(
-            prop.alias("subj"), F.lit(RDFS_LABEL).alias("pred"),
-            F.col("cell").alias("obj"), F.lit(True).alias("obj_is_literal"),
-        )
-    )
+    prop_triples = cells.where(F.col("row") == -1).select(
+        prop.alias("subj"),
+        F.explode(F.array(
+            _triple(RDF_TYPE, F.lit(OWL_DATATYPE_PROPERTY), False),
+            _triple(RDFS_LABEL, F.col("cell"), True),
+        )).alias("t"),
+    ).select("subj", "t.*")
 
     data = data_cells(cells)
     if rows_present is None:
@@ -93,37 +91,28 @@ def emit_triples(
         base, F.col("table_id"), F.lit("-col-0-row-"),
         F.col("row").cast("string"),
     )
-    row_triples = (
-        rows_present.select(
-            row_uri.alias("subj"), F.lit(RDF_TYPE).alias("pred"),
-            F.lit(OWL_NAMED_INDIVIDUAL).alias("obj"), F.lit(False).alias("obj_is_literal"),
-        )
-        .union(
-            rows_present.where(F.length("main_cell") > 0).select(
-                row_uri.alias("subj"), F.lit(RDFS_LABEL).alias("pred"),
-                F.col("main_cell").alias("obj"), F.lit(True).alias("obj_is_literal"),
-            )
-        )
-        .union(
-            rows_present.select(
-                row_uri.alias("subj"), F.lit(ANN_TABLE).alias("pred"),
-                F.col("table_id").alias("obj"), F.lit(True).alias("obj_is_literal"),
-            )
-        )
-        .union(
-            rows_present.select(
-                row_uri.alias("subj"), F.lit(ANN_COLUMN).alias("pred"),
-                F.lit("0").alias("obj"), F.lit(True).alias("obj_is_literal"),
-            )
-        )
-        .union(
-            rows_present.select(
-                row_uri.alias("subj"), F.lit(ANN_ROW).alias("pred"),
-                F.col("row").cast("string").alias("obj"),
-                F.lit(True).alias("obj_is_literal"),
-            )
-        )
-    )
+    # the five row triples and the rdf:type of the main column's CTA
+    # class in one pass over the row spine: a NULL object (an empty
+    # main cell, a table without a CTA) drops its triple
+    cta_main = cta_df.where(F.col("col") == 0).select("table_id", "cls")
+    row_triples = rows_present.join(cta_main, "table_id", "left").select(
+        row_uri.alias("subj"),
+        F.explode(F.filter(
+            F.array(
+                _triple(RDF_TYPE, F.lit(OWL_NAMED_INDIVIDUAL), False),
+                _triple(
+                    RDFS_LABEL,
+                    F.when(F.length("main_cell") > 0, F.col("main_cell")),
+                    True,
+                ),
+                _triple(ANN_TABLE, F.col("table_id"), True),
+                _triple(ANN_COLUMN, F.lit("0"), True),
+                _triple(ANN_ROW, F.col("row").cast("string"), True),
+                _triple(RDF_TYPE, F.col("cls"), False),
+            ),
+            lambda t: t["obj"].isNotNull(),
+        )).alias("t"),
+    ).select("subj", "t.*")
 
     role_triples = data.where(
         (F.col("col") > 0) & (F.length("cell") > 0)
@@ -135,23 +124,13 @@ def emit_triples(
     )
 
     sameas = cea_df.where(F.col("col") == 0).select(
-        F.concat(
-            base, F.col("table_id"), F.lit("-col-0-row-"),
-            F.col("row").cast("string"),
-        ).alias("subj"),
+        row_uri.alias("subj"),
         F.lit(OWL_SAMEAS).alias("pred"),
         F.col("uri").alias("obj"),
         F.lit(False).alias("obj_is_literal"),
     )
 
-    cta_main = cta_df.where(F.col("col") == 0).select("table_id", "cls")
-    cta_types = rows_present.join(cta_main, "table_id").select(
-        row_uri.alias("subj"), F.lit(RDF_TYPE).alias("pred"),
-        F.col("cls").alias("obj"), F.lit(False).alias("obj_is_literal"),
-    )
-
     return (
-        prop_triples.union(row_triples).union(role_triples)
-        .union(sameas).union(cta_types)
+        prop_triples.union(row_triples).union(role_triples).union(sameas)
         .dropDuplicates(["subj", "pred", "obj", "obj_is_literal"])
     )

@@ -9,12 +9,12 @@ relational parts.
 
 Join strategy at scale: ``kg_triples`` is the big fact table; all
 aggregations on it are partial-agg friendly groupBys keyed by entity
-URI. ``property_meta`` and the ontology closure are tiny dimensions
-(broadcast). Compatibility checks — set-vs-set reachability in the
-class DAG — and the most-specific reduction are ``exists``/``filter``
-higher-order functions over one map literal of the closure (class →
-ancestor → depth): the one place a join would need a quadratic
-explode, and no Python.
+URI. ``property_meta`` is a tiny dimension (broadcast). Compatibility
+checks — set-vs-set reachability in the class DAG — the ancestor
+expansion and the most-specific reduction are ``exists``/``filter``/
+``transform`` higher-order functions over one map literal of the
+closure (class → ancestor → depth): per-row expressions where a join
+would need an explode, and no Python.
 """
 
 from __future__ import annotations
@@ -75,7 +75,9 @@ def build_entity_types(
     closure_map: dict[str, dict[str, int]],
 ) -> DataFrame:
     """→ (uri, types:array<string> sorted) — the D-cascade result,
-    ancestor-expanded, AVOID_TOP_CONCEPTS removed."""
+    ancestor-expanded, AVOID_TOP_CONCEPTS removed. The ancestors come
+    from ``closure_map``, which holds the rows of ``closure``; the
+    ``closure`` argument is unused (kgbench/tracing.py passes it)."""
 
     cl = closure_literal(closure_map)
 
@@ -175,44 +177,25 @@ def build_entity_types(
             .when(F.size("endpoint_types") > 0, F.col("endpoint_types"))
             .otherwise(F.col("pred_types")),
         )
-        .select("uri", "base_types")
-        # pinned-width repartition before the checkpoint: AQE coalesces
-        # the tiny join output to 1 partition, which would serialize
-        # the explode→closure-join→collect_set chain fused on top of it.
-        # When the planned joins below already hash-partition on uri at
-        # this width, Spark drops the repartition as redundant, and the
-        # width rests on AQE's coalescing floor (minPartitionSize)
-        .repartition(
-            entity_index.sparkSession.sparkContext.defaultParallelism,
-            "uri",
-        )
-        .localCheckpoint(True)  # consumed twice below
     )
 
-    # ancestor expansion via the broadcast closure dimension
+    # ancestor expansion through the closure map literal: every
+    # ontology-namespace class that cl lists for a base type
     # (kg/endpoints.py:452-466 superclass closure role)
-    anc = (
-        base.select("uri", F.explode("base_types").alias("t"))
-        .join(
-            F.broadcast(
-                closure.where(F.col("ancestor_uri").startswith(ONTOLOGY_NS))
-            ),
-            F.col("t") == F.col("class_uri"),
-        )
-        .groupBy("uri")
-        .agg(F.collect_set("ancestor_uri").alias("anc_types"))
-    )
-    return (
-        base.join(anc, "uri", "left")
-        .withColumn("anc_types", F.coalesce("anc_types", empty))
-        .select(
-            "uri",
-            F.array_sort(
-                F.array_except(
-                    F.array_union("base_types", "anc_types"), _avoid_tops_lit()
-                )
-            ).alias("types"),
-        )
+    anc_types = F.flatten(F.transform(
+        "base_types",
+        lambda t: F.filter(
+            F.map_keys(_ancestors(cl, t)),
+            lambda a: a.startswith(F.lit(ONTOLOGY_NS)),
+        ),
+    ))
+    return base.select(
+        "uri",
+        F.array_sort(
+            F.array_except(
+                F.array_union("base_types", anc_types), _avoid_tops_lit()
+            )
+        ).alias("types"),
     )
 
 

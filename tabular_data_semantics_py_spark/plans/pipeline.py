@@ -31,7 +31,7 @@ from ..operators.annotate import cpa as cpa_op
 from ..operators.annotate import cta as cta_op
 from ..operators.candidates import generate_candidates
 from ..operators.closure import build_closure, closure_to_map
-from ..operators.emit import build_rows_present, emit_triples
+from ..operators.emit import emit_triples
 from ..operators.types_cascade import (
     build_entity_types,
     make_most_specific_udf,
@@ -61,20 +61,16 @@ class PipelineResult:
 # no-checkpoint mode these are eagerly materialized, so no consumer
 # re-runs the stage's subtree. cells (the CSV parse) has three
 # consumers, candidates, rows_present and emission, and without its
-# barrier each would parse every artifact again; candidates (the fuzzy
-# scoring), entity_types and cea keep their barriers until a
-# measurement shows re-execution is cheaper. cells_m is a per-row
-# projection of the cells barrier, so it stays lazy.
-# Everything else flows lazily into one AQE-planned DAG — the answer
-# to the round-1 stage-barrier tax (8 sequential full
-# materializations → 3).
-# ALL these barriers are parquet-backed (barriers.py): a parquet scan
+# barrier each would parse every artifact again; entity_types is read
+# by cea and cta, and cea by cta, cpa and emission. candidates has one
+# consumer, the join that cea's own ``cea_linked`` barrier writes, so
+# its jobs run under ``tds:cea``. cells_m is a per-row projection of
+# the cells barrier, so it stays lazy.
+# These barriers are parquet-backed (barriers.py): a parquet scan
 # carries real size statistics, so Catalyst broadcasts a barrier that
 # is small and shuffle-joins one that is not — the scale-appropriate
-# plan falls out of the stats instead of per-join hints. (A
-# localCheckpoint scan has NO stats and is treated as enormous, which
-# inverted broadcast choices — see operators/annotate.py history.)
-_BARRIER_STAGES = {"cells", "candidates", "entity_types", "cea"}
+# plan falls out of the stats instead of per-join hints.
+_BARRIER_STAGES = {"cells", "entity_types", "cea"}
 
 
 class _Checkpointer:
@@ -169,61 +165,25 @@ def run_pipeline(
 ) -> PipelineResult:
     """dfs: the corpus tables (see sources.corpus_to_dataframes).
 
-    ``stop_after='cea'`` simulates a mid-run kill at a stage boundary;
-    a later call with the same checkpoint_dir resumes from there.
+    The stages run one after another in ``STAGES`` order, with or
+    without a checkpoint_dir. ``stop_after='cea'`` simulates a mid-run
+    kill at a stage boundary; a later call with the same checkpoint_dir
+    resumes from there.
 
     Without a checkpoint_dir only the multi-consumed stages
     (``_BARRIER_STAGES``) are eagerly materialized: ``cells`` (the CSV
     parse, read by candidates, ``rows_present`` and emission),
-    ``candidates``, ``entity_types`` and ``cea``. The rest stays lazy
-    until an action on their output. Every stage is Spark built-ins;
-    no Python runs on an executor.
+    ``entity_types`` and ``cea``. The rest stays lazy until an action
+    on their output. Every stage is Spark built-ins; no Python runs on
+    an executor.
     """
+    if stop_after is not None and stop_after not in STAGES:
+        raise ValueError(f"stop_after={stop_after!r} is not one of {STAGES}")
     ck = _Checkpointer(spark, checkpoint_dir, resume)
-    res = PipelineResult()
-    # share the checkpointer's live metrics list so every stop_after
-    # early return carries the lineage/sha-integrity metrics collected
-    # so far (they were previously only attached on full completion)
-    res.metrics = ck.metrics
-
-    def upto(name: str) -> bool:
-        return stop_after is not None and STAGES.index(name) > STAGES.index(stop_after)
-
-    res.stages["closure"] = ck.stage(
-        "closure",
-        lambda: build_closure(dfs["ontology_edges"], dfs["ontology_equivalent"]),
-    )
-    if upto("cells"):
-        ck.finish()
-        return res
-
-    # entity_types depends only on closure + the corpus dims — not on
-    # the cells/candidates chain. In no-checkpoint mode its eager
-    # barrier is submitted on a pool driver thread HERE, before
-    # the cells parse, so its jobs interleave with the whole
-    # cells→candidates front half: the scheduler
-    # backfills cores that single-stage tails leave idle. This cuts
-    # the sequential-action floor (the dominant term in the N→4N
-    # scaling gap at bench scale) without changing any plan — on a
-    # real cluster these are just concurrently-submitted job groups.
-    # Checkpointed runs stay sequential: stage order in the manifest
-    # is part of the resume contract.
-    et_future = rp_future = _pool = None
-    if checkpoint_dir is None and not upto("entity_types"):
-        from concurrent.futures import ThreadPoolExecutor
-
-        closure_df = res.stages["closure"]
-        closure_map = ck.described("closure", lambda: closure_to_map(closure_df))
-        # two jobs: entity_types, then the rows_present spine below
-        _pool = ThreadPoolExecutor(max_workers=2)
-        et_future = _pool.submit(
-            ck.stage,
-            "entity_types",
-            lambda: build_entity_types(
-                dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
-                closure_df, closure_map,
-            ),
-        )
+    # the checkpointer's live metrics list, so a stop_after return
+    # carries the lineage/sha-integrity metrics collected so far
+    res = PipelineResult(metrics=ck.metrics)
+    s = res.stages
 
     # per-row content-sha integrity (BASELINE.json input_hint
     # invariant): every (path, content_sha) seen in cells must equal
@@ -247,116 +207,44 @@ def run_pipeline(
             .select(F.lit("sha_integrity").alias("metric"), "n")
         )
 
-    def _abort_pool() -> None:
-        # A failure anywhere between et_future submission and its
-        # .result() must not leave the non-daemon worker thread
-        # running Spark jobs (interpreter exit would block on it):
-        # cancel whatever has not started and drop the queue.
-        # cancel() on an already-running future is best-effort, but
-        # shutdown(cancel_futures=True) guarantees nothing new starts.
-        for fut in (et_future, rp_future):
-            if fut is not None:
-                fut.cancel()
-        if _pool is not None:
-            _pool.shutdown(wait=False, cancel_futures=True)
-
-    try:
-        res.stages["cells"] = ck.stage(
-            "cells",
-            lambda: parse_cells(discover_csv_artifacts(dfs["source_repos"])),
-            extra_metric=_sha_integrity if checkpoint_dir is not None else None,
-        )
-        cells = res.stages["cells"]
-        if _pool is not None:
-            if stop_after is None:
-                # the emission row spine depends only on cells — its
-                # barrier (profiled 5-9 s at the sf2.5 scaling corpus)
-                # overlaps the whole candidates/CEA chain instead of
-                # running serially inside the triples stage
-                rp_future = _pool.submit(
-                    ck.described, "rows_present",
-                    lambda: build_rows_present(cells),
-                )
-            _pool.shutdown(wait=False)
-
-        if upto("candidates"):
-            ck.finish()
-            return res
+    def _candidates() -> tuple[DataFrame, DataFrame]:
         # both lazy: cells_m is cells plus the per-row mention_norm
-        # column, and the candidates plan runs in one action when its
-        # stage materializes
-        cm, cand = generate_candidates(data_cells(cells), dfs["entity_index"])
-        res.stages["candidates"] = ck.stage("candidates", lambda: cand)
-        if upto("cells_m"):
-            ck.finish()
-            return res
-        # cells + mention_norm, consumed by CEA here and by the
-        # fragment query — a first-class resumable stage (VERDICT r02
-        # #6)
-        res.stages["cells_m"] = ck.stage("cells_m", lambda: cm)
-        cells_m = res.stages["cells_m"]
+        # column, and candidates runs inside cea's cea_linked barrier
+        return generate_candidates(data_cells(s["cells"]), dfs["entity_index"])
 
-        if et_future is None:
+    compute = {
+        "closure": lambda: build_closure(
+            dfs["ontology_edges"], dfs["ontology_equivalent"]
+        ),
+        "cells": lambda: parse_cells(discover_csv_artifacts(dfs["source_repos"])),
+        "candidates": lambda: _candidates()[1],
+        # consumed by CEA here and by the fragment query — a
+        # first-class resumable stage (VERDICT r02 #6)
+        "cells_m": lambda: _candidates()[0],
+        "entity_types": lambda: build_entity_types(
+            dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
+            s["closure"], closure_map,
+        ),
+        "cea": lambda: cea_op(s["cells_m"], s["candidates"], s["entity_types"]),
+        "cta": lambda: cta_op(
+            s["cea"], s["entity_types"],
+            make_most_specific_udf(closure_map, AGENT_CLASS), s["closure"],
+        ),
+        "cpa": lambda: cpa_op(s["cea"], dfs["kg_triples"]),
+        "triples": lambda: emit_triples(s["cells"], s["cea"], s["cta"]),
+    }
+    for name in STAGES:
+        s[name] = ck.stage(
+            name, compute[name],
+            extra_metric=_sha_integrity if name == "cells" else None,
+        )
+        if name == "closure":
+            # the Python dict behind the closure map literal that
+            # entity_types and cta read
             closure_map = ck.described(
-                "closure", lambda: closure_to_map(res.stages["closure"])
+                "closure", lambda: closure_to_map(s["closure"])
             )
-
-        if upto("entity_types"):
-            ck.finish()
-            return res
-        if et_future is not None:
-            res.stages["entity_types"] = et_future.result()
-        else:
-            res.stages["entity_types"] = ck.stage(
-                "entity_types",
-                lambda: build_entity_types(
-                    dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
-                    res.stages["closure"], closure_map,
-                ),
-            )
-        # the guard extends through the triples stage: rp_future may
-        # still be running anywhere in the cea→triples region (the
-        # upto() early returns below cannot race it — rp_future is
-        # only submitted when stop_after is None)
-        if upto("cea"):
-            ck.finish()
-            return res
-        res.stages["cea"] = ck.stage(
-            "cea",
-            lambda: cea_op(
-                cells_m, res.stages["candidates"], res.stages["entity_types"],
-            ),
-        )
-        if upto("cta"):
-            ck.finish()
-            return res
-        ms_udf = make_most_specific_udf(closure_map, AGENT_CLASS)
-        res.stages["cta"] = ck.stage(
-            "cta",
-            lambda: cta_op(
-                res.stages["cea"], res.stages["entity_types"], ms_udf,
-                res.stages["closure"],
-            ),
-        )
-        if upto("cpa"):
-            ck.finish()
-            return res
-        res.stages["cpa"] = ck.stage(
-            "cpa", lambda: cpa_op(res.stages["cea"], dfs["kg_triples"])
-        )
-        if upto("triples"):
-            ck.finish()
-            return res
-        res.stages["triples"] = ck.stage(
-            "triples",
-            lambda: emit_triples(
-                cells, res.stages["cea"], res.stages["cta"],
-                rows_present=rp_future.result() if rp_future is not None
-                else None,
-            ),
-        )
-    except BaseException:
-        _abort_pool()
-        raise
+        if name == stop_after:
+            break
     ck.finish()
     return res

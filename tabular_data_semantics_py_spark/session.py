@@ -84,13 +84,13 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # floor for AQE partition coalescing: with the default (1m), a
         # small-in-bytes stage output coalesces to ONE partition, and a
-        # localCheckpoint taken there pins every consumer stage fused
-        # on top of it to one task (a few KB of dimension rows can
-        # carry an explode fan-out of millions). 16k keeps tiny-dim
-        # checkpoints at a handful of partitions; inert at real scale
-        # where partitions are MBs. NOTE: an explicit repartition is
-        # NOT a substitute here — a user-specified distribution on a
-        # join input disables broadcasting that side.
+        # parquet stage barrier written from it is one unsplittable
+        # file that pins every consumer scan to one task (see
+        # barriers.parquet_barrier). 16k keeps a small barrier at a
+        # handful of files; inert at real scale where partitions are
+        # MBs. NOTE: an explicit repartition is NOT a substitute here —
+        # a user-specified distribution on a join input disables
+        # broadcasting that side.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
         # AQE's parallelism-first coalescing targets
         # totalBytes / defaultParallelism, and defaultParallelism on

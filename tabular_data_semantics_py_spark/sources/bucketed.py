@@ -26,6 +26,7 @@ key".
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,18 +75,27 @@ def demo_entity_index(spark: SparkSession, n: int = 200) -> DataFrame:
     docs/explain_bucketed_index.txt) and the guarding test
     (tests/test_bucketed_index.py) build the bucketed table from —
     shared so the artifact always demonstrates exactly what the test
-    asserts."""
-    rows = [
-        (f"http://x/e{i}", f"Alpha Beta {i}", [f"ab {i}"], [], None,
-         False, i)
+    asserts. Handed to the JVM as an Arrow table (a Python row list
+    would be unpickled by a Python worker)."""
+    schema = pa.schema([
+        ("uri", pa.string()), ("label", pa.string()),
+        ("aliases", pa.list_(pa.string())), ("types", pa.list_(pa.string())),
+        ("redirect_to", pa.string()), ("is_disambiguation", pa.bool_()),
+        ("popularity", pa.int32()),
+    ])
+    return spark.createDataFrame(pa.Table.from_pylist([
+        {"uri": f"http://x/e{i}", "label": f"Alpha Beta {i}",
+         "aliases": [f"ab {i}"], "types": [], "redirect_to": None,
+         "is_disambiguation": False, "popularity": i}
         for i in range(n)
-    ]
-    return spark.createDataFrame(
-        rows,
-        "uri string, label string, aliases array<string>, "
-        "types array<string>, redirect_to string, "
-        "is_disambiguation boolean, popularity int",
-    )
+    ], schema))
+
+
+def demo_mentions(spark: SparkSession, n: int) -> DataFrame:
+    """(mention_norm) for ``n`` of the demo index's label keys, as an
+    Arrow table."""
+    return spark.createDataFrame(pa.table(
+        {"mention_norm": [f"alpha beta {i}" for i in range(n)]}))
 
 
 def formatted_explain(df: DataFrame) -> str:

@@ -15,6 +15,7 @@ from tabular_data_semantics_py_spark.operators.candidates import (
 from tabular_data_semantics_py_spark.sources.bucketed import (
     count_exchanges,
     demo_entity_index,
+    demo_mentions,
     exact_match_bucketed,
     formatted_explain,
     write_bucketed_index,
@@ -33,9 +34,7 @@ def bucketed_table(spark, tmp_path):
 
 
 def test_bucketed_join_plans_without_index_exchange(spark, bucketed_table):
-    mentions = spark.createDataFrame(
-        [(f"alpha beta {i}",) for i in range(50)], "mention_norm string"
-    )
+    mentions = demo_mentions(spark, 50)
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # disable broadcast: the demonstration is the shuffle shape a
     # 10^8-row index forces (it can never broadcast)
@@ -48,6 +47,8 @@ def test_bucketed_join_plans_without_index_exchange(spark, bucketed_table):
         # ...and the ONLY Exchange node in the plan is the mention
         # side shuffling into it; the bucketed side has none
         assert count_exchanges(plan) == 1, plan
+        # both frames are Arrow tables: no Python-filled RDD scan
+        assert "applySchemaToPythonRDD" not in plan, plan
         got = {(r.mention_norm, r.uri) for r in joined.collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)

@@ -78,8 +78,8 @@ def test_guard_sees_python_nodes(spark):
 
 def _executed_plans(spark, action) -> list[str]:
     """Formatted executed plans of every SQL execution that starts
-    while ``action`` runs (eager barriers and jobs on the pipeline's
-    pool thread included), read from the SQL status store."""
+    while ``action`` runs (eager barriers included), read from the SQL
+    status store."""
     store = spark._jsparkSession.sharedState().statusStore()
 
     def ids() -> set[int]:

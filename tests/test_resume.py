@@ -29,7 +29,7 @@ def test_kill_and_resume_identical(spark, dfs, tmp_path):
 
     # …then resume: completed stages must be read, not recomputed.
     # cea is resumed, so its operator must not run — observable as no
-    # new cea_linked / cea_prelim barrier generation in session scratch.
+    # new cea_linked barrier generation in session scratch.
     from tabular_data_semantics_py_spark.barriers import _scratch_dir
 
     def _cea_gens():
@@ -38,7 +38,7 @@ def test_kill_and_resume_identical(spark, dfs, tmp_path):
             return 0
         return sum(
             1 for n in os.listdir(d)
-            if n.startswith(("cea_linked", "cea_prelim"))
+            if n.startswith("cea_linked")
         )
 
     gens_before = _cea_gens()
