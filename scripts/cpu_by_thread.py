@@ -27,6 +27,13 @@ and of the Python workers below the JVM, and the JVM heap's committed
 and used size (``MemoryMXBean``). ``kgbench``'s ``peak_rss_mb`` is the
 peak of the three PSS figures' sum during the run.
 
+Last, it prints three JVM counters per run, each the change over the
+run: classes loaded (``ClassLoadingMXBean``), generated classes
+compiled by Janino (Spark's ``CodegenMetrics`` compilation-time
+histogram count) and milliseconds the JIT spent compiling
+(``CompilationMXBean``). They split the run's other-JVM and compiler
+CPU by cause: class loading, whole-stage codegen, JIT.
+
     python3 scripts/cpu_by_thread.py [--seed 1]
 
 Run from the repository root, with nothing else heavy on the host.
@@ -49,6 +56,7 @@ CLASSES = ("compiler", "gc", "executor_task", "other_jvm",
            "python_workers", "driver")
 MEMORY = ("jvm_pss", "driver_pss", "worker_pss", "heap_committed",
           "heap_used")
+COUNTERS = ("classes_loaded", "janino_compiles", "jit_ms")
 _TICK = os.sysconf("SC_CLK_TCK")
 
 
@@ -125,6 +133,19 @@ def memory_mib(spark, jvm_pid: int) -> dict[str, float]:
     return {k: v / 2**20 for k, v in nbytes.items()}
 
 
+def counters(spark) -> dict[str, int]:
+    """The JVM's totals so far of classes loaded, Janino compiles of
+    generated classes and JIT compile milliseconds."""
+    jvm = spark.sparkContext._jvm
+    mx = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return {
+        "classes_loaded": mx.getClassLoadingMXBean().getTotalLoadedClassCount(),
+        "janino_compiles": codegen.METRIC_COMPILATION_TIME().getCount(),
+        "jit_ms": mx.getCompilationMXBean().getTotalCompilationTime(),
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--seed", type=int, default=harness.DEFAULT_SEED)
@@ -156,14 +177,15 @@ def main(argv: list[str] | None = None) -> int:
         for run in ("cold", "warm"):
             out = run_dir / f"triples-{run}"
             harness.collect_heaps(spark)
-            before = snapshot(jvm_pid)
+            count0, before = counters(spark), snapshot(jvm_pid)
             wall, res = harness.batch_op(spark, dfs, out)
             cpu = attribute(before, snapshot(jvm_pid))
             mem = memory_mib(spark, jvm_pid)
+            count = {k: v - count0[k] for k, v in counters(spark).items()}
             verdict, _ = harness.check_batch(res, out, gold)
             clear_scratch(spark)
             shutil.rmtree(out, ignore_errors=True)
-            rows[run] = (wall, cpu, mem, verdict.ok)
+            rows[run] = (wall, cpu, mem, count, verdict.ok)
     finally:
         if spark is not None:
             harness.stop_spark(spark)
@@ -173,13 +195,16 @@ def main(argv: list[str] | None = None) -> int:
           f"local[{harness.task_slots()}], nproc {harness.nproc()}")
     print(f"{'run':<6}{'wall_s':>8}{'total':>8}"
           + "".join(f"{c:>16}" for c in CLASSES) + "  oracle")
-    for run, (wall, cpu, _, ok) in rows.items():
+    for run, (wall, cpu, _, _, ok) in rows.items():
         print(f"{run:<6}{wall:>8.1f}{sum(cpu.values()):>8.1f}"
               + "".join(f"{cpu[c]:>16.1f}" for c in CLASSES)
               + ("  exact" if ok else "  MISMATCH"))
     print(f"{'MiB':<6}" + "".join(f"{m:>16}" for m in MEMORY))
-    for run, (_, _, mem, _) in rows.items():
+    for run, (_, _, mem, _, _) in rows.items():
         print(f"{run:<6}" + "".join(f"{mem[m]:>16.0f}" for m in MEMORY))
+    print(f"{'count':<6}" + "".join(f"{c:>16}" for c in COUNTERS))
+    for run, (*_, count, _) in rows.items():
+        print(f"{run:<6}" + "".join(f"{count[c]:>16}" for c in COUNTERS))
     return 0 if all(ok for *_, ok in rows.values()) else 1
 
 

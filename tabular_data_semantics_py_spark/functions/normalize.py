@@ -13,7 +13,9 @@ Normalization rule (pinned; both oracle and Spark use exactly this):
 2. drop parenthesized groups   (kg/dbpedia.py:22-31,62-70)
 3. strip accents: NFD + drop combining marks
                                (oaei/dbpedia_fragment.py:72-78)
-4. lowercase, collapse whitespace
+4. lowercase (only ``A-Z`` is left to map; on Spark the accent
+   ``translate`` does it, since Spark's ICU ``lower`` builds a
+   title-case map of all of Unicode on first use), collapse whitespace
 """
 
 from __future__ import annotations
@@ -108,36 +110,39 @@ def lexical_score(mention_norm: str, key_norm: str) -> float:
 # (tests/test_normalize.py checks both over all of Unicode), so a
 # ``translate`` over these pairs plus dropping the remaining non-ASCII
 # characters is the strip. Built from the oracle's own strip_accents,
-# so the two cannot drift.
+# so the two cannot drift. The targets are lowercased and A-Z join the
+# table: the strip leaves ASCII, so that is the oracle's lowercase.
 _ACCENTED = {
-    c: a for c in map(chr, range(0x80, 0x10000)) if (a := strip_accents(c))
+    c: a.lower()
+    for c in map(chr, [*range(0x41, 0x5B), *range(0x80, 0x10000)])  # A-Z
+    if (a := strip_accents(c))
 }
 _ACCENT_FROM, _ACCENT_TO = "".join(_ACCENTED), "".join(_ACCENTED.values())
 
 
 def prenorm_expr(col):
-    """JVM expression for the quote-strip, bracket removal, lowercase
-    and whitespace collapse of ``normalize_mention``; the prefix of
-    ``normalize_expr``, mirrored in Python by ``prenorm_py``."""
+    """JVM expression for the quote-strip, bracket removal and
+    whitespace collapse of ``normalize_mention``; the prefix of
+    ``normalize_expr``, mirrored in Python by ``prenorm_py``. No
+    lowercase: ``normalize_expr``'s ``translate`` does it."""
     from pyspark.sql import functions as F
 
     c = F.regexp_replace(col, '"', "")
     c = F.regexp_replace(c, r"\(([^)]*)\)", " ")
-    c = F.lower(c)
     return F.trim(F.regexp_replace(c, r"\s+", " "))
 
 
 def normalize_expr(col):
     """JVM expression equal to ``normalize_mention`` on every string
     (asserted over every BMP code point in tests/test_normalize.py):
-    prenorm, accent strip by code-point table, drop what is still
-    non-ASCII, lowercase, collapse the ASCII whitespace Python's
+    prenorm, accent strip and lowercase by one code-point table, drop
+    what is still non-ASCII, collapse the ASCII whitespace Python's
     ``\\s`` matches, trim. NULL gives ``""``. All built-ins, so the
-    cell table never enters Python."""
+    cell table never enters Python. No ``lower``: see step 4 above."""
     from pyspark.sql import functions as F
 
     c = F.translate(prenorm_expr(col), _ACCENT_FROM, _ACCENT_TO)
-    c = F.lower(F.regexp_replace(c, r"[^\x00-\x7F]", ""))
+    c = F.regexp_replace(c, r"[^\x00-\x7F]", "")
     c = F.trim(F.regexp_replace(c, r"[\t\n\x0b\f\r\x1c-\x1f ]+", " "))
     return F.coalesce(c, F.lit(""))
 
@@ -165,10 +170,9 @@ def lexical_score_expr(a, b):
 
 def prenorm_py(s: str) -> str:
     """Python mirror of ``prenorm_expr`` (for property-testing the
-    prenorm→normalize composition)."""
+    prenorm→normalize composition); like it, no lowercase."""
     if s is None:
         return ""
     s = s.replace('"', "")
     s = _BRACKET_RE.sub(" ", s)
-    s = s.lower()
     return re.sub(r"[ \t\n\x0b\f\r]+", " ", s).strip(" \t\n\x0b\f\r")

@@ -17,6 +17,7 @@ Stage DAG (one wide shuffle each; SURVEY.md §7):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass, field
@@ -49,12 +50,6 @@ STAGES = [
 class PipelineResult:
     stages: dict[str, DataFrame] = field(default_factory=dict)
     metrics: list[dict] = field(default_factory=list)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        try:
-            return self.stages[name]
-        except KeyError as e:  # pragma: no cover
-            raise AttributeError(name) from e
 
 
 # stages whose output is consumed by 2+ downstream branches: in
@@ -207,9 +202,10 @@ def run_pipeline(
             .select(F.lit("sha_integrity").alias("metric"), "n")
         )
 
+    @functools.cache
     def _candidates() -> tuple[DataFrame, DataFrame]:
-        # both lazy: cells_m is cells plus the per-row mention_norm
-        # column, and candidates runs inside cea's cea_linked barrier
+        # one lazy plan for both stages (either may be resumed instead):
+        # cells_m is cells plus mention_norm; candidates runs in cea_linked
         return generate_candidates(data_cells(s["cells"]), dfs["entity_index"])
 
     compute = {

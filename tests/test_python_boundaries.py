@@ -1,11 +1,15 @@
 """Plan-shape guard: no stage of the KG job runs Python on an
 executor. The CSV parse, mention and index-key normalization,
 candidate scoring, type compatibility and the most-specific reduction
-are all Spark built-ins, so no executed plan has a Python node."""
+are all Spark built-ins, so no executed plan has a Python node. Nor
+does any executed plan map case: Spark's ``lower``/``upper``/
+``initcap`` go through ICU, whose first call in a JVM builds a
+title-case map of every code point."""
 
 import re
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -32,6 +36,10 @@ _PY_NODE = re.compile(r"^\(\d+\) (\w*(?:Python|Pandas|Arrow)\w*)", re.M)
 # a scan of an RDD that a Python worker fills (``createDataFrame`` of a
 # Python row list: its RDD is made by ``applySchemaToPythonRDD``)
 _PY_RDD = re.compile(r"^Arguments: .*\b(\w*PythonRDD)\b", re.M)
+
+
+# a case-mapping expression as a formatted plan prints it
+_CASE_MAP = re.compile(r"\b(?:lower|upper|lcase|ucase|initcap)\(")
 
 
 def _python_nodes(plan: str) -> list[str]:
@@ -145,9 +153,11 @@ def test_cea_has_no_python(spark, dfs, pipeline):
         assert _python_nodes(plan) == [], plan
 
 
-def test_pipeline_and_triples_write_have_no_python(spark, dfs):
-    """A whole batch run, ``cells`` included, plus the caller's writes
-    that execute the lazy stages (``cta``, ``cpa``, ``triples``)."""
+@pytest.fixture(scope="module")
+def batch_plans(spark, dfs) -> list[str]:
+    """The executed plans of a whole batch run, ``cells`` included,
+    plus the caller's writes that execute the lazy stages (``cta``,
+    ``cpa``, ``triples``)."""
     def action():
         res = run_pipeline(spark, dfs)
         _run(res.stages["triples"])
@@ -155,5 +165,26 @@ def test_pipeline_and_triples_write_have_no_python(spark, dfs):
 
     plans = _executed_plans(spark, action)
     assert any("regexp_extract_all" in p for p in plans)  # the CSV parse
-    for plan in plans:
+    assert any("translate(" in p for p in plans)  # the normalization
+    return plans
+
+
+def test_pipeline_and_triples_write_have_no_python(batch_plans):
+    for plan in batch_plans:
         assert _python_nodes(plan) == [], plan
+
+
+def test_guard_sees_case_mapping(spark):
+    """The pattern finds each case-mapping function in a plan (built,
+    never run, so the test JVM does not pay for ICU either)."""
+    s = F.col("id").cast("string")
+    funcs = [F.lower, F.upper, F.lcase, F.ucase, F.initcap]
+    plan = _formatted(spark.range(3).select(*(f(s) for f in funcs)))
+    assert set(_CASE_MAP.findall(plan)) == {f"{f.__name__}(" for f in funcs}
+
+
+def test_pipeline_and_triples_write_map_no_case(batch_plans):
+    """Normalization lowercases in its accent ``translate`` table, so
+    no run pays for Spark's ICU case mapping."""
+    for plan in batch_plans:
+        assert _CASE_MAP.findall(plan) == [], plan
