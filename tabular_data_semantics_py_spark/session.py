@@ -18,9 +18,10 @@ reasons sit next to each setting in ``get_spark``):
 - a 64 MiB broadcast threshold, so the KG dimension tables (ontology
   closure, redirect edges) broadcast; the entity index is joined by a
   normal equi-join, never broadcast;
-- a driver heap that grows on demand up to ``spark.driver.memory``,
-  1 MiB Tungsten pages, and JIT thresholds for C2 code ten times the
-  JDK default;
+- a driver heap that starts at a 512 MiB floor it never shrinks below
+  and grows on demand up to ``spark.driver.memory``, a 256 MiB first
+  metaspace GC threshold, 1 MiB Tungsten pages, and JIT thresholds for
+  C2 code ten times the JDK default;
 - shuffle and spill files on tmpfs when it has room (``scratch_root``);
 - the UTC session time zone, and no UI.
 
@@ -64,6 +65,14 @@ def scratch_root() -> str:
     return tempfile.gettempdir()
 
 
+def _mib(size: str) -> int:
+    """MiB in a JVM memory string as Spark reads ``spark.driver.memory``
+    (``8g``, ``2048m``; a bare number is MiB)."""
+    size = size.strip().lower().removesuffix("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024**2}.get(size[-1])
+    return int(float(size[:-1]) * scale) if scale else int(size)
+
+
 def get_spark(
     app_name: str = "tabular-data-semantics-spark",
     master: str | None = None,
@@ -78,6 +87,7 @@ def get_spark(
             )
         except ValueError:
             shuffle_partitions = 32
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -129,16 +139,33 @@ def get_spark(
         # stages at both cluster sizes.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # The heap starts small and grows on demand up to
-        # spark.driver.memory: no -Xms and no -XX:+AlwaysPreTouch, which
-        # fault the whole maximum heap in at start and hold it for the
+        .config("spark.driver.memory", driver_mem)
+        # The heap grows on demand up to spark.driver.memory: no
+        # -XX:+AlwaysPreTouch and no -Xms at the maximum, which fault
+        # the whole maximum heap in at start and hold it for the
         # session's life. Measured with kgbench's 2 GiB heap at local[2]
         # on a 4-core VM, cold kg_large_index seed 1, together with the
         # 1 MiB pages below: peak_rss_mb median 2967 -> 1765 (10 pairs;
         # the JVM's PSS at the peak ~2600 -> 1290-1430 MiB), ref_cpu_s
         # 69.5 -> 70.5; on-demand heap alone gave 2212-2396 (3 runs).
-        # The heap commits ~600-700 MiB by the end of such a run.
+        #
+        # -Xms512m is a floor, not a pre-touch: its pages become
+        # resident only when used. Without it the System.gc() before a
+        # run left 147-177 MiB committed, and G1 grows a small heap by
+        # timing: after 4 of 10 young pauses take more than a share of
+        # wall time, which it scales down with the committed size (1%
+        # below ~130 MiB of a 2 GiB maximum), it expands by up to 20%
+        # of the uncommitted heap. GC logs of
+        # cold kg_incremental runs showed a largest expansion of
+        # 175-678 MiB, and peak_rss_mb read 1032-1365. The generated
+        # classes fill ~165 MiB of metaspace, and each crossing of a
+        # metaspace threshold (the first is 21 MiB) starts a concurrent
+        # cycle whose pause counts toward that share: with the floor,
+        # 12 of 16 runs still expanded once, by 62-90 MiB. With
+        # MetaspaceSize=256m no logged run grew past 514 MiB; 12 runs
+        # of each workload read peak_rss_mb 1129-1154 (kg_large_index)
+        # and 1157-1175 (kg_incremental), at no cost in ref_cpu_s. A
+        # heap maximum under 512 MiB caps the floor.
         #
         # Tier4*Threshold x10 (JDK 17 defaults 5000/600/15000/40000):
         # a method moves from C1 to C2 code after ten times the usual
@@ -158,6 +185,7 @@ def get_spark(
         # runs ~15% slower and the tier-1 tests ~22%.
         .config(
             "spark.driver.extraJavaOptions",
+            f"-Xms{min(512, _mib(driver_mem))}m -XX:MetaspaceSize=256m "
             "-XX:Tier4InvocationThreshold=50000 "
             "-XX:Tier4MinInvocationThreshold=6000 "
             "-XX:Tier4CompileThreshold=150000 "

@@ -10,13 +10,16 @@ def test_driver_jvm_runs_raised_c2_thresholds_on_demand_heap_1m_pages(spark):
     )
     flags = {name: bean.getVMOption(name).getValue() for name in (
         "Tier4InvocationThreshold", "Tier4MinInvocationThreshold",
-        "Tier4CompileThreshold", "Tier4BackEdgeThreshold", "AlwaysPreTouch")}
+        "Tier4CompileThreshold", "Tier4BackEdgeThreshold", "AlwaysPreTouch",
+        "InitialHeapSize", "MetaspaceSize")}
     assert flags == {
         "Tier4InvocationThreshold": "50000",
         "Tier4MinInvocationThreshold": "6000",
         "Tier4CompileThreshold": "150000",
         "Tier4BackEdgeThreshold": "400000",
         "AlwaysPreTouch": "false",
+        "InitialHeapSize": str(512 << 20),
+        "MetaspaceSize": str(256 << 20),
     }
     memory = spark.sparkContext._jsc.sc().env().memoryManager()
     page = memory.pageSizeBytes()
@@ -25,3 +28,11 @@ def test_driver_jvm_runs_raised_c2_thresholds_on_demand_heap_1m_pages(spark):
     # so at this page size one task can still address the whole
     # unified pool of the idle session
     assert 8192 * page >= memory.maxOnHeapStorageMemory()
+
+
+def test_heap_floor_reads_driver_memory_as_spark_does():
+    from tabular_data_semantics_py_spark.session import _mib
+
+    # a bare number is MiB, as for spark.driver.memory
+    assert [_mib(s) for s in ("8g", "2048m", "2G", "1024", "480m")] == [
+        8192, 2048, 2048, 1024, 480]
