@@ -1,17 +1,18 @@
 """Summarize a Spark event log: per-job wall, task time, CPU, GC,
-the driver-side gaps between jobs, and the number of jobs per job
-description (``tds:<stage>`` for the pipeline's stages, ``<none>`` for
-a job without one).
+the driver-side gaps between jobs, and the number of jobs and of tasks
+per job description (``jobs_by_desc``, ``tasks_by_desc``;
+``tds:<stage>`` for the pipeline's stages, ``<none>`` for a job
+without one).
 
 Usage: python scripts/analyze_eventlog.py <eventlog-file-or-dir>
 
-Feeds the scaling-efficiency analysis (BENCH/BASELINE.md): comparing
-local[2] vs local[8] logs separates the three causes of sub-ideal
-scaling — (a) task CPU inflation (memory/GC pressure), (b) wave
-quantization / idle cores inside stages, (c) the serial driver floor
-(gaps between jobs: planning, barrier bookkeeping, Python driver
-code). Produce the logs by running any job with
-SPARK_GRAFT_EVENTLOG_DIR=<dir> (session.py hook).
+Comparing the logs of two commits on one corpus shows where a change
+moved work: more tasks under one ``tds:<stage>`` is a stage split
+finer (a partitioning or split-size change), more jobs a new action
+or barrier, and a longer ``driver_gap_s`` more serial driver time
+(planning, barrier bookkeeping, Python driver code). Produce the logs
+by running any job with SPARK_GRAFT_EVENTLOG_DIR=<dir> (session.py
+hook).
 """
 
 from __future__ import annotations
@@ -88,6 +89,9 @@ def analyze(path: str) -> dict:
             }
         )
         prev_end = j["end"]
+    tasks_by_desc: Counter = Counter()
+    for jid, j in jobs.items():
+        tasks_by_desc[j["desc"]] += per_job[jid]["tasks"]
     total_wall = ((app_end or prev_end) - app_start) / 1000 if app_start else 0
     return {
         "file": os.path.basename(path),
@@ -99,6 +103,7 @@ def analyze(path: str) -> dict:
         "gc_s": round(sum(r["gc_s"] for r in rows), 1),
         "jobs_by_desc": dict(sorted(
             Counter(j["desc"] for j in jobs.values()).items())),
+        "tasks_by_desc": dict(sorted(tasks_by_desc.items())),
         "jobs": rows,
     }
 

@@ -43,10 +43,8 @@ _SEQ = itertools.count()
 _ATEXIT_REGISTERED: set[str] = set()
 
 def _scratch_dir(spark: SparkSession) -> str:
-    # same tmpfs-preferring root as spark.local.dir (session.py
-    # scratch_root): barrier parquet is stage I/O, and on this
-    # single-disk box the disk is a fixed pipe that would not widen
-    # with cores the way a real cluster's disk pool does
+    # the same root as spark.local.dir (session.scratch_root): barrier
+    # parquet is stage I/O, like shuffle and spill files
     from .session import scratch_root
 
     app_id = spark.sparkContext.applicationId
@@ -63,21 +61,14 @@ def parquet_barrier(df: DataFrame, name: str) -> DataFrame:
     """Materialize ``df`` to scratch parquet and return a fresh native
     scan of it (plan truncated, storage pool untouched).
 
-    The write is NOT explicitly repartitioned; file-count control is
-    the session's AQE coalesce floor
-    (``coalescePartitions.minPartitionSize=16k``, session.py): a
-    shuffle-fed stage lands at ~bytes/16k partitions — data-
-    proportional width, so a small-sf barrier is a handful of files
-    (cheap task dispatch) and a large one is executor-wide. Every
-    barrier input here is shuffle-fed or scan-wide, so the floor
-    applies. The floor matters because each Spark-written file is a
-    single row group: a one-file barrier would be unsplittable and
-    every downstream stage over it would collapse to one task
-    (measured: a 1.2M-row cea_linked scan ran single-task, 4-6 s
-    serial per consumer, before the floor was configured). Probing the
-    plan width via ``df.rdd`` is NOT an option: under AQE that
-    conversion materializes the query stages, executing the upstream
-    once for the probe and again for the write.
+    The write is NOT explicitly repartitioned: it lands as many files
+    as the plan's final partitions, which AQE coalesces by Spark's
+    defaults (no smaller than 1 MiB of shuffle output each). A small
+    barrier may be one file, and a consumer scan of it one task; that
+    is expected at fixture scale, where the whole barrier is a few MB.
+    Probing the plan width via ``df.rdd`` is NOT an option: under AQE
+    that conversion materializes the query stages, executing the
+    upstream once for the probe and again for the write.
 
     Generation dirs accumulate within a session; ``clear_scratch``
     reclaims them between standalone reps, and an ``atexit`` hook

@@ -10,10 +10,10 @@ URI-minting scheme mirrors oaei/tabular2rdf.py:120-163:
 - sameAs link to the CEA entity; rdf:type from the main column's CTA.
 
 Everything is select/explode/union/dropDuplicates — pure Catalyst.
-Subject-hash bucketing for the writer lives in the sink
-(sources/sinks.py ``write_graph``), not here — emitting pre-bucketed
-would cost every non-writing consumer (counts, joins, CPA) a redundant
-full shuffle of the output.
+The output is not bucketed or repartitioned for a writer: the graph
+sink that runs is ``streaming.kg_ingest``'s plain parquet append, read
+back through ``accumulated_triples``, and a pre-bucketed output would
+cost every other consumer (counts, joins) a full shuffle.
 """
 
 from __future__ import annotations

@@ -11,8 +11,20 @@ records stage order + row counts; a metrics table records per-stage,
 per-partition row counts (lineage) plus the per-row content-sha
 integrity check.
 
-Stage DAG (one wide shuffle each; SURVEY.md §7):
-  closure → cells → candidates → entity_types → cea → cta → cpa → triples
+Stages run in ``STAGES`` order; each reads the corpus tables and the
+earlier stages named after its arrow (SURVEY.md §7):
+  closure      ← ontology
+  cells        ← source files (the CSV parse)
+  candidates   ← cells, entity index
+  cells_m      ← cells (plus the normalized mention; same plan)
+  entity_types ← entity index, KG triples, property meta, closure
+  cea          ← cells_m, candidates, entity_types
+  cta          ← cea, entity_types, closure
+  cpa          ← cea, KG triples
+  triples      ← cells, cea, cta
+A stage may hold several shuffles or none. Without a checkpoint dir
+only cells, entity_types and cea are materialized, as stage barriers
+(``_BARRIER_STAGES``).
 """
 
 from __future__ import annotations

@@ -9,20 +9,14 @@ settings.
 its own session and does not get them. What it pins, and why (the
 reasons sit next to each setting in ``get_spark``):
 
-- a 16k floor for AQE's partition coalescing, and
-  ``defaultParallelism`` and the file-scan ``minPartitionNum`` pinned
-  to the shuffle width, so partitioning follows the data rather than
-  the core count (AQE itself, its coalescing and skew-join splitting
-  and its 64m advisory partition size are Spark's defaults, not
-  restated here);
-- a 64 MiB broadcast threshold, so the KG dimension tables (ontology
-  closure, redirect edges) broadcast; the entity index is joined by a
-  normal equi-join, never broadcast;
+- the shuffle width, from the master's core count (AQE, its partition
+  coalescing and skew-join splitting, the file-scan split sizes and
+  the broadcast threshold are Spark's defaults, not restated here);
 - a driver heap that starts at a 512 MiB floor it never shrinks below
   and grows on demand up to ``spark.driver.memory``, a 256 MiB first
   metaspace GC threshold, 1 MiB Tungsten pages, and JIT thresholds for
   C2 code ten times the JDK default;
-- shuffle and spill files on tmpfs when it has room (``scratch_root``);
+- shuffle and spill files under ``scratch_root``;
 - the UTC session time zone, and no UI.
 
 No stage of the job runs Python on an executor, so nothing here
@@ -32,37 +26,16 @@ configures Python workers or Arrow.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
 
 def scratch_root() -> str:
-    """Root for shuffle/spill files and stage-barrier parquet.
-
-    Prefers a RAM-backed tmpfs (/dev/shm) with ≥32 GiB free over the
-    disk-backed temp dir. Rationale: this single-node sandbox has ONE
-    virtual disk, so disk-bound shuffle/spill/barrier I/O is a fixed
-    pipe that does not widen with cores — measured as barrier-write
-    actions scaling only ~1.9× from local[2] to local[8] while
-    compute-bound actions reached ~2.6×. A real N→4N executor cluster
-    brings 4× the local disks (I/O bandwidth scales with the cluster),
-    so tmpfs — whose bandwidth scales with memory channels, not one
-    virtio queue — is the faithful single-box emulation. Override with
-    SPARK_GRAFT_LOCAL_DIR.
-    """
-    d = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if d:
-        return d
-    shm = "/dev/shm"
-    try:
-        st = os.statvfs(shm)
-        if st.f_bavail * st.f_frsize >= 32 * 2**30:
-            return os.path.join(shm, "tds_spark")
-    except OSError:
-        pass
-    import tempfile
-
-    return tempfile.gettempdir()
+    """Root for shuffle/spill files and stage-barrier parquet:
+    ``SPARK_GRAFT_LOCAL_DIR`` when set (a deployment's scratch volume),
+    else the Python temp dir."""
+    return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or tempfile.gettempdir()
 
 
 def _mib(size: str) -> int:
@@ -92,53 +65,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # floor for AQE partition coalescing: with the default (1m), a
-        # small-in-bytes stage output coalesces to ONE partition, and a
-        # parquet stage barrier written from it is one unsplittable
-        # file that pins every consumer scan to one task (see
-        # barriers.parquet_barrier). 16k keeps a small barrier at a
-        # handful of files; inert at real scale where partitions are
-        # MBs. NOTE: an explicit repartition is NOT a substitute here —
-        # a user-specified distribution on a join input disables
-        # broadcasting that side.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-        # AQE's parallelism-first coalescing targets
-        # totalBytes / defaultParallelism, and defaultParallelism on
-        # local[N] is N — so the SAME shuffle coalesces to ~N
-        # partitions at every cluster size, i.e. exactly ~1.2 ragged
-        # waves of the fattest tasks regardless of N (event-log
-        # profiled: the CEA explode/join chain ran 9-11 tasks of ~5 s
-        # at local[8] — 135 task-seconds packed into 2 waves with 6
-        # cores idle in the second, while local[2] packed the same 10
-        # tasks into 5 full waves; N→4N efficiency of that stage
-        # capped at ~2.5x/4). Partitioning must follow the DATA, not
-        # the cluster: pin defaultParallelism to the shuffle width so
-        # the coalesce target (bytes/width) is identical at every
-        # parallelism, stages keep width-granular tasks (4 waves at
-        # 4N, 16 at N), and a straggler costs 1/width, not 1/N.
-        # Tiny dims still coalesce to the 16k floor above.
-        .config("spark.default.parallelism", str(shuffle_partitions))
-        # file-scan analogue of the floor above: maxSplitBytes =
-        # min(maxPartitionBytes, max(openCostInBytes, bytes/parallelism)),
-        # and the 4m default openCost floors a snappy-parquet stage
-        # barrier (~10× compressed KG strings) at 1-2 splits — the
-        # scan's consumers then run 3M rows on 2 tasks. 64k makes
-        # splits data-proportional; genuinely big scans still cap at
-        # maxPartitionBytes (128m), so the 100 TB regime is unchanged.
-        .config("spark.sql.files.openCostInBytes", "65536")
-        # File-scan split count follows the DATA, not the core count:
-        # maxSplitBytes = min(maxPartitionBytes, max(openCost,
-        # bytes/minPartitionNum)), and minPartitionNum defaults to
-        # defaultParallelism — which makes every stage rooted at a
-        # parquet stage-barrier scan open with ~cores splits, i.e.
-        # ~1.2 ragged waves at any cluster size (event-log profiled:
-        # 9-10-task scan stages at local[8] vs 4 at local[2] on the
-        # same barrier — a uniform ~2.5x instead of 4x N→4N speedup
-        # across the whole pipeline). Pinning it to the shuffle width
-        # gives scan stages the same wave granularity as shuffle
-        # stages at both cluster sizes.
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", driver_mem)
         # The heap grows on demand up to spark.driver.memory: no
         # -XX:+AlwaysPreTouch and no -Xms at the maximum, which fault
@@ -206,10 +132,8 @@ def get_spark(
         # page numbers raises IllegalStateException, never a wrong
         # answer.
         .config("spark.buffer.pageSize", "1m")
-        # shuffle/spill dir: tmpfs when available (see scratch_root).
-        # Spark deletes its blockmgr/spill dirs under this root on
-        # clean JVM shutdown, so tmpfs residue is bounded to crashed
-        # runs (and cleared by reboot).
+        # shuffle/spill dir (see scratch_root); Spark deletes its
+        # blockmgr/spill dirs under it on clean JVM shutdown
         .config(
             "spark.local.dir", os.path.join(scratch_root(), "local")
         )

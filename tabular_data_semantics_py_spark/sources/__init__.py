@@ -10,4 +10,3 @@ from .annotations import (  # noqa: F401
     write_cea_csv,
     write_cta_csv,
 )
-from .sinks import read_graph, write_graph  # noqa: F401

@@ -67,7 +67,7 @@ def stream_kg_triples(
     Each batch reclaims only the barrier generations IT created (a
     before/after snapshot of the scratch dir) once its append commits
     — without that, a long-lived/large-backlog drain would
-    monotonically fill the (tmpfs-preferring) scratch volume with one
+    monotonically fill the scratch volume (session.scratch_root) with one
     dead generation set per micro-batch, reclaimed only at process
     exit. The scoped reclaim leaves any EARLIER (completed)
     ``run_pipeline`` call's still-live barriers untouched — but it is
@@ -97,7 +97,7 @@ def stream_kg_triples(
             # append commits — and equally dead if the batch FAILED
             # (the retry writes a fresh generation set), so reclaim in
             # a finally: a flaky long backlog must not accumulate dead
-            # fact-scale parquet on the tmpfs-preferring scratch until
+            # fact-scale parquet on the scratch volume until
             # process exit. Reclaim ONLY this batch's generations: an
             # earlier batch-mode run_pipeline's barriers in this
             # session may still back live DataFrames.

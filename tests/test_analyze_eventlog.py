@@ -17,16 +17,19 @@ def _load():
 T0 = 1_760_000_000_000  # epoch milliseconds
 
 
-def _job(jid: int, start: int, end: int, desc: str | None) -> list[dict]:
+def _job(jid: int, start: int, end: int, desc: str | None,
+         tasks: int = 1) -> list[dict]:
+    """One job of one stage whose ``tasks`` tasks share 0.5 CPU-s."""
     start, end = T0 + start, T0 + end
     props = {} if desc is None else {"spark.job.description": desc}
+    task = {"Event": "SparkListenerTaskEnd", "Stage ID": jid,
+            "Task Info": {"Launch Time": start, "Finish Time": end},
+            "Task Metrics": {"Executor CPU Time": 500_000_000 // tasks,
+                             "JVM GC Time": 10}}
     return [
         {"Event": "SparkListenerJobStart", "Job ID": jid,
          "Submission Time": start, "Stage IDs": [jid], "Properties": props},
-        {"Event": "SparkListenerTaskEnd", "Stage ID": jid,
-         "Task Info": {"Launch Time": start, "Finish Time": end},
-         "Task Metrics": {"Executor CPU Time": 500_000_000,
-                          "JVM GC Time": 10}},
+        *[task] * tasks,
         {"Event": "SparkListenerJobEnd", "Job ID": jid,
          "Completion Time": end},
     ]
@@ -35,10 +38,10 @@ def _job(jid: int, start: int, end: int, desc: str | None) -> list[dict]:
 def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
     events = (
         [{"Event": "SparkListenerApplicationStart", "Timestamp": T0}]
-        + _job(0, 100, 600, "tds:cells")
-        + _job(1, 700, 900, "tds:cells")
+        + _job(0, 100, 600, "tds:cells", tasks=4)
+        + _job(1, 700, 900, "tds:cells", tasks=2)
         + _job(2, 1000, 1500, None)
-        + _job(3, 1600, 2000, "tds:candidates")
+        + _job(3, 1600, 2000, "tds:candidates", tasks=5)
         + [{"Event": "SparkListenerApplicationEnd",
             "Timestamp": T0 + 2100}]
     )
@@ -50,6 +53,9 @@ def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
     assert summary["jobs_by_desc"] == {
         "<none>": 1, "tds:candidates": 1, "tds:cells": 2,
     }
+    assert summary["tasks_by_desc"] == {
+        "<none>": 1, "tds:candidates": 5, "tds:cells": 6,
+    }
     assert summary["cpu_s"] == 2.0
     assert summary["driver_gap_s"] == 0.4
 
@@ -57,3 +63,4 @@ def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
     mod.main()
     printed = json.loads(capsys.readouterr().out.splitlines()[0])
     assert printed["jobs_by_desc"] == summary["jobs_by_desc"]
+    assert printed["tasks_by_desc"] == summary["tasks_by_desc"]

@@ -1,6 +1,4 @@
-"""S2/S10: SemTab annotation CSV round-trips and S9 graph sink."""
-
-import pyspark.sql.functions as F
+"""S2/S10: SemTab annotation CSV round-trips."""
 
 from tabular_data_semantics_py_spark.sources.annotations import (
     read_cea_csv,
@@ -8,7 +6,6 @@ from tabular_data_semantics_py_spark.sources.annotations import (
     write_cea_csv,
     write_cta_csv,
 )
-from tabular_data_semantics_py_spark.sources.sinks import read_graph, write_graph
 
 
 def test_cea_roundtrip(spark, pipeline, tmp_path):
@@ -79,44 +76,3 @@ def test_cea_short_row_guard(spark, tmp_path):
         ("t1", 0, 1, ("http://x/e1",)),
         ("t1", 1, 2, ("http://x/e2", "http://x/e3")),
     }
-
-
-def test_graph_sink_roundtrip(spark, pipeline, tmp_path):
-    tri = pipeline.stages["triples"]
-    p = str(tmp_path / "graph")
-    write_graph(tri, p, n_buckets=8)
-    back = read_graph(spark, p)
-    assert back.count() == tri.count()
-    assert set(back.columns) == {"subj", "pred", "obj", "obj_is_literal"}
-    # bucketing spread: more than one bucket dir materialized
-    import os
-
-    buckets = [d for d in os.listdir(p) if d.startswith("bucket=")]
-    assert len(buckets) > 1
-
-
-def test_graph_sink_hot_subject_spreads_over_writers(spark, tmp_path):
-    """A Zipf-hot subject must NOT pin one writer task: its bucket dir
-    holds multiple data files (one per (bucket, write-salt) shuffle
-    partition), while read-side bucket pruning still sees one dir."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    hot = spark.range(20_000).select(
-        F.lit("http://x/HOT").alias("subj"),
-        F.lit("http://x/p").alias("pred"),
-        F.concat(F.lit("o"), F.col("id").cast("string")).alias("obj"),
-        F.lit(False).alias("obj_is_literal"),
-    )
-    p = str(tmp_path / "graph_hot")
-    write_graph(hot, p, n_buckets=8, write_salt=8)
-
-    buckets = [d for d in os.listdir(p) if d.startswith("bucket=")]
-    assert len(buckets) == 1  # one subject -> one bucket dir (pruning)
-    files = [
-        f for f in os.listdir(os.path.join(p, buckets[0]))
-        if f.endswith(".parquet")
-    ]
-    assert len(files) > 1  # ...written by multiple salted tasks
-    assert read_graph(spark, p).count() == 20_000

@@ -36,3 +36,20 @@ def test_heap_floor_reads_driver_memory_as_spark_does():
     # a bare number is MiB, as for spark.driver.memory
     assert [_mib(s) for s in ("8g", "2048m", "2G", "1024", "480m")] == [
         8192, 2048, 2048, 1024, 480]
+
+
+def test_scratch_root_is_the_deployment_dir_or_the_temp_dir(monkeypatch):
+    """No RAM-disk branch: even with a /dev/shm that has room, scratch
+    goes to SPARK_GRAFT_LOCAL_DIR or, unset, the Python temp dir."""
+    import os
+    import tempfile
+
+    from tabular_data_semantics_py_spark.session import scratch_root
+
+    roomy = os.statvfs_result((4096, 4096, 1 << 24, 1 << 24, 1 << 24,
+                               0, 0, 0, 0, 255))  # 64 GiB free
+    monkeypatch.setattr(os, "statvfs", lambda path: roomy)
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/srv/spark-scratch")
+    assert scratch_root() == "/srv/spark-scratch"
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR")
+    assert scratch_root() == tempfile.gettempdir()
