@@ -12,7 +12,10 @@ does (the pipeline's stage barriers would otherwise hide the join
 subtree behind a barrier scan), and captures the EXECUTED, AQE-final
 plan. The summary also counts the Python UDF nodes in the plan: none,
 since mention and index-key normalization and candidate scoring are
-built-in expressions.
+built-in expressions. The pipeline run's barrier directory and the
+``plan_id`` numbers change from run to run, so they are masked
+(``<run_dir>``, ``plan_id=#``), and expression IDs are renumbered in
+order of first appearance: two captures of one plan are equal.
 
 Usage: python scripts/capture_explain_redirect.py
 """
@@ -40,13 +43,18 @@ def main() -> None:
                       master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     dfs = entry_queries._dfs(spark)
-    cells = entry_queries._pipeline(spark).stages["cells"]
+    res = entry_queries._pipeline(spark)
+    cells = res.stages["cells"]
     _, cands = generate_candidates(data_cells(cells), dfs["entity_index"])
     cands.count()  # drive AQE to its final plan
     buf = io.StringIO()
     with redirect_stdout(buf):
         cands.explain("formatted")
-    out = buf.getvalue()
+    out = re.sub(r"plan_id=\d+", "plan_id=#",
+                 buf.getvalue().replace(res.run_dir, "<run_dir>"))
+    ids: dict[str, int] = {}
+    out = re.sub(r"#(\d+)",
+                 lambda m: f"#{ids.setdefault(m[1], len(ids))}", out)
     n_bhj = out.count("BroadcastHashJoin")
     n_smj = out.count("SortMergeJoin")
     udfs = sorted(

@@ -36,6 +36,7 @@ def _cea_scored(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
+    run_dir: str | None = None,
 ) -> DataFrame:
     """Phase-2 scored candidate table: one row per (cell, candidate)
     with ``final_score`` = score + TYPE_BONUS * max column vote-share
@@ -44,14 +45,16 @@ def _cea_scored(
 
     ``linked`` is fact-scale (cells x candidates), so its barrier is a
     parquet round trip, not an executor-storage checkpoint — see
-    barriers.py for the memory rationale.
+    barriers.py for the memory rationale. It lands in ``run_dir``
+    (the calling run's directory), or in a fresh one when none is
+    given.
     """
     linked = (
         cells_with_mention.where(F.col("mention_norm") != "")
         .select(*_CELL_KEY, "mention_norm")
         .join(candidates, "mention_norm")
     )
-    linked = parquet_barrier(linked, "cea_linked")
+    linked = parquet_barrier(linked, "cea_linked", run_dir)
     # consumed by phase 1 and phase 2
 
     # phase-1 argmax as a hash aggregate (min_by over a struct whose
@@ -179,10 +182,14 @@ def cea(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
+    run_dir: str | None = None,
 ) -> DataFrame:
     """→ (table_id, col, row, uri): the final cell-entity annotation
-    (phase-2 argmax with pinned (popularity, uri) tie-break)."""
-    scored = _cea_scored(cells_with_mention, candidates, entity_types)
+    (phase-2 argmax with pinned (popularity, uri) tie-break). Its
+    internal barrier lands in ``run_dir`` (see ``_cea_scored``)."""
+    scored = _cea_scored(
+        cells_with_mention, candidates, entity_types, run_dir
+    )
     return scored.groupBy(*_CELL_KEY).agg(
         F.min_by(
             "uri",

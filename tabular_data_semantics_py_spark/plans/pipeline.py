@@ -3,13 +3,17 @@ per-partition lineage metrics (BASELINE.md resumability row).
 
 The reference resumes long batch jobs from incremental JSON/CSV
 checkpoints (test/validate_sampling.py:158-216, challenge_utils.py:
-399-413 append-reopen). Here every stage optionally materializes to a
-parquet checkpoint; a resumed run reads any stage whose checkpoint is
-complete (parquet ``_SUCCESS``) instead of recomputing, so a kill at
-any stage boundary resumes to byte-identical output. A manifest
-records stage order + row counts; a metrics table records per-stage,
-per-partition row counts (lineage) plus the per-row content-sha
-integrity check.
+399-413 append-reopen). Here each ``run_pipeline`` call owns one run
+directory: the caller's checkpoint dir when one is given, else a
+fresh directory on session scratch (barriers.py). Every stage it
+materializes, and the barrier inside ``cea``, lands there as
+``<run_dir>/<stage>``, and a stage whose parquet is complete
+(``_SUCCESS``) is read instead of recomputed. With a checkpoint dir
+every stage is materialized, so a kill at any stage boundary resumes
+to byte-identical output; a manifest records stage order + row counts
+and per-stage, per-partition row counts (lineage) plus the per-row
+content-sha integrity check. ``PipelineResult.close`` deletes a
+scratch run directory; a checkpoint dir stays.
 
 Stages run in ``STAGES`` order; each reads the corpus tables and the
 earlier stages named after its arrow (SURVEY.md §7):
@@ -23,8 +27,8 @@ earlier stages named after its arrow (SURVEY.md §7):
   cpa          ← cea, KG triples
   triples      ← cells, cea, cta
 A stage may hold several shuffles or none. Without a checkpoint dir
-only cells, entity_types and cea are materialized, as stage barriers
-(``_BARRIER_STAGES``).
+only cells, entity_types and cea are materialized
+(``_BARRIER_STAGES``), and no lineage is collected.
 """
 
 from __future__ import annotations
@@ -32,12 +36,13 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..barriers import parquet_barrier
+from ..barriers import new_run_dir, parquet_barrier
 from ..constants import AGENT_CLASS
 from ..operators.annotate import cea as cea_op
 from ..operators.annotate import cpa as cpa_op
@@ -60,8 +65,25 @@ STAGES = [
 
 @dataclass
 class PipelineResult:
+    """A run's stages and metrics, and the directory its barriers are
+    in. ``close()``, or leaving a ``with`` block, deletes that directory
+    unless it is the caller's checkpoint dir; stages read from it are
+    then unusable."""
+
+    run_dir: str
+    owns_run_dir: bool
     stages: dict[str, DataFrame] = field(default_factory=dict)
     metrics: list[dict] = field(default_factory=list)
+
+    def close(self) -> None:
+        if self.owns_run_dir:
+            shutil.rmtree(self.run_dir, ignore_errors=True)
+
+    def __enter__(self) -> PipelineResult:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 # stages whose output is consumed by 2+ downstream branches: in
@@ -81,21 +103,26 @@ _BARRIER_STAGES = {"cells", "entity_types", "cea"}
 
 
 class _Checkpointer:
-    def __init__(self, spark: SparkSession, root: str | None, resume: bool):
+    def __init__(self, spark: SparkSession, root: str, durable: bool,
+                 resume: bool):
         self.spark = spark
         self.root = root
+        self.durable = durable  # root is the caller's checkpoint dir
         self.resume = resume
         self.metrics: list[dict] = []
 
     def described(self, name: str, fn):
         """Run ``fn()`` with every job it starts on this thread labelled
         ``tds:<name>`` (AQE/broadcast subjobs inherit the description
-        through their captured thread-locals)."""
-        self.spark.sparkContext.setJobDescription(f"tds:{name}")
+        through their captured thread-locals), then restore the
+        caller's description."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"tds:{name}")
         try:
             return fn()
         finally:
-            self.spark.sparkContext.setJobDescription(None)
+            sc.setJobDescription(prev)
 
     def stage(self, name: str, compute, extra_metric=None) -> DataFrame:
         return self.described(
@@ -103,26 +130,15 @@ class _Checkpointer:
         )
 
     def _stage(self, name: str, compute, extra_metric=None) -> DataFrame:
-        if self.root is None:
-            if name in _BARRIER_STAGES:
-                # plan truncation at the stage boundary — without it
-                # Catalyst re-analyzes the upstream tree per action and
-                # re-runs the stage's subtree once per consumer.
-                # Fact-scale outputs go through a parquet barrier, NOT
-                # localCheckpoint (see barriers.py: a full-corpus
-                # executor-storage checkpoint starves every later
-                # shuffle of execution memory)
-                return parquet_barrier(compute(), name)
+        if not (self.durable or name in _BARRIER_STAGES):
             return compute()
         path = os.path.join(self.root, name)
-        done = os.path.exists(os.path.join(path, "_SUCCESS"))
-        if self.resume and done:
-            df = self.spark.read.parquet(path)
+        if self.resume and os.path.exists(os.path.join(path, "_SUCCESS")):
             self.metrics.append({"stage": name, "resumed": True})
-            return df
-        df = compute()
-        df.write.mode("overwrite").parquet(path)
-        out = self.spark.read.parquet(path)
+            return self.spark.read.parquet(path)
+        out = parquet_barrier(compute(), name, self.root)
+        if not self.durable:
+            return out
         # per-partition lineage row counts (A9 metrics-table role).
         # ``extra_metric(out) -> DataFrame[metric string, n long]``
         # rides the SAME collect (one driver action per stage, not
@@ -157,7 +173,7 @@ class _Checkpointer:
         return out
 
     def finish(self) -> None:
-        if self.root is None:
+        if not self.durable:
             return
         with open(os.path.join(self.root, "manifest.json"), "w") as f:
             json.dump({"stages": STAGES, "metrics": self.metrics}, f, indent=1)
@@ -177,6 +193,10 @@ def run_pipeline(
     kill at a stage boundary; a later call with the same checkpoint_dir
     resumes from there.
 
+    The result owns the run's scratch directory: use it in a ``with``
+    block, or call ``close()``, once its stages are consumed. An
+    unclosed one is deleted when the Spark context stops.
+
     Without a checkpoint_dir only the multi-consumed stages
     (``_BARRIER_STAGES``) are eagerly materialized: ``cells`` (the CSV
     parse, read by candidates, ``rows_present`` and emission),
@@ -186,10 +206,12 @@ def run_pipeline(
     """
     if stop_after is not None and stop_after not in STAGES:
         raise ValueError(f"stop_after={stop_after!r} is not one of {STAGES}")
-    ck = _Checkpointer(spark, checkpoint_dir, resume)
+    durable = checkpoint_dir is not None
+    ck = _Checkpointer(spark, checkpoint_dir or new_run_dir(spark),
+                       durable, resume)
     # the checkpointer's live metrics list, so a stop_after return
     # carries the lineage/sha-integrity metrics collected so far
-    res = PipelineResult(metrics=ck.metrics)
+    res = PipelineResult(ck.root, not durable, metrics=ck.metrics)
     s = res.stages
 
     # per-row content-sha integrity (BASELINE.json input_hint
@@ -233,7 +255,9 @@ def run_pipeline(
             dfs["entity_index"], dfs["kg_triples"], dfs["property_meta"],
             s["closure"], closure_map,
         ),
-        "cea": lambda: cea_op(s["cells_m"], s["candidates"], s["entity_types"]),
+        "cea": lambda: cea_op(
+            s["cells_m"], s["candidates"], s["entity_types"], ck.root
+        ),
         "cta": lambda: cta_op(
             s["cea"], s["entity_types"],
             make_most_specific_udf(closure_map, AGENT_CLASS), s["closure"],
@@ -241,18 +265,22 @@ def run_pipeline(
         "cpa": lambda: cpa_op(s["cea"], dfs["kg_triples"]),
         "triples": lambda: emit_triples(s["cells"], s["cea"], s["cta"]),
     }
-    for name in STAGES:
-        s[name] = ck.stage(
-            name, compute[name],
-            extra_metric=_sha_integrity if name == "cells" else None,
-        )
-        if name == "closure":
-            # the Python dict behind the closure map literal that
-            # entity_types and cta read
-            closure_map = ck.described(
-                "closure", lambda: closure_to_map(s["closure"])
+    try:
+        for name in STAGES:
+            s[name] = ck.stage(
+                name, compute[name],
+                extra_metric=_sha_integrity if name == "cells" else None,
             )
-        if name == stop_after:
-            break
+            if name == "closure":
+                # the Python dict behind the closure map literal that
+                # entity_types and cta read
+                closure_map = ck.described(
+                    "closure", lambda: closure_to_map(s["closure"])
+                )
+            if name == stop_after:
+                break
+    except BaseException:
+        res.close()  # a failed run leaves no scratch barriers behind
+        raise
     ck.finish()
     return res

@@ -16,7 +16,7 @@ reasons sit next to each setting in ``get_spark``):
   and grows on demand up to ``spark.driver.memory``, a 256 MiB first
   metaspace GC threshold, 1 MiB Tungsten pages, and JIT thresholds for
   C2 code ten times the JDK default;
-- shuffle and spill files under ``scratch_root``;
+- shuffle, spill and scratch barrier files under ``scratch_root``;
 - the UTC session time zone, and no UI.
 
 No stage of the job runs Python on an executor, so nothing here
@@ -32,7 +32,9 @@ from pyspark.sql import SparkSession
 
 
 def scratch_root() -> str:
-    """Root for shuffle/spill files and stage-barrier parquet:
+    """Root of ``spark.local.dir``, which holds shuffle and spill files
+    and, in the session's Spark temp dir, the stage-barrier parquet of
+    runs without a checkpoint dir (barriers.py):
     ``SPARK_GRAFT_LOCAL_DIR`` when set (a deployment's scratch volume),
     else the Python temp dir."""
     return os.environ.get("SPARK_GRAFT_LOCAL_DIR") or tempfile.gettempdir()

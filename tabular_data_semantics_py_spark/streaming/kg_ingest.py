@@ -14,7 +14,9 @@ files):
   new arrivals (Trigger.AvailableNow drains what exists, then stops —
   the deploy shape for periodic ingest jobs);
 - each micro-batch runs the UNMODIFIED batch pipeline on only the new
-  files and appends the emitted triples to a partitioned graph table;
+  files, appends the emitted triples to a partitioned graph table and
+  then deletes that run's own barrier directory, so nothing is left
+  on scratch between batches and no other run's barriers are touched;
 - correctness rests on a containment invariant, not luck: every
   corpus-level aggregation in the pipeline (CEA vote assembly, CTA
   type voting, CPA pair support, main-column election) groups by
@@ -64,21 +66,11 @@ def stream_kg_triples(
     ``checkpoint_dir`` processes only files that arrived since the
     last drain (exactly-once via the source's file log).
 
-    Each batch reclaims only the barrier generations IT created (a
-    before/after snapshot of the scratch dir) once its append commits
-    — without that, a long-lived/large-backlog drain would
-    monotonically fill the scratch volume (session.scratch_root) with one
-    dead generation set per micro-batch, reclaimed only at process
-    exit. The scoped reclaim leaves any EARLIER (completed)
-    ``run_pipeline`` call's still-live barriers untouched — but it is
-    a snapshot diff, so do NOT run other barrier-writing work (a batch
-    ``run_pipeline``, a second drain) in the same session WHILE a
-    micro-batch is in flight: generations created after the batch's
-    snapshot are indistinguishable from the batch's own and would be
-    reclaimed with them (barriers.reclaim_new_generations
-    precondition).
+    Each batch's pipeline run owns its barrier directory and releases
+    it once the batch's append commits, or when the batch raises, so a
+    long backlog does not fill the scratch volume and no other run's
+    barriers are touched.
     """
-    from ..barriers import list_generations, reclaim_new_generations
     from ..plans.pipeline import run_pipeline
 
     stream = spark.readStream.schema(SOURCE_SCHEMA).parquet(stream_dir)
@@ -86,22 +78,10 @@ def stream_kg_triples(
     def _batch(batch_df: DataFrame, _epoch: int) -> None:
         if not batch_df.take(1):
             return
-        before = list_generations(spark)
-        try:
-            dfs = dict(static_dfs)
-            dfs["source_repos"] = batch_df
-            res = run_pipeline(spark, dfs)
+        dfs = dict(static_dfs)
+        dfs["source_repos"] = batch_df
+        with run_pipeline(spark, dfs) as res:
             res.stages["triples"].write.mode("append").parquet(triples_dir)
-        finally:
-            # this batch's stage barriers are dead the moment the
-            # append commits — and equally dead if the batch FAILED
-            # (the retry writes a fresh generation set), so reclaim in
-            # a finally: a flaky long backlog must not accumulate dead
-            # fact-scale parquet on the scratch volume until
-            # process exit. Reclaim ONLY this batch's generations: an
-            # earlier batch-mode run_pipeline's barriers in this
-            # session may still back live DataFrames.
-            reclaim_new_generations(spark, before)
 
     (
         stream.writeStream.foreachBatch(_batch)

@@ -4,8 +4,11 @@ incremental JSON dumps, validate_sampling.py:158-216)."""
 
 import json
 import os
+import shutil
 
-from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
+import pytest
+
+from tabular_data_semantics_py_spark.plans.pipeline import STAGES, run_pipeline
 
 
 def _triples(df):
@@ -28,25 +31,15 @@ def test_kill_and_resume_identical(spark, dfs, tmp_path):
     assert not os.path.exists(os.path.join(ck1, "triples"))
 
     # …then resume: completed stages must be read, not recomputed.
-    # cea is resumed, so its operator must not run — observable as no
-    # new cea_linked barrier generation in session scratch.
-    from tabular_data_semantics_py_spark.barriers import _scratch_dir
-
-    def _cea_gens():
-        d = _scratch_dir(spark)
-        if not os.path.isdir(d):
-            return 0
-        return sum(
-            1 for n in os.listdir(d)
-            if n.startswith("cea_linked")
-        )
-
-    gens_before = _cea_gens()
-    assert gens_before > 0  # the killed run's cea wrote its barriers
+    # cea is resumed, so its operator must not run — observable as the
+    # killed run's cea_linked barrier in the checkpoint dir left as it
+    # was, not written again.
+    linked = os.path.join(ck1, "cea_linked", "_SUCCESS")
+    stamp = os.stat(linked).st_mtime_ns
     resumed = run_pipeline(spark, dfs, checkpoint_dir=ck1, resume=True)
     got = _triples(resumed.stages["triples"])
     assert got == want
-    assert _cea_gens() == gens_before
+    assert os.stat(linked).st_mtime_ns == stamp
 
     manifest = json.load(open(os.path.join(ck1, "manifest.json")))
     by_stage = {m["stage"]: m for m in manifest["metrics"]}
@@ -63,3 +56,31 @@ def test_sha_integrity_metric_recorded(spark, dfs, tmp_path):
     manifest = json.load(open(os.path.join(ck, "manifest.json")))
     sha = [m for m in manifest["metrics"] if m["stage"] == "sha_integrity"]
     assert sha and sha[0]["mismatches"] == 0
+
+
+@pytest.fixture(scope="module")
+def clean_triples(spark, dfs, tmp_path_factory):
+    ck = str(tmp_path_factory.mktemp("ck_clean"))
+    return _triples(run_pipeline(spark, dfs, checkpoint_dir=ck).stages["triples"])
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_resume_after_every_stage(spark, dfs, tmp_path, clean_triples, stage):
+    """A kill at any stage boundary resumes to the clean run's triples."""
+    ck = str(tmp_path / "ck")
+    run_pipeline(spark, dfs, checkpoint_dir=ck, stop_after=stage)
+    resumed = run_pipeline(spark, dfs, checkpoint_dir=ck)
+    assert _triples(resumed.stages["triples"]) == clean_triples
+
+
+def test_resume_after_kill_inside_cea(spark, dfs, tmp_path, clean_triples):
+    """A kill after cea's internal cea_linked barrier was written but
+    before cea completed: the resume writes that barrier again over
+    the old one and recomputes cea and every stage after it."""
+    ck = str(tmp_path / "ck")
+    run_pipeline(spark, dfs, checkpoint_dir=ck)
+    for name in STAGES[STAGES.index("cea"):]:
+        shutil.rmtree(os.path.join(ck, name))
+    assert os.path.exists(os.path.join(ck, "cea_linked", "_SUCCESS"))
+    resumed = run_pipeline(spark, dfs, checkpoint_dir=ck)
+    assert _triples(resumed.stages["triples"]) == clean_triples

@@ -12,6 +12,7 @@ full corpus, row for row.
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from tabular_data_semantics_py_spark.barriers import list_generations
 from tabular_data_semantics_py_spark.fixtures.generator import make_corpus
 from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
 from tabular_data_semantics_py_spark.sources.repo_source import (
@@ -39,10 +40,15 @@ def test_streamed_waves_match_batch(spark, tmp_path):
     dfs = corpus_to_dataframes(spark, corpus)
     static_dfs = {k: v for k, v in dfs.items() if k != "source_repos"}
 
-    want = sorted(
-        tuple(r) for r in run_pipeline(spark, dfs)
-        .stages["triples"].select(*TRIPLE_COLS).collect()
-    )
+    def _batch_triples(res):
+        return sorted(
+            tuple(r) for r in res.stages["triples"]
+            .select(*TRIPLE_COLS).collect()
+        )
+
+    batch = run_pipeline(spark, dfs)
+    want = _batch_triples(batch)
+    barriers = list_generations(spark)
 
     stream_dir = tmp_path / "arrivals"
     stream_dir.mkdir()
@@ -80,3 +86,8 @@ def test_streamed_waves_match_batch(spark, tmp_path):
         .select(*TRIPLE_COLS).collect()
     )
     assert redelivered == want
+
+    # every drain released its batches' barriers, and only those: the
+    # batch result made before the drains still reads
+    assert list_generations(spark) == barriers
+    assert _batch_triples(batch) == want
