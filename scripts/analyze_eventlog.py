@@ -6,6 +6,11 @@ without one).
 
 Usage: python scripts/analyze_eventlog.py <eventlog-file-or-dir>
 
+A directory is either one rolling event log (Spark 4's default,
+``eventlog_v2_<app>/`` holding ``events_<n>_<app>`` parts, read in
+order as one application) or a directory of event logs, each a file
+or a rolling log.
+
 Comparing the logs of two commits on one corpus shows where a change
 moved work: more tasks under one ``tds:<stage>`` is a stage split
 finer (a partitioning or split-size change), more jobs a new action
@@ -23,13 +28,28 @@ import sys
 from collections import Counter, defaultdict
 
 
+def _is_rolling(directory: str) -> bool:
+    return any(f.startswith("events_") for f in os.listdir(directory))
+
+
+def _lines(path: str):
+    """The lines of one application's event log: a file, or the
+    ``events_<n>_<app>`` parts of a rolling log in order of ``n``."""
+    if not os.path.isdir(path):
+        yield from open(path)
+        return
+    parts = [f for f in os.listdir(path) if f.startswith("events_")]
+    for part in sorted(parts, key=lambda f: int(f.split("_")[1])):
+        yield from open(os.path.join(path, part))
+
+
 def analyze(path: str) -> dict:
     jobs: dict[int, dict] = {}
     stage_to_job: dict[int, int] = {}
     per_job = defaultdict(lambda: {"task_ms": 0, "cpu_ms": 0, "gc_ms": 0,
                                    "tasks": 0})
     app_start = app_end = None
-    for line in open(path):
+    for line in _lines(path):
         try:
             ev = json.loads(line)
         except json.JSONDecodeError:
@@ -113,7 +133,7 @@ def main() -> None:
     files = (
         [os.path.join(target, f) for f in sorted(os.listdir(target))
          if not f.startswith(".")]
-        if os.path.isdir(target)
+        if os.path.isdir(target) and not _is_rolling(target)
         else [target]
     )
     for f in files:

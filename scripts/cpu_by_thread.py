@@ -32,7 +32,7 @@ run: classes loaded (``ClassLoadingMXBean``), generated classes
 compiled by Janino (Spark's ``CodegenMetrics`` compilation-time
 histogram count) and milliseconds the JIT spent compiling
 (``CompilationMXBean``). They split the run's other-JVM and compiler
-CPU by cause: class loading, whole-stage codegen, JIT.
+CPU by cause: class loading, generated code, JIT.
 
     python3 scripts/cpu_by_thread.py [--seed 1]
 

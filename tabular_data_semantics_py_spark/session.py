@@ -17,7 +17,9 @@ reasons sit next to each setting in ``get_spark``):
   metaspace GC threshold, 1 MiB Tungsten pages, and JIT thresholds for
   C2 code ten times the JDK default;
 - shuffle, spill and scratch barrier files under ``scratch_root``;
-- the UTC session time zone, and no UI.
+- plans evaluated interpreted: no whole-stage codegen and almost no
+  Java generated and compiled with Janino;
+- no UI and no console progress bar.
 
 No stage of the job runs Python on an executor, so nothing here
 configures Python workers or Arrow.
@@ -85,8 +87,11 @@ def get_spark(
         # below ~130 MiB of a 2 GiB maximum), it expands by up to 20%
         # of the uncommitted heap. GC logs of
         # cold kg_incremental runs showed a largest expansion of
-        # 175-678 MiB, and peak_rss_mb read 1032-1365. The generated
-        # classes fill ~165 MiB of metaspace, and each crossing of a
+        # 175-678 MiB, and peak_rss_mb read 1032-1365. Spark's own
+        # classes fill the metaspace: ~100 MiB once the session has
+        # loaded the kg_large_index corpus, ~157 MiB after a cold run
+        # and ~160 MiB after a warm one (164 and 169 with generated
+        # code, below), and each crossing of a
         # metaspace threshold (the first is 21 MiB) starts a concurrent
         # cycle whose pause counts toward that share: with the floor,
         # 12 of 16 runs still expanded once, by 62-90 MiB. With
@@ -140,8 +145,31 @@ def get_spark(
             "spark.local.dir", os.path.join(scratch_root(), "local")
         )
         .config("spark.ui.enabled", "false")
+        # pyspark starts its JVM through spark-submit as a shell, and
+        # spark-submit turns the console progress bar on for shells
+        # unless the conf sets it: a timer thread redrawing stage
+        # progress on stderr (tests/test_session.py reads it back)
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
+        # Interpreted plans, no generated Java: Spark's projections,
+        # predicates and orderings come from its interpreted
+        # implementations, and CollapseCodegenStages plans no
+        # whole-stage codegen stage. An internal setting (Spark
+        # documents it for its own tests; CodegenObjectFactory and
+        # CollapseCodegenStages read it in 4.1.2), so
+        # tests/test_python_boundaries.py fails if a Spark release
+        # stops honouring it. At fixture scale a run is mostly fixed
+        # cost, and generating Java source, compiling it with Janino
+        # and JIT-compiling the result cost more than the per-row work
+        # it speeds up. Measured at local[2] on a 4-core VM, seed 1:
+        # scripts/cpu_by_thread.py's cold run 44.4 -> 35.7 CPU-s
+        # (compiler 15.6 -> 11.3, other JVM 18.8 -> 15.6, executor
+        # tasks 8.1 -> 7.2), Janino compiles 222 -> 6 cold and
+        # 209 -> 0 warm, the warm run's executor tasks 4.6 -> 3.1 s;
+        # kgbench kg_large_index ref_cpu_s median 46.2 -> 38.8
+        # (10 pairs, 10/10). Whole-stage codegen is Spark's per-row
+        # speed: a corpus whose executor work outweighs the compile
+        # cost would want it back.
+        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     )
     # profiling hook (kgbench --trace 1 reads it for per-layer task,
     # CPU and barrier timing): uncompressed event log so the

@@ -35,21 +35,17 @@ def _job(jid: int, start: int, end: int, desc: str | None,
     ]
 
 
-def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
-    events = (
-        [{"Event": "SparkListenerApplicationStart", "Timestamp": T0}]
-        + _job(0, 100, 600, "tds:cells", tasks=4)
-        + _job(1, 700, 900, "tds:cells", tasks=2)
-        + _job(2, 1000, 1500, None)
-        + _job(3, 1600, 2000, "tds:candidates", tasks=5)
-        + [{"Event": "SparkListenerApplicationEnd",
-            "Timestamp": T0 + 2100}]
-    )
-    log = tmp_path / "app-1"
-    log.write_text("".join(json.dumps(e) + "\n" for e in events))
+EVENTS = (
+    [{"Event": "SparkListenerApplicationStart", "Timestamp": T0}]
+    + _job(0, 100, 600, "tds:cells", tasks=4)
+    + _job(1, 700, 900, "tds:cells", tasks=2)
+    + _job(2, 1000, 1500, None)
+    + _job(3, 1600, 2000, "tds:candidates", tasks=5)
+    + [{"Event": "SparkListenerApplicationEnd", "Timestamp": T0 + 2100}]
+)
 
-    mod = _load()
-    summary = mod.analyze(str(log))
+
+def _check(summary: dict) -> None:
     assert summary["jobs_by_desc"] == {
         "<none>": 1, "tds:candidates": 1, "tds:cells": 2,
     }
@@ -59,8 +55,42 @@ def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
     assert summary["cpu_s"] == 2.0
     assert summary["driver_gap_s"] == 0.4
 
+
+def test_counts_jobs_per_description(tmp_path, capsys, monkeypatch):
+    log = tmp_path / "app-1"
+    log.write_text("".join(json.dumps(e) + "\n" for e in EVENTS))
+
+    mod = _load()
+    summary = mod.analyze(str(log))
+    _check(summary)
+
     monkeypatch.setattr(mod.sys, "argv", ["analyze_eventlog.py", str(tmp_path)])
     mod.main()
     printed = json.loads(capsys.readouterr().out.splitlines()[0])
     assert printed["jobs_by_desc"] == summary["jobs_by_desc"]
     assert printed["tasks_by_desc"] == summary["tasks_by_desc"]
+
+
+def test_reads_a_rolling_log_as_one_application(tmp_path, capsys,
+                                                monkeypatch):
+    """Spark 4's default rolling log is a directory of numbered parts;
+    one event a part puts ``events_10_*`` before ``events_2_*`` in name
+    order, so only reading the parts by number keeps each job's start
+    ahead of its tasks."""
+    app = "local-1760000000000"
+    log = tmp_path / f"eventlog_v2_{app}"
+    log.mkdir()
+    (log / f"appstatus_{app}").write_text("")
+    for n, event in enumerate(EVENTS, 1):
+        (log / f"events_{n}_{app}").write_text(json.dumps(event) + "\n")
+    assert len(EVENTS) > 10
+
+    mod = _load()
+    _check(mod.analyze(str(log)))
+    for target in (log, tmp_path):  # the log, or a directory of logs
+        monkeypatch.setattr(mod.sys, "argv",
+                            ["analyze_eventlog.py", str(target)])
+        mod.main()
+        out = capsys.readouterr().out.splitlines()
+        assert len([line for line in out if line.startswith("{")]) == 1
+        _check(json.loads(out[0]))

@@ -4,7 +4,9 @@ candidate scoring, type compatibility and the most-specific reduction
 are all Spark built-ins, so no executed plan has a Python node. Nor
 does any executed plan map case: Spark's ``lower``/``upper``/
 ``initcap`` go through ICU, whose first call in a JVM builds a
-title-case map of every code point."""
+title-case map of every code point. Nor does any executed plan hold a
+whole-stage codegen stage: the session evaluates plans interpreted, so
+a run compiles almost no generated Java."""
 
 import re
 
@@ -153,20 +155,33 @@ def test_cea_has_no_python(spark, dfs, pipeline):
         assert _python_nodes(plan) == [], plan
 
 
+def _janino_compiles(spark) -> int:
+    """Generated classes Janino has compiled so far in the JVM."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return codegen.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 @pytest.fixture(scope="module")
-def batch_plans(spark, dfs) -> list[str]:
+def batch_run(spark, dfs) -> tuple[list[str], int]:
     """The executed plans of a whole batch run, ``cells`` included,
     plus the caller's writes that execute the lazy stages (``cta``,
-    ``cpa``, ``triples``)."""
+    ``cpa``, ``triples``), and the number of classes Janino compiled
+    while they ran."""
     def action():
         res = run_pipeline(spark, dfs)
         _run(res.stages["triples"])
         _run(res.stages["cpa"])
 
+    compiles = _janino_compiles(spark)
     plans = _executed_plans(spark, action)
     assert any("regexp_extract_all" in p for p in plans)  # the CSV parse
     assert any("translate(" in p for p in plans)  # the normalization
-    return plans
+    return plans, _janino_compiles(spark) - compiles
+
+
+@pytest.fixture(scope="module")
+def batch_plans(batch_run) -> list[str]:
+    return batch_run[0]
 
 
 def test_pipeline_and_triples_write_have_no_python(batch_plans):
@@ -188,3 +203,31 @@ def test_pipeline_and_triples_write_map_no_case(batch_plans):
     no run pays for Spark's ICU case mapping."""
     for plan in batch_plans:
         assert _CASE_MAP.findall(plan) == [], plan
+
+
+# a whole-stage codegen stage as a formatted plan prints it: the
+# WholeStageCodegen node, or an operator's ``[codegen id : n]``
+_WHOLE_STAGE = re.compile(r"WholeStageCodegen|\[codegen id")
+# the Janino compiles left in a fixture batch run started with an empty
+# codegen cache, by the generator that Spark calls without the
+# interpreted fallback (the cache keys a class by its source, so a run
+# after another compiles fewer)
+_BYPASS_COMPILES = {
+    # TungstenAggregationIterator joins a group's key and buffer rows:
+    # one class per distinct pair of row types among the hash aggregates
+    "GenerateUnsafeRowJoiner": 7,
+    # SortBasedAggregator orders the group keys when an object hash
+    # aggregate (collect_set) falls back to sorting past 128 keys
+    "GenerateOrdering": 1,
+}
+
+
+def test_pipeline_and_triples_write_run_interpreted(batch_run):
+    """``spark.sql.codegen.factoryMode=NO_CODEGEN`` holds: no plan has a
+    whole-stage codegen stage, and Janino compiles only the classes of
+    the generators that bypass the interpreted fallback. With codegen a
+    fixture batch run compiles ~240 classes."""
+    plans, compiles = batch_run
+    for plan in plans:
+        assert _WHOLE_STAGE.findall(plan) == [], plan
+    assert compiles <= sum(_BYPASS_COMPILES.values()), compiles

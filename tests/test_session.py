@@ -53,3 +53,12 @@ def test_scratch_root_is_the_deployment_dir_or_the_temp_dir(monkeypatch):
     assert scratch_root() == "/srv/spark-scratch"
     monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR")
     assert scratch_root() == tempfile.gettempdir()
+
+
+def test_session_runs_plans_interpreted_without_console_progress(spark):
+    """Read back from the live session and context: plans are
+    evaluated with no generated code, and no console progress bar runs
+    (pyspark launches its JVM as a shell, and spark-submit turns the
+    bar on for shells unless the conf sets it)."""
+    assert spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
+    assert not spark.sparkContext._jsc.sc().progressBar().isDefined()
