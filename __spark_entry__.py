@@ -3,7 +3,7 @@
 - ``entry(spark)``   — flagship: the full KG-construction pipeline on
   the deterministic fixture corpus → emitted (subj, pred, obj,
   obj_is_literal) triples.
-- ``queries()``      — the 18 ``kg_*`` queries, each running or reading
+- ``queries()``      — the 15 ``kg_*`` queries, each running or reading
   a stage of the KG-construction job (SURVEY.md §2), all over the
   fixture corpus (the ``sf_dir`` argument is ignored).
 - ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query, embedding

@@ -12,10 +12,12 @@ does (the pipeline's stage barriers would otherwise hide the join
 subtree behind a barrier scan), and captures the EXECUTED, AQE-final
 plan. The summary also counts the Python UDF nodes in the plan: none,
 since mention and index-key normalization and candidate scoring are
-built-in expressions. The pipeline run's barrier directory and the
-``plan_id`` numbers change from run to run, so they are masked
-(``<run_dir>``, ``plan_id=#``), and expression IDs are renumbered in
-order of first appearance: two captures of one plan are equal.
+built-in expressions. The pipeline run's barrier directory, the
+corpus cache directory (named by a hash of the corpus tables) and the
+``plan_id`` numbers change from run to run or with the corpus, so they
+are masked (``<run_dir>``, ``<corpus_dir>``, ``plan_id=#``), and
+expression IDs are renumbered in order of first appearance: two
+captures of one plan are equal.
 
 Usage: python scripts/capture_explain_redirect.py
 """
@@ -52,6 +54,7 @@ def main() -> None:
         cands.explain("formatted")
     out = re.sub(r"plan_id=\d+", "plan_id=#",
                  buf.getvalue().replace(res.run_dir, "<run_dir>"))
+    out = re.sub(r"/[^\s\[\]]*/tds_corpus_\w+", "<corpus_dir>", out)
     ids: dict[str, int] = {}
     out = re.sub(r"#(\d+)",
                  lambda m: f"#{ids.setdefault(m[1], len(ids))}", out)

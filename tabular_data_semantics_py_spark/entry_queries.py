@@ -1,8 +1,8 @@
 """Query registry backing ``__spark_entry__.py``.
 
-The 18 queries are ``kg_*`` KG-construction operators (SURVEY.md §2);
+The 15 queries are ``kg_*`` KG-construction operators (SURVEY.md §2);
 each one runs or reads a stage of the table→KG job (parse, closure,
-candidates, types, CEA/CTA/CPA, emission, fragment) on the
+redirects, candidates, types, CEA/CTA/CPA, emission, fragment) on the
 deterministic fixture corpus (BASELINE.json: no
 external data; the corpus is synthesized in-process, seed=42). Oracle
 SQL embeds the fixture as VALUES CTEs and either re-implements the
@@ -20,7 +20,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from . import constants as C
 from .fixtures.generator import make_corpus
@@ -198,21 +197,12 @@ LEFT JOIN idx c ON b.rto = c.uri
 def kg_redirects(spark, sf_dir):
     """J3: bounded 2-hop redirect resolution
     (challenge_utils.py:441-453)."""
+    from .operators.candidates import resolve_redirects
+
     idx = _dfs(spark)["entity_index"]
-    # only advance to targets present in the index (dangling redirects
-    # keep the source — the oracle's LEFT-JOIN COALESCE semantics)
-    red = idx.join(
-        idx.select(F.col("uri").alias("_tgt")),
-        F.col("redirect_to") == F.col("_tgt"),
-        "left_semi",
-    ).select(F.col("uri").alias("r_src"), F.col("redirect_to").alias("r_dst"))
-    out = idx.select("uri", F.col("uri").alias("final_uri"))
-    for _ in range(C.REDIRECT_MAX_HOPS):
-        out = (
-            out.join(red, out.final_uri == red.r_src, "left")
-            .select("uri", F.coalesce("r_dst", "final_uri").alias("final_uri"))
-        )
-    return out
+    return resolve_redirects(
+        idx.select("uri", F.col("uri").alias("final_uri")), idx, "final_uri"
+    )
 
 
 def _o_candidates():
@@ -257,59 +247,6 @@ def kg_entity_types(spark, sf_dir):
     return (
         _pipeline(spark).stages["entity_types"]
         .select("uri", F.concat_ws(" ", F.col("types")).alias("types_str"))
-    )
-
-
-def _o_wikidata_types():
-    corpus, ex, _ = _fixture()
-    sa = corpus.cross_sameas
-    wt = [
-        (s, o)
-        for (s, p, o, lit) in corpus.triples
-        if p == C.RDF_TYPE and o.startswith(C.WD_ONTOLOGY_NS)
-    ]
-    clo = sorted(
-        (c, a)
-        for c, ancs in ex.closure.items()
-        for a in ancs
-        if a.startswith(C.ONTOLOGY_NS)
-    )
-    avoid = ", ".join(_s(x) for x in sorted(C.AVOID_TOP_CONCEPTS))
-    return f"""
-WITH sa(uri, wd) AS (SELECT * FROM {_values(sa, "uri, wd")}),
-wt(wd, wcls) AS (SELECT * FROM {_values(wt, "wd, wcls")}),
-eq(wcls, dbo) AS (SELECT * FROM {_values(corpus.wd_equiv, "wcls, dbo")}),
-clo(c, a) AS (SELECT * FROM {_values(clo, "c, a")}),
-alive AS (SELECT * FROM wt WHERE wd NOT IN
-          (SELECT DISTINCT wd FROM wt
-           WHERE wcls = {_s(C.WD_DISAMBIGUATION_CLASS)})),
-base AS (SELECT sa.uri, eq.dbo AS t FROM sa
-         JOIN alive ON sa.wd = alive.wd
-         JOIN eq ON alive.wcls = eq.wcls),
-allx AS (SELECT uri, t FROM base
-         UNION SELECT b.uri, clo.a FROM base b JOIN clo ON b.t = clo.c),
-filt AS (SELECT DISTINCT uri, t FROM allx WHERE t NOT IN ({avoid}))
-SELECT uri, string_agg(t, ' ' ORDER BY t) AS types_str
-FROM filt GROUP BY uri
-"""
-
-
-@q("kg_wikidata_types", _o_wikidata_types)
-def kg_wikidata_types(spark, sf_dir):
-    """D4 as a GENUINE cross-KG hop over a two-namespace fixture:
-    dbpedia-role entity → sameAs → wikidata-role twin → wd types
-    (disambiguation kill) → equivalent dbo classes → superclass
-    closure → dbo filter (matching/kg_matching.py:394-440;
-    operators/cross_kg.py)."""
-    from .operators.cross_kg import wikidata_strategy_types
-
-    dfs = _dfs(spark)
-    t = wikidata_strategy_types(
-        dfs["cross_sameas"], dfs["kg_triples"], dfs["wd_equiv"],
-        _pipeline(spark).stages["closure"],
-    )
-    return t.select(
-        "uri", F.concat_ws(" ", F.col("types_wd")).alias("types_str")
     )
 
 
@@ -371,28 +308,6 @@ def _o_cea():
 def kg_cea(spark, sf_dir):
     """EP2/D-cascade: final cell-entity annotations."""
     return _pipeline(spark).stages["cea"].select("table_id", "col", "row", "uri")
-
-
-def _o_cea_multi():
-    _, _, gold = _fixture()
-    return (
-        'SELECT table_id, c AS col, r AS "row", uris FROM '
-        + _values(gold.cea_multi, "table_id, c, r, uris")
-    )
-
-
-@q("kg_cea_multi", _o_cea_multi)
-def kg_cea_multi(spark, sf_dir):
-    """Multi-entity CEA: space-joined URI sets for phase-2 score ties
-    within CEA_TIE_EPS (reference multi-URI CEA cells,
-    challenge_utils.py:336-346,682-707)."""
-    from .operators.annotate import cea_multi
-
-    pipe = _pipeline(spark)
-    return cea_multi(
-        pipe.stages["cells_m"], pipe.stages["candidates"],
-        pipe.stages["entity_types"],
-    )
 
 
 def _o_cta():
@@ -466,67 +381,6 @@ def _o_cpa():
 def kg_cpa(spark, sf_dir):
     """CPA: predicate voting between entity columns."""
     return _pipeline(spark).stages["cpa"]
-
-
-def _o_cpa_all_pairs():
-    corpus, _, gold = _fixture()
-    cea_rows = [(t, c, r, u) for (t, c, r, u) in gold.cea]
-    rel = [
-        (s, p, o) for (s, p, o, lit) in corpus.triples
-        if not lit and p != C.RDF_TYPE and p not in C.AVOID_PREDICATES
-    ]
-    return f"""
-WITH cea(table_id, c, r, uri) AS (SELECT * FROM {_values(cea_rows, "table_id, c, r, uri")}),
-rel(s, p, o) AS (SELECT * FROM {_values(rel, "s, p, o")}),
-votes AS (
-  SELECT a.table_id, a.c AS col_subj, b.c AS col_obj, rel.p AS pred,
-         COUNT(*) AS n
-  FROM cea a
-  JOIN cea b ON a.table_id = b.table_id AND a.r = b.r AND a.c <> b.c
-  JOIN rel ON rel.s = a.uri AND rel.o = b.uri
-  GROUP BY 1, 2, 3, 4
-),
-ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY table_id, col_subj, col_obj
-                               ORDER BY n DESC, pred) AS rn
-  FROM votes
-)
-SELECT table_id, col_subj, col_obj, pred, n AS votes
-FROM ranked WHERE rn = 1
-"""
-
-
-@q("kg_cpa_all_pairs", _o_cpa_all_pairs)
-def kg_cpa_all_pairs(spark, sf_dir):
-    """CPA generalized to ALL ordered entity-column pairs (the
-    reference only targets main-column pairs, test/mergeFiles.py:60-70;
-    full-pair voting is the same operator without the J15 restriction)."""
-    pipe = _pipeline(spark)
-    cea_df = pipe.stages["cea"]
-    a = cea_df.select("table_id", "row", F.col("col").alias("col_subj"),
-                      F.col("uri").alias("s_uri"))
-    b = cea_df.select("table_id", "row", F.col("col").alias("col_obj"),
-                      F.col("uri").alias("o_uri"))
-    rel = _dfs(spark)["kg_triples"].where(
-        (~F.col("obj_is_literal"))
-        & (F.col("pred") != C.RDF_TYPE)
-        & ~F.col("pred").isin(*sorted(C.AVOID_PREDICATES))
-    ).select(F.col("subj").alias("s_uri"), "pred", F.col("obj").alias("o_uri"))
-    votes = (
-        a.join(b, ["table_id", "row"])
-        .where(F.col("col_subj") != F.col("col_obj"))
-        .join(rel, ["s_uri", "o_uri"])
-        .groupBy("table_id", "col_subj", "col_obj", "pred")
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    w = Window.partitionBy("table_id", "col_subj", "col_obj").orderBy(
-        F.desc("votes"), F.asc("pred")
-    )
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("table_id", "col_subj", "col_obj", "pred", "votes")
-    )
 
 
 def _o_triples():

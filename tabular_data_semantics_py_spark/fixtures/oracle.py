@@ -65,7 +65,6 @@ from ..constants import (
     TOP_K_CANDIDATES,
     TYPE_BONUS,
 )
-from ..constants import CEA_TIE_EPS
 from ..functions.normalize import lexical_score, normalize_mention
 from .generator import FixtureCorpus
 
@@ -83,10 +82,6 @@ class GoldAnnotations:
     candidates: dict[tuple[str, int, int], list[tuple[str, float]]] = field(
         default_factory=dict
     )
-    # multi-entity CEA (reference challenge_utils.py:336-346 space-
-    # joined multi-URI cells): all candidates whose phase-2 final score
-    # ties the winner within CEA_TIE_EPS, sorted, space-joined
-    cea_multi: list[tuple[str, int, int, str]] = field(default_factory=list)
 
 
 def parse_csv_content(content: str) -> tuple[list[str], list[tuple[int, list[str]]]]:
@@ -332,14 +327,12 @@ class OracleExecutor:
 
         # phase 2: final CEA with column-coherence bonus
         cea: dict[tuple[str, int, int], str] = {}
-        multi: dict[tuple[str, int, int], str] = {}
         for key, cands in cand_per_cell.items():
             tid, c, r = key
             votes = col_votes.get((tid, c), {})
             n = col_n.get((tid, c), 1)
             best: tuple[float, int, str] | None = None
             best_uri = None
-            finals: dict[str, float] = {}
             for uri, sc in cands:
                 share = 0.0
                 for t in self.types_for_entity(uri):
@@ -347,20 +340,13 @@ class OracleExecutor:
                     if v > share:
                         share = v
                 final = sc + TYPE_BONUS * share
-                finals[uri] = max(final, finals.get(uri, final))
                 rank = (-final, -self.ent[uri].popularity, uri)
                 if best is None or rank < best:
                     best = rank
                     best_uri = uri
             cea[key] = best_uri  # type: ignore[assignment]
-            top = max(finals.values())
-            multi[key] = " ".join(
-                sorted(u for u, f in finals.items() if f >= top - CEA_TIE_EPS)
-            )
         for (tid, c, r), uri in sorted(cea.items()):
             gold.cea.append((tid, c, r, uri))
-        for (tid, c, r), uris in sorted(multi.items()):
-            gold.cea_multi.append((tid, c, r, uris))
 
         # CTA: vote over most-specific types of CEA entities
         cta_votes: dict[tuple[str, int], dict[str, int]] = {}

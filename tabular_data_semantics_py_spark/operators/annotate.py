@@ -32,16 +32,17 @@ from ..constants import (
 _CELL_KEY = ["table_id", "col", "row"]
 
 
-def _cea_scored(
+def cea(
     cells_with_mention: DataFrame,
     candidates: DataFrame,
     entity_types: DataFrame,
     run_dir: str | None = None,
 ) -> DataFrame:
-    """Phase-2 scored candidate table: one row per (cell, candidate)
-    with ``final_score`` = score + TYPE_BONUS * max column vote-share
-    over the candidate's types. Shared by ``cea`` (argmax) and
-    ``cea_multi`` (epsilon-tie set). Pinned spec in fixtures/oracle.py.
+    """→ (table_id, col, row, uri): the final cell-entity annotation,
+    the phase-2 argmax over one row per (cell, candidate) with
+    ``final_score`` = score + TYPE_BONUS * max column vote-share over
+    the candidate's types, and a pinned (popularity, uri) tie-break.
+    Pinned spec in fixtures/oracle.py.
 
     ``linked`` is fact-scale (cells x candidates), so its barrier is a
     parquet round trip, not an executor-storage checkpoint — see
@@ -162,7 +163,7 @@ def _cea_scored(
     # these joins are shuffles). With no broadcast consumer left,
     # cu_votes no longer needs its re-execution barrier: its fat
     # explode subtree executes exactly once inside the one cea action.
-    cand_typed = (
+    return (
         linked.join(cu_votes.hint("shuffle_hash"), ["table_id", "col", "uri"])
         .join(col_n.hint("shuffle_hash"), ["table_id", "col"])
         .withColumn(
@@ -170,59 +171,16 @@ def _cea_scored(
             F.col("score")
             + F.lit(TYPE_BONUS) * (F.col("max_votes") / F.col("n_col")),
         )
-        .select(
-            *_CELL_KEY, "uri", "score", "popularity", "max_votes",
-            "n_col", "final_score",
-        )
-    )
-    return cand_typed
-
-
-def cea(
-    cells_with_mention: DataFrame,
-    candidates: DataFrame,
-    entity_types: DataFrame,
-    run_dir: str | None = None,
-) -> DataFrame:
-    """→ (table_id, col, row, uri): the final cell-entity annotation
-    (phase-2 argmax with pinned (popularity, uri) tie-break). Its
-    internal barrier lands in ``run_dir`` (see ``_cea_scored``)."""
-    scored = _cea_scored(
-        cells_with_mention, candidates, entity_types, run_dir
-    )
-    return scored.groupBy(*_CELL_KEY).agg(
-        F.min_by(
-            "uri",
-            F.struct(
-                (-F.col("final_score")).alias("nf"),
-                (-F.col("popularity")).alias("np"),
-                F.col("uri"),
-            ),
-        ).alias("uri")
-    )
-
-
-def cea_multi(
-    cells_with_mention: DataFrame,
-    candidates: DataFrame,
-    entity_types: DataFrame,
-) -> DataFrame:
-    """→ (table_id, col, row, uris): multi-entity CEA — every candidate
-    whose phase-2 final score ties the cell's best within CEA_TIE_EPS,
-    sorted and space-joined (the reference's multi-URI CEA cells,
-    test/challenge_utils.py:336-346,682-707). The arithmetic is the
-    same single-IEEE-op order as the Python oracle, so the tie set is
-    reproduced exactly."""
-    from ..constants import CEA_TIE_EPS
-
-    scored = _cea_scored(cells_with_mention, candidates, entity_types)
-    wmax = Window.partitionBy(*_CELL_KEY)
-    return (
-        scored.withColumn("best", F.max("final_score").over(wmax))
-        .where(F.col("final_score") >= F.col("best") - F.lit(CEA_TIE_EPS))
         .groupBy(*_CELL_KEY)
         .agg(
-            F.concat_ws(" ", F.array_sort(F.collect_set("uri"))).alias("uris")
+            F.min_by(
+                "uri",
+                F.struct(
+                    (-F.col("final_score")).alias("nf"),
+                    (-F.col("popularity")).alias("np"),
+                    F.col("uri"),
+                ),
+            ).alias("uri")
         )
     )
 

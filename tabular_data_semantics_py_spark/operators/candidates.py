@@ -19,9 +19,9 @@ Dataflow (each stage cites the scale rationale):
    (shared ≥1 token) bounds the candidate pairs, then a JVM built-in
    expression scores them (edit similarity + token Jaccard)
    — kg/lookup.py:95-106's ranking, no Python.
-4. redirect resolution — ≤ REDIRECT_MAX_HOPS chained left joins on the
-   redirect edge table (challenge_utils.py:441-453 bounded closure),
-   dedup by final URI keeping max score.
+4. redirect resolution — ``resolve_redirects``: ≤ REDIRECT_MAX_HOPS
+   chained left joins on the redirect edge table (challenge_utils.py:
+   441-453 bounded closure), dedup by final URI keeping max score.
 5. top-k          — window (score desc, popularity desc, uri asc),
    pinned tie-break (SURVEY.md §7 Determinism).
 """
@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..constants import FUZZY_MIN_SCORE, TOP_K_CANDIDATES
+from ..constants import FUZZY_MIN_SCORE, REDIRECT_MAX_HOPS, TOP_K_CANDIDATES
 from ..functions.normalize import lexical_score_expr, normalize_expr
 
 
@@ -61,6 +61,42 @@ def build_index_keys(entity_index: DataFrame) -> DataFrame:
         .where(F.col("key_norm") != "")
         .dropDuplicates(["uri", "key_norm"])
     )
+
+
+def resolve_redirects(
+    df: DataFrame, entity_index: DataFrame, col: str = "uri"
+) -> DataFrame:
+    """``df`` with each URI in ``col`` replaced by its redirect target,
+    followed for at most REDIRECT_MAX_HOPS chained left joins
+    (challenge_utils.py:441-453 bounded closure). Only advance to a
+    target that exists in the index — a dangling redirect keeps the
+    source URI (the oracle's COALESCE(c.uri, b.uri, a.uri) LEFT-JOIN
+    semantics)."""
+    # NO broadcast hint (VERDICT r04 #4): redirect pages are ordinary
+    # entities, so the redirect table is a MATERIAL fraction of the
+    # entity index — at the 10^8-entity target it is far past
+    # broadcast size, and a forced hint would OOM executors (the same
+    # reason the index join in generate_candidates carries no hint).
+    # Parquet stats / AQE pick broadcast on their own while the table
+    # is small — docs/explain_redirect_join.txt pins the fixture-scale
+    # plan at BroadcastHashJoin with no hint present.
+    redirects = (
+        entity_index.where(F.col("redirect_to").isNotNull())
+        .join(
+            entity_index.select(F.col("uri").alias("_tgt")),
+            F.col("redirect_to") == F.col("_tgt"),
+            "left_semi",
+        )
+        .select(F.col("uri").alias("r_src"), F.col("redirect_to").alias("r_dst"))
+    )
+    for _ in range(REDIRECT_MAX_HOPS):
+        df = df.join(redirects, df[col] == redirects.r_src, "left").select(
+            *[
+                F.coalesce(F.col("r_dst"), F.col(c)).alias(c) if c == col else c
+                for c in df.columns
+            ]
+        )
+    return df
 
 
 def generate_candidates(
@@ -130,39 +166,7 @@ def generate_candidates(
         .select("mention_norm", "uri", "score")
     )
 
-    cands = exact.unionByName(fuzzy)
-
-    # redirect resolution: bounded 2-hop chained left joins. Only
-    # advance to a redirect target that exists in the index — a
-    # dangling redirect keeps the source URI (the oracle's
-    # COALESCE(c.uri, b.uri, a.uri) LEFT-JOIN semantics).
-    #
-    # NO broadcast hint (VERDICT r04 #4): redirect pages are ordinary
-    # entities, so the redirect table is a MATERIAL fraction of the
-    # entity index — at the 10^8-entity target it is far past
-    # broadcast size, and a forced hint would OOM executors (the same
-    # reason the index join below carries no hint). Parquet stats /
-    # AQE pick broadcast on their own while the table is small —
-    # docs/explain_redirect_join.txt pins the fixture-scale plan at
-    # BroadcastHashJoin with no hint present.
-    redirects = (
-        entity_index.where(F.col("redirect_to").isNotNull())
-        .join(
-            entity_index.select(F.col("uri").alias("_tgt")),
-            F.col("redirect_to") == F.col("_tgt"),
-            "left_semi",
-        )
-        .select(F.col("uri").alias("r_src"), F.col("redirect_to").alias("r_dst"))
-    )
-    for _ in range(2):  # REDIRECT_MAX_HOPS
-        cands = (
-            cands.join(redirects, cands.uri == redirects.r_src, "left")
-            .select(
-                "mention_norm",
-                F.coalesce(F.col("r_dst"), F.col("uri")).alias("uri"),
-                "score",
-            )
-        )
+    cands = resolve_redirects(exact.unionByName(fuzzy), entity_index)
 
     # keep only URIs present in the index; attach final popularity;
     # dedup by final URI keeping max score. The index side's parquet

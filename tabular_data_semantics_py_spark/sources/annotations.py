@@ -84,11 +84,8 @@ def read_cta_csv(spark: SparkSession, path: str) -> DataFrame:
 def write_cea_csv(cea: DataFrame, path: str) -> None:
     """(table_id, col, row, uri|entities) → SemTab CEA CSV
     (challenge_utils.py:460-475 format)."""
-    cols = cea.columns
-    if "entities" in cols:  # array<string>
+    if "entities" in cea.columns:  # array<string>, as read_cea_csv returns
         ent = F.concat_ws(" ", F.col("entities"))
-    elif "uris" in cols:  # already space-joined (operators.cea_multi)
-        ent = F.col("uris")
     else:
         ent = F.col("uri")
     (

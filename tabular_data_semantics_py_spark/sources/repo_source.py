@@ -115,12 +115,6 @@ def _corpus_tables(corpus: FixtureCorpus):
         "ontology_equivalent": (
             corpus.equivalent, pa.schema([("a", s), ("b", s)]),
         ),
-        "cross_sameas": (
-            corpus.cross_sameas, pa.schema([("uri", s), ("wd_uri", s)]),
-        ),
-        "wd_equiv": (
-            corpus.wd_equiv, pa.schema([("wd_cls", s), ("dbo_cls", s)]),
-        ),
     }
 
 
@@ -187,7 +181,7 @@ def load_or_build_corpus_dfs(
 
 _CORPUS_TABLE_NAMES = [
     "source_repos", "entity_index", "kg_triples", "property_meta",
-    "ontology_edges", "ontology_equivalent", "cross_sameas", "wd_equiv",
+    "ontology_edges", "ontology_equivalent",
 ]
 
 

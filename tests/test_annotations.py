@@ -22,28 +22,29 @@ def test_cea_roundtrip(spark, pipeline, tmp_path):
     assert got == want
 
 
-def test_cea_multi_roundtrip(spark, pipeline, dfs, tmp_path):
-    """Multi-entity CEA: tied candidates become space-joined multi-URI
-    CEA cells that survive the SemTab CSV round-trip (reference
-    challenge_utils.py:336-346 format)."""
-    from tabular_data_semantics_py_spark.operators.annotate import cea_multi
-
-    cm = cea_multi(
-        pipeline.stages["cells_m"], pipeline.stages["candidates"],
-        pipeline.stages["entity_types"],
+def test_multi_uri_cea_roundtrip(spark, tmp_path):
+    """A multi-URI SemTab CEA cell (space-joined, challenge_utils.py:
+    336-346) survives read → write → read through the ``entities``
+    array shape that read_cea_csv returns."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "f.csv").write_text(
+        '"t1","0","1","http://x/e1"\n'
+        '"t1","1","2","http://x/e2 http://x/e3"\n'
     )
-    rows = cm.collect()
-    assert any(" " in r.uris for r in rows), "fixture must produce a tie"
-    p = str(tmp_path / "cea_multi_csv")
-    write_cea_csv(cm, p)
+    first = read_cea_csv(spark, str(src))
+    p = str(tmp_path / "cea_csv")
+    write_cea_csv(first, p)
     back = read_cea_csv(spark, p)
-    got = {
-        (r.table_id, r.col, r.row, tuple(r.entities)) for r in back.collect()
+
+    def rows(df):
+        return {(r.table_id, r.col, r.row, tuple(r.entities)) for r in df.collect()}
+
+    assert rows(first) == {
+        ("t1", 0, 1, ("http://x/e1",)),
+        ("t1", 1, 2, ("http://x/e2", "http://x/e3")),
     }
-    want = {
-        (r.table_id, r.col, r.row, tuple(r.uris.split(" "))) for r in rows
-    }
-    assert got == want
+    assert rows(back) == rows(first)
 
 
 def test_cta_roundtrip(spark, pipeline, tmp_path):
