@@ -41,8 +41,7 @@ from tabular_data_semantics_py_spark.sources.csv_cells import (  # noqa: E402
 
 
 def main() -> None:
-    spark = get_spark(app_name="explain-capture-redirect",
-                      master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="explain-capture-redirect", master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     dfs = entry_queries._dfs(spark)
     res = entry_queries._pipeline(spark)

@@ -2,8 +2,8 @@
 
 All three are shuffle-lean column pipelines:
 
-- CEA: two window argmaxes per cell partition key (phase-1 lexical
-  pick, phase-2 column-coherence re-rank). The coherence vote table is
+- CEA: two argmaxes per cell key (phase-1 lexical pick, phase-2
+  column-coherence re-rank). The coherence vote table is
   a groupBy(table, col, type) — the only wide shuffle, keyed well
   below cell cardinality.
 - CTA: type voting (challenge_utils.py:121-126) + pinned-lexicographic
@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..barriers import parquet_barrier
 from ..constants import (
@@ -206,13 +205,10 @@ def cta(
         .groupBy("table_id", "col", "t")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w = Window.partitionBy("table_id", "col").orderBy(
-        F.desc("votes"), F.asc("t")
-    )
-    winner = (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("table_id", "col", F.col("t").alias("cls"))
+    # argmax as cea's: votes desc, then class name asc
+    winner = votes.groupBy("table_id", "col").agg(
+        F.min_by("t", F.struct((-F.col("votes")).alias("nv"), F.col("t")))
+        .alias("cls")
     )
     anc = F.broadcast(
         closure.where(
@@ -265,11 +261,8 @@ def cpa(cea_df: DataFrame, kg_triples: DataFrame) -> DataFrame:
         .groupBy("table_id", "col_subj", "col_obj", "pred")
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w = Window.partitionBy("table_id", "col_subj", "col_obj").orderBy(
-        F.desc("votes"), F.asc("pred")
-    )
-    return (
-        votes.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("table_id", "col_subj", "col_obj", "pred")
+    return votes.groupBy("table_id", "col_subj", "col_obj").agg(
+        F.min_by(
+            "pred", F.struct((-F.col("votes")).alias("nv"), F.col("pred"))
+        ).alias("pred")
     )

@@ -136,27 +136,11 @@ def generate_candidates(
     i_tok = index_keys.select(
         "uri", "key_norm", F.explode(F.split(F.col("key_norm"), " ")).alias("tok")
     )
-    # Pin the dedup shuffle's width on a prefix of the dedup keys:
-    # the scorer below costs O(len_a·len_b) per pair (the Levenshtein
-    # DP), which AQE's byte-based partition coalescing cannot see — at
-    # fixture scale it packs the whole pair table into 1-2 partitions
-    # and serializes the scoring regardless of core count. An explicit
-    # repartition is never coalesced; (mention_norm, uri) ⊆ the dedup
-    # key, so the dedup AND the groupBy below both run exchange-free on
-    # it (no extra shuffle vs the unhinted plan).
-    sc = data_cells.sparkSession.sparkContext
-    n_score_parts = max(
-        sc.defaultParallelism * 2,
-        int(data_cells.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-    )
-    blocked = (
-        m_tok.join(i_tok, "tok")
-        .select("mention_norm", "uri", "key_norm")
-        .repartition(n_score_parts, "mention_norm", "uri")
-        .dropDuplicates(["mention_norm", "uri", "key_norm"])
-    )
+    # a (mention, key) pair that shares several tokens joins once per
+    # token; the max below scores it the same with or without dedup
     fuzzy = (
-        blocked.withColumn(
+        m_tok.join(i_tok, "tok")
+        .withColumn(
             "pair_score",
             lexical_score_expr(F.col("mention_norm"), F.col("key_norm")),
         )

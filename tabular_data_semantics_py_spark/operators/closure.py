@@ -71,7 +71,7 @@ def build_closure(
                         ("ancestor_uri", pa.string()), ("depth", pa.int32())])
     table = pa.Table.from_pylist(
         [dict(zip(schema.names, r)) for r in out_rows], schema)
-    return edges.sparkSession.createDataFrame(table).coalesce(1)
+    return edges.sparkSession.createDataFrame(table)
 
 
 def closure_to_map(closure: DataFrame) -> dict[str, dict[str, int]]:

@@ -131,11 +131,11 @@ def build_entity_types(
         .groupBy(F.col("subj").alias("uri"), F.col("domain_uri"))
         .agg(F.count(F.lit(1)).alias("votes"))
     )
-    w_d = Window.partitionBy("uri").orderBy(F.desc("votes"), F.asc("domain_uri"))
-    top_domain = (
-        dv.withColumn("rn", F.row_number().over(w_d))
-        .where(F.col("rn") == 1)
-        .select("uri", F.col("domain_uri").alias("domain_type"))
+    top_domain = dv.groupBy("uri").agg(
+        F.min_by(
+            "domain_uri",
+            F.struct((-F.col("votes")).alias("nv"), F.col("domain_uri")),
+        ).alias("domain_type")
     )
     pred_types = (
         top_ranges.join(top_domain, "uri", "full_outer")

@@ -9,7 +9,7 @@ settings.
 its own session and does not get them. What it pins, and why (the
 reasons sit next to each setting in ``get_spark``):
 
-- the shuffle width, from the master's core count (AQE, its partition
+- the shuffle width, a partition per task slot (AQE, its partition
   coalescing and skew-join splitting, the file-scan split sizes and
   the broadcast threshold are Spark's defaults, not restated here);
 - a driver heap that starts at a 512 MiB floor it never shrinks below
@@ -53,22 +53,13 @@ def _mib(size: str) -> int:
 def get_spark(
     app_name: str = "tabular-data-semantics-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = (
-                int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
-            )
-        except ValueError:
-            shuffle_partitions = 32
     driver_mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_mem)
         # The heap grows on demand up to spark.driver.memory: no
         # -XX:+AlwaysPreTouch and no -Xms at the maximum, which fault
@@ -144,6 +135,8 @@ def get_spark(
         .config(
             "spark.local.dir", os.path.join(scratch_root(), "local")
         )
+        # UI on: kgbench peak_rss_mb +6.5/+10.2 MiB (kg_large_index/
+        # kg_incremental, seed 1, 4-core VM, 17 of 20 pairs higher)
         .config("spark.ui.enabled", "false")
         # pyspark starts its JVM through spark-submit as a shell, and
         # spark-submit turns the console progress bar on for shells
@@ -183,4 +176,10 @@ def get_spark(
             .config("spark.eventLog.compress", "false")
             .config("spark.eventLog.rolling.enabled", "false")
         )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # a shuffle partition per task slot (a runtime SQL conf, so set
+    # here): at Spark's default of 200, the traced kg_large_index layers'
+    # executor CPU rose from 1.7 to 3.8-4.0 s (seed 1, 2 runs, local[2])
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   spark.sparkContext.defaultParallelism)
+    return spark

@@ -50,15 +50,16 @@ def read_cea_csv(spark: SparkSession, path: str) -> DataFrame:
             F.col("table_id").isNotNull()
             & F.col("col").isNotNull()
             & F.col("row").isNotNull()
-            & F.col("entities").isNotNull()
         )
         .withColumn(
             "entities",
-            # '' means NO annotation, not [''] — F.split('') would
-            # yield one phantom empty-URI element (mirrors the
-            # ancestors handling in read_cta_csv)
+            # an empty field, "" or bare, means NO annotation, not ['']
+            # (F.split would yield one phantom empty-URI element).
+            # Spark's CSV reader reads it as null, and DROPMALFORMED
+            # has dropped the short rows, so here null is that field
+            # (mirrors the ancestors handling in read_cta_csv)
             F.when(
-                F.col("entities") == "", F.array().cast("array<string>")
+                F.col("entities").isNull(), F.array().cast("array<string>")
             ).otherwise(F.split(F.col("entities"), " ")),
         )
     )

@@ -14,7 +14,7 @@ from tabular_data_semantics_py_spark.fixtures.oracle import build_gold  # noqa: 
 def spark():
     from tabular_data_semantics_py_spark.session import get_spark
 
-    s = get_spark(app_name="tds-tests", master="local[8]", shuffle_partitions=4)
+    s = get_spark(app_name="tds-tests", master="local[8]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -75,7 +75,7 @@ def run_all(only: list[str] | None = None):
         if unknown or not only:
             raise ValueError(f"unknown queries selected: {unknown}")
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(master="local[8]")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     oracles = entry.oracle_sql()

@@ -24,13 +24,15 @@ def test_cea_roundtrip(spark, pipeline, tmp_path):
 
 def test_multi_uri_cea_roundtrip(spark, tmp_path):
     """A multi-URI SemTab CEA cell (space-joined, challenge_utils.py:
-    336-346) survives read → write → read through the ``entities``
+    336-346) and a cell with an empty ``""`` entities field (no
+    annotation) survive read → write → read through the ``entities``
     array shape that read_cea_csv returns."""
     src = tmp_path / "src"
     src.mkdir()
     (src / "f.csv").write_text(
         '"t1","0","1","http://x/e1"\n'
         '"t1","1","2","http://x/e2 http://x/e3"\n'
+        '"t2","0","0",""\n'
     )
     first = read_cea_csv(spark, str(src))
     p = str(tmp_path / "cea_csv")
@@ -43,6 +45,7 @@ def test_multi_uri_cea_roundtrip(spark, tmp_path):
     assert rows(first) == {
         ("t1", 0, 1, ("http://x/e1",)),
         ("t1", 1, 2, ("http://x/e2", "http://x/e3")),
+        ("t2", 0, 0, ()),
     }
     assert rows(back) == rows(first)
 

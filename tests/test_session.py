@@ -62,3 +62,10 @@ def test_session_runs_plans_interpreted_without_console_progress(spark):
     bar on for shells unless the conf sets it)."""
     assert spark.conf.get("spark.sql.codegen.factoryMode") == "NO_CODEGEN"
     assert not spark.sparkContext._jsc.sc().progressBar().isDefined()
+
+
+def test_shuffle_width_is_the_task_slot_count(spark):
+    """get_spark sets one shuffle partition per task slot of the
+    running context (8 at the tests' local[8])."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == (
+        spark.sparkContext.defaultParallelism)
