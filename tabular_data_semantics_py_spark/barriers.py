@@ -42,10 +42,12 @@ def parquet_barrier(
 ) -> DataFrame:
     """Write ``df`` to ``<run_dir>/<name>`` (a fresh run dir when none
     is given), replacing what is there, and return a scan of it. The
-    write keeps the plan's final partitions, which AQE coalesces."""
+    write keeps the plan's final partitions, which AQE coalesces. The
+    scan takes ``df``'s schema, so reading it back starts no job (a
+    parquet schema inference reads the footers in one)."""
     path = os.path.join(run_dir or new_run_dir(df.sparkSession), name)
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def clear_scratch(spark: SparkSession) -> None:

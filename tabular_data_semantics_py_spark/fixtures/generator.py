@@ -107,49 +107,6 @@ OBJECT_PROPERTIES: list[tuple[str, str, str]] = [
     ("inRange", "Mountain", "Country"),
 ]
 
-# --- OWL constructs for the FULL ontology projection (SURVEY.md §2.9
-# P3/P5-P11; reference ontology/ontology_projection.py:379-537,692-933).
-# All names refer to classes/properties declared above.
-
-# extra atomic rdfs:domain axioms (multi-domain property — exercises the
-# structural TBox/ABox propagation of ref 692-763)
-EXTRA_DOMAINS: list[tuple[str, str]] = [("playsFor", "Person")]
-
-# property with complex (union) domain and range (P6: cross-product
-# projection, ref 465-479); not used in the ABox
-COMPLEX_DR: list[tuple[str, list[str], list[str]]] = [
-    ("features", ["Film", "Album"], ["Person", "MusicalArtist"]),
-]
-
-# P7 restrictions (cls, kind, prop, filler): C ⊑/≡ kind(prop, filler);
-# every kind projects to the edge (cls, prop, filler) and propagates
-# domains/ranges TBox-style (ref 848-933 + 795-817)
-RESTRICTIONS: list[tuple[str, str, str, str]] = [
-    ("Athlete", "some", "playsFor", "SportsTeam"),
-    ("City", "only", "locatedIn", "Country"),
-    ("Film", "min1", "director", "Person"),
-    ("Album", "exactly1", "artist", "MusicalArtist"),
-    ("Mountain", "max1", "inRange", "Country"),
-    ("PopulatedPlace", "some-lhs", "capitalOf", "Country"),
-]
-
-# P8 named inverse / P9 equivalent object properties
-INVERSE_PROPERTIES: list[tuple[str, str]] = [("playsFor", "playedBy")]
-EQUIVALENT_PROPERTIES: list[tuple[str, str]] = [("locatedIn", "situatedIn")]
-
-# data-property restrictions (ref 12b: propagate the data property's
-# domain as an approximate subsumption, no triple emitted)
-DATA_RESTRICTIONS: list[tuple[str, str]] = [("PopulatedPlace", "gdp")]
-
-# P11 complex axioms A ⊑ B ⊓ ∃R.C (ref 797-844): atomic conjuncts
-# become subsumptions, restriction conjuncts become direct edges
-# (incl. union fillers "R some (A or B)") with NO propagation
-CONJUNCT_ATOMS: list[tuple[str, str]] = [("Album", "Work")]
-COMPLEX_RESTRICTIONS: list[tuple[str, str, list[str]]] = [
-    ("Album", "artist", ["Person"]),
-    ("Work", "director", ["Person", "MusicalArtist"]),
-]
-
 # literal (datatype) properties per class used as extra table columns
 LITERAL_PROPERTIES: dict[str, list[str]] = {
     "City": ["population", "areaKm2"],
@@ -228,28 +185,6 @@ class FixtureCorpus:
     property_meta: list[tuple[str, str, str]]  # pred, domain, range
     tables: list[Table]
     repos: list[tuple[str, str, str, str, str]]  # repo,path,commit,lang,content
-    # OWL projection constructs (URIs; see module-level declarations)
-    extra_domains: list[tuple[str, str]] = field(default_factory=list)
-    complex_domains: list[tuple[str, str]] = field(default_factory=list)
-    complex_ranges: list[tuple[str, str]] = field(default_factory=list)
-    restrictions: list[tuple[str, str, str, str]] = field(default_factory=list)
-    inverse_props: list[tuple[str, str]] = field(default_factory=list)
-    equivalent_props: list[tuple[str, str]] = field(default_factory=list)
-    data_property_meta: list[tuple[str, str]] = field(default_factory=list)
-    data_restrictions: list[tuple[str, str]] = field(default_factory=list)
-    conjunct_atoms: list[tuple[str, str]] = field(default_factory=list)
-    complex_restrictions: list[tuple[str, str, str]] = field(
-        default_factory=list
-    )
-    # cross-KG (D4): dbpedia-role → wikidata-role sameAs twins and
-    # wd-class → dbo-class equivalences
-    cross_sameas: list[tuple[str, str]] = field(default_factory=list)
-    wd_equiv: list[tuple[str, str]] = field(default_factory=list)
-    # language-tagged ontology labels (F14: en-or-untagged filter,
-    # kg/endpoints.py:373-374, ontology_projection.py:648-655)
-    class_labels: list[tuple[str, str, str | None]] = field(
-        default_factory=list
-    )
 
     def entity_by_uri(self) -> dict[str, Entity]:
         return {e.uri: e for e in self.entities}
@@ -614,22 +549,19 @@ def make_corpus(
         ))
 
     # cross-KG twins (D4, matching/kg_matching.py:394-440): every 4th
-    # base entity gets a wikidata-role twin reachable via sameAs, typed
-    # in the wd class namespace; wd classes map to dbo classes via
-    # equivalence rows. One in five twins is a disambiguation page
-    # (type set must be killed, kg_matching.py:417-420).
+    # base entity gets a wikidata-role twin, typed in the wd class
+    # namespace; one in five twins is a disambiguation page. Only the
+    # twins' rdf:type triples are kept: they give the type cascade's
+    # ontology-namespace filter classes to drop.
     wd_class_of = {
         _cls(c): WD_ONTOLOGY_NS + f"Q{1000 + i}"
         for i, c in enumerate(classes)
     }
-    wd_equiv = sorted((q, c) for c, q in wd_class_of.items())
-    cross_sameas: list[tuple[str, str]] = []
     qn = 1
     for i, e in enumerate(base_entities):
         if i % 4 == 1 and not e.is_disambiguation and e.types:
             wd_uri = WD_RESOURCE_NS + f"Q{qn}"
             qn += 1
-            cross_sameas.append((e.uri, wd_uri))
             if i % 20 == 1:
                 triples.append(
                     (wd_uri, RDF_TYPE, WD_DISAMBIGUATION_CLASS, False)
@@ -658,43 +590,4 @@ def make_corpus(
         property_meta=prop_meta,
         tables=tables,
         repos=repos,
-        extra_domains=[(_prop(p), _cls(d)) for p, d in EXTRA_DOMAINS],
-        complex_domains=[
-            (_prop(p), _cls(d)) for p, ds, _rs in COMPLEX_DR for d in ds
-        ],
-        complex_ranges=[
-            (_prop(p), _cls(r)) for p, _ds, rs in COMPLEX_DR for r in rs
-        ],
-        restrictions=[
-            (_cls(c), k, _prop(p), _cls(f)) for c, k, p, f in RESTRICTIONS
-        ],
-        inverse_props=[(_prop(a), _prop(b)) for a, b in INVERSE_PROPERTIES],
-        equivalent_props=[
-            (_prop(a), _prop(b)) for a, b in EQUIVALENT_PROPERTIES
-        ],
-        data_property_meta=sorted(
-            {
-                (_prop(lp), _cls(c))
-                for c, lps in LITERAL_PROPERTIES.items()
-                for lp in lps
-            }
-        ),
-        data_restrictions=[(_cls(c), _prop(p)) for c, p in DATA_RESTRICTIONS],
-        conjunct_atoms=[(_cls(a), _cls(b)) for a, b in CONJUNCT_ATOMS],
-        complex_restrictions=[
-            (_cls(c), _prop(p), _cls(f))
-            for c, p, fs in COMPLEX_RESTRICTIONS
-            for f in fs
-        ],
-        cross_sameas=cross_sameas,
-        wd_equiv=wd_equiv,
-        class_labels=[
-            row
-            for i, (uri, name) in enumerate(class_rows)
-            for row in (
-                [(uri, name, "en")]
-                + ([(uri, name + " (de)", "de")] if i % 3 == 0 else [])
-                + ([(uri, name + " plain", None)] if i % 4 == 0 else [])
-            )
-        ],
     )

@@ -55,7 +55,11 @@ def cea(
         .join(candidates, "mention_norm")
     )
     linked = parquet_barrier(linked, "cea_linked", run_dir)
-    # consumed by phase 1 and phase 2
+    # consumed by phase 1 and phase 2. The barrier earns its write:
+    # without it, kgbench at seed 1 on a 4-core host (6 alternating
+    # pairs per workload) read ref_cpu_s medians 38.1 → 42.4 on
+    # kg_large_index and 38.0 → 43.3 on kg_incremental, higher in 6
+    # of 6 pairs on both.
 
     # phase-1 argmax as a hash aggregate (min_by over a struct whose
     # lexicographic order encodes (score desc, popularity desc, uri

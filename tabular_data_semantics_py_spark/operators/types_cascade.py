@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..constants import (
     AVOID_TOP_CONCEPTS,
@@ -98,63 +97,59 @@ def build_entity_types(
         .alias("lookup_types"),
     )
 
-    # endpoint types: rdf:type edges (kg/endpoints.py:452-466 role)
-    endpoint = (
-        kg_triples.where(
-            (F.col("pred") == RDF_TYPE)
-            & F.col("obj").startswith(ONTOLOGY_NS)
-        )
-        .groupBy(F.col("subj").alias("uri"))
-        .agg(F.collect_set("obj").alias("endpoint_types"))
+    # endpoint types and D3 predicate strategy (kg_matching.py:357-389)
+    # from one pass over the triples: each triple becomes up to three
+    # (uri, strategy, class) vote rows — an rdf:type edge for its
+    # subject, the predicate's range for a resource object, the
+    # predicate's domain for its subject — and NULL or empty classes
+    # cast no vote (the oracle's ``if r:`` / ``if d:``).
+    is_type = F.col("pred") == RDF_TYPE
+
+    def tag(uri: str, strategy: str, cls: Column) -> Column:
+        return F.struct(F.col(uri).alias("uri"),
+                        F.lit(strategy).alias("strategy"), cls.alias("cls"))
+
+    vote = (
+        kg_triples.join(F.broadcast(property_meta), "pred", "left")
+        .select(F.inline(F.array(
+            tag("subj", "type", F.when(
+                is_type & F.col("obj").startswith(ONTOLOGY_NS), F.col("obj")
+            )),
+            tag("obj", "range", F.when(
+                ~is_type & ~F.col("obj_is_literal"), F.col("range_uri")
+            )),
+            tag("subj", "domain", F.when(~is_type, F.col("domain_uri"))),
+        )))
+        .where(F.col("cls") != "")  # false for NULL too
+        .groupBy("uri", "strategy", "cls")
+        .agg(F.count(F.lit(1)).alias("votes"))
     )
 
-    # D3 predicate strategy: top-2 range types where entity is object,
-    # top-1 domain type where subject if compatible (kg_matching.py:357-389)
-    rel = kg_triples.where(
-        (~F.col("obj_is_literal")) & (F.col("pred") != RDF_TYPE)
+    def of(strategy: str, c: Column) -> Column:
+        return F.when(F.col("strategy") == strategy, c)
+
+    # ranked (votes desc, class asc): the range top-PREDICATE_TOP_RANGE
+    # is a slice of the sorted votes, the domain top a min_by
+    rank = F.struct((-F.col("votes")).alias("nv"), F.col("cls"))
+    top_ranges = F.slice(
+        F.array_sort(F.collect_list(of("range", rank))),
+        1, PREDICATE_TOP_RANGE,
     )
-    pm = F.broadcast(property_meta)
-    rv = (
-        rel.join(pm, "pred")
-        .groupBy(F.col("obj").alias("uri"), F.col("range_uri"))
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    w_r = Window.partitionBy("uri").orderBy(F.desc("votes"), F.asc("range_uri"))
-    top_ranges = (
-        rv.withColumn("rn", F.row_number().over(w_r))
-        .where(F.col("rn") <= PREDICATE_TOP_RANGE)
-        .groupBy("uri")
-        .agg(F.collect_set("range_uri").alias("range_types"))
-    )
-    dv = (
-        rel.join(pm, "pred")
-        .groupBy(F.col("subj").alias("uri"), F.col("domain_uri"))
-        .agg(F.count(F.lit(1)).alias("votes"))
-    )
-    top_domain = dv.groupBy("uri").agg(
-        F.min_by(
-            "domain_uri",
-            F.struct((-F.col("votes")).alias("nv"), F.col("domain_uri")),
-        ).alias("domain_type")
-    )
-    pred_types = (
-        top_ranges.join(top_domain, "uri", "full_outer")
-        .withColumn(
-            "range_types",
-            F.coalesce(F.col("range_types"), F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "pred_types",
-            F.when(
-                (F.size("range_types") > 0)
-                & F.col("domain_type").isNotNull()
-                & compatible_expr(
-                    cl, F.col("domain_type"), F.col("range_types")
-                ),
-                F.array_union("range_types", F.array(F.col("domain_type"))),
-            ).otherwise(F.col("range_types")),
-        )
-        .select("uri", "pred_types")
+    triple_types = vote.groupBy("uri").agg(
+        F.collect_list(of("type", F.col("cls"))).alias("endpoint_types"),
+        F.transform(top_ranges, lambda r: r["cls"]).alias("range_types"),
+        F.min_by(of("domain", F.col("cls")), of("domain", rank))
+        .alias("domain_type"),
+    ).select(
+        "uri",
+        "endpoint_types",
+        # the top domain joins the ranges when compatible with them
+        F.when(
+            (F.size("range_types") > 0)
+            & F.col("domain_type").isNotNull()
+            & compatible_expr(cl, F.col("domain_type"), F.col("range_types")),
+            F.array_union("range_types", F.array(F.col("domain_type"))),
+        ).otherwise(F.col("range_types")).alias("pred_types"),
     )
 
     empty = F.array().cast("array<string>")
@@ -162,8 +157,7 @@ def build_entity_types(
         "endpoint_types", lambda t: compatible_expr(cl, t, F.col("pred_types"))
     )
     base = (
-        lookup.join(endpoint, "uri", "left")
-        .join(pred_types, "uri", "left")
+        lookup.join(triple_types, "uri", "left")
         .withColumn("endpoint_types", F.coalesce("endpoint_types", empty))
         .withColumn("pred_types", F.coalesce("pred_types", empty))
         .withColumn(

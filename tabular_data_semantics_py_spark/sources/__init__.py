@@ -1,5 +1,4 @@
 from .repo_source import (  # noqa: F401
-    REPO_SCHEMA,
     corpus_to_dataframes,
     discover_csv_artifacts,
 )

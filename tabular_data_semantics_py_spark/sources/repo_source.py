@@ -1,4 +1,4 @@
-"""Source-repository table: schemas, artifact discovery, fixture→DF.
+"""Source-repository table: artifact discovery, fixture→DF.
 
 The pipeline input is an Iceberg/parquet table with the exact
 ``input_hint`` shape: (repo, path, commit, lang, content). Artifact
@@ -13,19 +13,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..fixtures.generator import FixtureCorpus
 
-REPO_SCHEMA = StructType(
-    [
-        StructField("repo", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("commit", StringType(), False),
-        StructField("lang", StringType(), False),
-        StructField("content", StringType(), False),
-    ]
-)
 
 def discover_csv_artifacts(repos: DataFrame) -> DataFrame:
     """Filter the source table down to CSV artifacts and mint a

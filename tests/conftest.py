@@ -1,4 +1,5 @@
 import sys
+import time
 from pathlib import Path
 
 import pytest
@@ -51,3 +52,27 @@ def pr(emitted: set, expected: set) -> tuple[float, float]:
     p = inter / len(emitted) if emitted else 1.0
     r = inter / len(expected) if expected else 1.0
     return p, r
+
+
+def jobs_started(spark, group: str, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts on this thread."""
+    sc = spark.sparkContext
+    prev = {k: sc.getLocalProperty(k)
+            for k in ("spark.jobGroup.id", "spark.job.description",
+                      "spark.job.interruptOnCancel")}
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        # a marker job: the status tracker sees jobs in start order,
+        # so once the marker shows, every job fn started shows too
+        sc.setJobGroup(group + "-marker", "marker")
+        spark.range(1).collect()
+        tracker = sc.statusTracker()
+        deadline = time.monotonic() + 30
+        while not tracker.getJobIdsForGroup(group + "-marker"):
+            assert time.monotonic() < deadline, "marker job never seen"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)

@@ -1,8 +1,7 @@
 """Transitive-closure operator vs the plain-Python fixture closure
 (distance semantics kg/endpoints.py:481-487)."""
 
-import time
-
+from conftest import jobs_started
 from tabular_data_semantics_py_spark.operators.closure import closure_to_map
 
 
@@ -30,23 +29,5 @@ def test_closure_map_starts_no_job(spark, pipeline):
     """On a run with no checkpoint dir the closure stage is the local
     relation build_closure made, so collecting it to the closure map
     runs on the driver and starts no Spark job."""
-    sc = spark.sparkContext
-    prev = {k: sc.getLocalProperty(k)
-            for k in ("spark.jobGroup.id", "spark.job.description",
-                      "spark.job.interruptOnCancel")}
-    try:
-        sc.setJobGroup("closure-map", "closure_to_map")
-        closure_to_map(pipeline.stages["closure"])
-        # a marker job: the status tracker sees jobs in start order,
-        # so once the marker shows, any closure_to_map job shows too
-        sc.setJobGroup("closure-map-marker", "marker")
-        spark.range(1).collect()
-        tracker = sc.statusTracker()
-        deadline = time.monotonic() + 30
-        while not tracker.getJobIdsForGroup("closure-map-marker"):
-            assert time.monotonic() < deadline, "marker job never seen"
-            time.sleep(0.05)
-        assert tracker.getJobIdsForGroup("closure-map") == []
-    finally:
-        for k, v in prev.items():
-            sc.setLocalProperty(k, v)
+    assert jobs_started(spark, "closure-map", lambda: closure_to_map(
+        pipeline.stages["closure"])) == 0

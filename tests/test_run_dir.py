@@ -2,14 +2,18 @@
 its result releases that directory and nothing else."""
 
 import os
+import shutil
 
 import pytest
+from conftest import jobs_started
 from pyspark import SparkFiles
 from pyspark.errors import AnalysisException
 
 from tabular_data_semantics_py_spark.barriers import (
     _scratch_dir,
     list_generations,
+    new_run_dir,
+    parquet_barrier,
 )
 from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
 
@@ -67,3 +71,22 @@ def test_run_keeps_the_callers_job_description(spark, dfs):
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setJobDescription(None)
+
+
+def test_barrier_read_back_starts_no_job(spark):
+    """A barrier starts the jobs of its write and no more: the scan it
+    returns takes the written DataFrame's schema instead of inferring
+    one from the parquet footers."""
+    run_dir = new_run_dir(spark)
+    try:
+        df = spark.range(10).selectExpr("id", "cast(id as string) as s")
+        writes = jobs_started(spark, "barrier-write", lambda: (
+            df.write.parquet(os.path.join(run_dir, "plain"))))
+        out = []
+        barrier = jobs_started(spark, "barrier", lambda: out.append(
+            parquet_barrier(df, "b", run_dir)))
+        assert writes >= 1
+        assert barrier == writes
+        assert sorted(out[0].collect()) == sorted(df.collect())
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
