@@ -3,12 +3,16 @@
 - ``entry(spark)``   — flagship: the full KG-construction pipeline on
   the deterministic fixture corpus → emitted (subj, pred, obj,
   obj_is_literal) triples.
-- ``queries()``      — the 15 ``kg_*`` queries, each running or reading
+- ``queries()``      — the 14 ``kg_*`` queries, each running or reading
   a stage of the KG-construction job (SURVEY.md §2), all over the
   fixture corpus (the ``sf_dir`` argument is ignored).
 - ``oracle_sql()``   — DuckDB-runnable ANSI SQL per query, embedding
   the (seeded, deterministic) fixture as VALUES CTEs, so DuckDB needs
   no tables.
+
+Every query runs on the session it is given, with that session's
+settings: the job changes no conf of a caller's session
+(``session.job_session`` holds the settings the job is measured on).
 """
 
 from __future__ import annotations

@@ -3,7 +3,10 @@
 Cluster usage (north_rule shape)::
 
   zip -r tds.zip tabular_data_semantics_py_spark
-  spark-submit --py-files tds.zip scripts/run_pipeline.py \\
+  spark-submit --py-files tds.zip \\
+      --driver-memory 8g \\
+      --driver-java-options "-Xms512m -XX:MetaspaceSize=256m" \\
+      scripts/run_pipeline.py \\
       --source  s3://bucket/source_repos/    # Iceberg/parquet (repo,path,commit,lang,content)
       --index   s3://bucket/entity_index/ \\
       --triples s3://bucket/kg_triples/ \\
@@ -12,15 +15,23 @@ Cluster usage (north_rule shape)::
       --equiv   s3://bucket/ontology_equiv/ \\
       --out     s3://bucket/kg_out/          # checkpoints + outputs
 
-With no arguments it runs the deterministic fixture corpus (sandbox
-mode) and writes to ./_kg_out. Resumable: rerunning with the same
---out resumes from the last completed stage checkpoint.
+The session gets the job's settings (``session.job_session``) and no
+master: ``spark-submit`` decides the master and the driver's memory
+and Java options (``session.get_spark`` gives the ones the local
+launcher uses; the JIT thresholds are there too). With no arguments it
+runs the deterministic fixture corpus (sandbox mode) and writes to
+./_kg_out. The triples land in ``<out>/triples``; the barriers and
+``manifest.json`` in ``<out>``. Resumable: rerunning with the same
+--out reads the barriers a finished or killed run completed. The last
+stdout line is JSON: the triple count beside the session's effective
+shuffle width and ``spark.sql.codegen.factoryMode``.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 from pathlib import Path
 
@@ -47,9 +58,11 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from tabular_data_semantics_py_spark.barriers import part_rows
     from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
+    from tabular_data_semantics_py_spark.session import job_session
 
-    spark = SparkSession.builder.appName("tds-kg-pipeline").getOrCreate()
+    spark = job_session(SparkSession.builder.appName("tds-kg-pipeline"))
 
     if args.source:
         dfs = {
@@ -71,8 +84,15 @@ def main() -> None:
     res = run_pipeline(
         spark, dfs, checkpoint_dir=args.out, resume=not args.no_resume
     )
-    n = res.stages["triples"].count()
-    print(json.dumps({"triples": n, "out": args.out}))
+    out = os.path.join(args.out, "triples")
+    res.stages["triples"].write.mode("overwrite").parquet(out)
+    print(json.dumps({
+        "triples": sum(part_rows(spark, out).values()),
+        "out": args.out,
+        "shuffle_partitions": int(
+            spark.conf.get("spark.sql.shuffle.partitions")),
+        "factoryMode": spark.conf.get("spark.sql.codegen.factoryMode"),
+    }))
 
 
 if __name__ == "__main__":

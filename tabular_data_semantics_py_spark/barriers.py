@@ -13,6 +13,11 @@ Every barrier lands in a run directory, ``<run_dir>/<name>``: a
 session's Spark temp dir (``SparkFiles.getRootDirectory()``, inside
 ``spark.local.dir``), which Spark deletes when the context stops or
 the JVM exits.
+
+A barrier's lineage is the row count of each of its part files, read
+from the parquet footers by the JVM's parquet-hadoop reader, so it
+starts no Spark job and works on any Hadoop file system a run
+directory lies on.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ import glob
 import os
 import shutil
 import tempfile
+from contextlib import closing
 
 from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +54,42 @@ def parquet_barrier(
     path = os.path.join(run_dir or new_run_dir(df.sparkSession), name)
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(file system, path) of ``path`` on the session's Hadoop conf."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def is_complete(spark: SparkSession, path: str) -> bool:
+    """Whether a parquet write to ``path`` committed (``_SUCCESS``)."""
+    fs, p = _hadoop_path(spark, os.path.join(path, "_SUCCESS"))
+    return fs.exists(p)
+
+
+def part_rows(spark: SparkSession, path: str) -> dict[str, int]:
+    """Row count of each part file of the parquet directory ``path``,
+    from the file footers: no Spark job."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    fs, p = _hadoop_path(spark, path)
+    rows = {}
+    for status in fs.listStatus(p):
+        name = status.getPath().getName()
+        if name.startswith("part-"):
+            with closing(jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                    jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+                    .fromStatus(status, conf))) as reader:
+                rows[name] = reader.getRecordCount()
+    return rows
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    """Write ``text`` to ``path`` on its Hadoop file system."""
+    fs, p = _hadoop_path(spark, path)
+    with closing(fs.create(p, True)) as out:
+        out.write(bytearray(text.encode()))
 
 
 def clear_scratch(spark: SparkSession) -> None:

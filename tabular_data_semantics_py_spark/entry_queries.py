@@ -1,6 +1,6 @@
 """Query registry backing ``__spark_entry__.py``.
 
-The 15 queries are ``kg_*`` KG-construction operators (SURVEY.md §2);
+The 14 queries are ``kg_*`` KG-construction operators (SURVEY.md §2);
 each one runs or reads a stage of the table→KG job (parse, closure,
 redirects, candidates, types, CEA/CTA/CPA, emission, fragment) on the
 deterministic fixture corpus (BASELINE.json: no
@@ -551,39 +551,6 @@ def kg_label_index(spark, sf_dir):
     from .operators.candidates import build_index_keys
 
     return build_index_keys(_dfs(spark)["entity_index"]).select("uri", "key_norm")
-
-
-def _o_mention_col():
-    _, _, gold = _fixture()
-    # independent recomputation: for each (table, normalized mention)
-    # the minimum column whose cell normalizes to it (J14 semantics)
-    rows = sorted(
-        {
-            (t, norm, c)
-            for (t, c, r), norm in gold.mention_norm.items()
-        }
-    )
-    return f"""
-WITH m(table_id, mention_norm, c) AS (SELECT * FROM {_values(rows, "table_id, mention_norm, c")})
-SELECT table_id, mention_norm, MIN(c) AS col
-FROM m GROUP BY table_id, mention_norm
-"""
-
-
-@q("kg_mention_to_col", _o_mention_col)
-def kg_mention_to_col(spark, sf_dir):
-    """J14: mention → column id — first column whose (normalized)
-    cell equals the mention (challenge_utils.py:647-677, the GT
-    repair join of test/error_detection.py:165-212)."""
-    from .functions.normalize import normalize_expr
-
-    cells = _pipeline(spark).stages["cells"].where(F.col("row") >= 0)
-    mention = normalize_expr(F.col("cell")).alias("mention_norm")
-    return (
-        cells.groupBy("table_id", mention)
-        .agg(F.min("col").alias("col"))
-        .where(F.col("mention_norm") != "")
-    )
 
 
 def flagship(spark: SparkSession) -> DataFrame:

@@ -146,8 +146,12 @@ class OracleExecutor:
                 if not lit:
                     self.preds_of_obj.setdefault(o, []).append(p)
                 self.preds_of_subj.setdefault(s, []).append(p)
-        self.prop_range = {p: r for p, _d, r in corpus.property_meta}
-        self.prop_domain = {p: d for p, d, _r in corpus.property_meta}
+        # every property_meta row of a predicate votes (SURVEY J9)
+        self.prop_range: dict[str, list[str]] = {}
+        self.prop_domain: dict[str, list[str]] = {}
+        for p, d, r in corpus.property_meta:
+            self.prop_range.setdefault(p, []).append(r)
+            self.prop_domain.setdefault(p, []).append(d)
         self._cand_cache: dict[str, list[tuple[str, float]]] = {}
         self._type_cache: dict[str, frozenset[str]] = {}
 
@@ -211,16 +215,16 @@ class OracleExecutor:
         the subject if compatible with those range types."""
         range_votes: dict[str, int] = {}
         for p in self.preds_of_obj.get(uri, []):
-            r = self.prop_range.get(p)
-            if r:
-                range_votes[r] = range_votes.get(r, 0) + 1
+            for r in self.prop_range.get(p, []):
+                if r:
+                    range_votes[r] = range_votes.get(r, 0) + 1
         ranked = sorted(range_votes.items(), key=lambda kv: (-kv[1], kv[0]))
         out = {t for t, _ in ranked[:PREDICATE_TOP_RANGE]}
         domain_votes: dict[str, int] = {}
         for p in self.preds_of_subj.get(uri, []):
-            d = self.prop_domain.get(p)
-            if d:
-                domain_votes[d] = domain_votes.get(d, 0) + 1
+            for d in self.prop_domain.get(p, []):
+                if d:
+                    domain_votes[d] = domain_votes.get(d, 0) + 1
         dranked = sorted(domain_votes.items(), key=lambda kv: (-kv[1], kv[0]))
         if dranked:
             top_d = dranked[0][0]

@@ -102,7 +102,6 @@ def resolve_redirects(
 def generate_candidates(
     data_cells: DataFrame,
     entity_index: DataFrame,
-    top_k: int = TOP_K_CANDIDATES,
     fused: bool = False,  # unused; kgbench/tracing.py still passes it
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (cells_with_mention, candidates), both lazy.
@@ -168,6 +167,6 @@ def generate_candidates(
     )
     ranked = (
         cands.withColumn("cand_rank", F.row_number().over(w))
-        .where(F.col("cand_rank") <= top_k)
+        .where(F.col("cand_rank") <= TOP_K_CANDIDATES)
     )
     return cells, ranked

@@ -34,6 +34,10 @@ from ..constants import (
     RESOURCE_NS,
 )
 
+LOOKUP_TOP_K = 3  # per-cell lookup top-3 (ref 234-302)
+MEMBERS_CAP = 5  # members sampled per CTA class
+PER_ENTITY_CAP = 5  # neighborhood triples per entity
+
 
 def fragment_full(
     cea_df: DataFrame,
@@ -42,9 +46,6 @@ def fragment_full(
     cta_df: DataFrame,
     entity_index: DataFrame,
     kg_triples: DataFrame,
-    lookup_top_k: int = 3,
-    members_cap: int = 5,
-    per_entity_cap: int = 5,
 ) -> DataFrame:
     """→ (subj, pred, obj, obj_is_literal) distinct."""
     # arm 1: CEA entities
@@ -59,7 +60,7 @@ def fragment_full(
     )
     look = (
         main_mentions.join(
-            candidates.where(F.col("cand_rank") <= lookup_top_k),
+            candidates.where(F.col("cand_rank") <= LOOKUP_TOP_K),
             "mention_norm",
         )
         .select("uri")
@@ -93,7 +94,7 @@ def fragment_full(
         kg_triples.where(F.col("pred") == RDF_TYPE)
         .join(cls, F.col("obj") == F.col("cls"))
         .select("cls", F.col("subj").alias("member")),
-        keys=["cls"], order_cols=["member"], k=members_cap,
+        keys=["cls"], order_cols=["member"], k=MEMBERS_CAP,
     )
     member_types = members.select(
         F.col("member").alias("subj"), F.lit(RDF_TYPE).alias("pred"),
@@ -126,7 +127,7 @@ def fragment_full(
             kg_triples.join(ents, kg_triples.subj == ents.uri)
             .where(~F.col("pred").isin(*sorted(AVOID_PREDICATES)))
             .select("subj", "pred", "obj"),
-            keys=["subj"], order_cols=["pred", "obj"], k=per_entity_cap,
+            keys=["subj"], order_cols=["pred", "obj"], k=PER_ENTITY_CAP,
         )
         .join(F.broadcast(kind), "pred")
         .where(

@@ -6,11 +6,11 @@ single-task sort at 10^8 rows per key (the scale-killer VERDICT r02
 flagged in the fragment caps). This helper computes the same k
 smallest rows per key via a two-level salted hash aggregation:
 
-- level 1 groups by (key, xxhash64(order) % salt) and keeps each
-  salted group's k smallest — the hot key's rows spread over ``salt``
+- level 1 groups by (key, xxhash64(order) % SALT) and keeps each
+  salted group's k smallest — the hot key's rows spread over ``SALT``
   reducers, and map-side partial aggregation bounds any single buffer
   by the rows of that (key, salt) pair per partition;
-- level 2 merges the ≤ salt×k per-key candidates and slices the exact
+- level 2 merges the ≤ SALT×k per-key candidates and slices the exact
   global k — a bounded, skew-free aggregation.
 
 The union of per-salt min-k is a superset of the global min-k, so the
@@ -24,10 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+SALT = 64
+
 
 def bounded_min_k(
     df: DataFrame, keys: list[str], order_cols: list[str], k: int,
-    salt: int = 64,
 ) -> DataFrame:
     """Per ``keys`` group, the ``k`` lexicographically-smallest rows by
     ``order_cols`` → one output row per kept element with columns
@@ -40,7 +41,7 @@ def bounded_min_k(
     lvl1 = (
         df.groupBy(
             *keys,
-            F.pmod(F.xxhash64(*order_cols), F.lit(salt)).alias("_salt"),
+            F.pmod(F.xxhash64(*order_cols), F.lit(SALT)).alias("_salt"),
         )
         .agg(_mink(F.collect_list(elem)).alias("_cand"))
     )

@@ -1,25 +1,28 @@
 """SparkSession factory: the one place the program's Spark and JVM
-settings are pinned.
+settings are pinned. They come in two parts (the reasons sit next to
+each setting):
 
-On ``local[N]`` the driver JVM is the whole cluster, so every local
-session ``get_spark`` starts (``kgbench``, the tests and the scripts
-that call it, such as ``scripts/cpu_by_thread.py``) runs on these
-settings.
-``scripts/run_pipeline.py``, the ``spark-submit`` entry point, builds
-its own session and does not get them. What it pins, and why (the
-reasons sit next to each setting in ``get_spark``):
+- the job's settings (``job_session``), which hold on any master:
+  plans evaluated interpreted (no whole-stage codegen and almost no
+  Java generated and compiled with Janino), no UI and no console
+  progress bar, and a shuffle partition per task slot, set on the live
+  session (AQE, its partition coalescing and skew-join splitting, the
+  file-scan split sizes and the broadcast threshold are Spark's
+  defaults, not restated here);
+- the local launcher's settings (``get_spark``): the master, a driver
+  heap that starts at a 512 MiB floor it never shrinks below and grows
+  on demand up to ``spark.driver.memory``, a 256 MiB first metaspace
+  GC threshold, JIT thresholds for C2 code ten times the JDK default,
+  1 MiB Tungsten pages, shuffle, spill and scratch barrier files under
+  ``scratch_root``, and the event log when one is asked for.
 
-- the shuffle width, a partition per task slot (AQE, its partition
-  coalescing and skew-join splitting, the file-scan split sizes and
-  the broadcast threshold are Spark's defaults, not restated here);
-- a driver heap that starts at a 512 MiB floor it never shrinks below
-  and grows on demand up to ``spark.driver.memory``, a 256 MiB first
-  metaspace GC threshold, 1 MiB Tungsten pages, and JIT thresholds for
-  C2 code ten times the JDK default;
-- shuffle, spill and scratch barrier files under ``scratch_root``;
-- plans evaluated interpreted: no whole-stage codegen and almost no
-  Java generated and compiled with Janino;
-- no UI and no console progress bar.
+``get_spark`` applies both: on ``local[N]`` the driver JVM is the
+whole cluster, so every local session it starts (``kgbench``, the
+tests and the scripts that call it, such as
+``scripts/cpu_by_thread.py``) runs on all of them.
+``scripts/run_pipeline.py``, the ``spark-submit`` entry point, applies
+only the job's settings; ``spark-submit`` decides the master and the
+driver's memory and Java options.
 
 No stage of the job runs Python on an executor, so nothing here
 configures Python workers or Arrow.
@@ -50,12 +53,57 @@ def _mib(size: str) -> int:
     return int(float(size[:-1]) * scale) if scale else int(size)
 
 
+def job_session(builder: SparkSession.Builder) -> SparkSession:
+    """``builder.getOrCreate()`` with the job's settings, which hold on
+    any master: ``get_spark`` passes its local launcher's builder, and
+    ``scripts/run_pipeline.py`` a bare one under ``spark-submit``."""
+    builder = (
+        builder
+        # UI on: kgbench peak_rss_mb +6.5/+10.2 MiB (kg_large_index/
+        # kg_incremental, seed 1, 4-core VM, 17 of 20 pairs higher)
+        .config("spark.ui.enabled", "false")
+        # pyspark starts its JVM through spark-submit as a shell, and
+        # spark-submit turns the console progress bar on for shells
+        # unless the conf sets it: a timer thread redrawing stage
+        # progress on stderr (tests/test_session.py reads it back)
+        .config("spark.ui.showConsoleProgress", "false")
+        # Interpreted plans, no generated Java: Spark's projections,
+        # predicates and orderings come from its interpreted
+        # implementations, and CollapseCodegenStages plans no
+        # whole-stage codegen stage. An internal setting (Spark
+        # documents it for its own tests; CodegenObjectFactory and
+        # CollapseCodegenStages read it in 4.1.2), so
+        # tests/test_python_boundaries.py fails if a Spark release
+        # stops honouring it. At fixture scale a run is mostly fixed
+        # cost, and generating Java source, compiling it with Janino
+        # and JIT-compiling the result cost more than the per-row work
+        # it speeds up. Measured at local[2] on a 4-core VM, seed 1:
+        # scripts/cpu_by_thread.py's cold run 44.4 -> 35.7 CPU-s
+        # (compiler 15.6 -> 11.3, other JVM 18.8 -> 15.6, executor
+        # tasks 8.1 -> 7.2), Janino compiles 222 -> 6 cold and
+        # 209 -> 0 warm, the warm run's executor tasks 4.6 -> 3.1 s;
+        # kgbench kg_large_index ref_cpu_s median 46.2 -> 38.8
+        # (10 pairs, 10/10). Whole-stage codegen is Spark's per-row
+        # speed: a corpus whose executor work outweighs the compile
+        # cost would want it back.
+        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    )
+    spark = builder.getOrCreate()
+    # a shuffle partition per task slot (a runtime SQL conf, so set
+    # here; on a cluster, the executors' cores): at Spark's default of
+    # 200, the traced kg_large_index layers' executor CPU rose from 1.7
+    # to 3.8-4.0 s (seed 1, 2 runs, local[2])
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   spark.sparkContext.defaultParallelism)
+    return spark
+
+
 def get_spark(
     app_name: str = "tabular-data-semantics-spark",
     master: str | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    master = master or f"local[{cpus}]"
     driver_mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -135,34 +183,6 @@ def get_spark(
         .config(
             "spark.local.dir", os.path.join(scratch_root(), "local")
         )
-        # UI on: kgbench peak_rss_mb +6.5/+10.2 MiB (kg_large_index/
-        # kg_incremental, seed 1, 4-core VM, 17 of 20 pairs higher)
-        .config("spark.ui.enabled", "false")
-        # pyspark starts its JVM through spark-submit as a shell, and
-        # spark-submit turns the console progress bar on for shells
-        # unless the conf sets it: a timer thread redrawing stage
-        # progress on stderr (tests/test_session.py reads it back)
-        .config("spark.ui.showConsoleProgress", "false")
-        # Interpreted plans, no generated Java: Spark's projections,
-        # predicates and orderings come from its interpreted
-        # implementations, and CollapseCodegenStages plans no
-        # whole-stage codegen stage. An internal setting (Spark
-        # documents it for its own tests; CodegenObjectFactory and
-        # CollapseCodegenStages read it in 4.1.2), so
-        # tests/test_python_boundaries.py fails if a Spark release
-        # stops honouring it. At fixture scale a run is mostly fixed
-        # cost, and generating Java source, compiling it with Janino
-        # and JIT-compiling the result cost more than the per-row work
-        # it speeds up. Measured at local[2] on a 4-core VM, seed 1:
-        # scripts/cpu_by_thread.py's cold run 44.4 -> 35.7 CPU-s
-        # (compiler 15.6 -> 11.3, other JVM 18.8 -> 15.6, executor
-        # tasks 8.1 -> 7.2), Janino compiles 222 -> 6 cold and
-        # 209 -> 0 warm, the warm run's executor tasks 4.6 -> 3.1 s;
-        # kgbench kg_large_index ref_cpu_s median 46.2 -> 38.8
-        # (10 pairs, 10/10). Whole-stage codegen is Spark's per-row
-        # speed: a corpus whose executor work outweighs the compile
-        # cost would want it back.
-        .config("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     )
     # profiling hook (kgbench --trace 1 reads it for per-layer task,
     # CPU and barrier timing): uncompressed event log so the
@@ -176,10 +196,4 @@ def get_spark(
             .config("spark.eventLog.compress", "false")
             .config("spark.eventLog.rolling.enabled", "false")
         )
-    spark = builder.getOrCreate()
-    # a shuffle partition per task slot (a runtime SQL conf, so set
-    # here): at Spark's default of 200, the traced kg_large_index layers'
-    # executor CPU rose from 1.7 to 3.8-4.0 s (seed 1, 2 runs, local[2])
-    spark.conf.set("spark.sql.shuffle.partitions",
-                   spark.sparkContext.defaultParallelism)
-    return spark
+    return job_session(builder)

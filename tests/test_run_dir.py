@@ -14,8 +14,12 @@ from tabular_data_semantics_py_spark.barriers import (
     list_generations,
     new_run_dir,
     parquet_barrier,
+    part_rows,
 )
-from tabular_data_semantics_py_spark.plans.pipeline import run_pipeline
+from tabular_data_semantics_py_spark.plans.pipeline import (
+    _sha_mismatches,
+    run_pipeline,
+)
 
 
 def _triples(df):
@@ -41,7 +45,7 @@ def test_close_releases_only_its_own_run(spark, dfs, gold):
 
 def test_close_keeps_the_checkpoint_dir(spark, dfs, tmp_path):
     ck = str(tmp_path / "ck")
-    with run_pipeline(spark, dfs, checkpoint_dir=ck, stop_after="cells") as res:
+    with run_pipeline(spark, dfs, checkpoint_dir=ck) as res:
         assert res.run_dir == ck
     assert os.path.exists(os.path.join(ck, "cells", "_SUCCESS"))
     assert os.path.exists(os.path.join(ck, "manifest.json"))
@@ -67,7 +71,7 @@ def test_run_keeps_the_callers_job_description(spark, dfs):
     sc = spark.sparkContext
     sc.setJobDescription("caller")
     try:
-        run_pipeline(spark, dfs, stop_after="cells").close()
+        run_pipeline(spark, dfs).close()
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setJobDescription(None)
@@ -90,3 +94,51 @@ def test_barrier_read_back_starts_no_job(spark):
         assert sorted(out[0].collect()) == sorted(df.collect())
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
+
+
+def test_lineage_is_read_from_the_footers_with_no_job(spark, pipeline):
+    """A run's lineage holds the row count of each part file of each
+    barrier it wrote, and reading it starts no Spark job."""
+    lineage = {m["stage"]: m for m in pipeline.metrics}
+    assert list(lineage) == ["cells", "entity_types", "cea_linked", "cea"]
+    for name, m in lineage.items():
+        path = os.path.join(pipeline.run_dir, name)
+        read = []
+        assert jobs_started(spark, f"lineage-{name}",
+                            lambda: read.append(part_rows(spark, path))) == 0
+        assert read == [m["files"]]
+        assert sum(m["files"].values()) == m["rows"]
+        assert m["rows"] == spark.read.parquet(path).count()
+
+
+def test_a_checkpoint_dir_changes_no_plan(spark, dfs, tmp_path):
+    """A checkpointed and a scratch run write the same barrier
+    directories, and the checkpointed run, with its triples and CPA
+    writes, starts no more jobs than the scratch run plus its sha
+    check."""
+    runs = []
+
+    def batch(group, checkpoint_dir):
+        def run():
+            res = run_pipeline(spark, dfs, checkpoint_dir=checkpoint_dir)
+            for name in ("triples", "cpa"):
+                res.stages[name].write.format("noop").mode("overwrite").save()
+            runs.append(res)
+        return jobs_started(spark, group, run)
+
+    scratch_jobs = batch("scratch-batch", None)
+    checkpointed_jobs = batch("checkpointed-batch", str(tmp_path / "ck"))
+    sha_jobs = jobs_started(spark, "sha-check", lambda: _sha_mismatches(
+        runs[1].stages["cells"], dfs["source_repos"]))
+    try:
+        barriers = [
+            sorted(d for d in os.listdir(r.run_dir)
+                   if os.path.isdir(os.path.join(r.run_dir, d)))
+            for r in runs
+        ]
+        assert barriers[0] == barriers[1] == [
+            "cea", "cea_linked", "cells", "entity_types"]
+        assert checkpointed_jobs <= scratch_jobs + sha_jobs, (
+            checkpointed_jobs, scratch_jobs, sha_jobs)
+    finally:
+        runs[0].close()

@@ -5,7 +5,8 @@ spark-submit --py-files on a multi-executor cluster").
 
 The entry script is copied OUTSIDE the repo so the package import can
 only be satisfied by the --py-files zip; fixture mode must emit the
-same 4,136 canonical triples the golden tests pin. The zip serves the
+same 4,136 canonical triples the golden tests pin, on the job's
+session settings. The zip serves the
 driver only: no stage of the job runs Python on an executor
 (tests/test_python_boundaries.py), so no worker imports the package.
 """
@@ -16,6 +17,7 @@ import subprocess
 import zipfile
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
@@ -52,8 +54,19 @@ def test_spark_submit_py_files_fixture_run(tmp_path):
     assert res.returncode == 0, res.stderr[-3000:]
     line = [ln for ln in res.stdout.splitlines() if ln.startswith("{")][-1]
     payload = json.loads(line)
+    # the job's settings, read back from the submitted session: a
+    # shuffle partition per task slot of local[8], plans interpreted
+    assert (payload["shuffle_partitions"], payload["factoryMode"]) == (
+        8, "NO_CODEGEN")
     assert payload["triples"] == 4136
+    assert pq.read_table(out_dir / "triples").num_rows == 4136
+    # lineage: the row count of every part file of the four barriers
     manifest = json.loads((out_dir / "manifest.json").read_text())
-    assert {m["stage"] for m in manifest["metrics"]} >= {
-        "cells", "candidates", "cea", "cta", "cpa", "triples"
-    }
+    lineage = {m["stage"]: m for m in manifest["metrics"] if "files" in m}
+    assert sorted(lineage) == ["cea", "cea_linked", "cells", "entity_types"]
+    for name, m in lineage.items():
+        assert m["files"] == {
+            f.name: pq.read_metadata(f).num_rows
+            for f in (out_dir / name).glob("part-*")
+        }
+        assert sum(m["files"].values()) == m["rows"]

@@ -72,7 +72,7 @@ def test_compat_and_most_specific_match_oracle(spark, corpus, pipeline):
 
 
 def _vote_corpus() -> FixtureCorpus:
-    """X, Z and T have no index types and no rdf:type edge, so the
+    """X, Z, T and M have no index types and no rdf:type edge, so the
     predicate strategy alone types them; S1-S3 are typed subjects and
     objects. D ⊑ A.
     - X is the object of p1 (range A) once, p2 (range NULL) three
@@ -85,11 +85,14 @@ def _vote_corpus() -> FixtureCorpus:
       top domain.
     - T is the object of p3 (range B) twice, p6 (range C) once and p1
       (range A) once: A and C tie, A wins on its name, C stays out of
-      the top 2."""
+      the top 2.
+    - M is the object of p10 once, and property_meta gives p10 two
+      rows, with ranges A and B: every row votes, so {A, B}."""
     cls = {n: ONTOLOGY_NS + n for n in "ABCD"}
-    res = {n: RESOURCE_NS + n for n in ("X", "Z", "T", "S1", "S2", "S3")}
+    res = {n: RESOURCE_NS + n
+           for n in ("X", "Z", "T", "M", "S1", "S2", "S3")}
     prop = {n: PROPERTY_NS + n for n in
-            ("p1", "p2", "p3", "p5", "p6", "p7", "p8", "p9")}
+            ("p1", "p2", "p3", "p5", "p6", "p7", "p8", "p9", "p10")}
     meta = [
         (prop["p1"], None, cls["A"]),
         (prop["p2"], None, None),
@@ -99,6 +102,8 @@ def _vote_corpus() -> FixtureCorpus:
         (prop["p7"], None, ""),
         (prop["p8"], "", None),
         (prop["p9"], cls["D"], cls["C"]),
+        (prop["p10"], None, cls["A"]),
+        (prop["p10"], None, cls["B"]),
     ]
     edges = [
         ("S1", "p1", "X"), ("S1", "p2", "X"), ("S2", "p2", "X"),
@@ -108,6 +113,7 @@ def _vote_corpus() -> FixtureCorpus:
         ("Z", "p9", "S3"),
         ("S1", "p3", "T"), ("S2", "p3", "T"), ("S1", "p6", "T"),
         ("S2", "p1", "T"),
+        ("S3", "p10", "M"),
     ]
     triples = [(res[s], prop[p], res[o], False) for s, p, o in edges]
     triples.append((res["X"], prop["p5"], "42", True))
@@ -142,3 +148,4 @@ def test_predicate_votes_match_oracle(spark):
     assert got[RESOURCE_NS + "X"] == [a, b, d]
     assert got[RESOURCE_NS + "Z"] == [a, d]
     assert got[RESOURCE_NS + "T"] == [a, b]
+    assert got[RESOURCE_NS + "M"] == [a, b]
